@@ -171,9 +171,11 @@ object Bench {
     def qmap(rs: Seq[(String, Double, Double)]): String =
       rs.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 
+    // `cpus` is the host's processor count; `cores_conf` is the N of the
+    // local[N] master this run configured (SPARK_GRAFT_CPUS)
     val loadJson =
       s""""load":{"avg_start":${fmt(loadStart)},"avg_end":${fmt(loadAvg)},""" +
-        s""""cpus":${Runtime.getRuntime.availableProcessors}}"""
+        s""""cpus":${Runtime.getRuntime.availableProcessors}},"cores_conf":$cpus"""
 
     val fullJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(results)},""" +

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.api.Table
+import graft.api.{Catalog, Table}
 import graft.functions.Registry
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -29,6 +29,10 @@ object SparkEntry {
   private def tbl(s: SparkSession, dir: String, name: String): Table =
     Table.fromParquet(s, s"$dir/$name.parquet")
 
+  /** Bind each named table as a session temp view of the same name. */
+  private def bindViews(s: SparkSession, dir: String, tables: Seq[String]): Unit =
+    tables.foreach(t => Catalog.parquet(s, s"$dir/$t.parquet").createOrReplaceTempView(t))
+
   /** Query whose Spark SQL text parses and means the same in DuckDB. */
   private def same(table: String, sql: String): (QFn, Option[String]) =
     ((s: SparkSession, dir: String) => tbl(s, dir, table).sql(sql).toDF, Some(sql))
@@ -49,9 +53,7 @@ object SparkEntry {
     */
   private def multiSession(tables: Seq[String], sql: String): (QFn, Option[String]) =
     ((s: SparkSession, dir: String) => {
-      tables.foreach { t =>
-        s.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-      }
+      bindViews(s, dir, tables)
       Table.sessionSql(s, sql).toDF
     }, Some(sql))
 
@@ -61,9 +63,7 @@ object SparkEntry {
   private def multi(tables: Seq[String], sql: String): (QFn, Option[String]) =
     ((s: SparkSession, dir: String) => {
       Registry.registerAll(s)
-      tables.foreach { t =>
-        s.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-      }
+      bindViews(s, dir, tables)
       s.sql(sql)
     }, Some(sql))
 
@@ -74,7 +74,7 @@ object SparkEntry {
     */
   private def geoGridCustomers(s: SparkSession, dir: String): DataFrame = {
     val sixt = lit(0.0625)
-    s.read.parquet(s"$dir/customer.parquet")
+    Catalog.parquet(s, s"$dir/customer.parquet")
       .select(col("c_custkey"),
         ((col("c_custkey") % 320).cast("double") * sixt).as("plat"),
         (((col("c_custkey") * 7) % 320).cast("double") * sixt).as("plon"))
@@ -82,7 +82,7 @@ object SparkEntry {
 
   private def geoGridSuppliers(s: SparkSession, dir: String): DataFrame = {
     val sixt = lit(0.0625)
-    s.read.parquet(s"$dir/supplier.parquet")
+    Catalog.parquet(s, s"$dir/supplier.parquet")
       .select(col("s_suppkey"),
         (((col("s_suppkey") * 11) % 320).cast("double") * sixt).as("slat"),
         (((col("s_suppkey") * 13) % 320).cast("double") * sixt).as("slon"))
@@ -234,7 +234,7 @@ object SparkEntry {
     * — the overlap shape segment and chunk dedup both miss.
     */
   private def exactSubstrCorpus(s: SparkSession, dir: String) = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Catalog.parquet(s, s"$dir/documents.parquet")
     val excerpts = docs.filter(col("doc_id") % 25 === 0)
       .select((col("doc_id") + 2000000L).as("doc_id"),
         concat(lit("planted excerpt prefix marker "),
@@ -1108,7 +1108,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val tmp = s"target/tmp/io01_csv_${new java.io.File(dir).getName}"
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_orderkey"), col("l_linenumber"),
             col("l_quantity"), col("l_returnflag"))
           .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -1128,7 +1128,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val tmp = s"target/tmp/io02_json_${new java.io.File(dir).getName}"
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
           .write.mode("overwrite").json(tmp)
         Table.fromJson(s, tmp).sql(
@@ -1150,10 +1150,10 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val tmp = scratchDir(s"io03_part_${new java.io.File(dir).getName}")
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
           .write.mode("overwrite").partitionBy("lang").parquet(tmp)
-        s.read.parquet(tmp)
+        Catalog.parquet(s, tmp)
           .filter(col("lang").isin("en", "de"))
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n"),
@@ -1173,7 +1173,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val tmp = scratchDir(s"io04_gz_${new java.io.File(dir).getName}")
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .write.mode("overwrite").option("header", "true")
           .option("compression", "gzip").csv(tmp)
@@ -1195,9 +1195,9 @@ object SparkEntry {
     "j07_salted_join" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val big = s.read.parquet(s"$dir/orders.parquet")
+        val big = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_custkey").as("custkey"), col("o_totalprice"))
-        val small = s.read.parquet(s"$dir/customer.parquet")
+        val small = Catalog.parquet(s, s"$dir/customer.parquet")
           .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
         graft.ops.Skew.saltedJoin(big, small, "custkey", salt = 8)
           .groupBy(col("c_mktsegment"))
@@ -1454,7 +1454,7 @@ object SparkEntry {
         def relerr(a: Column, e: Column): Column = abs(a - e).cast("double") / e
         def gate(err: Column, bound: Double): Column =
           when(err <= bound, lit(bound)).otherwise(err)
-        val li = s.read.parquet(s"$dir/lineitem.parquet")
+        val li = Catalog.parquet(s, s"$dir/lineitem.parquet")
         // the exact COUNT(DISTINCT) runs as its OWN aggregation and
         // joins back on the 3-value group key: fused into one agg,
         // Spark's distinct rewrite keys the partial aggregate on
@@ -1516,7 +1516,7 @@ object SparkEntry {
         // cost of the string formulation (measured 6.8 s vs 1.5 s here
         // at sf0.1); distinct window-hashes ≡ distinct string 3-grams
         // absent collisions, which the strict oracle re-checks
-        val dg = s.read.parquet(s"$dir/documents.parquet")
+        val dg = Catalog.parquet(s, s"$dir/documents.parquet")
           .select((col("doc_id") % 2 === 0).as("in_a"),
             explode(call_function("window_hashes",
               graft.ops.TextOps.tokenHashes(col("text")), lit(3))).as("g"))
@@ -1579,7 +1579,7 @@ object SparkEntry {
         Registry.registerAll(s)
         val relerrCd = abs(col("__acd") - col("n_parts")).cast("double") / col("n_parts")
         val relerrP50 = abs(col("__p50a") - col("__p50e")) / col("__p50e")
-        val li = s.read.parquet(s"$dir/lineitem.parquet")
+        val li = Catalog.parquet(s, s"$dir/lineitem.parquet")
         // split like ap01: fused with count(DISTINCT), the partial agg
         // keys on (l_returnflag, l_partkey) and builds the quantile
         // sketch + exact-percentile buffer once per (flag, partkey)
@@ -1916,7 +1916,7 @@ object SparkEntry {
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         Registry.registerAll(s)
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
+        val schema = Catalog.parquet(s, s"$dir/documents.parquet").schema
         val docs = s.readStream.schema(schema)
           .parquet(graft.streaming.Replay.linkDir(s"$dir/documents.parquet"))
           .select(col("doc_id"), col("text"))
@@ -2087,7 +2087,7 @@ object SparkEntry {
     "u07_snapshot_diff" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val base = s.read.parquet(s"$dir/orders.parquet")
+        val base = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"),
             round(col("o_totalprice") * 100).cast("long").as("cents"),
             col("o_orderstatus"))
@@ -2571,7 +2571,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val fp = graft.ops.Dedup.winnowingFingerprints(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+          Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
           k = 3, w = 4, maxDocFreq = Some(64))
         val sets = fp.select(col("doc_id"), col("h")).distinct()
         sets.as("a").join(sets.as("b"),
@@ -2615,7 +2615,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.exactGroups(
-            s.read.parquet(s"$dir/documents.parquet"), "text", "doc_id")
+            Catalog.parquet(s, s"$dir/documents.parquet"), "text", "doc_id")
           .orderBy(col("keep_id"))
       },
       """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
@@ -2637,7 +2637,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.minhashPairs(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             numHashes = 64, bands = 16, shingleK = 5, threshold = 0.5)
           .select(col("id_a"), col("id_b"))
           .orderBy(col("id_a"), col("id_b"))
@@ -2668,7 +2668,7 @@ object SparkEntry {
     "d03_simhash_pairs" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         // fingerprints materialize once (16 bytes/doc): both sides of the
         // chunk self-join read the checkpoint instead of re-running
         // tokenize+simhash over the corpus
@@ -2704,7 +2704,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.nearDupJaccard(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             numHashes = 128, bands = 32, shingleK = 3, threshold = 0.6,
             hashGrams = true)
           .orderBy(col("id_a"), col("id_b"))
@@ -2739,7 +2739,7 @@ object SparkEntry {
     "d05_embed_neardup" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val lsh = graft.ops.Dedup.embeddingPairs(emb, "vec_id", "embedding",
             bits = 6, threshold = 0.3)
           .select(col("id_a"), col("id_b"), lit(1L).as("__hit"))
@@ -2768,7 +2768,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.dedupSegments(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             delim = " ")
           .orderBy(col("doc_id"))
       },
@@ -2877,7 +2877,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.cdcChunkGroups(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             div = 64L, minLen = 32)
           .orderBy(col("chunk_hash"))
       },
@@ -2919,7 +2919,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.embeddingPairsExact(
-            s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+            Catalog.parquet(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
             threshold = 0.35)
           .orderBy(col("id_a"), col("id_b"))
       },
@@ -2945,7 +2945,7 @@ object SparkEntry {
     "d08_dup_clusters" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val base = s.read.parquet(s"$dir/embeddings.parquet")
+        val base = Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val r1 = base.filter(col("vec_id") % 10 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -2994,7 +2994,7 @@ object SparkEntry {
     "s04_centroids" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/embeddings.parquet")
+        Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("label").cast("long").as("label"),
             transform(col("embedding").cast("array<double>"),
               x => round(x * lit(1.0e9)).cast("long")).as("q"))
@@ -3026,7 +3026,7 @@ object SparkEntry {
     "s01_ann_brute" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         graft.ops.Similarity.bruteForceTopK(
             emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
           .select(col("probe_id"), col("rank").cast("long").as("rank"),
@@ -3049,7 +3049,7 @@ object SparkEntry {
     "s20_hard_negatives" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val pairs = emb.filter(col("vec_id") < 5)
           .select(col("vec_id").as("a_id"),
             (col("vec_id") + 1).as("p_id"))
@@ -3094,7 +3094,7 @@ object SparkEntry {
     "s21_random_projection" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val rp = graft.ops.Similarity.randomProjection(
           emb, "vec_id", "embedding", inDim = 64, outDim = 16)
         val approx = graft.ops.Similarity.bruteForceTopK(
@@ -3136,7 +3136,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Search.bm25(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             Seq("data", "query", "vector"))
           .orderBy(col("doc_id"))
       },
@@ -3177,8 +3177,8 @@ object SparkEntry {
     "s16_hybrid_rrf" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         // lexical TOP-100 through the bounded-heap aggregate, not a
         // global rank window — RRF fuses retrieval LISTS, and a
         // single-partition sort of the full corpus would be the one
@@ -3263,7 +3263,7 @@ object SparkEntry {
     "gr08_ktruss" -> api(
       (s, dir) => {
         import s.implicits._
-        val v = s.read.parquet(s"$dir/documents.parquet")
+        val v = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id").as("x")).filter(col("x") < 97).distinct()
         val band = v.filter(col("x") >= 5)
           .select(col("x").as("s"), explode(array(col("x") + 1,
@@ -3321,7 +3321,7 @@ object SparkEntry {
 
     "gr05_kcore" -> api(
       (s, dir) => {
-        val v = s.read.parquet(s"$dir/documents.parquet")
+        val v = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id").as("id"))
         val de = v.select(col("id").as("s"),
             explode(array((col("id") * 7 + 1) % 97,
@@ -3377,7 +3377,7 @@ object SparkEntry {
     "s05_ann_ivf_full" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val coarse = graft.ops.Ivf.trainCentroids(emb, "vec_id", "embedding", nlist = 16)
         val cents = graft.ops.Ivf.lloydStep(emb, "embedding", coarse)
         graft.ops.Ivf.topK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -3396,7 +3396,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val q = graft.ops.Quantize.quantizeInt8(
-          s.read.parquet(s"$dir/embeddings.parquet")
+          Catalog.parquet(s, s"$dir/embeddings.parquet")
             .select(col("vec_id"), col("embedding")), "embedding")
         // mx recomputed directly (abs/max of stored doubles is exact);
         // q_scale*127 would NOT round-trip bitwise through the division
@@ -3429,7 +3429,7 @@ object SparkEntry {
     "s07_ann_quantized" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding"))
         graft.ops.Quantize.bruteForceTopKQuantized(
             emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
@@ -3467,7 +3467,7 @@ object SparkEntry {
     "s03_ann_ivf" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val probes = emb.filter(col("vec_id") < 5)
         val coarse = graft.ops.Ivf.trainCentroids(emb, "vec_id", "embedding", nlist = 16)
         val cents = graft.ops.Ivf.lloydStep(emb, "embedding", coarse)
@@ -3506,10 +3506,10 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val epoch = lit("1970-01-01")
-        val points = s.read.parquet(s"$dir/lineitem.parquet")
+        val points = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(datediff(col("l_shipdate"), epoch).cast("long").as("t"),
             col("l_quantity"))
-        val intervals = s.read.parquet(s"$dir/orders.parquet")
+        val intervals = Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_totalprice") > 497000)
           .select(col("o_orderkey"),
             datediff(col("o_orderdate"), epoch).cast("long").as("lo"))
@@ -3548,7 +3548,7 @@ object SparkEntry {
     "s02_ann_lsh" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val probes = emb.filter(col("vec_id") < 5)
         val lsh = graft.ops.Similarity.lshTopK(emb, probes, "vec_id", "embedding",
             k = 10, bits = 8, multiProbe = true)
@@ -3581,7 +3581,7 @@ object SparkEntry {
     "t01_langid" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"),
             graft.ops.TextAnalysis.langId(col("text")).as("pred_lang"))
           .orderBy(col("doc_id"))
@@ -3606,7 +3606,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.TextAnalysis.qualityFeatures(
-            s.read.parquet(s"$dir/documents.parquet"), "text")
+            Catalog.parquet(s, s"$dir/documents.parquet"), "text")
           .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"),
             col("n_tokens").cast("long").as("n_tokens"),
             col("alpha_ratio"), col("punct_ratio"), col("stopword_ratio"),
@@ -3636,7 +3636,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val t = graft.ops.TextAnalysis
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), length(col("text")).as("len_chars"),
             t.tokenCount(col("text")).cast("long").as("n_tokens"),
             t.bpeTokenEstimate(col("text")).as("bpe_est"))
@@ -3656,7 +3656,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.TextAnalysis.readability(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text")
           .orderBy(col("doc_id"))
       },
       """WITH f AS (SELECT doc_id,
@@ -3679,7 +3679,7 @@ object SparkEntry {
     "t04_fingerprint" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             graft.ops.TextAnalysis.fingerprint(col("text")).as("fp"))
           .orderBy(col("doc_id"))
@@ -3698,7 +3698,7 @@ object SparkEntry {
     "d09_dedup_against_ref" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val ref = docs.filter(col("doc_id") < 250 || col("doc_id").between(400, 449))
         val fresh = docs.filter(col("doc_id") >= 250)
         graft.ops.Dedup.dedupAgainstReference(fresh, ref, "text",
@@ -3731,7 +3731,7 @@ object SparkEntry {
     "d10_decontaminate" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Dedup.contaminationFlags(
             docs, "doc_id", "text",
             docs.filter(col("doc_id").between(450, 459)), "text", n = 8,
@@ -3761,7 +3761,7 @@ object SparkEntry {
     "d14_decontaminate_hashed" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Dedup.contaminationFlags(
             docs, "doc_id", "text",
             docs.filter(col("doc_id").between(450, 459)), "text", n = 8,
@@ -3795,7 +3795,7 @@ object SparkEntry {
     "pr03_data_card" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -3849,7 +3849,7 @@ object SparkEntry {
     "p02_pack_sequences" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Packing.packSequences(
             docs, "doc_id", "source",
             graft.ops.TextAnalysis.tokenCount(col("text")), budget = 2048)
@@ -3882,7 +3882,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.TextAnalysis.corpusNovelty(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             shingleK = 3)
           .withColumnRenamed("id", "doc_id")
           .orderBy(col("doc_id"))
@@ -3921,7 +3921,7 @@ object SparkEntry {
     "p12_pack_segments" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Packing.packSegments(
             docs, "doc_id", "source",
             graft.ops.TextAnalysis.tokenCount(col("text")), budget = 2048)
@@ -3960,7 +3960,7 @@ object SparkEntry {
     "t11_bpe_tokens" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             graft.ops.TextAnalysis.bpeTokenCount(col("text")).as("bpe_tokens"),
             graft.ops.TextAnalysis.tokenCount(col("text")).cast("long").as("re_tokens"))
@@ -3979,7 +3979,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Packing.packSequences(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "source",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "source",
             graft.ops.TextAnalysis.bpeTokenCount(col("text")), budget = 1024)
           .orderBy(col("source"), col("doc_id"))
       },
@@ -4010,7 +4010,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Sampling.tokenBudget(
-            s.read.parquet(s"$dir/documents.parquet"), "source", "doc_id",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "source", "doc_id",
             graft.ops.TextAnalysis.bpeTokenCount(col("text")), budget = 5000)
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"),
@@ -4040,7 +4040,7 @@ object SparkEntry {
     "p09_pack_materialize" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .withColumn("text", coalesce(col("text"), lit("")))
         val packed = graft.ops.Packing.packSequences(docs, "doc_id", "source",
           graft.ops.TextAnalysis.bpeTokenCount(col("text")), budget = 1024)
@@ -4074,8 +4074,8 @@ object SparkEntry {
     "p01_pipeline_e2e" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val kept = graft.ops.Dedup.exactDedup(docs, "text", "doc_id")
         val scored = graft.ops.TextAnalysis.qualityFeatures(kept, "text")
           .filter(col("n_tokens") >= 30)
@@ -4119,7 +4119,7 @@ object SparkEntry {
     "t05_redact" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             graft.ops.TextAnalysis.redact(concat(
               substring(col("text"), 1, 40),
@@ -4148,7 +4148,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.TextAnalysis.repetitionSignals(
-            s.read.parquet(s"$dir/documents.parquet"), "text")
+            Catalog.parquet(s, s"$dir/documents.parquet"), "text")
           .select(col("doc_id"), col("n_words"), col("dup_word_frac"),
             col("top_word_frac"), col("dup_2gram_frac"),
             col("symbol_word_ratio"))
@@ -4187,7 +4187,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val raw = concat(lit("cafe\u0301 nai\u0308ve "), substring(col("text"), 1, 30))
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             call_function("unicode_normalize", raw).as("nfc"),
             length(raw).cast("long").as("raw_len"),
@@ -4215,8 +4215,8 @@ object SparkEntry {
     "p04_curate_clusters" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val prev = emb.filter(col("vec_id") % 10 === 0)
           .select((col("vec_id") + 1L).as("vec_id"),
@@ -4275,7 +4275,7 @@ object SparkEntry {
     "p05_quantile_gate" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val med = docs.groupBy(col("lang"))
           .agg(expr("percentile(n_chars, 0.5)").as("med"))
         docs.join(broadcast(med), "lang")
@@ -4301,7 +4301,7 @@ object SparkEntry {
         // rounded-double output would be half-ulp boundary-brittle
         // across engines (repo determinism rules)
         graft.ops.TextAnalysis.tfidfTopTerms(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", k = 5)
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text", k = 5)
           .select(col("doc_id"), col("rank"), col("term"),
             round(col("score") * lit(1.0e6)).cast("long").as("score_fp"))
           .orderBy(col("doc_id"), col("rank"))
@@ -4334,7 +4334,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.TextAnalysis.chunkTokens(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             size = 20, stride = 15)
           .orderBy(col("doc_id"), col("start"))
       },
@@ -4358,7 +4358,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Sampling.deterministicSplit(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id",
             Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
           .groupBy(col("split"))
           .agg(count(lit(1)).as("n"),
@@ -4403,7 +4403,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Sampling.dsirLogWeights(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             col("lang") === "en")
           .orderBy(col("doc_id"))
       },
@@ -4421,7 +4421,7 @@ object SparkEntry {
     "sp13_neyman_allocation" -> api(
       (s, dir) => {
         graft.ops.Sampling.neymanAllocation(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Catalog.parquet(s, s"$dir/documents.parquet"),
             "source", "n_chars", budget = 1000L)
           .orderBy(col("source"))
       },
@@ -4446,7 +4446,7 @@ object SparkEntry {
     // the allocation to bucket granularity, reproducible cross-engine
     "sp14_neyman_sample" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         // budget 100 over ~25-doc strata puts every threshold strictly
         // inside the bucket grid, so the oracle genuinely discriminates
         // on the md5 gate (a saturating budget would keep 100% of rows
@@ -4497,7 +4497,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val w = graft.ops.Sampling.dsirLogWeights(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             col("lang") === "en")
           .select(col("doc_id"),
             (col("weight_fp").cast("double") / 1e6).as("w"))
@@ -4525,7 +4525,7 @@ object SparkEntry {
     "sp10_class_balance" -> api(
       (s, dir) => {
         val W = org.apache.spark.sql.expressions.Window
-        val d = s.read.parquet(s"$dir/documents.parquet")
+        val d = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"))
         val k = d.groupBy(col("lang")).agg(count(lit(1)).as("n"))
           .agg(min(col("n")).as("__k"))
@@ -4552,7 +4552,7 @@ object SparkEntry {
 
     "sp09_kfold" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"))
         val folded = docs.withColumn("fold",
           (col("doc_id") * 2654435761L) % 4294967296L % 5)
@@ -4614,7 +4614,7 @@ object SparkEntry {
     "sp03_weighted_mix" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Sampling.weightedMix(
             Seq(docs.filter(col("lang") === "en") -> 1.4,
               docs.filter(col("lang") =!= "en") -> 0.5), "doc_id")
@@ -4640,7 +4640,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Sampling.perGroupQuota(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Catalog.parquet(s, s"$dir/documents.parquet"),
             groupCol = "source", orderCol = "n_chars", idCol = "doc_id",
             quota = 15)
           .select(col("doc_id"), col("source"), col("n_chars"))
@@ -4660,7 +4660,7 @@ object SparkEntry {
         Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.metaDecode(
-            m.withBinaryPayload(s.read.parquet(s"$dir/documents.parquet"), "text"),
+            m.withBinaryPayload(Catalog.parquet(s, s"$dir/documents.parquet"), "text"),
             "doc_id", "payload")
           .orderBy(col("doc_id"))
       },
@@ -4682,7 +4682,7 @@ object SparkEntry {
         Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.decodeMedia(
-            m.withBmpPayload(s.read.parquet(s"$dir/documents.parquet"),
+            m.withBmpPayload(Catalog.parquet(s, s"$dir/documents.parquet"),
               "doc_id", "text", width = 16),
             "doc_id", "payload")
           .select(col("doc_id"), col("format"), col("n_bytes"),
@@ -4706,7 +4706,7 @@ object SparkEntry {
         val m = graft.ops.Multimodal
         m.decodeMedia(
             m.resizeImages(
-              m.withBmpPayload(s.read.parquet(s"$dir/documents.parquet"),
+              m.withBmpPayload(Catalog.parquet(s, s"$dir/documents.parquet"),
                 "doc_id", "text", width = 16),
               "doc_id", "payload", newW = 8, newH = 6),
             "doc_id", "payload")
@@ -4732,7 +4732,7 @@ object SparkEntry {
         m.audioChecksum(
             m.resampleAudio(
               m.withWavPayload(
-                s.read.parquet(s"$dir/documents.parquet")
+                Catalog.parquet(s, s"$dir/documents.parquet")
                   .withColumn("text", coalesce(col("text"), lit(""))),
                 "doc_id", "text", sampleRate = 8000),
               "doc_id", "payload", factor = 2),
@@ -4776,7 +4776,7 @@ object SparkEntry {
         m.decodeMedia(
             m.frameSampleAudio(
               m.withWavPayload(
-                s.read.parquet(s"$dir/documents.parquet")
+                Catalog.parquet(s, s"$dir/documents.parquet")
                   .withColumn("text", coalesce(col("text"), lit(""))),
                 "doc_id", "text", sampleRate = 8000),
               "doc_id", "payload", everyN = 4),
@@ -4806,7 +4806,7 @@ object SparkEntry {
         val m = graft.ops.Multimodal
         m.pngFeatures(
             m.withPngPayload(
-              s.read.parquet(s"$dir/documents.parquet")
+              Catalog.parquet(s, s"$dir/documents.parquet")
                 .withColumn("text", coalesce(col("text"), lit(""))),
               "doc_id", "text", width = 16),
             "doc_id", "payload")
@@ -4846,7 +4846,7 @@ object SparkEntry {
         val m = graft.ops.Multimodal
         m.decodeMedia(
             m.resizeImages(
-              m.withPngPayload(s.read.parquet(s"$dir/documents.parquet"),
+              m.withPngPayload(Catalog.parquet(s, s"$dir/documents.parquet"),
                 "doc_id", "text", width = 16),
               "doc_id", "payload", newW = 8, newH = 6),
             "doc_id", "payload")
@@ -4870,7 +4870,7 @@ object SparkEntry {
         val m = graft.ops.Multimodal
         m.imageFeatures(
             m.withBmpPayload(
-              s.read.parquet(s"$dir/documents.parquet")
+              Catalog.parquet(s, s"$dir/documents.parquet")
                 .withColumn("text", coalesce(col("text"), lit(""))),
               "doc_id", "text", width = 16),
             "doc_id", "payload")
@@ -4912,7 +4912,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val m = graft.ops.Multimodal
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .withColumn("text", coalesce(col("text"), lit("")))
         val fp = m.imagePHash(
           m.withBmpPayload(docs, "doc_id", "text", width = 16),
@@ -4936,7 +4936,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val m = graft.ops.Multimodal
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .withColumn("text", coalesce(col("text"), lit("")))
         val fp = m.imagePHash(
           m.withBmpPayload(docs, "doc_id", "text", width = 16),
@@ -4968,10 +4968,10 @@ object SparkEntry {
     "u01_upsert" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val base = s.read.parquet(s"$dir/orders.parquet")
+        val base = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
           .withColumn("ver", lit(0L))
-        val delta = s.read.parquet(s"$dir/orders.parquet")
+        val delta = Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 10 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"),
             (col("o_totalprice") * 2).as("o_totalprice"))
@@ -5007,7 +5007,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.TextAnalysis.bigramLmScore(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text")
           .orderBy(col("doc_id"))
       },
       """WITH s AS (
@@ -5040,7 +5040,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Sampling.temperatureSample(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "source")
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "source")
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n"),
             sum(col("n_chars")).cast("long").as("sc"),
@@ -5068,12 +5068,12 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val tmp = scratchDir(s"io05_sorted_${new java.io.File(dir).getName}")
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
           .repartitionByRange(8, col("o_orderkey"))
           .sortWithinPartitions(col("o_orderkey"))
           .write.mode("overwrite").parquet(tmp)
-        s.read.parquet(tmp)
+        Catalog.parquet(s, tmp)
           .filter(col("o_orderkey").between(1000, 5000))
           .agg(count(lit(1)).as("n"),
             sum(round(col("o_totalprice") * 100).cast("long")).as("cents"),
@@ -5133,7 +5133,7 @@ object SparkEntry {
     "s19_proximity_search" -> api(
       (s, dir) => {
         graft.ops.Search.proximitySearch(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             Seq("vector", "merge", "scan"))
           .orderBy(col("doc_id"))
       },
@@ -5158,7 +5158,7 @@ object SparkEntry {
     "s18_phrase_search" -> api(
       (s, dir) => {
         graft.ops.Search.phraseSearch(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             phrase = "slow hash batch")
           .orderBy(col("doc_id"))
       },
@@ -5189,7 +5189,7 @@ object SparkEntry {
     "s17_mmr_rerank" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         graft.ops.Search.mmr(emb, emb.filter(col("vec_id") === 0),
             "vec_id", "embedding", poolSize = 16, k = 5)
           .orderBy(col("rank"))
@@ -5298,7 +5298,7 @@ object SparkEntry {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_custkey")).orderBy(col("d"))
           .rangeBetween(-6, 0)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_custkey"),
             unix_date(col("o_orderdate").cast("date")).cast("long").as("d"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -5727,7 +5727,7 @@ object SparkEntry {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_custkey")).orderBy(col("d"))
           .rangeBetween(-13, 0)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_custkey"),
             unix_date(col("o_orderdate").cast("date")).cast("long").as("d"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -5831,9 +5831,9 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val cols = Seq("o_orderkey", "o_orderstatus", "o_totalprice")
-        val base = s.read.parquet(s"$dir/orders.parquet")
+        val base = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(cols.map(col): _*)
-        val delta = s.read.parquet(s"$dir/orders.parquet")
+        val delta = Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 10 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"),
             (col("o_totalprice") * 2).as("o_totalprice"))
@@ -5902,7 +5902,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.duplicatedSpans(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", k = 8)
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text", k = 8)
           .orderBy(col("doc_id"))
       },
       """WITH s AS (
@@ -5978,7 +5978,7 @@ object SparkEntry {
     "st07_stream_ref_dedup" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val ref = s.read.parquet(s"$dir/documents.parquet")
+        val ref = Catalog.parquet(s, s"$dir/documents.parquet")
           .filter(col("doc_id") % 7 === 0)
           .select(md5(col("text")).as("digest")).distinct()
         val stream = s.readStream
@@ -6013,7 +6013,7 @@ object SparkEntry {
     "p06_pipeline_v2" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val scored = graft.ops.TextAnalysis.bigramLmScore(docs, "doc_id", "text")
         val gated = docs.join(scored, "doc_id")
           .filter(col("n_bigrams") > 0 &&
@@ -6069,7 +6069,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val tmp = scratchDir(s"io06_merge_${new java.io.File(dir).getName}")
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         docs.filter(col("doc_id") % 2 === 0)
           .select(col("doc_id"), col("lang"))
           .write.mode("overwrite").parquet(tmp)
@@ -6127,7 +6127,7 @@ object SparkEntry {
     "s08_ann_pq" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val cb = P.seededCodebook(emb, "vec_id", "embedding", dim = 64, m = 4, k = 16)
         val codes = P.encode(emb, cb, "vec_id", "embedding", dim = 64, m = 4)
@@ -6172,7 +6172,7 @@ object SparkEntry {
     "s09_ann_ivfpq" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val cb = P.seededCodebook(emb, "vec_id", "embedding", dim = 64, m = 4, k = 16)
         val codes = P.encode(emb, cb, "vec_id", "embedding", dim = 64, m = 4)
@@ -6195,7 +6195,7 @@ object SparkEntry {
     "s11_ann_ivfpq_persisted" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val prefix = s"graft_s11_${new java.io.File(dir).getName}"
         P.writeIndex(emb, "vec_id", "embedding",
@@ -6221,7 +6221,7 @@ object SparkEntry {
     "s12_ann_index_append" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val cut = 4L * emb.count() / 5L
         val prefix = s"graft_s12_${new java.io.File(dir).getName}"
@@ -6248,7 +6248,7 @@ object SparkEntry {
     "s14_ann_index_delete" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val prefix = s"graft_s14_${new java.io.File(dir).getName}"
         P.writeIndex(emb, "vec_id", "embedding",
@@ -6326,7 +6326,7 @@ object SparkEntry {
     "g05_stats" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Catalog.parquet(s, s"$dir/lineitem.parquet")
           .groupBy(col("l_returnflag"))
           .agg(
             count(lit(1)).as("n"),
@@ -6353,7 +6353,7 @@ object SparkEntry {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_orderpriority"))
           .orderBy(col("o_totalprice"), col("o_orderkey"))
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
           .withColumn("tile", ntile(4).over(w).cast("long"))
           .withColumn("pr", round(percent_rank().over(w), 6))
@@ -6379,7 +6379,7 @@ object SparkEntry {
         Registry.registerAll(s)
         val qc = round(col("l_quantity") * 100).cast("long")
         val cc = round(col("l_extendedprice") * 100).cast("long")
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Catalog.parquet(s, s"$dir/lineitem.parquet")
           .groupBy(col("l_returnflag"))
           .pivot("l_linestatus", Seq("F", "O"))
           .agg(sum(qc).as("qty"), sum(cc).as("cents"))
@@ -6407,7 +6407,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val qc = round(col("l_quantity") * 100).cast("long")
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Catalog.parquet(s, s"$dir/lineitem.parquet")
           .groupBy(col("l_returnflag"))
           .agg(
             sum(when(col("l_linestatus") === "F", qc).otherwise(0L)).as("qty_f"),
@@ -6482,7 +6482,7 @@ object SparkEntry {
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
         import s.implicits._
         m.withPngPayload(
-            s.read.parquet(s"$dir/documents.parquet")
+            Catalog.parquet(s, s"$dir/documents.parquet")
               .filter(col("doc_id") < 50)
               .withColumn("text", coalesce(col("text"), lit(""))),
             "doc_id", "text", width = 16)
@@ -6543,7 +6543,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val tmp = scratchDir(s"io15_arrow_${new java.io.File(dir).getName}")
-        val df = s.read.parquet(s"$dir/orders.parquet")
+        val df = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
           .repartition(4)
@@ -6568,7 +6568,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val tmp = scratchDir(s"io07_orc_${new java.io.File(dir).getName}")
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"), col("o_orderdate").cast("date").as("o_date"))
           .write.mode("overwrite").orc(tmp)
@@ -6611,7 +6611,7 @@ object SparkEntry {
     "q26_conditional" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_orderkey"), col("l_linenumber"),
             when(col("l_quantity") >= 25, lit("bulk"))
               .when(col("l_quantity") >= 10, lit("mid"))
@@ -6641,7 +6641,7 @@ object SparkEntry {
         val m = graft.ops.Multimodal
         m.audioFeatures(
             m.withWavPayload(
-              s.read.parquet(s"$dir/documents.parquet")
+              Catalog.parquet(s, s"$dir/documents.parquet")
                 .withColumn("text", coalesce(col("text"), lit(""))),
               "doc_id", "text"),
             "doc_id", "payload")
@@ -6676,8 +6676,8 @@ object SparkEntry {
     "g06_string_agg" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val n = s.read.parquet(s"$dir/nation.parquet")
-        val r = s.read.parquet(s"$dir/region.parquet")
+        val n = Catalog.parquet(s, s"$dir/nation.parquet")
+        val r = Catalog.parquet(s, s"$dir/region.parquet")
         n.join(r, col("n_regionkey") === col("r_regionkey"))
           .groupBy(col("r_regionkey"), col("r_name"))
           .agg(count(lit(1)).as("n_nations"),
@@ -6733,7 +6733,7 @@ object SparkEntry {
           lit("</h1>\n<p class=\"c\">"),
           T.htmlEscape(coalesce(col("text"), lit(""))),
           lit("</p>\n<a href=\"http://example.com\">link</a></body></html>"))
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), T.stripHtml(html).as("clean"))
           .select(col("doc_id"),
             length(col("clean")).cast("long").as("n_clean"),
@@ -6804,7 +6804,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.editDistancePairs(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             prefixLen = 64, blockLen = 24, maxDist = 8)
           .orderBy(col("id_a"), col("id_b"))
       },
@@ -6827,7 +6827,7 @@ object SparkEntry {
     "g07_argmax" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .groupBy(col("o_orderpriority"))
           .agg(max(struct(col("o_totalprice"), col("o_orderkey"))).as("mx"),
             min(struct(col("o_totalprice"), col("o_orderkey"))).as("mn"))
@@ -6853,7 +6853,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         def snap(mod: Int, mult: Int, ver: Long) =
-          s.read.parquet(s"$dir/orders.parquet")
+          Catalog.parquet(s, s"$dir/orders.parquet")
             .filter(col("o_orderkey") % mod === 0)
             .select(col("o_orderkey"),
               (round(col("o_totalprice") * 100).cast("long") * mult).as("cents"))
@@ -6896,7 +6896,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         def stmt(mod: Int, mult: Int, vf: Long, tx: Long) =
-          s.read.parquet(s"$dir/orders.parquet")
+          Catalog.parquet(s, s"$dir/orders.parquet")
             .filter(col("o_orderkey") % mod === 0)
             .select(col("o_orderkey"),
               (round(col("o_totalprice") * 100).cast("long") * mult)
@@ -6952,7 +6952,7 @@ object SparkEntry {
     "u10_dml_statements" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 7 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -7012,7 +7012,7 @@ object SparkEntry {
     "u12_insert_on_conflict" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 4 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -7067,16 +7067,16 @@ object SparkEntry {
     "u13_correlated_dml" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 7 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
           .createOrReplaceTempView("u13_base")
-        s.read.parquet(s"$dir/customer.parquet")
+        Catalog.parquet(s, s"$dir/customer.parquet")
           .select(col("c_custkey").as("ck"),
             round(col("c_acctbal") * 100).cast("long").as("bal_cents"))
           .createOrReplaceTempView("u13_src")
-        s.read.parquet(s"$dir/supplier.parquet")
+        Catalog.parquet(s, s"$dir/supplier.parquet")
           .select(col("s_suppkey").as("sk"), col("s_nationkey").as("nat"))
           .createOrReplaceTempView("u13_sup")
         graft.api.Table.sessionSql(s,
@@ -7123,7 +7123,7 @@ object SparkEntry {
     "u14_conflict_where" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 4 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -7168,7 +7168,7 @@ object SparkEntry {
     "u15_dml_returning" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 6 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -7221,7 +7221,7 @@ object SparkEntry {
     "u16_cte_dml" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 8 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -7269,7 +7269,7 @@ object SparkEntry {
     "u17_schema_ddl" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 9 === 0)
           .createOrReplaceTempView("u17_src")
         graft.api.Table.sessionSql(s,
@@ -7326,7 +7326,7 @@ object SparkEntry {
     "u18_drop_alter" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/nation.parquet")
+        Catalog.parquet(s, s"$dir/nation.parquet")
           .createOrReplaceTempView("nation")
         def ss(q: String) = graft.api.Table.sessionSql(s, q)
         ss("DROP TABLE IF EXISTS u18_final")
@@ -7365,9 +7365,7 @@ object SparkEntry {
     "u19_subquery_dml" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        Seq("orders", "customer").foreach { t =>
-          s.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-        }
+        bindViews(s, dir, Seq("orders", "customer"))
         def ss(q: String) = graft.api.Table.sessionSql(s, q)
         ss("""CREATE OR REPLACE TEMP TABLE u19_t AS
               SELECT o_orderkey AS k, o_custkey AS c,
@@ -7420,7 +7418,7 @@ object SparkEntry {
     "u20_script" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/region.parquet")
+        Catalog.parquet(s, s"$dir/region.parquet")
           .createOrReplaceTempView("region")
         graft.api.Table.sessionSql(s,
           """DROP TABLE IF EXISTS u20_t;
@@ -7450,7 +7448,7 @@ object SparkEntry {
     "u21_upsert_returning" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 9 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -7521,7 +7519,7 @@ object SparkEntry {
     "u24_prepared_stmt" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .createOrReplaceTempView("u24_orders")
         graft.api.Table.sessionSql(s,
           """PREPARE u24p AS
@@ -7556,7 +7554,7 @@ object SparkEntry {
     "u23_sql_macros" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/nation.parquet")
+        Catalog.parquet(s, s"$dir/nation.parquet")
           .createOrReplaceTempView("u23_nation")
         graft.api.Table.sessionSql(s,
           """CREATE OR REPLACE MACRO u23_disc(v, pct := 10) AS
@@ -7591,7 +7589,7 @@ object SparkEntry {
     "u22_script_txn" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 10 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -7634,7 +7632,7 @@ object SparkEntry {
     "u11_ctas" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .createOrReplaceTempView("u11_src")
         graft.api.Table.sessionSql(s,
           """CREATE OR REPLACE TEMP TABLE u11_hot AS
@@ -7662,12 +7660,12 @@ object SparkEntry {
     "u09_merge_into" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 3 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
           .createOrReplaceTempView("u09_target")
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"),
             round(col("o_totalprice") * 110).cast("long").as("cents"))
@@ -7709,7 +7707,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         def snap(mod: Int, mult: Int, ver: Long) =
-          s.read.parquet(s"$dir/orders.parquet")
+          Catalog.parquet(s, s"$dir/orders.parquet")
             .filter(col("o_orderkey") % mod === 0)
             .select(col("o_orderkey"),
               (round(col("o_totalprice") * 100).cast("long") * mult).as("cents"))
@@ -7749,7 +7747,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Sampling.stratifiedSplit(
-            s.read.parquet(s"$dir/documents.parquet"), "lang", "doc_id", pct = 20)
+            Catalog.parquet(s, s"$dir/documents.parquet"), "lang", "doc_id", pct = 20)
           .groupBy(col("lang"), col("split"))
           .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"))
           .orderBy(col("lang"), col("split"))
@@ -7773,7 +7771,7 @@ object SparkEntry {
     "s10_ann_filtered" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         graft.ops.Similarity.bruteForceTopK(
             emb.filter(col("label") < 4), emb.filter(col("vec_id") < 5),
             "vec_id", "embedding", k = 10)
@@ -7816,7 +7814,7 @@ object SparkEntry {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         try q.awaitTermination() finally q.stop()
-        s.read.parquet(s"$base/data")
+        Catalog.parquet(s, s"$base/data")
           .groupBy(col("h"), col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(18,6)")).cast("double").as("sv"))
@@ -7837,7 +7835,7 @@ object SparkEntry {
         val s = outer.newSession()
         s.conf.set("spark.sql.shuffle.partitions", 8)
         Registry.registerAll(s)
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
+        val schema = Catalog.parquet(s, s"$dir/documents.parquet").schema
         val out = s.readStream.schema(schema)
           .parquet(graft.streaming.Replay.linkDir(s"$dir/documents.parquet"))
           .filter(col("n_chars") >= 200)
@@ -7912,7 +7910,7 @@ object SparkEntry {
           lit("</h1>\n<p class=\"c\">"),
           T.htmlEscape(coalesce(col("text"), lit(""))),
           lit("</p>\n<a href=\"http://example.com\">link</a></body></html>"))
-        val cleaned = s.read.parquet(s"$dir/documents.parquet")
+        val cleaned = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("source"), T.stripHtml(html).as("clean"))
           .withColumn("n_clean", length(col("clean")).cast("long"))
           .filter(col("n_clean") >= 200)
@@ -7993,7 +7991,7 @@ object SparkEntry {
     "q27_higher_order" -> api(
       (s, dir) => {
         val toks = split(coalesce(col("text"), lit("")), " ")
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             aggregate(transform(toks, t => length(t)), lit(0L),
               (a, x) => a + x).as("sum_len"),
@@ -8043,7 +8041,7 @@ object SparkEntry {
           .otherwise(
             concat(lit("http://"), col("source"),
               lit(".example.net/p?a=1&utm_medium=m&b="), id))
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(id, url.as("__u"))
           .select(id, T.normalizeUrl(col("__u")).as("url"),
             T.urlHost(col("__u")).as("host"),
@@ -8102,7 +8100,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val T = graft.ops.TextOps
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val excerpts = docs.filter(col("doc_id") % 25 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"),
@@ -8159,7 +8157,7 @@ object SparkEntry {
     // tiny-N oracle.
     "gr06_shortest_path" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"))
         val n = docs.count()
         val edges = docs
@@ -8392,7 +8390,7 @@ object SparkEntry {
     // id (sparse doc_id spaces) drops identically in both engines.
     "gr01_pagerank" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"))
         val n = docs.count() // control-plane scalar: sizes the literals
         val S = 1000000000000L
@@ -8447,7 +8445,7 @@ object SparkEntry {
     // hops are absent from both sides by construction.
     "gr02_bfs_hops" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"))
         val n = docs.count()
         val edges = docs
@@ -8495,7 +8493,7 @@ object SparkEntry {
     // the three corners of each closed triangle.
     "gr03_triangles" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"))
         val de = docs.select(col("doc_id").as("s"),
           explode(array((col("doc_id") * 7 + 1) % 97,
@@ -8542,7 +8540,7 @@ object SparkEntry {
     // aggregated groupBy. Isolated nodes keep their own label.
     "gr04_label_propagation" -> api(
       (s, dir) => {
-        val v = s.read.parquet(s"$dir/documents.parquet")
+        val v = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id").as("id"))
         val de = v.select(col("id").as("s"),
             explode(array((col("id") * 7 + 1) % 97,
@@ -8601,7 +8599,7 @@ object SparkEntry {
     "d18_dedup_impact" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val keep = graft.ops.Dedup.exactGroups(docs, "text", "doc_id")
           .select(col("keep_id").as("doc_id"), lit(1L).as("__keep"))
         docs.join(keep, Seq("doc_id"), "left")
@@ -8650,7 +8648,7 @@ object SparkEntry {
           lit("?utm_source=crawl&utm_campaign=x")).otherwise(lit(""))
         val frag = when(id % 5 === 2, lit("#frag")).otherwise(lit(""))
         val u = concat(scheme, host, lit("/page/"), id % 50, tail, frag)
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(id, T.normalizeUrl(u).as("url"))
           .groupBy(col("url"))
           .agg(min(id).as("keep_id"), count(lit(1)).as("n_dups"))
@@ -8724,7 +8722,7 @@ object SparkEntry {
     "p10_length_batches" -> api(
       (s, dir) => {
         graft.ops.Packing.lengthBatches(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "source",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "source",
             graft.ops.TextAnalysis.tokenCount(coalesce(col("text"), lit(""))),
             widthTokens = 64, maxBatchTokens = 2048)
           .orderBy(col("source"), col("doc_id"))
@@ -8761,7 +8759,7 @@ object SparkEntry {
     "d13_semantic_dedup" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val base = s.read.parquet(s"$dir/embeddings.parquet")
+        val base = Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val r1 = base.filter(col("vec_id") % 10 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -8903,7 +8901,7 @@ object SparkEntry {
     // the oracle pinning the source-side truth.
     "io17_write_audit_publish" -> api(
       (s, dir) => {
-        val src = s.read.parquet(s"$dir/documents.parquet")
+        val src = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("n_chars"))
         val want = src.agg(count(lit(1)), sum(col("n_chars"))).head
         val out = scratchDir(s"io17_${new java.io.File(dir).getName}")
@@ -8921,7 +8919,7 @@ object SparkEntry {
           } catch { case _: IllegalStateException => true }
         val fs = new org.apache.hadoop.fs.Path(out2).getFileSystem(
           s.sparkContext.hadoopConfiguration)
-        s.read.parquet(out).agg(
+        Catalog.parquet(s, out).agg(
           count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("chars"),
           max(lit(blocked)).as("failed_audit_blocked"),
@@ -8945,7 +8943,7 @@ object SparkEntry {
     "io21_copy_roundtrip" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Catalog.parquet(s, s"$dir/lineitem.parquet")
           .filter(col("l_orderkey") % 11 === 0)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
             round(col("l_extendedprice") * 100).cast("long").as("cents"),
@@ -8985,7 +8983,7 @@ object SparkEntry {
     "io22_copy_from" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val src = s.read.parquet(s"$dir/lineitem.parquet")
+        val src = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .filter(col("l_orderkey") % 13 === 0)
           .select(col("l_orderkey").as("k"), col("l_linenumber").as("ln"),
             col("l_returnflag").as("flag"),
@@ -9077,7 +9075,7 @@ object SparkEntry {
     "io23_copy_partitioned" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Catalog.parquet(s, s"$dir/lineitem.parquet")
           .filter(col("l_orderkey") % 19 === 0)
           .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
             round(col("l_extendedprice") * 100).cast("long").as("cents"))
@@ -9153,9 +9151,9 @@ object SparkEntry {
       (s, dir) => {
         val s2 = s.newSession()
         Registry.registerAll(s2)
-        s2.read.parquet(s"$dir/nation.parquet")
+        Catalog.parquet(s2, s"$dir/nation.parquet")
           .createOrReplaceTempView("nation_x")
-        s2.read.parquet(s"$dir/region.parquet")
+        Catalog.parquet(s2, s"$dir/region.parquet")
           .createOrReplaceTempView("region_x")
         val out = scratchDir(s"io25_${new java.io.File(dir).getName}")
         graft.api.Table.sessionSql(s2, s"EXPORT DATABASE '$out'")
@@ -9182,7 +9180,7 @@ object SparkEntry {
     // drop; the option is the contract this query pins.)
     "io20_schema_evolution" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val root = scratchDir(s"io20_${new java.io.File(dir).getName}")
         docs.filter(col("doc_id") % 2 === 0)
           .select(col("doc_id"), col("n_chars"))
@@ -9216,7 +9214,7 @@ object SparkEntry {
     // NEVER delete the pointer target).
     "io19_retention" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("n_chars"))
         val root = scratchDir(s"io19_${new java.io.File(dir).getName}")
         graft.ops.Wap.Versioned.publishVersion(docs, root)(_ => ())
@@ -9263,7 +9261,7 @@ object SparkEntry {
     // each against the source table.
     "io18_time_travel" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("n_chars"))
         val root = scratchDir(s"io18_${new java.io.File(dir).getName}")
         graft.ops.Wap.Versioned.publishVersion(docs, root) { staged =>
@@ -9312,7 +9310,8 @@ object SparkEntry {
     // original parquet — layout must not change results.
     "io16_bucketed_join" -> api(
       (s, dir) => {
-        val sfx = new java.io.File(dir).getName.replace(".", "_")
+        // a SQL identifier: every character outside [A-Za-z0-9_] maps to _
+        val sfx = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9_]", "_")
         // repartition on the bucket key with numPartitions == numBuckets:
         // Spark's repartition hash IS the bucket hash (murmur3 pmod n),
         // so every task writes exactly ONE file per bucket — the
@@ -9320,12 +9319,12 @@ object SparkEntry {
         // the merge join skips its Sort (multi-file buckets are only
         // sorted within each file)
         graft.ops.Skew.writeBucketed(
-          s.read.parquet(s"$dir/orders.parquet")
+          Catalog.parquet(s, s"$dir/orders.parquet")
             .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
             .repartition(16, col("o_custkey")),
           s"io16_orders_$sfx", "o_custkey", buckets = 16)
         graft.ops.Skew.writeBucketed(
-          s.read.parquet(s"$dir/customer.parquet")
+          Catalog.parquet(s, s"$dir/customer.parquet")
             .select(col("c_custkey"), col("c_name"))
             .repartition(16, col("c_custkey")),
           s"io16_cust_$sfx", "c_custkey", buckets = 16)
@@ -9349,7 +9348,7 @@ object SparkEntry {
       (s, dir) => {
         val K = graft.ops.Skew
         val tmp = scratchDir(s"io09_zorder_${new java.io.File(dir).getName}")
-        s.read.parquet(s"$dir/lineitem.parquet")
+        Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
             col("l_extendedprice"))
           .withColumn("__z", K.zorder2(
@@ -9359,7 +9358,7 @@ object SparkEntry {
           .sortWithinPartitions(col("__z"))
           .drop("__z")
           .write.mode("overwrite").parquet(tmp)
-        s.read.parquet(tmp)
+        Catalog.parquet(s, tmp)
           .filter(col("l_partkey").between(500, 1500) &&
             col("l_suppkey").between(50, 150))
           .agg(count(lit(1)).as("n"),
@@ -9388,7 +9387,7 @@ object SparkEntry {
     // collect.
     "io11_compaction" -> api(
       (s, dir) => {
-        val src = s.read.parquet(s"$dir/documents.parquet")
+        val src = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
         val targetChars = 400000L
         val totalChars = src.agg(sum(length(col("t")))).first().getLong(0)
@@ -9397,7 +9396,7 @@ object SparkEntry {
         val out = scratchDir(s"io11_${new java.io.File(dir).getName}")
         src.repartitionByRange(planned.toInt, col("doc_id"))
           .write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
+        Catalog.parquet(s, out)
           // project the file name first: non-deterministic expressions
           // may not appear inside aggregate arguments
           .withColumn("__f", input_file_name())
@@ -9432,13 +9431,13 @@ object SparkEntry {
     "io13_parquet_bloom" -> api(
       (s, dir) => {
         val out = scratchDir(s"io13_bloom_${new java.io.File(dir).getName}")
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .write.mode("overwrite")
           .option("parquet.bloom.filter.enabled#doc_id", "true")
           .option("parquet.bloom.filter.expected.ndv#doc_id", "1000000")
           .option("parquet.block.size", (1 << 20).toString)
           .parquet(out)
-        s.read.parquet(out)
+        Catalog.parquet(s, out)
           .filter(col("doc_id").isin(7L, 77L, 177L, 277L, 377L))
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .orderBy(col("doc_id"))
@@ -9469,7 +9468,7 @@ object SparkEntry {
           .withColumn("value", col("value") * 2)
           .write.partitionBy("day").mode("overwrite")
           .option("partitionOverwriteMode", "dynamic").parquet(out)
-        s.read.parquet(out)
+        Catalog.parquet(s, out)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100).cast("long")).as("cents"))
@@ -9492,7 +9491,7 @@ object SparkEntry {
     // float noise (g05 discipline).
     "pr05_embedding_stats" -> api(
       (s, dir) => graft.ops.Profile.embeddingStats(
-        s.read.parquet(s"$dir/embeddings.parquet"), "embedding"),
+        Catalog.parquet(s, s"$dir/embeddings.parquet"), "embedding"),
       """SELECT CAST(i AS BIGINT) AS dim,
                 round(avg(x), 6) AS mean,
                 round(stddev_samp(x), 6) AS std,
@@ -9593,7 +9592,7 @@ object SparkEntry {
         val m = graft.ops.Multimodal
         m.audioSegments(
             m.withWavPayload(
-              s.read.parquet(s"$dir/documents.parquet")
+              Catalog.parquet(s, s"$dir/documents.parquet")
                 .withColumn("text", coalesce(col("text"), lit(""))),
               "doc_id", "text"),
             "doc_id", "payload", frame = 64, energyThreshold = 628000L)
@@ -9642,7 +9641,7 @@ object SparkEntry {
     "s13_ann_rerank" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val cb = P.seededCodebook(emb, "vec_id", "embedding",
           dim = 64, m = 4, k = 16)
@@ -9668,7 +9667,7 @@ object SparkEntry {
     // six pairs ride one aggregation pass, unpivoted driver-free.
     "pr07_corr_matrix" -> api(
       (s, dir) => graft.ops.Profile.corrMatrix(
-          s.read.parquet(s"$dir/lineitem.parquet"),
+          Catalog.parquet(s, s"$dir/lineitem.parquet"),
           Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
         .orderBy(col("col_a"), col("col_b")),
       """SELECT col_a, col_b, c AS corr FROM (
@@ -9715,10 +9714,10 @@ object SparkEntry {
     // resolution and leave the base row standing. One windowed fold.
     "u03_cdc_deletes" -> api(
       (s, dir) => {
-        val base = s.read.parquet(s"$dir/orders.parquet")
+        val base = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
           .withColumn("ver", lit(0L))
-        val orders = s.read.parquet(s"$dir/orders.parquet")
+        val orders = Catalog.parquet(s, s"$dir/orders.parquet")
         val dels = orders.filter(col("o_orderkey") % 10 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
           .withColumn("ver", lit(1L)).withColumn("deleted", lit(true))
@@ -9770,7 +9769,7 @@ object SparkEntry {
     // relationally. One shuffle on the key, same as plain u01.
     "u04_upsert_evolved" -> api(
       (s, dir) => {
-        val orders = s.read.parquet(s"$dir/orders.parquet")
+        val orders = Catalog.parquet(s, s"$dir/orders.parquet")
         val base = orders
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
           .withColumn("ver", lit(0L))
@@ -9816,7 +9815,7 @@ object SparkEntry {
     // (long cents make the sums drift-free by construction).
     "u05_agg_maintenance" -> api(
       (s, dir) => {
-        val orders = s.read.parquet(s"$dir/orders.parquet")
+        val orders = Catalog.parquet(s, s"$dir/orders.parquet")
         val base = orders.select(col("o_orderkey").as("k"),
             col("o_orderstatus").as("g"),
             round(col("o_totalprice") * 100).cast("long").as("v"))
@@ -9945,7 +9944,7 @@ object SparkEntry {
     "e28_ols_trend" -> api(
       (s, dir) => {
         val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val d = s.read.parquet(s"$dir/events.parquet")
+        val d = Catalog.parquet(s, s"$dir/events.parquet")
           .select(col("event_type"),
             // parquet ts reads as TIMESTAMP_NTZ; unix_micros wants TZ.
             // Integer floor-div, not `/` (that's double division)
@@ -10979,7 +10978,7 @@ object SparkEntry {
     // broadcast scalar subqueries against a map-only scan.
     "sub07_any_all" -> api(
       (s, dir) => {
-        s.read.parquet(s"$dir/orders.parquet")
+        Catalog.parquet(s, s"$dir/orders.parquet")
           .createOrReplaceTempView("orders")
         s.sql(
           """SELECT o_orderkey,
@@ -11028,7 +11027,7 @@ object SparkEntry {
     // stays d01's.
     "d15_dedup_best_of" -> api(
       (s, dir) => {
-        val base = s.read.parquet(s"$dir/documents.parquet")
+        val base = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
         val trunc = base.filter(col("doc_id") % 5 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"),
@@ -11100,7 +11099,7 @@ object SparkEntry {
           lit("\",\"n\":"), col("n_chars"),
           lit("},\"tags\":[\""), col("lang"), lit("\",\"t"),
           col("doc_id") % 3, lit("\"]}"))
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), from_json(js,
             org.apache.spark.sql.types.StructType.fromDDL(
               "meta STRUCT<src: STRING, n: BIGINT>, tags ARRAY<STRING>"))
@@ -11122,7 +11121,7 @@ object SparkEntry {
     // hand-built string (field order, quoting, and integer rendering
     // must all agree).
     "q35_to_json" -> api(
-      (s, dir) => s.read.parquet(s"$dir/documents.parquet")
+      (s, dir) => Catalog.parquet(s, s"$dir/documents.parquet")
         .select(col("doc_id"),
           to_json(struct(col("source").as("src"),
             col("n_chars").as("n"))).as("js"))
@@ -11140,7 +11139,7 @@ object SparkEntry {
     // same-text echo.
     "q36_array_hof" -> api(
       (s, dir) => {
-        val items = s.read.parquet(s"$dir/lineitem.parquet")
+        val items = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_orderkey"),
             struct(col("l_linenumber"),
               round(col("l_quantity") * 100).cast("long").as("qc"),
@@ -11228,7 +11227,7 @@ object SparkEntry {
 
     "j11_spatial_grid" -> api(
       (s, dir) => {
-        val pts = s.read.parquet(s"$dir/customer.parquet")
+        val pts = Catalog.parquet(s, s"$dir/customer.parquet")
           .select(col("c_custkey").as("id"),
             (col("c_custkey") * 37 % 1000).as("x"),
             (col("c_custkey") * 91 % 1000).as("y"))
@@ -11816,7 +11815,7 @@ object SparkEntry {
     "q64_sample_clause" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("source"))
         val t = Table(docs)
         val pct = t.sql(
@@ -11945,7 +11944,7 @@ object SparkEntry {
     // nested correlated anti-join per (customer, class) pair.
     "q40_division" -> api(
       (s, dir) => {
-        val o = s.read.parquet(s"$dir/orders.parquet")
+        val o = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_custkey"), col("o_orderpriority"))
         val k = o.agg(count_distinct(col("o_orderpriority")).as("__k"))
         o.groupBy(col("o_custkey"))
@@ -11965,7 +11964,7 @@ object SparkEntry {
 
     "q38_regex" -> api(
       (s, dir) => {
-        s.read.parquet(s"$dir/part.parquet")
+        Catalog.parquet(s, s"$dir/part.parquet")
           .select(col("p_partkey"),
             regexp_extract(col("p_name"), "^([a-z]+)", 1).as("adj"),
             regexp_replace(col("p_name"), "[aeiou]", "").as("devoweled"),
@@ -11982,7 +11981,7 @@ object SparkEntry {
 
     "q37_unpivot" -> api(
       (s, dir) => {
-        val w = s.read.parquet(s"$dir/lineitem.parquet")
+        val w = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .filter(col("l_orderkey") <= 1000)
           .select(col("l_orderkey"), col("l_linenumber"),
             round(col("l_extendedprice") * 100).cast("long").as("price_c"),
@@ -12148,7 +12147,7 @@ object SparkEntry {
     "io10_csv_dirty" -> api(
       (s, dir) => {
         val tmp = scratchDir(s"io10_dirty_${new java.io.File(dir).getName}")
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             concat(lit("a,b \""),
               substring(coalesce(col("text"), lit("")), 1, 40),
@@ -12183,7 +12182,7 @@ object SparkEntry {
         val kv = concat(lit("lang:"), col("lang"),
           lit(",src:"), col("source"),
           lit(",len:"), col("n_chars").cast("string"))
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), kv.as("__kv"))
           .select(col("doc_id"),
             explode(expr("str_to_map(__kv, ',', ':')")).as(Seq("key", "value")))
@@ -12281,7 +12280,7 @@ object SparkEntry {
         val toks = split(coalesce(col("text"), lit("")), " ")
         val a = array_distinct(slice(toks, 1, 6))
         val b = array_distinct(slice(toks, 4, 6))
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             array_join(sort_array(array_intersect(a, b)), ",").as("i"),
             array_join(sort_array(array_union(a, b)), ",").as("u"),
@@ -12329,7 +12328,7 @@ object SparkEntry {
     // sort). The top edge clamps into the last bin on both engines.
     "fe04_equal_width_bins" -> api(
       (s, dir) => {
-        val o = s.read.parquet(s"$dir/orders.parquet")
+        val o = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"),
             round(col("o_totalprice") * 100).cast("long").as("cents"))
         val mm = o.agg(min(col("cents")).as("mn"), max(col("cents")).as("mx"))
@@ -12399,7 +12398,7 @@ object SparkEntry {
     "geo02_cell_density" -> api(
       (s, dir) => {
         val sixt = lit(0.0625)
-        val e = s.read.parquet(s"$dir/events.parquet")
+        val e = Catalog.parquet(s, s"$dir/events.parquet")
           .select(((col("event_id") % 320).cast("double") * sixt).as("lat"),
             (((col("event_id") * 7) % 320).cast("double") * sixt).as("lon"))
         graft.ops.Geo.cellDensity(e, "lat", "lon", cellDeg = 1.0)
@@ -12446,7 +12445,7 @@ object SparkEntry {
     "geo03_haversine" -> api(
       (s, dir) => {
         val sixt = lit(0.0625)
-        val sup = s.read.parquet(s"$dir/supplier.parquet")
+        val sup = Catalog.parquet(s, s"$dir/supplier.parquet")
           .select(col("s_suppkey"),
             ((col("s_suppkey") * 11 % 320).cast("double") * sixt + 40.0)
               .as("slat"),
@@ -12519,7 +12518,7 @@ object SparkEntry {
     "geo06_point_in_polygon" -> api(
       (s, dir) => {
         import s.implicits._
-        val pts = s.read.parquet(s"$dir/events.parquet")
+        val pts = Catalog.parquet(s, s"$dir/events.parquet")
           .select(col("event_id"), (col("event_id") % 1000).as("px"),
             ((col("event_id") * 7) % 1000).as("py"))
         val polys = Seq(
@@ -12641,7 +12640,7 @@ object SparkEntry {
     "fe06_standardize" -> api(
       (s, dir) => {
         val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val xd = col("n_chars").cast("long").cast(d38)
         val st = docs.filter(col("n_chars").isNotNull)
           .agg(count(lit(1)).cast(d38).as("__n"),
@@ -12665,7 +12664,7 @@ object SparkEntry {
 
     "fe05_target_encoding" -> api(
       (s, dir) => {
-        val c = s.read.parquet(s"$dir/customer.parquet")
+        val c = Catalog.parquet(s, s"$dir/customer.parquet")
           .select(col("c_mktsegment"),
             round(col("c_acctbal") * 100).cast("long").as("cents"))
         val g = c.agg(sum(col("cents")).as("gs"),
@@ -12693,7 +12692,7 @@ object SparkEntry {
 
     "fe01_feature_hash" -> api(
       (s, dir) => {
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(explode(array(
             concat(lit("lang="), col("lang")),
             concat(lit("source="), col("source")),
@@ -12724,7 +12723,7 @@ object SparkEntry {
     // global — the imputed scan itself stays map-only.
     "fe03_impute" -> api(
       (s, dir) => {
-        val d = s.read.parquet(s"$dir/documents.parquet")
+        val d = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"),
             when(col("doc_id") % 7 === 0, lit(null).cast("long"))
               .otherwise(col("n_chars")).as("v"))
@@ -12766,7 +12765,7 @@ object SparkEntry {
     // the broadcast global is ONE row. Target here is n_chars.
     "fe02_target_encode" -> api(
       (s, dir) => {
-        val d = s.read.parquet(s"$dir/documents.parquet")
+        val d = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("lang"), col("n_chars"))
         val g = d.agg(sum(col("n_chars")).as("__ts"),
           count(lit(1)).as("__tn"))
@@ -12804,7 +12803,7 @@ object SparkEntry {
           .otherwise(
             concat(lit("http://"), col("source"),
               lit(".example.net/p?a=1&utm_medium=m&b="), id))
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .withColumn("domain", T.registrableDomain(url))
           .filter(col("n_chars") >= 200)
         val quota = graft.ops.Sampling.perGroupQuota(docs, "domain",
@@ -12891,7 +12890,7 @@ object SparkEntry {
     // (groups x distinct quantities), tiny next to the fact table.
     "g15_quantiles_mode" -> api(
       (s, dir) => {
-        val li = s.read.parquet(s"$dir/lineitem.parquet")
+        val li = Catalog.parquet(s, s"$dir/lineitem.parquet")
         val quant = li.groupBy(col("l_returnflag"))
           .agg(round(expr("percentile(l_quantity, 0.5)"), 6).as("med_q"),
             round(expr("percentile(l_quantity, 0.25)"), 6).as("p25_q"),
@@ -12925,7 +12924,7 @@ object SparkEntry {
 
     "g14_heavy_hitters" -> api(
       (s, dir) => {
-        val counts = s.read.parquet(s"$dir/orders.parquet")
+        val counts = Catalog.parquet(s, s"$dir/orders.parquet")
           .groupBy(col("o_orderstatus").as("flag"), col("o_orderpriority").as("mode"))
           .agg(count(lit(1)).as("cnt"))
         counts.groupBy(col("flag"))
@@ -12956,10 +12955,10 @@ object SparkEntry {
     // across both branches without nullable sort keys.
     "set03_union_by_name" -> api(
       (s, dir) => {
-        val a = s.read.parquet(s"$dir/orders.parquet")
+        val a = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey").as("key"), lit(0L).as("ln"),
             col("o_orderpriority").as("grp"), col("o_totalprice").as("val"))
-        val b = s.read.parquet(s"$dir/lineitem.parquet")
+        val b = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_linestatus").as("grp"),
             col("l_orderkey").as("key"),
             col("l_linenumber").cast("long").as("ln"),
@@ -12995,7 +12994,7 @@ object SparkEntry {
         // past ~65k average-valued rows — Spark wraps where DuckDB's
         // HUGEINT would diverge). Widen the bucket count, not the
         // prefix, if a 100 TB export exceeds that per-bucket bound.
-        val d = s.read.parquet(s"$dir/documents.parquet")
+        val d = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"),
             col("n_chars"))
         d.select(
@@ -13086,7 +13085,7 @@ object SparkEntry {
     // count(DISTINCT key) instead of a separate self-join.
     "pr14_expectations" -> api(
       (s, dir) => {
-        val o = s.read.parquet(s"$dir/orders.parquet")
+        val o = Catalog.parquet(s, s"$dir/orders.parquet")
         o.agg(count(lit(1)).as("n"),
             sum(when(col("o_totalprice") > 0, 1L).otherwise(0L)).as("c1"),
             sum(when(col("o_orderstatus").isin("O", "F", "P"), 1L)
@@ -13157,7 +13156,7 @@ object SparkEntry {
     // and the oracle re-derives exact counts.
     "pr22_expectations" -> api(
       (s, dir) => {
-        val li = s.read.parquet(s"$dir/lineitem.parquet")
+        val li = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_orderkey"), col("l_linenumber"),
             col("l_returnflag"), col("l_discount"),
             when(col("l_orderkey") % 7 === 0, lit(null).cast("string"))
@@ -13214,7 +13213,7 @@ object SparkEntry {
     "pr21_k_anonymity" -> api(
       (s, dir) => {
         graft.ops.Profile.kAnonymity(
-          s.read.parquet(s"$dir/customer.parquet"),
+          Catalog.parquet(s, s"$dir/customer.parquet"),
           Seq("c_nationkey", "c_mktsegment"), k = 10L)
       },
       """WITH g AS (SELECT c_nationkey, c_mktsegment, count(*) AS n
@@ -13356,9 +13355,9 @@ object SparkEntry {
     // while the verified quantity is O(join output).
     "pr17_join_cardinality" -> api(
       (s, dir) => {
-        val o = s.read.parquet(s"$dir/orders.parquet")
+        val o = Catalog.parquet(s, s"$dir/orders.parquet")
           .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_o"))
-        val e = s.read.parquet(s"$dir/events.parquet")
+        val e = Catalog.parquet(s, s"$dir/events.parquet")
           .groupBy(col("user_id")).agg(count(lit(1)).as("n_e"))
         o.join(e, col("o_custkey") === col("user_id"))
           .agg(coalesce(sum(col("n_o") * col("n_e")), lit(0L))
@@ -13388,7 +13387,7 @@ object SparkEntry {
     // entropy reduces over the distinct-value relation.
     "pr16_entropy" -> api(
       (s, dir) => {
-        val ev = s.read.parquet(s"$dir/events.parquet")
+        val ev = Catalog.parquet(s, s"$dir/events.parquet")
         def colEntropy(c: String) = {
           val vc = ev.filter(col(c).isNotNull)
             .groupBy(col(c).cast("string").as("v"))
@@ -13440,7 +13439,7 @@ object SparkEntry {
     // cross-engine round is stable. One scan, 9-row rollup.
     "pr15_benford" -> api(
       (s, dir) => {
-        val o = s.read.parquet(s"$dir/orders.parquet")
+        val o = Catalog.parquet(s, s"$dir/orders.parquet")
         o.select(substring(round(col("o_totalprice") * 100)
             .cast("long").cast("string"), 1, 1).as("digit"))
           .groupBy(col("digit")).agg(count(lit(1)).as("n"))
@@ -13520,8 +13519,8 @@ object SparkEntry {
     // uniqueness check.
     "pr11_fd_audit" -> api(
       (s, dir) => {
-        val part = s.read.parquet(s"$dir/part.parquet")
-        val li = s.read.parquet(s"$dir/lineitem.parquet")
+        val part = Catalog.parquet(s, s"$dir/part.parquet")
+        val li = Catalog.parquet(s, s"$dir/lineitem.parquet")
         def fd(df: DataFrame, name: String, lhs: String, rhs: String) =
           df.groupBy(col(lhs))
             .agg(count_distinct(col(rhs)).as("__nr"))
@@ -13585,9 +13584,9 @@ object SparkEntry {
     "j10_bloom_prejoin" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val li = s.read.parquet(s"$dir/lineitem.parquet")
+        val li = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
-        val sup = s.read.parquet(s"$dir/supplier.parquet")
+        val sup = Catalog.parquet(s, s"$dir/supplier.parquet")
           .filter(col("s_nationkey") === 3).select(col("s_suppkey"))
         li.createOrReplaceTempView("j10_fact")
         sup.createOrReplaceTempView("j10_dim")
@@ -13621,7 +13620,7 @@ object SparkEntry {
           .select(col("event_id"), col("day"), col("event_type"), col("value"))
         val out = scratchDir(s"j09_${new java.io.File(dir).getName}")
         ev.write.partitionBy("day").mode("overwrite").parquet(out)
-        val fact = s.read.parquet(out)
+        val fact = Catalog.parquet(s, out)
         val dim = ev.select(col("day")).distinct()
           .filter(col("day") % 7 === 0)
           .withColumn("tag", lit("keep"))
@@ -13652,7 +13651,7 @@ object SparkEntry {
     // closed form equals the naive formula.
     "pr10_key_skew" -> api(
       (s, dir) => graft.ops.Profile.keySkew(
-        s.read.parquet(s"$dir/lineitem.parquet"), "l_suppkey", topK = 5),
+        Catalog.parquet(s, s"$dir/lineitem.parquet"), "l_suppkey", topK = 5),
       """WITH c AS (SELECT l_suppkey, count(*) AS c
                     FROM lineitem GROUP BY 1),
          r AS (SELECT c, row_number() OVER (ORDER BY c) AS i FROM c),
@@ -13679,12 +13678,12 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         val epoch = lit("1970-01-01")
-        val a = s.read.parquet(s"$dir/orders.parquet")
+        val a = Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_totalprice") > 450000)
           .select(col("o_orderkey").as("a_key"),
             datediff(col("o_orderdate"), epoch).cast("long").as("a_lo"))
           .withColumn("a_hi", col("a_lo") + 14)
-        val b = s.read.parquet(s"$dir/orders.parquet")
+        val b = Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_totalprice") < 25000)
           .select(col("o_orderkey").as("b_key"),
             datediff(col("o_orderdate"), epoch).cast("long").as("b_lo"))
@@ -13740,7 +13739,7 @@ object SparkEntry {
     "t21_zipf_slope" -> api(
       (s, dir) => {
         val W = org.apache.spark.sql.expressions.Window
-        val wc = s.read.parquet(s"$dir/documents.parquet")
+        val wc = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(explode(split(lower(coalesce(col("text"), lit(""))),
             "[^a-z]+")).as("tok"))
           .filter(length(col("tok")) >= 2)
@@ -13801,7 +13800,7 @@ object SparkEntry {
       (s, dir) => {
         Registry.registerAll(s)
         graft.ops.Dedup.tfidfCosinePairs(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             threshold = 0.8, maxDocFreq = 1000L)
           .orderBy(col("id_a"), col("id_b"))
       },
@@ -13868,7 +13867,7 @@ object SparkEntry {
         val warr = filter(
           split(lower(coalesce(col("text"), lit(""))), "[^a-z]+"),
           x => length(x) >= 2)
-        val base = s.read.parquet(s"$dir/documents.parquet")
+        val base = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(warr.as("w"))
         val words = base.select(explode(col("w")).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("c"))
@@ -13923,7 +13922,7 @@ object SparkEntry {
     // desc, then pair.
     "t19_bpe_pair_counts" -> api(
       (s, dir) => {
-        val words = s.read.parquet(s"$dir/documents.parquet")
+        val words = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(explode(split(lower(coalesce(col("text"), lit(""))),
             "[^a-z]+")).as("w"))
           .filter(length(col("w")) >= 2)
@@ -13956,7 +13955,7 @@ object SparkEntry {
     "t27_kn_lm_score" -> api(
       (s, dir) => {
         graft.ops.TextAnalysis.knBigramScore(
-            s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text")
           .orderBy(col("doc_id"))
       },
       """WITH s AS (SELECT doc_id,
@@ -14009,7 +14008,7 @@ object SparkEntry {
     // compares by md5 to keep the gated parquet narrow.
     "t34_token_windows" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .filter(col("doc_id") % 3 === 0)
         graft.ops.TextAnalysis
           .tokenWindows(docs, "doc_id", "text", 128, 64)
@@ -14035,7 +14034,7 @@ object SparkEntry {
     "t33_bits_per_byte" -> api(
       (s, dir) => {
         graft.ops.TextAnalysis.bitsPerByte(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Catalog.parquet(s, s"$dir/documents.parquet"),
             "doc_id", "text", "source")
           .orderBy(col("source"))
       },
@@ -14088,7 +14087,7 @@ object SparkEntry {
     "t26_rake_keywords" -> api(
       (s, dir) => {
         graft.ops.TextAnalysis.rakeKeywords(
-          s.read.parquet(s"$dir/documents.parquet"), "text", topK = 20)
+          Catalog.parquet(s, s"$dir/documents.parquet"), "text", topK = 20)
       },
       """WITH ph AS (SELECT list_filter(list_transform(string_split(
               regexp_replace(regexp_replace(regexp_replace(
@@ -14134,7 +14133,7 @@ object SparkEntry {
     "t29_unigram_lm" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val pieces = graft.ops.TextAnalysis.unigramLmTrain(
           docs, "text", budget = 24, rounds = 2)
         val words = docs.select(explode(split(lower(coalesce(col("text"),
@@ -14167,7 +14166,7 @@ object SparkEntry {
     "t30_unigram_tokenize" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val pieces = graft.ops.TextAnalysis.unigramLmTrain(
           docs, "text", budget = 24, rounds = 2)
         val ids = pieces.select(col("piece"), row_number().over(
@@ -14213,7 +14212,7 @@ object SparkEntry {
     "t31_wordpiece" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val merges = graft.ops.TextAnalysis.wordPieceTrain(docs, "text", 6)
         val vocab = graft.ops.TextAnalysis.wordPieceVocab(docs, "text", merges)
         val words = docs.select(explode(split(lower(coalesce(col("text"),
@@ -14250,7 +14249,7 @@ object SparkEntry {
     "t32_wordpiece_tokenize" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val merges = graft.ops.TextAnalysis.wordPieceTrain(docs, "text", 6)
         val vocab = graft.ops.TextAnalysis.wordPieceVocab(docs, "text", merges)
         val ids = vocab.select(col("piece"), row_number().over(
@@ -14295,7 +14294,7 @@ object SparkEntry {
     "t28_quality_classifier" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val feats = docs.select(col("doc_id"),
             (col("lang") === "en").as("__tgt"),
             explode(filter(split(lower(coalesce(col("text"), lit(""))),
@@ -14367,13 +14366,13 @@ object SparkEntry {
     "t25_bpe_train" -> api(
       (s, dir) => {
         graft.ops.TextAnalysis.bpeTrain(
-          s.read.parquet(s"$dir/documents.parquet"), "text", numMerges = 4)
+          Catalog.parquet(s, s"$dir/documents.parquet"), "text", numMerges = 4)
       },
       bpeTrainOracle(4)),
 
     "t18_postings" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         docs.select(col("doc_id"),
             explode(split(lower(coalesce(col("text"), lit(""))), "\\W+"))
               .as("tok"))
@@ -14415,7 +14414,7 @@ object SparkEntry {
     "t17_fuzzy_linkage" -> api(
       (s, dir) => {
         Registry.registerAll(s)
-        val part = s.read.parquet(s"$dir/part.parquet")
+        val part = Catalog.parquet(s, s"$dir/part.parquet")
           .select(col("p_partkey"), col("p_name"))
         val catalog = part.groupBy(col("p_name").as("canon_name"))
           .agg(min(col("p_partkey")).as("canon_key"))
@@ -14473,7 +14472,7 @@ object SparkEntry {
     // map-side combined.
     "t16_oov_rate" -> api(
       (s, dir) => {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val toks = docs.select(col("doc_id"), col("source"),
             explode(split(lower(coalesce(col("text"), lit(""))), "\\W+"))
               .as("tok"))
@@ -14515,7 +14514,7 @@ object SparkEntry {
 
     "t13_vocab" -> api(
       (s, dir) => {
-        val toks = s.read.parquet(s"$dir/documents.parquet")
+        val toks = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("source"),
             explode(split(lower(coalesce(col("text"), lit(""))), "\\W+"))
               .as("tok"))
@@ -14561,7 +14560,7 @@ object SparkEntry {
         val parts = filter(
           split(coalesce(col("text"), lit("")), "[.!?]+\\s+"),
           p => length(p) > 0)
-        s.read.parquet(s"$dir/documents.parquet")
+        Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             size(parts).cast("long").as("n_sent"),
             round(

@@ -381,12 +381,13 @@ object Table {
 
   def apply(df: DataFrame): Table = new Table(df)
 
-  /** Parquet reader (reference: vinum/io/arrow.py:151-248 `read_parquet`).
-    * Column selection becomes a projection that Catalyst pushes into the
-    * scan; filters/partition-pruning are automatic.
+  /** Parquet reader (reference: vinum/io/arrow.py:151-248 `read_parquet`),
+    * bound through the session [[Catalog]]. Column selection becomes a
+    * projection that Catalyst pushes into the scan; filters/partition-pruning
+    * are automatic.
     */
   def fromParquet(spark: SparkSession, path: String, columns: Seq[String] = Nil): Table = {
-    val df = spark.read.parquet(path)
+    val df = Catalog.parquet(spark, path)
     apply(if (columns.nonEmpty) df.select(columns.map(df.col): _*) else df)
   }
 
@@ -661,7 +662,7 @@ object Table {
         try {
           binds.foreach { b =>
             val df = b.kind match {
-              case "parquet" => spark.read.parquet(b.path)
+              case "parquet" => Catalog.parquet(spark, b.path)
               case "csv" => spark.read.option("header", b.header.toString)
                 .option("sep", b.delim).option("inferSchema", "true")
                 .csv(b.path)

@@ -133,19 +133,24 @@ object Events {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** True when the events parquet stores `ts` with the TIMESTAMP(NANOS)
-    * logical type — detected by whether Spark's native schema inference
-    * accepts the footer. The driver regenerated the fixture as
-    * timestamp[us] between rounds (TESTDATA.md notwithstanding), so the
-    * readers probe the actual file instead of assuming either unit; the
-    * probe is per-call footer metadata only, no data scan.
+  /** The events table through the session [[graft.api.Catalog]], or None
+    * when its parquet stores `ts` with the TIMESTAMP(NANOS) logical type —
+    * detected by whether Spark's native schema inference accepts the
+    * footer. The fixture has existed in both encodings (TESTDATA.md
+    * notwithstanding), so the readers probe the actual file instead of
+    * assuming either unit. One catalog lookup serves both the probe and the
+    * read. A rejected footer (or a non-timestamp `ts`) means NANOS; the
+    * catalog never caches a failed inference, so such a footer is
+    * re-probed on every call (footer metadata only, no data scan).
     */
-  private def nanosEncoded(spark: SparkSession, path: String): Boolean =
-    scala.util.Try(spark.read.parquet(path).schema("ts").dataType) match {
-      case scala.util.Success(org.apache.spark.sql.types.TimestampNTZType) => false
-      case scala.util.Success(_: org.apache.spark.sql.types.TimestampType) => false
-      case _ => true // inference rejected the footer => NANOS logical type
-    }
+  private def microsTable(spark: SparkSession, path: String): Option[DataFrame] =
+    scala.util.Try(graft.api.Catalog.parquet(spark, path)).filter { df =>
+      df.schema("ts").dataType match {
+        case org.apache.spark.sql.types.TimestampNTZType => true
+        case _: org.apache.spark.sql.types.TimestampType => true
+        case _ => false
+      }
+    }.toOption
 
   /** The events corpus with `ts` as canonical epoch-MICROS long —
     * unit-robust: probes the parquet logical type and normalizes either
@@ -157,13 +162,12 @@ object Events {
     */
   def readRaw(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    if (nanosEncoded(spark, path))
-      spark.read.schema(EventsNanosSchema).parquet(path)
+    microsTable(spark, path) match {
+      // NTZ -> LTZ cast is lossless under the UTC session timezone
+      case Some(df) => df.withColumn("ts", unix_micros(col("ts").cast("timestamp")))
+      case None => spark.read.schema(EventsNanosSchema).parquet(path)
         .withColumn("ts", expr("ts div 1000"))
-    else
-      spark.read.parquet(path)
-        // NTZ -> LTZ cast is lossless under the UTC session timezone
-        .withColumn("ts", unix_micros(col("ts").cast("timestamp")))
+    }
   }
 
   /** Read the events corpus with `ts` as a micro-precision NTZ
@@ -192,14 +196,14 @@ object Events {
     */
   def readStreamRaw(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    if (nanosEncoded(spark, path))
-      spark.readStream.schema(EventsNanosSchema)
-        .parquet(Replay.linkDir(path))
-        .withColumn("ts", expr("ts div 1000"))
-    else
-      spark.readStream.schema(spark.read.parquet(path).schema)
+    microsTable(spark, path) match {
+      case Some(df) => spark.readStream.schema(df.schema)
         .parquet(Replay.linkDir(path))
         .withColumn("ts", unix_micros(col("ts").cast("timestamp")))
+      case None => spark.readStream.schema(EventsNanosSchema)
+        .parquet(Replay.linkDir(path))
+        .withColumn("ts", expr("ts div 1000"))
+    }
   }
 
   /** Tumbling event-time aggregation (batch). */
