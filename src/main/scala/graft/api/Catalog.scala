@@ -27,7 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * layouts) and paths that cannot be stat'ed (globs) take the plain read,
   * uncached, as do callers that need reader options (`mergeSchema`). An
   * inference that throws is not cached, so it throws again on the next
-  * call. Safe for concurrent use.
+  * call. One catalog serves every session of the JVM (the conf part of the
+  * key keeps sessions with different parquet settings apart) and is safe
+  * for concurrent use.
   */
 object Catalog {
 
