@@ -3,10 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.functions.Registry
-
 /** Per-round benchmark main (driver contract): times every declared query
   * at SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -34,7 +30,7 @@ import graft.functions.Registry
   *    in the working directory. The line is printed AFTER spark.stop()
   *    so no shutdown logging can trail it;
   *  - SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the query set (iteration);
-  *  - shuffle partitions = cores (local mode; AQE coalesces further).
+  *  - the session is [[GraftSession]]'s, the one the tests and Verify use.
   */
 object Bench {
 
@@ -86,30 +82,8 @@ object Bench {
     val minPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_MIN_PASSES", "3").toInt
       .max(1).min(reps)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // generated-class cache sized to the suite (static conf; see
-      // GraftSession) — the 100-entry default recompiles every codegen
-      // unit on every bench pass, charging ~17% on the overhead-
-      // dominated query majority (A/B in OPTIMIZATION_r18.md)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // same sorted-bucketed-scan setting as GraftSession — io16's
-      // exchange-free merge join must bench as the plan it pins
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate(s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
-    Registry.registerAll(spark)
 
     def execute(name: String): Double = {
       val t0 = System.nanoTime()

@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 import graft.functions.Registry
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine: the one place a session is
+  * configured. Bench, Verify, the tests and the probes all build through
+  * [[builder]]; a caller that needs one more conf adds `.config(...)` on
+  * top.
   *
   * The reference engine's only execution knob is a process-global batch size
   * (reference: vinum/__init__.py:52-62); on Spark the equivalents are shuffle
@@ -17,6 +20,12 @@ import graft.functions.Registry
   * code runs unchanged on a 1000-executor cluster.
   */
 object GraftSession {
+
+  /** Shuffle partitions of a [[streamSession]]: the streaming state store
+    * keeps one store per partition per micro-batch, so the replayed
+    * streams' few thousand keys want few partitions, not one per core.
+    */
+  private val StreamShufflePartitions = 8
 
   def builder(master: String = "local[*]"): SparkSession.Builder =
     SparkSession
@@ -49,5 +58,17 @@ object GraftSession {
     val spark = builder(master).getOrCreate()
     Registry.registerAll(spark)
     spark
+  }
+
+  /** Child session for one stream run. `newSession()` shares the parent's
+    * context but not its temp functions or optimizer rules, so they are
+    * installed here; the shuffle-partition setting (and any conf the
+    * caller adds) stays scoped to the child, nothing to save or restore.
+    */
+  def streamSession(parent: SparkSession): SparkSession = {
+    val s = parent.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
+    Registry.registerAll(s)
+    s
   }
 }

@@ -21,6 +21,11 @@ import graft.functions.Registry
   *   - double aggregations go through DECIMAL casts (exact in both
   *     engines) or are single IEEE operations on identical operands;
   *   - transcendental function outputs are round()ed to 6 digits.
+  *
+  * Every query expects a session with the graft functions and rules
+  * installed ([[GraftSession.getOrCreate]]); stream queries run in a
+  * [[GraftSession.streamSession]] child through
+  * [[graft.streaming.Replay.runToCompletion]].
   */
 object SparkEntry {
 
@@ -62,7 +67,6 @@ object SparkEntry {
     */
   private def multi(tables: Seq[String], sql: String): (QFn, Option[String]) =
     ((s: SparkSession, dir: String) => {
-      Registry.registerAll(s)
       bindViews(s, dir, tables)
       s.sql(sql)
     }, Some(sql))
@@ -1106,7 +1110,6 @@ object SparkEntry {
     // explicitly (inference may pick INT where parquet had BIGINT).
     "io01_csv_roundtrip" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val tmp = s"target/tmp/io01_csv_${new java.io.File(dir).getName}"
         Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_orderkey"), col("l_linenumber"),
@@ -1126,7 +1129,6 @@ object SparkEntry {
     // S3 read_json: NDJSON round-trip through the line-delimited reader
     "io02_json_roundtrip" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val tmp = s"target/tmp/io02_json_${new java.io.File(dir).getName}"
         Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -1148,7 +1150,6 @@ object SparkEntry {
     // PartitionFilters in the scan)
     "io03_parquet_partitioned" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val tmp = scratchDir(s"io03_part_${new java.io.File(dir).getName}")
         Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -1171,7 +1172,6 @@ object SparkEntry {
     // auto-detected on read by extension)
     "io04_csv_gzip" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val tmp = scratchDir(s"io04_gz_${new java.io.File(dir).getName}")
         Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -1194,7 +1194,6 @@ object SparkEntry {
     // hot keys without changing semantics
     "j07_salted_join" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val big = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_custkey").as("custkey"), col("o_totalprice"))
         val small = Catalog.parquet(s, s"$dir/customer.parquet")
@@ -1236,7 +1235,6 @@ object SparkEntry {
     // FunctionsSpec-tested).
     "q24_column_udf" -> ((
       (s: SparkSession, dir: String) => {
-        Registry.registerAll(s)
         Registry.registerColumnFn(s, "minmax_norm", { case Seq(x) =>
           (x - Registry.wholeColumn(min(x))) /
             (Registry.wholeColumn(max(x)) - Registry.wholeColumn(min(x)))
@@ -1258,7 +1256,6 @@ object SparkEntry {
     // — bit-identical to Math.E.
     "q23_fromless" -> ((
       (s: SparkSession, dir: String) => {
-        Registry.registerAll(s)
         s.sql(
           """SELECT CAST(2 + 2 AS BIGINT) AS four,
                     CAST(~5 AS BIGINT) AS bnot,
@@ -1450,7 +1447,6 @@ object SparkEntry {
     // elements extracted to scalars for the driver comparator.
     "ap01_approx" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         def relerr(a: Column, e: Column): Column = abs(a - e).cast("double") / e
         def gate(err: Column, bound: Double): Column =
           when(err <= bound, lit(bound)).otherwise(err)
@@ -1506,7 +1502,6 @@ object SparkEntry {
     // exact — measured 0.0262 vs the 0.05 contract at sf0.01).
     "ap04_overlap_sketch" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         def relerr(a: Column, e: Column): Column =
           abs(a - e).cast("double") / e
         def gate(err: Column, bound: Double): Column =
@@ -1576,7 +1571,6 @@ object SparkEntry {
     // joined back on the group key — see the ap01 split note).
     "ap02_approx_bounds" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val relerrCd = abs(col("__acd") - col("n_parts")).cast("double") / col("n_parts")
         val relerrP50 = abs(col("__p50a") - col("__p50e")) / col("__p50e")
         val li = Catalog.parquet(s, s"$dir/lineitem.parquet")
@@ -1631,7 +1625,6 @@ object SparkEntry {
     // representation gap the hash would reject).
     "e01_events_window" -> ((
       (s: SparkSession, dir: String) => {
-        Registry.registerAll(s)
         graft.streaming.Events.readRaw(s, dir).createOrReplaceTempView("events")
         s.sql(
           s"""SELECT h, event_type, count(*) AS n,
@@ -1652,18 +1645,10 @@ object SparkEntry {
     // finite replay and append would drop them). Shares e01's oracle.
     "st03_stream_hourly" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val out = graft.streaming.Events.streamingHourlyTypeCounts(
           graft.streaming.Events.readStream(s, dir))
-        val sink = "st03_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(out, "complete")
           .select(unix_micros(col("h")).as("h"), col("event_type"),
             col("n"), col("sv").cast("double").as("sv"))
           .orderBy(col("h"), col("event_type"))
@@ -1680,20 +1665,12 @@ object SparkEntry {
     // rank never shuffles more than the closed-window rollup.
     "st14_stream_topk" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val out = graft.streaming.Events.streamingHourlyTypeCounts(
           graft.streaming.Events.readStream(s, dir))
-        val sink = "st14_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("h")).orderBy(col("n").desc, col("event_type"))
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(out, "complete")
           .select(unix_micros(col("h")).as("h"), col("event_type"), col("n"))
           .withColumn("rn", row_number().over(w).cast("long"))
           .filter(col("rn") <= 3)
@@ -1718,21 +1695,13 @@ object SparkEntry {
     // operator); the replay harness runs the exact forever-state form.
     "st15_stream_hourly_users" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val agg = graft.streaming.Events.readStream(s, dir)
           .withColumn("h", date_trunc("hour", col("ts").cast("timestamp")))
           .select(col("h"), col("user_id"))
           .dropDuplicates("h", "user_id")
           .groupBy(col("h")).agg(count(lit(1)).as("nu"))
-        val sink = "st15_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(agg, "complete")
           .select(unix_micros(col("h")).as("h"), col("nu"))
           .orderBy(col("h"))
       },
@@ -1755,19 +1724,11 @@ object SparkEntry {
     // one watermark interval of unmatched earlier-stage events.
     "st16_stream_funnel" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val out = graft.streaming.Events.streamingFunnel(
           graft.streaming.Events.readStream(s, dir),
           Seq("view", "click", "purchase"))
-        val sink = "st16_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("user_id"))
+        graft.streaming.Replay.runToCompletion(out, "append").orderBy(col("user_id"))
       },
       """WITH t1 AS (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
                      WHERE event_type = 'view' GROUP BY 1),
@@ -1794,7 +1755,6 @@ object SparkEntry {
     // semi-structured JSON processing over the events props column
     "e03_events_json" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.streaming.Events.read(s, dir)
           .select(col("event_type"),
             get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -1813,7 +1773,6 @@ object SparkEntry {
     // graft.streaming.Events)
     "e02_sessionize" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.streaming.Events.sessionize(graft.streaming.Events.read(s, dir), 30)
           .select(col("user_id"), col("event_id"), col("session_seq"))
           .orderBy(col("user_id"), col("event_id"))
@@ -1831,18 +1790,10 @@ object SparkEntry {
     // spec-tested (StreamingSpec batch-replay equivalence).
     "st01_stream_sessionize" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val out = graft.streaming.Events.streamingSessionize(
           graft.streaming.Events.readStream(s, dir), 30)
-        val sink = "st01_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(out, "append")
           .select(col("user_id"), col("event_id"), col("session_seq"))
           .orderBy(col("user_id"), col("event_id"))
       },
@@ -1857,9 +1808,7 @@ object SparkEntry {
     // the batch gap-sessionization with the same strict boundary.
     "st25_session_window" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val ev = graft.streaming.Events.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
         val out = ev.withWatermark("ts", "1 day")
@@ -1869,14 +1818,8 @@ object SparkEntry {
           .select(col("user_id"),
             unix_micros(col("session_window.start")).as("ws"),
             unix_micros(col("session_window.end")).as("we"), col("n"))
-        val sink = "st25_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("user_id"), col("ws"))
+        graft.streaming.Replay.runToCompletion(out, "append")
+          .orderBy(col("user_id"), col("ws"))
       },
       """WITH e AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
          o AS (SELECT user_id, tus,
@@ -1911,11 +1854,9 @@ object SparkEntry {
       (outer, dir) => {
         // child session: RocksDB provider + right-sized state partitions
         // stay scoped to this query, nothing to save/restore
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
+        val s = GraftSession.streamSession(outer)
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        Registry.registerAll(s)
         val schema = Catalog.parquet(s, s"$dir/documents.parquet").schema
         val docs = s.readStream.schema(schema)
           .parquet(graft.streaming.Replay.linkDir(s"$dir/documents.parquet"))
@@ -1924,13 +1865,7 @@ object SparkEntry {
           docs.filter(col("doc_id") < 50)
             .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
         val out = graft.streaming.Events.streamingDedupOwners(planted, "doc_id", "text")
-        val sink = "st02_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(out, "append")
           .select(col("doc_id"), col("owner_id"), col("is_dup"))
           .orderBy(col("doc_id"))
       },
@@ -1949,7 +1884,6 @@ object SparkEntry {
     // keyed window — graft.ops.AsOf). Oracle: DuckDB's native ASOF JOIN.
     "a01_asof_join" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val ev = graft.streaming.Events.read(s, dir)
         graft.ops.AsOf.join(ev, ev, keyCol = "user_id",
             leftTimeCol = "ts", rightTimeCol = "ts",
@@ -1974,7 +1908,6 @@ object SparkEntry {
     // engines pick identical candidates.
     "a04_asof_nearest" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val ev = graft.streaming.Events.read(s, dir)
         graft.ops.AsOf.nearestJoin(ev, ev, keyCol = "user_id",
             leftTimeCol = "ts", rightTimeCol = "ts",
@@ -2014,7 +1947,6 @@ object SparkEntry {
     // same union + keyed-window formulation, timeline walked descending
     "a02_asof_forward" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val ev = graft.streaming.Events.read(s, dir)
         graft.ops.AsOf.join(ev, ev, keyCol = "user_id",
             leftTimeCol = "ts", rightTimeCol = "ts",
@@ -2086,7 +2018,6 @@ object SparkEntry {
     // re-keyed inserts from %50 keys.
     "u07_snapshot_diff" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val base = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"),
             round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -2129,9 +2060,7 @@ object SparkEntry {
     // emit as both sides arrive; the batch join is the exact oracle.
     "st18_stream_interval_join" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val ev = graft.streaming.Events.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
         val views = ev.filter(col("event_type") === "view")
@@ -2143,15 +2072,9 @@ object SparkEntry {
         val out = graft.streaming.Events.streamingIntervalJoin(
           views, buys, "user_id", "p_user_id", "view_ts", "p_ts",
           windowSeconds = 1800L)
-        val sink = "st18_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.select(col("view_id"), col("purchase_id"), col("user_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("view_id"), col("purchase_id"))
+        graft.streaming.Replay.runToCompletion(
+            out.select(col("view_id"), col("purchase_id"), col("user_id")), "append")
+          .orderBy(col("view_id"), col("purchase_id"))
       },
       """SELECT v.event_id AS view_id, p.event_id AS purchase_id, v.user_id
          FROM events v JOIN events p
@@ -2184,9 +2107,7 @@ object SparkEntry {
     // the oracle replays the batch assignment + rollup.
     "st20_stream_geo_enrich" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val sixt = lit(0.0625)
         val catalog = graft.ops.Geo.siteCatalog(
           geoGridSuppliers(s, dir), "s_suppkey", "slat", "slon",
@@ -2201,14 +2122,7 @@ object SparkEntry {
             metric = graft.ops.Geo.planarSq)
           .groupBy(col("site"))
           .agg(count(lit(1)).as("n"))
-        val sink = "st20_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("site"))
+        graft.streaming.Replay.runToCompletion(out, "complete").orderBy(col("site"))
       },
       """WITH e AS (SELECT event_id,
                   (user_id % 320) * CAST(0.0625 AS DOUBLE) AS plat,
@@ -2237,9 +2151,7 @@ object SparkEntry {
     // feed → one batch → the 2h delay needs no disorder headroom.
     "st19_stream_left_outer_join" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val ev = graft.streaming.Events.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
         val views = ev.filter(col("event_type") === "view")
@@ -2252,15 +2164,8 @@ object SparkEntry {
           views, buys, "user_id", "p_user_id", "view_ts", "p_ts",
           windowSeconds = 1800L, watermark = "2 hours",
           joinType = "left_outer")
-        val sink = "st19_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.select(col("view_id"), col("user_id"), col("purchase_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(
+            out.select(col("view_id"), col("user_id"), col("purchase_id")), "append")
           .orderBy(col("view_id"), col("purchase_id").asc_nulls_last)
       },
       """WITH v AS (SELECT event_id AS view_id, user_id, epoch_us(ts) AS vts
@@ -2296,9 +2201,7 @@ object SparkEntry {
     // ASOF). Single-file feed → one batch → no disorder headroom needed.
     "st21_stream_asof_enrich" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val ev = graft.streaming.Events.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
         val views = ev.filter(col("event_type") === "view")
@@ -2312,17 +2215,10 @@ object SparkEntry {
           probeIdCol = "purchase_id", quotePayload = Seq("view_id"),
           horizonSeconds = 1800L, windowDuration = "1 hour",
           watermark = "2 hours")
-        val sink = "st21_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.select(col("purchase_id"),
-            col("p_user_id").as("user_id"),
-            col("view_id").as("last_view_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("purchase_id"))
+        graft.streaming.Replay.runToCompletion(
+            out.select(col("purchase_id"), col("p_user_id").as("user_id"),
+              col("view_id").as("last_view_id")), "append")
+          .orderBy(col("purchase_id"))
       },
       """WITH v AS (SELECT event_id AS view_id, user_id, epoch_us(ts) AS vts
                     FROM events WHERE event_type = 'view'),
@@ -2354,9 +2250,7 @@ object SparkEntry {
     // oracle replays windows, reference and chain verbatim.
     "st22_stream_drift_psi" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val E = graft.streaming.Events
         val batch = E.readRaw(s, dir).select(col("ts"), col("value"))
           .filter(col("value").isNotNull)
@@ -2373,16 +2267,10 @@ object SparkEntry {
         val out = E.streamingDriftPsi(ev, "value", "ts", ref,
           lo = 0.0, width = 25.0, windowDuration = "3 days",
           watermark = "1 day")
-        val sink = "st22_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.select(unix_micros(col("window_start")).as("ws"),
-            col("n_cur"), col("psi"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("ws"))
+        graft.streaming.Replay.runToCompletion(
+            out.select(unix_micros(col("window_start")).as("ws"),
+              col("n_cur"), col("psi")), "append")
+          .orderBy(col("ws"))
       },
       """WITH e AS (SELECT epoch_us(ts) AS tus, value FROM events
                     WHERE value IS NOT NULL),
@@ -2454,26 +2342,16 @@ object SparkEntry {
     // same windows under the strict end < maxTs − delay boundary.
     "st23_stream_k_anon" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val E = graft.streaming.Events
         val ev = E.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
           .withColumn("ub", coalesce(col("user_id") % 10, lit(-1L)))
         val sizes = E.streamingQuasiIdSizes(ev, "ts",
           Seq("event_type", "ub"), "7 days", "1 day")
-        val sink = "st23_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = sizes
-          .select(unix_micros(col("window_start")).as("ws"),
-            col("event_type"), col("ub"), col("n"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(
+            sizes.select(unix_micros(col("window_start")).as("ws"),
+              col("event_type"), col("ub"), col("n")), "append")
           .groupBy(col("ws"))
           .agg(count(lit(1)).as("n_groups"),
             min(col("n")).as("k_actual"),
@@ -2510,9 +2388,7 @@ object SparkEntry {
     // sum_fp > thr·n — no division anywhere.
     "st24_stream_quality_gate" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val E = graft.streaming.Events
         val ev = E.readStream(s, dir)
           .withColumn("ts", col("ts").cast("timestamp"))
@@ -2520,17 +2396,10 @@ object SparkEntry {
           E.demoQualityWeights,
           thresholdLogitFp = 0L, windowDuration = "7 days",
           watermark = "1 day")
-        val sink = "st24_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = gated
-          .select(unix_micros(col("window_start")).as("ws"),
-            col("n_docs"), col("n_kept"), col("sum_fp_kept"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("ws"))
+        graft.streaming.Replay.runToCompletion(
+            gated.select(unix_micros(col("window_start")).as("ws"),
+              col("n_docs"), col("n_kept"), col("sum_fp_kept")), "append")
+          .orderBy(col("ws"))
       },
       """WITH e AS (SELECT epoch_us(ts) AS tus,
                   list_filter(string_split_regex(lower(coalesce(props, '')), '\W+'),
@@ -2569,7 +2438,6 @@ object SparkEntry {
     // between d01's exact hash and d02's probabilistic minhash.
     "d25_winnowing_pairs" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val fp = graft.ops.Dedup.winnowingFingerprints(
           Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
           k = 3, w = 4, maxDocFreq = Some(64))
@@ -2613,7 +2481,6 @@ object SparkEntry {
     // exact dedup groups: one hash shuffle on the content digest
     "d01_dedup_exact" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.exactGroups(
             Catalog.parquet(s, s"$dir/documents.parquet"), "text", "doc_id")
           .orderBy(col("keep_id"))
@@ -2635,7 +2502,6 @@ object SparkEntry {
     // (engine-specific); d04 gates exact jaccard values.
     "d02_minhash_pairs" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.minhashPairs(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             numHashes = 64, bands = 16, shingleK = 5, threshold = 0.5)
@@ -2667,7 +2533,6 @@ object SparkEntry {
     // h<=3).
     "d03_simhash_pairs" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         // fingerprints materialize once (16 bytes/doc): both sides of the
         // chunk self-join read the checkpoint instead of re-running
@@ -2702,7 +2567,6 @@ object SparkEntry {
     // equal the exhaustive set exactly.
     "d04_ngram_jaccard" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.nearDupJaccard(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             numHashes = 128, bands = 32, shingleK = 3, threshold = 0.6,
@@ -2738,7 +2602,6 @@ object SparkEntry {
     // red. embeddingPairsBanded/d08 is the recall~1 scale path.
     "d05_embed_neardup" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val lsh = graft.ops.Dedup.embeddingPairs(emb, "vec_id", "embedding",
             bits = 6, threshold = 0.3)
@@ -2766,7 +2629,6 @@ object SparkEntry {
     // Full oracle including the every-segment-deduped -> '' documents.
     "d06_dedup_segments" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.dedupSegments(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             delim = " ")
@@ -2806,7 +2668,6 @@ object SparkEntry {
     // driver-checked (the d14 mold).
     "d22_exact_substr" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.sharedRuns(
             exactSubstrCorpus(s, dir), "doc_id", "text", minRun = 15)
           .orderBy(col("id_a"), col("id_b"), col("start_a"), col("start_b"))
@@ -2827,7 +2688,6 @@ object SparkEntry {
     // re-runs the identical interval algebra over the d22 CTE chain.
     "d23_remove_shared_runs" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.removeSharedRuns(
             exactSubstrCorpus(s, dir), "doc_id", "text", minRun = 15)
           .orderBy(col("doc_id"))
@@ -2875,7 +2735,6 @@ object SparkEntry {
     // engines' longs are identical), then mirrors the rollup.
     "d21_cdc_chunk_dedup" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.cdcChunkGroups(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             div = 64L, minLen = 32)
@@ -2917,7 +2776,6 @@ object SparkEntry {
     // same as s01)
     "d07_embed_pairs_exact" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.embeddingPairsExact(
             Catalog.parquet(s, s"$dir/embeddings.parquet"), "vec_id", "embedding",
             threshold = 0.35)
@@ -2944,7 +2802,6 @@ object SparkEntry {
     // IS the recall=1 proof. d07 stays the exhaustive-anchor query.
     "d08_dup_clusters" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val base = Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val r1 = base.filter(col("vec_id") % 10 === 0)
@@ -2993,7 +2850,6 @@ object SparkEntry {
     // comparator sorts/hashes scalar columns only (no array types).
     "s04_centroids" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("label").cast("long").as("label"),
             transform(col("embedding").cast("array<double>"),
@@ -3025,7 +2881,6 @@ object SparkEntry {
     // topk_by aggregate — full oracle (cosine verified bit-identical)
     "s01_ann_brute" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         graft.ops.Similarity.bruteForceTopK(
             emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
@@ -3048,7 +2903,6 @@ object SparkEntry {
     // fixed-order cosine discipline).
     "s20_hard_negatives" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val pairs = emb.filter(col("vec_id") < 5)
           .select(col("vec_id").as("a_id"),
@@ -3093,7 +2947,6 @@ object SparkEntry {
     // floor hash-mismatches.
     "s21_random_projection" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val rp = graft.ops.Similarity.randomProjection(
           emb, "vec_id", "embedding", inDim = 64, outDim = 16)
@@ -3134,7 +2987,6 @@ object SparkEntry {
     // the full Lucene-form formula bit-for-bit.
     "s15_bm25" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Search.bm25(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             Seq("data", "query", "vector"))
@@ -3176,7 +3028,6 @@ object SparkEntry {
     // double is two correctly-rounded divisions summed in fixed order.
     "s16_hybrid_rrf" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         // lexical TOP-100 through the bounded-heap aggregate, not a
@@ -3376,7 +3227,6 @@ object SparkEntry {
     // demo, whose output is approximation-specific by design).
     "s05_ann_ivf_full" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val coarse = graft.ops.Ivf.trainCentroids(emb, "vec_id", "embedding", nlist = 16)
         val cents = graft.ops.Ivf.lloydStep(emb, "embedding", coarse)
@@ -3394,7 +3244,6 @@ object SparkEntry {
     // differed between engines the integer aggregates would diverge.
     "s06_quantize_int8" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val q = graft.ops.Quantize.quantizeInt8(
           Catalog.parquet(s, s"$dir/embeddings.parquet")
             .select(col("vec_id"), col("embedding")), "embedding")
@@ -3428,7 +3277,6 @@ object SparkEntry {
     // The compressed-search shape: 8x less data scanned than s01.
     "s07_ann_quantized" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding"))
         graft.ops.Quantize.bruteForceTopKQuantized(
@@ -3466,7 +3314,6 @@ object SparkEntry {
     // boundaries. The exact denominator re-derives from data.
     "s03_ann_ivf" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val probes = emb.filter(col("vec_id") < 5)
         val coarse = graft.ops.Ivf.trainCentroids(emb, "vec_id", "embedding", nlist = 16)
@@ -3504,7 +3351,6 @@ object SparkEntry {
     // against DuckDB's native range join.
     "j06_range_join" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val epoch = lit("1970-01-01")
         val points = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(datediff(col("l_shipdate"), epoch).cast("long").as("t"),
@@ -3547,7 +3393,6 @@ object SparkEntry {
     // hashing), so the gate is exact, not flaky.
     "s02_ann_lsh" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val probes = emb.filter(col("vec_id") < 5)
         val lsh = graft.ops.Similarity.lshTopK(emb, probes, "vec_id", "embedding",
@@ -3580,7 +3425,6 @@ object SparkEntry {
     // language ID by stopword argmax — full oracle
     "t01_langid" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"),
             graft.ops.TextAnalysis.langId(col("text")).as("pred_lang"))
@@ -3604,7 +3448,6 @@ object SparkEntry {
     // quality features + bounded score — full oracle
     "t02_quality" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.TextAnalysis.qualityFeatures(
             Catalog.parquet(s, s"$dir/documents.parquet"), "text")
           .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"),
@@ -3634,7 +3477,6 @@ object SparkEntry {
     // token counting: word-regex count + BPE-ish estimate — full oracle
     "t03_tokens" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val t = graft.ops.TextAnalysis
         Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), length(col("text")).as("len_chars"),
@@ -3654,7 +3496,6 @@ object SparkEntry {
     // through mirrored correctly-rounded chains — map-only
     "t24_readability" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.TextAnalysis.readability(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text")
           .orderBy(col("doc_id"))
@@ -3678,7 +3519,6 @@ object SparkEntry {
     // collision fingerprint (sorted distinct token set) — full oracle
     "t04_fingerprint" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             graft.ops.TextAnalysis.fingerprint(col("text")).as("fp"))
@@ -3697,7 +3537,6 @@ object SparkEntry {
     // the verify path carry rows.
     "d09_dedup_against_ref" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val ref = docs.filter(col("doc_id") < 250 || col("doc_id").between(400, 449))
         val fresh = docs.filter(col("doc_id") >= 250)
@@ -3730,7 +3569,6 @@ object SparkEntry {
     // zero, so flags AND distinct-gram hit counts are value-identical.
     "d10_decontaminate" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Dedup.contaminationFlags(
             docs, "doc_id", "text",
@@ -3760,7 +3598,6 @@ object SparkEntry {
     // "hash ≡ string" equivalence claim into a driver-checked one.
     "d14_decontaminate_hashed" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Dedup.contaminationFlags(
             docs, "doc_id", "text",
@@ -3794,7 +3631,6 @@ object SparkEntry {
     // percentile ≡ quantile_cont (p05 precedent), md5 ≡ md5.
     "pr03_data_card" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/documents.parquet")
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"),
@@ -3820,7 +3656,6 @@ object SparkEntry {
     // row per column. Full oracle via per-column UNION ALL.
     "pr01_profile" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Profile.summarize(
             graft.streaming.Events.readRaw(s, dir),
             Seq("event_type", "user_id", "value", "props"))
@@ -3848,7 +3683,6 @@ object SparkEntry {
     // window cumsum -> sequence id / offset / span count, fully oracled
     "p02_pack_sequences" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Packing.packSequences(
             docs, "doc_id", "source",
@@ -3880,7 +3714,6 @@ object SparkEntry {
     // min() aggregation + join-back + one id-keyed rollup; no window.
     "t22_corpus_novelty" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.TextAnalysis.corpusNovelty(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             shingleK = 3)
@@ -3920,7 +3753,6 @@ object SparkEntry {
     // map-side explode over each doc's spanned range; all-integer.
     "p12_pack_segments" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Packing.packSegments(
             docs, "doc_id", "source",
@@ -3959,7 +3791,6 @@ object SparkEntry {
     // ranks — the real-vocabulary invariant).
     "t11_bpe_tokens" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             graft.ops.TextAnalysis.bpeTokenCount(col("text")).as("bpe_tokens"),
@@ -3977,7 +3808,6 @@ object SparkEntry {
     // so cut points line up with what the model consumes.
     "p08_pack_bpe" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Packing.packSequences(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "source",
             graft.ops.TextAnalysis.bpeTokenCount(col("text")), budget = 1024)
@@ -4008,7 +3838,6 @@ object SparkEntry {
     // packing's straddle semantics). One shuffle on the source key.
     "sp06_token_budget_mix" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Sampling.tokenBudget(
             Catalog.parquet(s, s"$dir/documents.parquet"), "source", "doc_id",
             graft.ops.TextAnalysis.bpeTokenCount(col("text")), budget = 5000)
@@ -4039,7 +3868,6 @@ object SparkEntry {
     // doc flips the hash.
     "p09_pack_materialize" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .withColumn("text", coalesce(col("text"), lit("")))
         val packed = graft.ops.Packing.packSequences(docs, "doc_id", "source",
@@ -4073,7 +3901,6 @@ object SparkEntry {
     // of a real training-data curation job, fully oracle-checked.
     "p01_pipeline_e2e" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val kept = graft.ops.Dedup.exactDedup(docs, "text", "doc_id")
@@ -4118,7 +3945,6 @@ object SparkEntry {
     // RE2-compatible regexes applied in the same order by both engines.
     "t05_redact" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
             graft.ops.TextAnalysis.redact(concat(
@@ -4146,7 +3972,6 @@ object SparkEntry {
     // fractions, symbol ratio) — map-only lambda expressions, full oracle
     "t06_repetition" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.TextAnalysis.repetitionSignals(
             Catalog.parquet(s, s"$dir/documents.parquet"), "text")
           .select(col("doc_id"), col("n_words"), col("dup_word_frac"),
@@ -4185,7 +4010,6 @@ object SparkEntry {
     // char-for-char against DuckDB's nfc_normalize
     "t07_normalize" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val raw = concat(lit("cafe\u0301 nai\u0308ve "), substring(col("text"), 1, 30))
         Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"),
@@ -4214,7 +4038,6 @@ object SparkEntry {
     // and keepCanonical genuinely drops documents from the rollup.
     "p04_curate_clusters" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -4274,7 +4097,6 @@ object SparkEntry {
     // back as a broadcast (one row per language)
     "p05_quantile_gate" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val med = docs.groupBy(col("lang"))
           .agg(expr("percentile(n_chars, 0.5)").as("med"))
@@ -4296,7 +4118,6 @@ object SparkEntry {
     // shuffles + broadcast scalar N; deterministic tie-break by term
     "t08_tfidf" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         // gated score is FIXED-POINT (round(score*1e6) as long): a
         // rounded-double output would be half-ulp boundary-brittle
         // across engines (repo determinism rules)
@@ -4332,7 +4153,6 @@ object SparkEntry {
     // trees, one row per (doc, chunk start); overlap = size - stride
     "p03_chunk_overlap" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.TextAnalysis.chunkTokens(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             size = 20, stride = 15)
@@ -4356,7 +4176,6 @@ object SparkEntry {
     // cccc/e666)
     "sp01_det_split" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Sampling.deterministicSplit(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id",
             Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
@@ -4401,7 +4220,6 @@ object SparkEntry {
     // SAME bucket histogram, per-bucket log-ratios in 1e6 fixed point.
     "sp11_dsir_weights" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Sampling.dsirLogWeights(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             col("lang") === "en")
@@ -4495,7 +4313,6 @@ object SparkEntry {
     // two; the ln/ln pair lands in 1e6 fixed point for the output).
     "sp12_gumbel_topk" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val w = graft.ops.Sampling.dsirLogWeights(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             col("lang") === "en")
@@ -4613,7 +4430,6 @@ object SparkEntry {
     // exactly (floor(0.4*65536)=0x6666, floor(0.5*65536)=0x8000)
     "sp03_weighted_mix" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         graft.ops.Sampling.weightedMix(
             Seq(docs.filter(col("lang") === "en") -> 1.4,
@@ -4638,7 +4454,6 @@ object SparkEntry {
     // genuinely binds) — one shuffle on the group key
     "sp02_group_quota" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Sampling.perGroupQuota(
             Catalog.parquet(s, s"$dir/documents.parquet"),
             groupCol = "source", orderCol = "n_chars", idCol = "doc_id",
@@ -4657,7 +4472,6 @@ object SparkEntry {
     // (codec-level decode is the ScalaTest-covered stub; SURVEY brief)
     "m01_multimodal_meta" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.metaDecode(
             m.withBinaryPayload(Catalog.parquet(s, s"$dir/documents.parquet"), "text"),
@@ -4679,7 +4493,6 @@ object SparkEntry {
     // is OpsSpec golden-tested.
     "m02_codec_decode" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.decodeMedia(
             m.withBmpPayload(Catalog.parquet(s, s"$dir/documents.parquet"),
@@ -4702,7 +4515,6 @@ object SparkEntry {
     // correctness of the resample is OpsSpec golden-tested.
     "m03_resize" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.decodeMedia(
             m.resizeImages(
@@ -4727,7 +4539,6 @@ object SparkEntry {
     // with truncating integer division (same rounding as DuckDB's //).
     "m12_audio_resample" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.audioChecksum(
             m.resampleAudio(
@@ -4767,7 +4578,6 @@ object SparkEntry {
     // 8000/4, duration = kept/2000 (one IEEE division on both engines).
     "m04_frame_sample" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         // coalesce(text,'') on BOTH engines: the WAV builder would map a
         // null source to an empty-sample container while the oracle's
@@ -4802,7 +4612,6 @@ object SparkEntry {
     // pass.
     "m10_png_roundtrip" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.pngFeatures(
             m.withPngPayload(
@@ -4842,7 +4651,6 @@ object SparkEntry {
     // golden-tested (shared resampler with the BMP path).
     "m11_png_resize" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.decodeMedia(
             m.resizeImages(
@@ -4866,7 +4674,6 @@ object SparkEntry {
     // channel sum / (16*height) — one IEEE division on both engines.
     "m05_image_features" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.imageFeatures(
             m.withBmpPayload(
@@ -4910,7 +4717,6 @@ object SparkEntry {
     // boundary-proof, not threshold-lucky.
     "m07_image_phash_pairs" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .withColumn("text", coalesce(col("text"), lit("")))
@@ -4934,7 +4740,6 @@ object SparkEntry {
     // together.
     "m09_image_dup_clusters" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .withColumn("text", coalesce(col("text"), lit("")))
@@ -4967,7 +4772,6 @@ object SparkEntry {
     // cents-exact revenue and the count of keys the delta won.
     "u01_upsert" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val base = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
           .withColumn("ver", lit(0L))
@@ -5005,7 +4809,6 @@ object SparkEntry {
     // FIXED-POINT log-probs (integer sum -> partition-order-proof)
     "t09_lm_score" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.TextAnalysis.bigramLmScore(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text")
           .orderBy(col("doc_id"))
@@ -5038,7 +4841,6 @@ object SparkEntry {
     // so both engines compute identical doubles)
     "sp04_temperature_mix" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Sampling.temperatureSample(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "source")
           .groupBy(col("source"))
@@ -5066,7 +4868,6 @@ object SparkEntry {
     // filter on the scan)
     "io05_sorted_layout" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val tmp = scratchDir(s"io05_sorted_${new java.io.File(dir).getName}")
         Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -5092,18 +4893,10 @@ object SparkEntry {
     // inclusive, verified by probe).
     "st04_stream_append" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val out = graft.streaming.Events.streamingHourlyClosed(
           graft.streaming.Events.readStream(s, dir))
-        val sink = "st04_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(out, "append")
           .select(unix_micros(col("h_end")).as("h_end"), col("event_type"),
             col("n"), col("sv").cast("double").as("sv"))
           .orderBy(col("h_end"), col("event_type"))
@@ -5188,7 +4981,6 @@ object SparkEntry {
     // argmax-CTEs, ties on ascending id at every step.
     "s17_mmr_rerank" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         graft.ops.Search.mmr(emb, emb.filter(col("vec_id") === 0),
             "vec_id", "embedding", poolSize = 16, k = 5)
@@ -5249,18 +5041,10 @@ object SparkEntry {
     // sessions by the same closed-session predicate (st04 mechanics).
     "st17_stream_session_window" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val out = graft.streaming.Events.streamingSessionWindows(
           graft.streaming.Events.readStream(s, dir), 30)
-        val sink = "st17_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(out, "append")
           .select(col("user_id"), unix_micros(col("s_start")).as("s_start"),
             unix_micros(col("s_end")).as("s_end"), col("n_events"),
             col("cents"))
@@ -5294,7 +5078,6 @@ object SparkEntry {
     // order-independent; one shuffle on the customer key
     "w04_rolling_range" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_custkey")).orderBy(col("d"))
           .rangeBetween(-6, 0)
@@ -5723,7 +5506,6 @@ object SparkEntry {
 
     "w11_rolling_median" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_custkey")).orderBy(col("d"))
           .rangeBetween(-13, 0)
@@ -5750,7 +5532,6 @@ object SparkEntry {
     // session-keyed sort
     "e04_funnel" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.streaming.Events.sessionFunnel(
             graft.streaming.Events.read(s, dir),
             Seq("view", "click", "purchase"))
@@ -5795,7 +5576,6 @@ object SparkEntry {
     // shape (dim re-read per micro-batch, never shuffled into the stream)
     "st05_stream_static" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         import s.implicits._
         val dim = Seq(("view", "engagement"), ("click", "engagement"),
           ("purchase", "transactional"), ("signup", "transactional"),
@@ -5805,13 +5585,7 @@ object SparkEntry {
           .groupBy(col("category"))
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(18,6)")).as("sv"))
-        val sink = "st05_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(out, "complete")
           .select(col("category"), col("n"), col("sv").cast("double").as("sv"))
           .orderBy(col("category"))
       },
@@ -5829,7 +5603,6 @@ object SparkEntry {
     // every incremental corpus refresh (pairs with u01)
     "pr02_snapshot_diff" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val cols = Seq("o_orderkey", "o_orderstatus", "o_totalprice")
         val base = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(cols.map(col): _*)
@@ -5900,7 +5673,6 @@ object SparkEntry {
     // re-derives them exactly
     "d11_dup_spans" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.duplicatedSpans(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text", k = 8)
           .orderBy(col("doc_id"))
@@ -5936,9 +5708,7 @@ object SparkEntry {
         // batch default. An isolated child session keeps the conf from
         // leaking into other queries; on a cluster this is the same knob
         // sized to executor count instead.
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val E = graft.streaming.Events
         def side(t: String, p: String) = E.readStream(s, dir)
           .filter(col("event_type") === t)
@@ -5950,14 +5720,8 @@ object SparkEntry {
           col("p_user") === col("v_user") &&
             col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("v_ts") <= col("p_ts"))
-        val sink = "st06_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = joined.select(col("p_id"), col("v_id"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(
+            joined.select(col("p_id"), col("v_id")), "append")
           .agg(count(lit(1)).as("n_pairs"),
             count_distinct(col("p_id")).as("n_purchases"),
             min(col("p_id")).as("mn_p"), min(col("v_id")).as("mn_v"))
@@ -5977,7 +5741,6 @@ object SparkEntry {
     // continuous corpus ingestion against yesterday's snapshot
     "st07_stream_ref_dedup" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val ref = Catalog.parquet(s, s"$dir/documents.parquet")
           .filter(col("doc_id") % 7 === 0)
           .select(md5(col("text")).as("digest")).distinct()
@@ -5986,14 +5749,8 @@ object SparkEntry {
           .parquet(graft.streaming.Replay.linkDir(s"$dir/documents.parquet"))
           .withColumn("digest", md5(col("text")))
         val fresh = stream.join(broadcast(ref), Seq("digest"), "left_anti")
-        val sink = "st07_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = fresh.select(col("doc_id"), col("n_chars"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(
+            fresh.select(col("doc_id"), col("n_chars")), "append")
           .agg(count(lit(1)).as("n_fresh"),
             sum(col("n_chars")).cast("long").as("sc"),
             min(col("doc_id")).as("mn"))
@@ -6012,7 +5769,6 @@ object SparkEntry {
     // replays the whole chain in SQL.
     "p06_pipeline_v2" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val scored = graft.ops.TextAnalysis.bigramLmScore(docs, "doc_id", "text")
         val gated = docs.join(scored, "doc_id")
@@ -6067,7 +5823,6 @@ object SparkEntry {
     // 100 TB, where writers evolve while history stays readable
     "io06_schema_merge" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val tmp = scratchDir(s"io06_merge_${new java.io.File(dir).getName}")
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         docs.filter(col("doc_id") % 2 === 0)
@@ -6097,7 +5852,6 @@ object SparkEntry {
     // cohort cell), the standard growth-analytics rollup
     "e05_cohort_retention" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val ev = graft.streaming.Events.read(s, dir)
           .select(col("user_id"), col("ts").cast("date").as("d"))
         val first = ev.groupBy(col("user_id")).agg(min(col("d")).as("d0"))
@@ -6126,7 +5880,6 @@ object SparkEntry {
     // the oracle (s06/s07 discipline applied to PQ).
     "s08_ann_pq" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val cb = P.seededCodebook(emb, "vec_id", "embedding", dim = 64, m = 4, k = 16)
@@ -6171,7 +5924,6 @@ object SparkEntry {
     // the oracle — a strict-oracled APPROXIMATE index.
     "s09_ann_ivfpq" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val cb = P.seededCodebook(emb, "vec_id", "embedding", dim = 64, m = 4, k = 16)
@@ -6194,7 +5946,6 @@ object SparkEntry {
     // semantics as s09, so it shares s09's exact re-derivation oracle.
     "s11_ann_ivfpq_persisted" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val prefix = s"graft_s11_${new java.io.File(dir).getName}"
@@ -6220,7 +5971,6 @@ object SparkEntry {
     // maintainable.
     "s12_ann_index_append" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val cut = 4L * emb.count() / 5L
@@ -6247,7 +5997,6 @@ object SparkEntry {
     // still quantize, as frozen quantizers must).
     "s14_ann_index_delete" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val prefix = s"graft_s14_${new java.io.File(dir).getName}"
@@ -6325,7 +6074,6 @@ object SparkEntry {
 
     "g05_stats" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/lineitem.parquet")
           .groupBy(col("l_returnflag"))
           .agg(
@@ -6349,7 +6097,6 @@ object SparkEntry {
     // engines). One shuffle on the partition key.
     "w05_ntile" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_orderpriority"))
           .orderBy(col("o_totalprice"), col("o_orderkey"))
@@ -6376,7 +6123,6 @@ object SparkEntry {
     // like Spark's pivot).
     "g03_pivot" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val qc = round(col("l_quantity") * 100).cast("long")
         val cc = round(col("l_extendedprice") * 100).cast("long")
         Catalog.parquet(s, s"$dir/lineitem.parquet")
@@ -6405,7 +6151,6 @@ object SparkEntry {
     // Spark/SQL null-dropping differences never engage.
     "g04_unpivot" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val qc = round(col("l_quantity") * 100).cast("long")
         Catalog.parquet(s, s"$dir/lineitem.parquet")
           .groupBy(col("l_returnflag"))
@@ -6476,7 +6221,6 @@ object SparkEntry {
     // written subset.
     "io14_binary_source" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         val out = scratchDir(s"io14_png_${new java.io.File(dir).getName}")
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
@@ -6541,7 +6285,6 @@ object SparkEntry {
 
     "io15_arrow_export" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val tmp = scratchDir(s"io15_arrow_${new java.io.File(dir).getName}")
         val df = Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"),
@@ -6566,7 +6309,6 @@ object SparkEntry {
 
     "io07_orc_roundtrip" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val tmp = scratchDir(s"io07_orc_${new java.io.File(dir).getName}")
         Catalog.parquet(s, s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderstatus"),
@@ -6590,7 +6332,6 @@ object SparkEntry {
     // expression; one shuffle on the (small) bucket key; cents-exact sums.
     "e06_histogram" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.streaming.Events.readRaw(s, dir)
           .select(floor(col("value") / lit(25.0)).cast("long").as("bucket"),
             round(col("value") * 100).cast("long").as("cents"))
@@ -6610,7 +6351,6 @@ object SparkEntry {
     // shuffle beyond the determinism sort.
     "q26_conditional" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_orderkey"), col("l_linenumber"),
             when(col("l_quantity") >= 25, lit("bulk"))
@@ -6637,7 +6377,6 @@ object SparkEntry {
     // oracle re-derives every feature from the source bytes.
     "m06_audio_features" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val m = graft.ops.Multimodal
         m.audioFeatures(
             m.withWavPayload(
@@ -6675,7 +6414,6 @@ object SparkEntry {
     // when they are.
     "g06_string_agg" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val n = Catalog.parquet(s, s"$dir/nation.parquet")
         val r = Catalog.parquet(s, s"$dir/region.parquet")
         n.join(r, col("n_regionkey") === col("r_regionkey"))
@@ -6696,7 +6434,6 @@ object SparkEntry {
     // bounded by each key's observed span.
     "e07_resample_ffill" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val ev = graft.streaming.Events.readRaw(s, dir)
           .filter(col("user_id") < 20)
           .withColumn("cents", round(col("value") * 100).cast("long"))
@@ -6727,7 +6464,6 @@ object SparkEntry {
     // 500 documents flips the hash. Map-only expression tree.
     "t10_html_strip" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val T = graft.ops.TextAnalysis
         val html = concat(lit("<html><body><h1>"), col("source"),
           lit("</h1>\n<p class=\"c\">"),
@@ -6769,7 +6505,6 @@ object SparkEntry {
     // oracle's islands use >= accordingly. One shuffle on user_id.
     "e08_session_window" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.streaming.Events.readRaw(s, dir)
           .select(col("user_id"), col("ts"),
             expr("cast(timestamp_micros(ts) as timestamp_ntz)").as("tse"),
@@ -6802,7 +6537,6 @@ object SparkEntry {
     // corpus's 25 planted near-duplicates.
     "d12_editdist_pairs" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.editDistancePairs(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             prefixLen = 64, blockLen = 24, maxDist = 8)
@@ -6826,7 +6560,6 @@ object SparkEntry {
     // engines.
     "g07_argmax" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .groupBy(col("o_orderpriority"))
           .agg(max(struct(col("o_totalprice"), col("o_orderkey"))).as("mx"),
@@ -6851,7 +6584,6 @@ object SparkEntry {
     // (v1: every 10th key repriced 2x; v2: every 20th 3x), cents exact.
     "u02_scd2" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         def snap(mod: Int, mult: Int, ver: Long) =
           Catalog.parquet(s, s"$dir/orders.parquet")
             .filter(col("o_orderkey") % mod === 0)
@@ -6894,7 +6626,6 @@ object SparkEntry {
     // row_number DESC picks.
     "u08_bitemporal" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         def stmt(mod: Int, mult: Int, vf: Long, tx: Long) =
           Catalog.parquet(s, s"$dir/orders.parquet")
             .filter(col("o_orderkey") % mod === 0)
@@ -6951,7 +6682,6 @@ object SparkEntry {
     // filter.
     "u10_dml_statements" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 7 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -7011,7 +6741,6 @@ object SparkEntry {
     // don't carry).
     "u12_insert_on_conflict" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 4 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -7066,7 +6795,6 @@ object SparkEntry {
     // CASE / NOT EXISTS — the standard's semantics).
     "u13_correlated_dml" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 7 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -7122,7 +6850,6 @@ object SparkEntry {
     // needs a unique index, which frames don't carry).
     "u14_conflict_where" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 4 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -7167,7 +6894,6 @@ object SparkEntry {
     // anti-join). The oracle re-derives each arm relationally.
     "u15_dml_returning" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 6 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -7220,7 +6946,6 @@ object SparkEntry {
     // target's own k, so the UPDATE…FROM is a CASE).
     "u16_cte_dml" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 8 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -7268,7 +6993,6 @@ object SparkEntry {
     // (the empty table is a WHERE FALSE base).
     "u17_schema_ddl" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 9 === 0)
           .createOrReplaceTempView("u17_src")
@@ -7325,7 +7049,6 @@ object SparkEntry {
     // The oracle rebuilds the final shape straight off nation.
     "u18_drop_alter" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/nation.parquet")
           .createOrReplaceTempView("nation")
         def ss(q: String) = graft.api.Table.sessionSql(s, q)
@@ -7364,7 +7087,6 @@ object SparkEntry {
     // equivalence of the correlated max.
     "u19_subquery_dml" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         bindViews(s, dir, Seq("orders", "customer"))
         def ss(q: String) = graft.api.Table.sessionSql(s, q)
         ss("""CREATE OR REPLACE TEMP TABLE u19_t AS
@@ -7417,7 +7139,6 @@ object SparkEntry {
     // literal never splits (masked scan, fuzz-pinned).
     "u20_script" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/region.parquet")
           .createOrReplaceTempView("region")
         graft.api.Table.sessionSql(s,
@@ -7447,7 +7168,6 @@ object SparkEntry {
     // ORIGINAL base (sessionSql DML outside scripts never rebinds).
     "u21_upsert_returning" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 9 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -7518,7 +7238,6 @@ object SparkEntry {
     // expression; the oracle is the hand-substituted single statement.
     "u24_prepared_stmt" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .createOrReplaceTempView("u24_orders")
         graft.api.Table.sessionSql(s,
@@ -7553,7 +7272,6 @@ object SparkEntry {
     // gets ONE statement).
     "u23_sql_macros" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/nation.parquet")
           .createOrReplaceTempView("u23_nation")
         graft.api.Table.sessionSql(s,
@@ -7588,7 +7306,6 @@ object SparkEntry {
 
     "u22_script_txn" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 10 === 0)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -7631,7 +7348,6 @@ object SparkEntry {
     // bindings. The oracle re-derives the chain as CTEs.
     "u11_ctas" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .createOrReplaceTempView("u11_src")
         graft.api.Table.sessionSql(s,
@@ -7659,7 +7375,6 @@ object SparkEntry {
 
     "u09_merge_into" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") % 3 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"),
@@ -7705,7 +7420,6 @@ object SparkEntry {
 
     "u06_point_in_time" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         def snap(mod: Int, mult: Int, ver: Long) =
           Catalog.parquet(s, s"$dir/orders.parquet")
             .filter(col("o_orderkey") % mod === 0)
@@ -7745,7 +7459,6 @@ object SparkEntry {
     // (stratum, split).
     "sp05_stratified" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Sampling.stratifiedSplit(
             Catalog.parquet(s, s"$dir/documents.parquet"), "lang", "doc_id", pct = 20)
           .groupBy(col("lang"), col("split"))
@@ -7770,7 +7483,6 @@ object SparkEntry {
     // as s01; oracle re-derives the filtered ranking bit-for-bit.
     "s10_ann_filtered" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         graft.ops.Similarity.bruteForceTopK(
             emb.filter(col("label") < 4), emb.filter(col("vec_id") < 5),
@@ -7799,9 +7511,7 @@ object SparkEntry {
     // hourly oracle. Integer time arithmetic end to end (readStreamRaw).
     "st08_stream_file_sink" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val out = graft.streaming.Events.readStreamRaw(s, dir)
           .select(
             expr(s"ts - ts % ${graft.streaming.Events.MicrosPerHour}").as("h"),
@@ -7832,9 +7542,7 @@ object SparkEntry {
     // and streaming ingest.
     "st09_stream_doc_pipeline" -> api(
       (outer, dir) => {
-        val s = outer.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val schema = Catalog.parquet(s, s"$dir/documents.parquet").schema
         val out = s.readStream.schema(schema)
           .parquet(graft.streaming.Replay.linkDir(s"$dir/documents.parquet"))
@@ -7843,13 +7551,7 @@ object SparkEntry {
           .select(col("doc_id"), col("lang"),
             graft.ops.TextAnalysis.langId(col("text")).as("pred_lang"),
             graft.ops.TextAnalysis.bpeTokenCount(col("text")).as("bpe_tokens"))
-        val sink = "st09_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink).orderBy(col("doc_id"))
+        graft.streaming.Replay.runToCompletion(out, "append").orderBy(col("doc_id"))
       },
       s"""WITH RECURSIVE $bpeCountCtes,
          f AS (SELECT doc_id, lang, coalesce(text, '') AS text
@@ -7904,7 +7606,6 @@ object SparkEntry {
     // or equi-keyed; nothing touches the driver.
     "p07_pipeline_v3" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val T = graft.ops.TextAnalysis
         val html = concat(lit("<html><body><h1>"), col("source"),
           lit("</h1>\n<p class=\"c\">"),
@@ -8098,7 +7799,6 @@ object SparkEntry {
     // planted excerpt.
     "d17_containment_pairs" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val T = graft.ops.TextOps
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("text"))
@@ -8598,7 +8298,6 @@ object SparkEntry {
 
     "d18_dedup_impact" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val keep = graft.ops.Dedup.exactGroups(docs, "text", "doc_id")
           .select(col("keep_id").as("doc_id"), lit(1L).as("__keep"))
@@ -8758,7 +8457,6 @@ object SparkEntry {
     // never-corpus² candidate volume).
     "d13_semantic_dedup" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val base = Catalog.parquet(s, s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val r1 = base.filter(col("vec_id") % 10 === 0)
@@ -8859,18 +8557,10 @@ object SparkEntry {
     // microseconds (base slide-floor minus 0..3 slides).
     "st10_stream_sliding" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val out = graft.streaming.Events.streamingSlidingTypeCounts(
           graft.streaming.Events.readStream(s, dir))
-        val sink = "st10_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        s.table(sink)
+        graft.streaming.Replay.runToCompletion(out, "complete")
           .select(unix_micros(col("ws")).as("ws"), col("event_type"), col("n"))
           .orderBy(col("ws"), col("event_type"))
       },
@@ -8942,7 +8632,6 @@ object SparkEntry {
     // straight off the source table.
     "io21_copy_roundtrip" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/lineitem.parquet")
           .filter(col("l_orderkey") % 11 === 0)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
@@ -8982,7 +8671,6 @@ object SparkEntry {
     // union.
     "io22_copy_from" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val src = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .filter(col("l_orderkey") % 13 === 0)
           .select(col("l_orderkey").as("k"), col("l_linenumber").as("ln"),
@@ -9074,7 +8762,6 @@ object SparkEntry {
     // partitioned layout as a prior export.
     "io23_copy_partitioned" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         Catalog.parquet(s, s"$dir/lineitem.parquet")
           .filter(col("l_orderkey") % 19 === 0)
           .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
@@ -9118,7 +8805,6 @@ object SparkEntry {
     // tables — proving the file forms read exactly the table contents.
     "io24_file_read_sql" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val out = scratchDir(s"io24_${new java.io.File(dir).getName}") +
           ".csv"
         graft.api.Table.sessionSql(s,
@@ -9150,7 +8836,6 @@ object SparkEntry {
     "io25_export_database" -> api(
       (s, dir) => {
         val s2 = s.newSession()
-        Registry.registerAll(s2)
         Catalog.parquet(s2, s"$dir/nation.parquet")
           .createOrReplaceTempView("nation_x")
         Catalog.parquet(s2, s"$dir/region.parquet")
@@ -9158,7 +8843,6 @@ object SparkEntry {
         val out = scratchDir(s"io25_${new java.io.File(dir).getName}")
         graft.api.Table.sessionSql(s2, s"EXPORT DATABASE '$out'")
         val s3 = s.newSession()
-        Registry.registerAll(s3)
         graft.api.Table.sessionSql(s3, s"IMPORT DATABASE '$out'")
         graft.api.Table.sessionSql(s3,
           """SELECT r.r_name, count(*) AS n, min(n.n_name) AS mn
@@ -9516,7 +9200,6 @@ object SparkEntry {
     // re-derives the exact counts and asserts both gates TRUE.
     "ap03_freq_sketch" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val ev = graft.streaming.Events.readRaw(s, dir)
           .select(get_json_object(col("props"), "$.k").cast("long").as("k"))
           .filter(col("k").isNotNull)
@@ -9640,7 +9323,6 @@ object SparkEntry {
     // shortlist exactly, so the green hash proves shortlist AND refine.
     "s13_ann_rerank" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val emb = Catalog.parquet(s, s"$dir/embeddings.parquet")
         val P = graft.ops.Pq
         val cb = P.seededCodebook(emb, "vec_id", "embedding",
@@ -10813,9 +10495,7 @@ object SparkEntry {
     // exactly.
     "st13_stream_dedup_watermark" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val feed = scratchDir("st13_feed")
         val ev = graft.streaming.Events.readRaw(s, dir)
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
@@ -10826,9 +10506,7 @@ object SparkEntry {
           .repartitionByRange(3, col("ts"))
           .write.mode("overwrite").parquet(feed)
         val schema = "event_id LONG, ts LONG, event_type STRING, value DOUBLE"
-        val sink = "st13_sink_" +
-          java.util.UUID.randomUUID.toString.replace("-", "")
-        val q = s.readStream.schema(schema)
+        val deduped = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(feed)
           .withColumn("tst", expr("timestamp_micros(ts)"))
           // delay must cover the feed's max DISORDER: file admission
@@ -10843,14 +10521,10 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_unique"),
             expr("CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)")
               .as("sv"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
         val feedCounts = s.read.schema(schema).parquet(feed)
           .groupBy(col("event_type")).agg(count(lit(1)).as("n_feed"))
-        s.table(sink).join(feedCounts, Seq("event_type"))
+        graft.streaming.Replay.runToCompletion(deduped, "complete")
+          .join(feedCounts, Seq("event_type"))
           .select(col("event_type"), col("n_unique"), col("sv"),
             col("n_feed"), (col("n_feed") - col("n_unique")).as("dup_dropped"))
           .orderBy(col("event_type"))
@@ -10871,9 +10545,7 @@ object SparkEntry {
 
     "st11_stream_cdc_upsert" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val feed = scratchDir("st11_feed")
         graft.streaming.Events.readRaw(s, dir)
           .select(col("user_id"), col("ts"), col("event_type"), col("value"))
@@ -10919,9 +10591,7 @@ object SparkEntry {
     // path end to end — including that incremental == recompute.
     "st12_stream_view_maintenance" -> api(
       (outer, dir) => {
-        val s = outer.newSession()   // state partitions sized to key count
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        Registry.registerAll(s)
+        val s = GraftSession.streamSession(outer)
         val feed = scratchDir("st12_feed")
         graft.streaming.Events.readRaw(s, dir)
           .select(col("user_id").as("k"), col("ts").as("ver"),
@@ -11814,7 +11484,6 @@ object SparkEntry {
 
     "q64_sample_clause" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("source"))
         val t = Table(docs)
@@ -13583,7 +13252,6 @@ object SparkEntry {
     // in exact decimal, surfaced as double (the r01 discipline).
     "j10_bloom_prejoin" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val li = Catalog.parquet(s, s"$dir/lineitem.parquet")
           .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
         val sup = Catalog.parquet(s, s"$dir/supplier.parquet")
@@ -13676,7 +13344,6 @@ object SparkEntry {
     // native inequality join over the same intervals.
     "j08_interval_overlap" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val epoch = lit("1970-01-01")
         val a = Catalog.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_totalprice") > 450000)
@@ -13798,7 +13465,6 @@ object SparkEntry {
     // on this corpus but sparser dfs, measured ~6x cheaper Σdf² fan-out.
     "d20_tfidf_cosine" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         graft.ops.Dedup.tfidfCosinePairs(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
             threshold = 0.8, maxDocFreq = 1000L)
@@ -14132,7 +13798,6 @@ object SparkEntry {
     // score, and segmentation is bit-equal.
     "t29_unigram_lm" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val pieces = graft.ops.TextAnalysis.unigramLmTrain(
           docs, "text", budget = 24, rounds = 2)
@@ -14165,7 +13830,6 @@ object SparkEntry {
     // full-vocab Viterbi tail).
     "t30_unigram_tokenize" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val pieces = graft.ops.TextAnalysis.unigramLmTrain(
           docs, "text", budget = 24, rounds = 2)
@@ -14211,7 +13875,6 @@ object SparkEntry {
     // re-segments the top-5 words with a recursive greedy walk.
     "t31_wordpiece" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val merges = graft.ops.TextAnalysis.wordPieceTrain(docs, "text", 6)
         val vocab = graft.ops.TextAnalysis.wordPieceVocab(docs, "text", merges)
@@ -14248,7 +13911,6 @@ object SparkEntry {
     // greedy-walks every distinct word.
     "t32_wordpiece_tokenize" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val merges = graft.ops.TextAnalysis.wordPieceTrain(docs, "text", 6)
         val vocab = graft.ops.TextAnalysis.wordPieceVocab(docs, "text", merges)
@@ -14293,7 +13955,6 @@ object SparkEntry {
     // (localCheckpoint: three consumers).
     "t28_quality_classifier" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val docs = Catalog.parquet(s, s"$dir/documents.parquet")
         val feats = docs.select(col("doc_id"),
             (col("lang") === "en").as("__tgt"),
@@ -14413,7 +14074,6 @@ object SparkEntry {
     // the pre-perturbation name).
     "t17_fuzzy_linkage" -> api(
       (s, dir) => {
-        Registry.registerAll(s)
         val part = Catalog.parquet(s, s"$dir/part.parquet")
           .select(col("p_partkey"), col("p_name"))
         val catalog = part.groupBy(col("p_name").as("canon_name"))
@@ -14605,7 +14265,7 @@ object SparkEntry {
 
   /** Per-query scratch directory under [[scratchRoot]] — UUID-suffixed so
     * repeated invocations of the same query never collide (same
-    * discipline as the st01/st02 sink names); the shared root's one
+    * discipline as the stream-run sink names); the shared root's one
     * shutdown hook sweeps everything on JVM exit.
     */
   private def scratchDir(prefix: String): String =
@@ -14613,10 +14273,8 @@ object SparkEntry {
       s"${prefix}_${java.util.UUID.randomUUID().toString.take(8)}").toString
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame = {
-    Registry.registerAll(spark)
+  def entry(spark: SparkSession): DataFrame =
     queries("q07_agg_group")(spark, "/root/testdata/sf0.001")
-  }
 
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, QFn] =

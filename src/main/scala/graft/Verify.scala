@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (tools/local_verify.py).
+  * Runs on the [[GraftSession]] session, so it checks the plans the bench
+  * times. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
@@ -11,12 +12,7 @@ object Verify {
       case _ => sys.error("usage: Verify <sfDir> <outDir> [q1,q2,...]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

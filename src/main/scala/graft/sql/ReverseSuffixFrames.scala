@@ -166,22 +166,30 @@ object ReverseSuffixFrames extends Rule[LogicalPlan] {
       case _ => None
     }
 
+  /** An ordered Window node whose expressions all classify, at least one
+    * as a suffix leg; yields each alias with its leg, classified once.
+    */
+  private object SuffixWindow {
+    def unapply(w: Window): Option[Seq[(Alias, Leg)]] =
+      if (w.orderSpec.isEmpty) None
+      else {
+        val legs = w.windowExpressions.map {
+          case al @ Alias(we: WindowExpression, _) =>
+            classify(we, w.orderSpec).map(al -> _)
+          case _ => None
+        }
+        if (legs.forall(_.isDefined) &&
+            legs.exists(_.exists(l => l._2 == RowSuffix || l._2 == RangeSuffix)))
+          Some(legs.flatten)
+        else None
+      }
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (sys.env.contains("SPARK_GRAFT_NO_REV_SUFFIX")) plan
     else plan.transform {
-      case w @ Window(wexprs, part, order, child, hint) if order.nonEmpty &&
-          wexprs.forall(_.isInstanceOf[Alias]) && {
-            val legs = wexprs.map {
-              case Alias(we: WindowExpression, _) => classify(we, order)
-              case _ => None
-            }
-            legs.forall(_.isDefined) &&
-              legs.exists(l => l.contains(RowSuffix) || l.contains(RangeSuffix))
-          } =>
-        val legged: Seq[(Alias, Leg)] = wexprs.map {
-          case al @ Alias(we: WindowExpression, _) =>
-            (al, classify(we, order).get)
-        }
+      case w @ SuffixWindow(legged) =>
+        val Window(_, part, order, child, hint) = w
         val rowSuffix = legged.filter(_._2 == RowSuffix).map(_._1)
         val rowOther = legged.filter(_._2 == RowOther).map(_._1)
         val rangeSuffix = legged.filter(_._2 == RangeSuffix).map(_._1)

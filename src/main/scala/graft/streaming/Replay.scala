@@ -1,12 +1,34 @@
 package graft.streaming
 
-/** Bridges single read-only data FILES to Spark's directory-based file
-  * stream source: the source requires a directory (it infers basePath and
-  * watches it for new files), so the file is exposed through a per-file
-  * symlink directory under java.io.tmpdir. Idempotent; concurrent
-  * creators tolerate the already-exists race.
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.streaming.Trigger
+
+/** Finite replays of streaming queries.
+  *
+  * [[linkDir]] bridges single read-only data FILES to Spark's
+  * directory-based file stream source: the source requires a directory (it
+  * infers basePath and watches it for new files), so the file is exposed
+  * through a per-file symlink directory under java.io.tmpdir. Idempotent;
+  * concurrent creators tolerate the already-exists race.
+  *
+  * [[runToCompletion]] drains a stream into a memory sink and hands back
+  * what it wrote.
   */
 object Replay {
+
+  /** Runs `out` with an `AvailableNow` trigger into a uniquely named memory
+    * sink until every available input is processed, stops the query (also
+    * on failure) and returns the sink's table in `out`'s session.
+    */
+  def runToCompletion(out: Dataset[_], outputMode: String): DataFrame = {
+    val sink = "graft_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    out.sparkSession.table(sink)
+  }
 
   /** A directory containing (a symlink to) exactly the given file,
     * suitable as a file-stream source path.

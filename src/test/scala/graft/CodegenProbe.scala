@@ -1,13 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object CodegenProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
+    val spark = GraftSession.builder("local[4]")
       .config("spark.sql.codegen.fallback", "false")          // codegen errors THROW
       .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY") // no interpreted fallback
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.Registry.registerAll(spark)
     import spark.implicits._

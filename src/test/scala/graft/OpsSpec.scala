@@ -1872,11 +1872,7 @@ class OpsSpec extends GraftSuite {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val out = graft.streaming.Events.streamingHourlyClosed(
       graft.streaming.Events.readStream(spark, dir))
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("st04spec")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    val got = spark.table("st04spec")
+    val got = graft.streaming.Replay.runToCompletion(out, "append")
       .select(unix_micros(col("h_end")), col("event_type"), col("n"))
       .collect().map(r => (r.getLong(0) / h, r.getString(1), r.getLong(2))).toSet
     // watermark = 3h - 30min = 2h30: windows ending at 1h and 2h are
@@ -2038,14 +2034,10 @@ class OpsSpec extends GraftSuite {
     // needs a directory — readStream must bridge that and the
     // AvailableNow replay must agree with the batch sessionize exactly
     // (the st01 driver-query contract)
-    import org.apache.spark.sql.streaming.Trigger
     val dir = "/root/testdata/sf0.001"
-    val q = graft.streaming.Events.streamingSessionize(
-        graft.streaming.Events.readStream(spark, dir), 30)
-      .writeStream.outputMode("append").format("memory").queryName("sess_link")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(); q.stop()
-    val streamed = spark.table("sess_link")
+    val streamed = graft.streaming.Replay.runToCompletion(
+        graft.streaming.Events.streamingSessionize(
+          graft.streaming.Events.readStream(spark, dir), 30), "append")
       .select("event_id", "session_seq").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = graft.streaming.Events.sessionize(

@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures what the hash-determinism ORDER BY costs in q14-shaped
   * queries: 6-key vs minimal-unique 3-key vs no sort.
   */
 object SortCostProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("sort-probe").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate("local[32]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.Registry.registerAll(spark)
     spark.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("lineitem")
 
     val body =

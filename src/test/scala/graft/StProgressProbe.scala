@@ -44,15 +44,14 @@ object StProgressProbe {
       })
 
     def run(name: String): Unit = {
-      val s = outer.newSession()
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_ST_PARTS", "8"))
+      val s = GraftSession.streamSession(outer)
+      sys.env.get("SPARK_GRAFT_ST_PARTS").foreach(p =>
+        s.conf.set("spark.sql.shuffle.partitions", p))
       sys.env.get("SPARK_GRAFT_ST_PROVIDER").foreach(p =>
         s.conf.set("spark.sql.streaming.stateStore.providerClass", p))
       sys.env.get("SPARK_GRAFT_ST_CKPT").foreach(d =>
         s.conf.set("spark.sql.streaming.checkpointLocation",
           d + "/ckpt_" + java.util.UUID.randomUUID))
-      graft.functions.Registry.registerAll(s)
       val E = graft.streaming.Events
       val out = name match {
         case "st21" =>

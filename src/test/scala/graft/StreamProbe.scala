@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-
-import graft.functions.Registry
 
 /** Micro-batch cost breakdown for the streaming operator family
   * (guide §1): runs one representative stateful stream (the st13 dedup
@@ -18,16 +15,11 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val parts = if (args.nonEmpty) args(0) else "8"
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outer = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-stream-probe")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val outer = GraftSession.getOrCreate(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
     outer.sparkContext.setLogLevel("ERROR")
-    val s = outer.newSession()
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.shuffle.partitions", parts)
-    Registry.registerAll(s)
 
     val ev = graft.streaming.Events.readStream(s, dir)
       .withColumn("ts", col("ts").cast("timestamp"))

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** [[graft.streaming.Events.streamingAsOfEnrich]] (st21 machinery):
   * latest-prior pick, struct tie-break, strict-ASOF absence of
@@ -77,15 +76,8 @@ class StreamingAsOfSpec extends GraftSuite {
       probeIdCol = "purchase_id", quotePayload = Seq("view_id"),
       horizonSeconds = 1800L, windowDuration = "1 hour",
       watermark = "2 hours")
-    val sink = "asof_spec_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = out.select(col("purchase_id"), col("view_id"))
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-
-    val got = s.table(sink).collect()
+    val got = graft.streaming.Replay.runToCompletion(
+        out.select(col("purchase_id"), col("view_id")), "append").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((200L, 101L), (202L, 301L)),
       s"streamingAsOfEnrich emitted $got — expected latest-prior picks " +

@@ -32,7 +32,6 @@ object StreamingStateScale {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.getOrCreate("local[32]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.Registry.registerAll(spark)
     ScaleStress.buildScaled(spark, 10, Sf1)
 
     val out = new StringBuilder
@@ -104,8 +103,7 @@ object StreamingStateScale {
     */
   private def measureOwners(outer: SparkSession, q: String, sf: String,
                             dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val src = s.read.parquet(s"$dir/documents.parquet")
@@ -138,8 +136,7 @@ object StreamingStateScale {
     */
   private def measureWatermarkDedup(outer: SparkSession, q: String,
                                     sf: String, dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val MpM = graft.streaming.Events.MicrosPerMinute
@@ -178,8 +175,7 @@ object StreamingStateScale {
     */
   private def measureIntervalJoin(outer: SparkSession, q: String,
                                   sf: String, dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ev = graft.streaming.Events.readRaw(s, dir)
@@ -328,8 +324,7 @@ object StreamingStateScale {
     */
   private def measureIntervalJoinBounded(outer: SparkSession, q: String,
                                          sf: String, dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val feed = s"target/tmp/state_scale_${q}_$sf"
@@ -375,8 +370,7 @@ object StreamingStateScale {
     */
   private def measureAsOfEnrich(outer: SparkSession, q: String,
                                 sf: String, dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val feed = s"target/tmp/state_scale_${q}_$sf"
@@ -413,11 +407,9 @@ object StreamingStateScale {
     */
   private def measureDriftPsi(outer: SparkSession, q: String, sf: String,
                               dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    graft.functions.Registry.registerAll(s)
     val feed = s"target/tmp/state_scale_${q}_$sf"
     val files = 24
     writeSingleFeed(graft.streaming.Events.readRaw(s, dir)
@@ -457,11 +449,9 @@ object StreamingStateScale {
     */
   private def measureQuasiIdSizes(outer: SparkSession, q: String,
                                   sf: String, dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    graft.functions.Registry.registerAll(s)
     val feed = s"target/tmp/state_scale_${q}_$sf"
     val files = 24
     writeSingleFeed(graft.streaming.Events.readRaw(s, dir)
@@ -491,11 +481,9 @@ object StreamingStateScale {
     */
   private def measureQualityGate(outer: SparkSession, q: String,
                                  sf: String, dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    graft.functions.Registry.registerAll(s)
     val feed = s"target/tmp/state_scale_${q}_$sf"
     val files = 24
     writeSingleFeed(graft.streaming.Events.readRaw(s, dir)
@@ -524,11 +512,9 @@ object StreamingStateScale {
     */
   private def measureSessionWindow(outer: SparkSession, q: String,
                                    sf: String, dir: String): Meas = {
-    val s = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
+    val s = GraftSession.streamSession(outer)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    graft.functions.Registry.registerAll(s)
     val feed = s"target/tmp/state_scale_${q}_$sf"
     val files = 24
     writeSingleFeed(graft.streaming.Events.readRaw(s, dir)

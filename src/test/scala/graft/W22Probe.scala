@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.Table
 
 /** Bisection probe for the w22 bench cost: times each window column of
@@ -9,13 +7,8 @@ import graft.api.Table
   */
 object W22Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("w22probe").getOrCreate()
+    val spark = GraftSession.getOrCreate("local[32]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.Registry.registerAll(spark)
     spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
       .createOrReplaceTempView("orders")
     val cols = Seq(
