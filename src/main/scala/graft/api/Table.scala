@@ -21,167 +21,57 @@ final class Table private (val df: DataFrame) {
   def spark: SparkSession = df.sparkSession
 
   /** Run a SQL query against this table. The first FROM identifier is bound
-    * to this table's data; dialect rewrites (np.*, `#` xor, select-alias
-    * substitution into WHERE) are applied and output columns are renamed
-    * to the reference's naming policy (function name / col_N / _1-dedup —
+    * to this table's data; the statement runs through the same dialect
+    * pipeline as [[Table.sessionSql]] (np.*, `#` xor, select-alias
+    * substitution into WHERE, ...) and output columns are renamed to the
+    * reference's naming policy (function name / col_N / _1-dedup —
     * [[graft.sql.OutputNames]]).
     *
     * The receiver is bound via a session temp view named after the FROM
     * identifier (reference semantics: the FROM name is notional,
-    * vinum/api/table.py:219-220). Concurrent `sql` calls are safe: the
-    * view bind + analysis run under a lock and the plan is resolved
-    * eagerly inside it, so a concurrent call re-binding the same FROM
-    * name can never leak its data into this query.
+    * vinum/api/table.py:219-220); where the pipeline resolves a name
+    * itself (ASOF and POSITIONAL JOIN operands, star modifiers,
+    * TABLESAMPLE) every name is the receiver too. Concurrent `sql` calls
+    * are safe: the view bind and the lowering run under a lock and each
+    * plan is analyzed eagerly inside it, so a concurrent call re-binding
+    * the same FROM name can never leak its data into this query.
     */
-  def sql(query: String): Table = {
+  def sql(query: String): Table = new Table(build(query) { q =>
+    val o = spark.sql(q)
+    o.queryExecution.assertAnalyzed() // snapshot the view NOW, inside the lock
+    // the result's logical plan is the parse of `q`
+    graft.sql.OutputNames.vinumNames(o.queryExecution.logical) match {
+      case Some(names) if names.length == o.columns.length => o.toDF(names: _*)
+      case _ => o
+    }
+  })
+
+  /** The frame [[sql]] builds, with `run` executing each lowered Spark
+    * statement. [[sql]] names the outputs in `run`: a UNION BY NAME
+    * operand is named before the operands combine by name, and a QUALIFY
+    * takes its names from its inner statement.
+    */
+  private def build(query: String)(run: String => DataFrame): DataFrame = {
     Registry.registerAll(spark)
-    // SUMMARIZE/DESCRIBE are whole-statement forms: route before every
-    // other pass (a query target re-enters this method and gets them all)
-    Dialect.summarizeTarget(query) match {
-      case Some(target) => return new Table(summarizeFrame(target))
-      case None =>
-    }
-    Dialect.describeTarget(query) match {
-      case Some(target) => return new Table(describeFrame(target))
-      case None =>
-    }
-    // UNION [ALL] BY NAME splits FIRST, on the token-local rewrite only:
-    // the clause-scoped passes (alias-into-WHERE, nulls-last) treat each
-    // OPERAND as its own statement — run on the whole text they would
-    // leak the first operand's alias map across the operator (a WHERE
-    // clause scan does not stop at UNION). The trailing ORDER BY binds
-    // to the whole union and gets its nulls-last pass at fold time.
-    val qr = Dialect.rewrite(query)
-    Dialect.splitUnionByName(qr) match {
-      case Some((ops, flags, tail)) =>
-        return new Table(Table.runUnionByName(spark, ops, flags, tail)(
-          o => sqlOne(prep(o)).df))
-      case None =>
-    }
-    sqlOne(prep(qr))
-  }
-
-  /** `SUMMARIZE` execution: a bare-identifier target profiles the
-    * receiver (the FROM-name-is-notional rule — `SUMMARIZE anything`
-    * summarizes this table), a query target runs through the full
-    * dialect pipeline first.
-    */
-  private def summarizeFrame(target: String): DataFrame =
-    graft.ops.Profile.summarizeFull(
-      if (Dialect.isBareIdentifier(target)) df else sql(target).df)
-
-  /** `DESCRIBE` execution — same bare-identifier-is-the-receiver rule
-    * as [[summarizeFrame]], DuckDB's output shape.
-    */
-  private def describeFrame(target: String): DataFrame =
-    graft.ops.Profile.describeDuck(
-      if (Dialect.isBareIdentifier(target)) df else sql(target).df)
-
-  /** The clause-scoped single-statement rewrites ([[sql]] applies them
-    * per UNION BY NAME operand; [[Dialect.rewrite]] has already run).
-    */
-  private def prep(q: String): String = {
-    val q0 = Dialect.fromFirst(q).getOrElse(q)
-    // frame-EXCLUDE algebra (w12) runs before the alias passes: it only
-    // rewrites inside OVER(...) spans, and its output introduces no new
-    // aliases for them to chase. GROUPS lowering (w14) runs after
-    // alias-into-WHERE (the WHERE moves inside its wrap) and before
-    // nulls-last (the wrap's outer ORDER BY is still top-level there).
-    // DISTINCT window aggregates (w18) lower after the EXCLUDE algebra:
-    // EXCLUDE-carrying DISTINCT forms split there and re-enter
-    // DISTINCT-free; the bare forms collect-and-dedup here
-    val q1 = Dialect.rewriteDistinctWindow(Dialect.rewriteWindowFilter(
-      Dialect.rewriteWindowExclude(Dialect.inlineChainedWindows(
-        Dialect.rewriteOrderedAggs(Dialect.rewriteSimilarGlob(
-          Dialect.rewriteIgnoreNulls(Dialect.rewriteDotCalls(
-            Dialect.rewriteSubscripts(Dialect.rewriteStructLiterals(
-              Dialect.rewritePowerOp(Dialect.rewriteSeriesTvf(
-                Dialect.stripTrailingCommas(q0)))))))))))))
-    Dialect.orderByNullsLast(
-      Dialect.rewriteGroupsFrames(Dialect.aliasesIntoWhere(q1)))
-  }
-
-  private def sqlOne(q0: String): Table = {
-    // `… USING SAMPLE <spec>` (q64) splits first: the inner statement
-    // re-enters this pipeline whole, the deterministic md5 gate applies
-    // to its result, and the trailing ORDER BY/LIMIT runs over the
-    // sampled frame ([[graft.sql.SampleSql]] documents the divergence
-    // from DuckDB's PRNG sampling)
-    graft.sql.SampleSql.splitUsingSample(q0) match {
-      case Some((inner, spec, tail)) =>
-        val sampled = graft.sql.SampleSql.applySample(sqlOne(inner).df, spec)
-        return new Table(Table.runStmtTail(spark, sampled, tail))
-      case None =>
-    }
-    // table-level TABLESAMPLE lowers onto the same gate as a textual
-    // subquery; every FROM name is notionally the receiver here, so the
-    // gate's first column is the receiver's
-    val qTs =
-      if (!graft.sql.SampleSql.hasTablesample(q0)) q0
-      else graft.sql.SampleSql.rewriteTablesample(q0, { ref =>
-        // derived-table targets need the session surface's resolution
-        // (the receiver's columns would silently mis-key the gate here)
+    // a bare SUMMARIZE/DESCRIBE target is the receiver, like any FROM name
+    Table.profileForm(query)(t =>
+      if (Dialect.isBareIdentifier(t)) df else sql(t).df).getOrElse {
+      // a derived-table reference reaches `resolve` only from TABLESAMPLE,
+      // whose gate needs the subquery's own first column
+      def resolve(ref: String): DataFrame = {
         require(Dialect.isBareIdentifier(ref),
           "TABLESAMPLE on a derived table is supported at the session " +
             "surface (sessionSql) — or sample at the query level with " +
             "USING SAMPLE")
-        df.columns.toSeq
-      })
-    // DISTINCT ON lowers AFTER the nulls-last pass (the sort items move
-    // into a window spec, where the later top-level scan can't see them)
-    // COLUMNS expands FIRST: its star-modifier arm owns `* EXCLUDE`
-    // INSIDE a COLUMNS(...) argument — the bare-star passes below
-    // would otherwise rewrite that inner star and leave a mangled
-    // argument (r18, caught by the q55-extension probe)
-    val q = Dialect.expandStarRename(
-      Dialect.expandStarReplace(
-        Dialect.expandStarExclude(
-          Dialect.expandColumns(
-            Dialect.distinctOn(qTs).getOrElse(qTs),
-            df.columns.toSeq, Some(df.sparkSession)),
-          df.columns.toSeq),
-        df.columns.toSeq),
-      df.columns.toSeq)
-    // ASOF JOIN has no Spark grammar; route the statement to the AsOf
-    // translator. Both table references bind to the receiver (the same
-    // FROM-name-is-notional rule as below), which covers the natural
-    // self-as-of; distinct-table ASOF goes through [[Table.sessionSql]].
-    if (graft.sql.AsOfSql.detect(q)) {
-      // table refs bind to the receiver; a derived-table operand's
-      // subquery binds the receiver to ITS FROM name first (same
-      // notional-name rule), then runs on Spark SQL — recursing back
-      // into the translator when the subquery is itself ASOF, matching
-      // the session entry point's default
-      lazy val subResolver: String => DataFrame = sub =>
-        if (graft.sql.AsOfSql.detect(sub))
-          graft.sql.AsOfSql.run(spark, sub, _ => df, Some(subResolver))
-        else {
-          val v = Dialect.firstFromTable(sub).getOrElse("t")
-          Table.bindLock.synchronized {
-            df.createOrReplaceTempView(v)
-            val o = spark.sql(sub)
-            o.queryExecution.assertAnalyzed()
-            o
-          }
-        }
-      return new Table(graft.sql.AsOfSql.run(spark, q, _ => df,
-        Some(subResolver)))
-    }
-    Dialect.splitQualify(q) match {
-      case Some((inner, tail)) => qualifiedSql(inner, tail)
-      case None =>
-        val view = Dialect.firstFromTable(q).getOrElse("t")
-        val out = Table.bindLock.synchronized {
-          df.createOrReplaceTempView(view)
-          val o = spark.sql(q)
-          o.queryExecution.assertAnalyzed() // snapshot the view NOW, inside the lock
-          o
-        }
-        graft.sql.OutputNames.vinumNames(spark.sessionState.sqlParser.parsePlan(q)) match {
-          case Some(names) if names.length == out.columns.length =>
-            new Table(out.toDF(names: _*))
-          case _ => new Table(out)
-        }
+        df
+      }
+      // a derived table (ASOF / POSITIONAL JOIN operand) binds the
+      // receiver to ITS first FROM name, like a statement of its own
+      def one(q: String): DataFrame = Table.bindLock.synchronized {
+        df.createOrReplaceTempView(Dialect.firstFromTable(q).getOrElse("t"))
+        Table.lowerStatement(spark, q, resolve, one, run)
+      }
+      Table.runUnionByName(spark, Dialect.rewrite(query))(one)
     }
   }
 
@@ -195,93 +85,27 @@ final class Table private (val df: DataFrame) {
     org.apache.spark.sql.GraftColumnBridge.renderedTable(
       sql(query).df, numRows, truncate)
 
-  /** QUALIFY execution: run the [[Dialect.splitQualify]] inner query
-    * (select list + `(pred) AS __qualify__`), filter on the predicate
-    * column, drop it, then apply the trailing ORDER BY / LIMIT over the
-    * filtered rows — the clause order QUALIFY defines. The predicate
-    * filter runs BEFORE the tail's LIMIT, so `QUALIFY rn <= k LIMIT n`
-    * limits the qualified rows, not the raw ones.
-    */
-  private def qualifiedSql(inner: String, tail: String): Table = {
-    val view = Dialect.firstFromTable(inner).getOrElse("t")
-    val out = Table.bindLock.synchronized {
-      df.createOrReplaceTempView(view)
-      val o = spark.sql(inner)
-      o.queryExecution.assertAnalyzed()
-      o
-    }
-    val filtered = out.filter(out.col("__qualify__")).drop("__qualify__")
-    val fin =
-      if (tail.isEmpty) filtered
-      else Table.bindLock.synchronized {
-        filtered.createOrReplaceTempView("__qualified__")
-        val o = spark.sql(s"SELECT * FROM __qualified__ $tail")
-        o.queryExecution.assertAnalyzed()
-        o
-      }
-    graft.sql.OutputNames.vinumNames(
-      spark.sessionState.sqlParser.parsePlan(inner)) match {
-      case Some(names) if names.length == fin.columns.length + 1 =>
-        new Table(fin.toDF(names.dropRight(1): _*))
-      case _ => new Table(fin)
-    }
-  }
-
   /** Query plan for a SQL statement against this table
-    * (reference: vinum/api/table.py:358-410 `explain`).
+    * (reference: vinum/api/table.py:358-410 `explain`): the plan of the
+    * frame [[sql]] returns, so it describes what `sql` runs.
     */
   def explainSql(query: String, extended: Boolean = false): String = {
-    Registry.registerAll(spark)
-    // dialect parity: every sql() form must explain through the same
-    // entry point (round-13 lesson — fromFirst; now SUMMARIZE too)
-    Dialect.summarizeTarget(query).foreach { t =>
-      val qe = summarizeFrame(t).queryExecution
-      return if (extended) qe.toString
-        else qe.explainString(org.apache.spark.sql.execution.SimpleMode)
-    }
-    Dialect.describeTarget(query).foreach { t =>
-      val qe = describeFrame(t).queryExecution
-      return if (extended) qe.toString
-        else qe.explainString(org.apache.spark.sql.execution.SimpleMode)
-    }
-    val q0 = Dialect.rewrite(query)
-    // sampling clauses have no Spark grammar: explain the constructed
-    // frame (lazy — the gate is a filter/limit, nothing executes)
-    if (graft.sql.SampleSql.hasTablesample(q0) ||
-        graft.sql.SampleSql.splitUsingSample(q0).isDefined) {
-      val qe = sql(query).df.queryExecution
-      return if (extended) qe.toString
-        else qe.explainString(org.apache.spark.sql.execution.SimpleMode)
-    }
-    val q = Dialect.fromFirst(q0).getOrElse(q0)
-    val view = Dialect.firstFromTable(q).getOrElse("t")
-    df.createOrReplaceTempView(view)
-    val qe = spark.sql(q).queryExecution
-    if (extended) qe.toString else qe.explainString(org.apache.spark.sql.execution.SimpleMode)
+    val qe = sql(query).df.queryExecution
+    if (extended) qe.toString
+    else qe.explainString(org.apache.spark.sql.execution.SimpleMode)
   }
 
   /** Parsed-query-tree dump — the analog of the reference's
     * `explain(print_query_tree=True)` (vinum/api/table.py:358-410), which
     * prints the parser's AST rather than the execution plan: the
-    * UNRESOLVED logical plan for the dialect-rewritten query, before any
-    * binding or optimization. Pair with [[explainSql]] for the
+    * UNRESOLVED logical plan of the statement the dialect pipeline hands
+    * to Spark, before any optimization. Forms Spark has no grammar for
+    * (SUMMARIZE, DESCRIBE, sampling, QUALIFY, ...) show the logical plan
+    * of the frame built for them. Pair with [[explainSql]] for the
     * optimizer's view.
     */
   def explainTree(query: String): String =
-    Dialect.summarizeTarget(query) match {
-      // SUMMARIZE/DESCRIBE have no Spark grammar to parse; the closest
-      // "query tree" is the constructed frame's unoptimized logical plan
-      case Some(t) => summarizeFrame(t).queryExecution.logical.treeString
-      case None => Dialect.describeTarget(query) match {
-        case Some(t) => describeFrame(t).queryExecution.logical.treeString
-        case None =>
-          val qr = Dialect.rewrite(query)
-          if (graft.sql.SampleSql.hasTablesample(qr) ||
-              graft.sql.SampleSql.splitUsingSample(qr).isDefined)
-            sql(query).df.queryExecution.logical.treeString
-          else spark.sessionState.sqlParser.parsePlan(prep(qr)).treeString
-      }
-    }
+    build(query)(spark.sql).queryExecution.logical.treeString
 
   /** The fully materialized result as an Arrow IPC stream — the analog
     * of the reference's `to_arrow`/`to_pandas`
@@ -348,20 +172,21 @@ object Table {
     prev
   }
 
-  /** Serializes temp-view bind + analysis in [[Table.sql]]. Analysis
-    * resolves the FROM name to a snapshot of the receiver's plan, so once
-    * a query is analyzed the view may be re-bound freely; the lock only
-    * covers that short resolution window.
+  /** Serializes temp-view bind + analysis: [[Table.sql]] holds it while
+    * it binds the receiver and lowers the statement, the lowering's own
+    * temp views take it around each bind. Analysis resolves a view name
+    * to a snapshot of its plan, so once a query is analyzed the view may
+    * be re-bound freely. Reentrant, so nested lowering takes it again.
     */
   private[graft] val bindLock = new Object
 
-  /** QUALIFY lowering shared by [[sessionSql]] and the ASOF
-    * translator's remainder statement: split a top-level QUALIFY,
-    * run the inner query through `runInner`, filter on the appended
-    * predicate column, then apply the trailing ORDER BY / LIMIT over
-    * the filtered rows. Statements without QUALIFY pass through to
-    * `runInner` unchanged. One owner for the lowering contract so the
-    * two dialect surfaces cannot drift.
+  /** QUALIFY lowering shared by [[lowerStatement]] and the ASOF /
+    * POSITIONAL JOIN translators' remainder statements: split a
+    * top-level QUALIFY, run the inner query through `runInner`, filter
+    * on the appended predicate column, then apply the trailing ORDER BY /
+    * LIMIT over the filtered rows — so `QUALIFY rn <= k LIMIT n` limits
+    * the qualified rows, not the raw ones. Statements without QUALIFY
+    * pass through to `runInner` unchanged.
     */
   private[graft] def qualifyAware(spark: SparkSession, stmt: String)
                                  (runInner: String => DataFrame): DataFrame =
@@ -426,12 +251,12 @@ object Table {
   def streamCsv(spark: SparkSession, path: String): Table = fromCsv(spark, path)
 
   /** Session-level SQL over already-registered temp views — the
-    * multi-table counterpart of the single-receiver [[Table.sql]].
-    * Applies the dialect rewrites that need no receiver schema (np.* /
-    * `#`, alias-into-WHERE, nulls-last ordering) and routes top-level
-    * ASOF JOIN statements to [[graft.sql.AsOfSql]], resolving each table
-    * reference with `spark.table`. Everything else runs on Spark SQL
-    * unchanged.
+    * multi-table counterpart of the single-receiver [[Table.sql]]. A
+    * query runs through the same single-statement pipeline
+    * ([[lowerStatement]]), with each table reference resolved by
+    * `spark.table`; scripts, transactions, macros, prepared statements,
+    * DML, DDL, MERGE, COPY, EXPORT/IMPORT and PIVOT are statement forms
+    * of this surface only.
     */
   def sessionSql(spark: SparkSession, query: String): Table = {
     Registry.registerAll(spark)
@@ -521,20 +346,14 @@ object Table {
           "(u22) — run `BEGIN; …; COMMIT|ROLLBACK;` as one sessionSql " +
           "call")
     }
-    // SUMMARIZE/DESCRIBE first (dialect parity with Table.sql); here a
-    // bare identifier resolves against the session catalog
-    Dialect.summarizeTarget(query) match {
-      case Some(t) =>
-        return apply(graft.ops.Profile.summarizeFull(
-          if (Dialect.isBareIdentifier(t)) spark.table(t)
-          else sessionSql(spark, t).df))
-      case None =>
-    }
-    Dialect.describeTarget(query) match {
-      case Some(t) =>
-        return apply(graft.ops.Profile.describeDuck(
-          if (Dialect.isBareIdentifier(t)) spark.table(t)
-          else sessionSql(spark, t).df))
+    // shared ref-resolution rule of the profile forms and the table-ref
+    // statement forms (MERGE / PIVOT / UNPIVOT / COPY): bare identifier
+    // → session catalog, subquery → re-enter the full pipeline
+    def resolveRef(ref: String): DataFrame =
+      if (Dialect.isBareIdentifier(ref)) spark.table(ref)
+      else sessionSql(spark, ref).df
+    profileForm(query)(resolveRef) match {
+      case Some(p) => return apply(p)
       case None =>
     }
     // SQL macros (u23): CREATE/DROP MACRO manage the session-scoped
@@ -573,20 +392,7 @@ object Table {
           s"SELECT 'deallocate' AS statement, '$n' AS name"))
       case None =>
     }
-    val qx = graft.sql.MacroSql.expand(spark, query)
-    // same pass ordering as [[Table.sql]]: split UNION BY NAME on the
-    // token-local rewrite, then run the clause-scoped passes per operand
-    val qr = Dialect.rewrite(qx)
-    // MERGE INTO is a whole-statement form (u09): parse AFTER the
-    // token-local rewrite so np.*/# sugar works inside arm expressions;
-    // bare refs resolve against the session catalog, subquery refs
-    // re-enter the full pipeline
-    // shared ref-resolution rule of all table-ref statement forms
-    // (MERGE / PIVOT / UNPIVOT): bare identifier → session catalog,
-    // subquery → re-enter the full pipeline
-    def resolveRef(ref: String): DataFrame =
-      if (Dialect.isBareIdentifier(ref)) spark.table(ref)
-      else sessionSql(spark, ref).df
+    val qr = Dialect.rewrite(graft.sql.MacroSql.expand(spark, query))
     // CTE-headed DML (u16): `WITH c AS (…) INSERT/UPDATE/DELETE/MERGE …`
     // (Postgres/DuckDB, probed) — the CTEs bind as statement-scoped
     // views (unique internal names, textual order, each may read
@@ -602,6 +408,8 @@ object Table {
           return cteHeadedDml(spark, ctes, rest)
       case _ =>
     }
+    // MERGE INTO is a whole-statement form (u09): parse AFTER the
+    // token-local rewrite so np.*/# sugar works inside arm expressions
     graft.sql.MergeSql.parse(qr) match {
       case Some(st) =>
         return apply(graft.sql.MergeSql.run(spark, st, resolveRef))
@@ -684,42 +492,64 @@ object Table {
         resolveRef, runStmtTail(spark, _, _)))
       case None =>
     }
-    Dialect.splitUnionByName(qr) match {
-      case Some((ops, flags, tail)) =>
-        apply(runUnionByName(spark, ops, flags, tail)(
-          o => sessionSqlOne(spark, o)))
-      case None => apply(sessionSqlOne(spark, qr))
-    }
+    apply(runUnionByName(spark, qr)(sessionOne(spark, _)))
   }
 
-  private def sessionSqlOne(spark: SparkSession, qIn: String): DataFrame = {
-    // `… USING SAMPLE` splits first (q64 — same contract as Table.sql:
-    // inner re-enters whole, md5 gate on the result, tail over the
-    // sampled frame); a sampled recursive-CTE outer statement works
-    // because the inner statement re-enters and parses the recursion
+  /** The single-statement pipeline behind [[Table.sql]], [[sessionSql]]
+    * and both explain calls; the caller has applied [[Dialect.rewrite]]
+    * and split UNION BY NAME. Passes run in this order:
+    *
+    *  1. `… USING SAMPLE <spec>` (q64) splits: the inner statement
+    *     re-enters whole, the deterministic md5 gate applies to its
+    *     result and the trailing ORDER BY/LIMIT runs over the sampled
+    *     frame ([[graft.sql.SampleSql]] documents the divergence from
+    *     DuckDB's PRNG sampling);
+    *  2. UNION-distinct recursion (gr09) lowers onto frontier-minus-seen;
+    *     its seed, step and outer statement each re-enter;
+    *  3. table-level TABLESAMPLE lowers onto the same gate as a textual
+    *     subquery keyed on the reference's first column;
+    *  4. the clause chain, `fromFirst` through `orderByNullsLast`;
+    *  5. `COLUMNS(...)`, then `* EXCLUDE / REPLACE / RENAME`, over the
+    *     columns of the first FROM relation;
+    *  6. DISTINCT ON, after nulls-last (its sort items move into a window
+    *     spec, where the top-level scan can't see them);
+    *  7. ASOF JOIN and POSITIONAL JOIN route to their translators; any
+    *     other statement runs through `run`, QUALIFY lowered around it.
+    *
+    * What differs by surface comes in as callbacks: `resolve` answers a
+    * FROM reference (a name, or a derived table's query text for
+    * TABLESAMPLE), `sub` runs a derived-table operand's query, `run` runs
+    * a lowered Spark statement.
+    */
+  private def lowerStatement(spark: SparkSession, qIn: String,
+                             resolve: String => DataFrame,
+                             sub: String => DataFrame,
+                             run: String => DataFrame): DataFrame = {
+    def again(q: String): DataFrame = lowerStatement(spark, q, resolve, sub, run)
     graft.sql.SampleSql.splitUsingSample(qIn) match {
       case Some((inner, spec, tail)) =>
-        return runStmtTail(spark, graft.sql.SampleSql.applySample(
-          sessionSqlOne(spark, inner), spec), tail)
+        return runStmtTail(spark,
+          graft.sql.SampleSql.applySample(again(inner), spec), tail)
       case None =>
     }
-    // UNION-distinct recursion (gr09) lowers onto frontier-minus-seen
-    // BEFORE the clause passes (its seed/step/outer each re-enter this
-    // method and get them individually); UNION ALL recursion stays on
-    // Spark's native UnionLoop path (parse returns None for it)
+    // UNION ALL recursion stays on Spark's native UnionLoop path (parse
+    // returns None for it)
     graft.sql.RecursiveUnion.parse(qIn) match {
-      case Some(st) => return runRecursiveUnion(spark, st)
+      case Some(st) => return runRecursiveUnion(spark, st, again)
       case None =>
     }
-    // table-level TABLESAMPLE: the gate's first column resolves from
-    // the session catalog; a derived-table target (q64 ext) resolves by
-    // running its subquery text back through this pipeline lazily —
-    // analysis only, nothing executes for the column list
-    val qSampled =
-      if (!graft.sql.SampleSql.hasTablesample(qIn)) qIn
-      else graft.sql.SampleSql.rewriteTablesample(qIn, ref =>
-        if (Dialect.isBareIdentifier(ref)) spark.table(ref).columns.toSeq
-        else sessionSqlOne(spark, ref).columns.toSeq)
+    // resolving the gate's first column is analysis only — nothing
+    // executes for the column list
+    val qSampled = graft.sql.SampleSql.rewriteTablesample(qIn,
+      ref => resolve(ref).columns.toSeq)
+    // frame-EXCLUDE algebra (w12) runs before the alias passes: it only
+    // rewrites inside OVER(...) spans, and its output introduces no new
+    // aliases for them to chase. GROUPS lowering (w14) runs after
+    // alias-into-WHERE (the WHERE moves inside its wrap) and before
+    // nulls-last (the wrap's outer ORDER BY is still top-level there).
+    // DISTINCT window aggregates (w18) lower after the EXCLUDE algebra:
+    // EXCLUDE-carrying DISTINCT forms split there and re-enter
+    // DISTINCT-free; the bare forms collect-and-dedup here
     val q0 = Dialect.rewriteDistinctWindow(Dialect.rewriteWindowFilter(
       Dialect.rewriteWindowExclude(Dialect.inlineChainedWindows(
         Dialect.rewriteOrderedAggs(Dialect.rewriteSimilarGlob(
@@ -730,28 +560,50 @@ object Table {
                   Dialect.fromFirst(qSampled).getOrElse(qSampled))))))))))))))
     val q1 = Dialect.orderByNullsLast(
       Dialect.rewriteGroupsFrames(Dialect.aliasesIntoWhere(q0)))
-    // dynamic star: schema comes from the first FROM table's session
-    // view (the table COLUMNS binds to); resolution is attempted only
-    // when the statement actually carries a COLUMNS( call
+    // the first FROM relation's schema is resolved only when a masked
+    // pre-test finds a dynamic or modified star. COLUMNS expands FIRST:
+    // its star-modifier arm owns `* EXCLUDE` INSIDE a COLUMNS(...)
+    // argument, which the bare-star passes would otherwise mangle
     val q2 =
-      if (!Dialect.hasDynamicColumns(q1)) q1
+      if (!Dialect.hasDynamicColumns(q1) && !Dialect.hasStarModifier(q1)) q1
       else Dialect.firstFromTable(q1)
-        .flatMap(t => scala.util.Try(spark.table(t).columns.toSeq).toOption)
-        .map(cols => Dialect.expandColumns(q1, cols, Some(spark)))
+        .flatMap(t => scala.util.Try(resolve(t).columns.toSeq).toOption)
+        .map { cols =>
+          Dialect.expandStarRename(Dialect.expandStarReplace(
+            Dialect.expandStarExclude(
+              Dialect.expandColumns(q1, cols, Some(spark)), cols), cols), cols)
+        }
         .getOrElse(q1)
     val q = Dialect.distinctOn(q2).getOrElse(q2)
     if (graft.sql.AsOfSql.detect(q))
-      graft.sql.AsOfSql.run(spark, q, spark.table)
+      graft.sql.AsOfSql.run(spark, q, resolve, sub)
     // POSITIONAL JOIN (j12): zip-by-position lowering — derived-table
-    // operands re-enter this method (so an ordered subquery keeps its
+    // operands re-enter the pipeline (so an ordered subquery keeps its
     // order behind the zip's RDD boundary)
     else if (graft.sql.PositionalSql.detect(q))
-      graft.sql.PositionalSql.run(spark, q, spark.table,
-        s => sessionSqlOne(spark, s))
-    // same QUALIFY lowering as Table.sql — the rewrite needs no receiver
-    // schema, and the FROM names are session views already
-    else qualifyAware(spark, q)(spark.sql)
+      graft.sql.PositionalSql.run(spark, q, resolve, sub)
+    else qualifyAware(spark, q)(run)
   }
+
+  /** [[lowerStatement]] at the session surface: names resolve through
+    * the session catalog, derived tables re-enter the pipeline.
+    */
+  private def sessionOne(spark: SparkSession, q: String): DataFrame =
+    lowerStatement(spark, q,
+      ref => if (Dialect.isBareIdentifier(ref)) spark.table(ref)
+        else sessionOne(spark, ref),
+      sessionOne(spark, _), spark.sql)
+
+  /** SUMMARIZE / DESCRIBE, the whole-statement profile forms, routed
+    * before every other pass: `target` turns the profiled target (a name
+    * or a query, which then gets the whole pipeline) into its frame.
+    */
+  private def profileForm(query: String)
+                         (target: String => DataFrame): Option[DataFrame] =
+    Dialect.summarizeTarget(query)
+      .map(t => graft.ops.Profile.summarizeFull(target(t)))
+      .orElse(Dialect.describeTarget(query)
+        .map(t => graft.ops.Profile.describeDuck(target(t))))
 
   /** Trailing ORDER BY / LIMIT / OFFSET of a statement form (PIVOT /
     * UNPIVOT), run over the lowered frame through a temp view — the
@@ -788,6 +640,7 @@ object Table {
     */
   private def runRecursiveUnion(spark: SparkSession,
                                 st: graft.sql.RecursiveUnion.Stmt,
+                                lower: String => DataFrame,
                                 maxRounds: Int = 512): DataFrame = {
     // every statement-scoped name (the recursive CTEs and the gr10
     // helper CTEs) binds under a per-invocation UNIQUE internal view
@@ -830,7 +683,7 @@ object Table {
     try {
       st.helpers.foreach { h =>
         val df0 = bindLock.synchronized {
-          val d = sessionSqlOne(spark, rewriteAll(h.body))
+          val d = lower(rewriteAll(h.body))
           d.queryExecution.assertAnalyzed()
           d
         }
@@ -859,9 +712,9 @@ object Table {
       st.drainGroups.foreach { group =>
         val closures =
           if (group.size == 1)
-            Seq(drainRecursion(spark, group.head, rename(group.head.name),
+            Seq(drainRecursion(lower, group.head, rename(group.head.name),
               rewriteAll, freshCols, maxRounds))
-          else drainMutualGroup(spark, group, r => rename(r.name),
+          else drainMutualGroup(lower, group, r => rename(r.name),
             rewriteAll, freshCols, maxRounds)
         bindLock.synchronized {
           group.zip(closures).foreach { case (rec, closure) =>
@@ -870,22 +723,11 @@ object Table {
         }
       }
       bindLock.synchronized {
-        sessionSqlOne(spark, rewriteAll(st.outer))
+        lower(rewriteAll(st.outer))
       }
     } finally rename.values.foreach(spark.catalog.dropTempView)
   }
 
-  /** CTE-headed DML execution (u16): bind each CTE as a
-    * statement-scoped view (unique internal name — the recursion
-    * lowering's scoping rule — in textual order, each body may read
-    * earlier CTEs), then re-enter [[sessionSql]] with the rewritten DML
-    * text so it hits the normal statement dispatch. Binding is LAZY (a
-    * CTE is typically read once; the analyzed plan inlines the view, so
-    * dropping the names afterwards is safe). The DML target must be a
-    * real table: Postgres scopes the target OUTSIDE the WITH, so a CTE
-    * sharing its name refuses loudly rather than silently receiving
-    * the rows.
-    */
   /** The session name a statement MUTATES (DML / MERGE / COPY FROM
     * with a bare target) plus whether a RETURNING clause makes the
     * returned frame differ from the post-image. None for non-mutating
@@ -911,6 +753,17 @@ object Table {
       .filter(t => Dialect.isBareIdentifier(t._1))
   }
 
+  /** CTE-headed DML execution (u16): bind each CTE as a
+    * statement-scoped view (unique internal name — the recursion
+    * lowering's scoping rule — in textual order, each body may read
+    * earlier CTEs), then re-enter [[sessionSql]] with the rewritten DML
+    * text so it hits the normal statement dispatch. Binding is LAZY (a
+    * CTE is typically read once; the analyzed plan inlines the view, so
+    * dropping the names afterwards is safe). The DML target must be a
+    * real table: Postgres scopes the target OUTSIDE the WITH, so a CTE
+    * sharing its name refuses loudly rather than silently receiving
+    * the rows.
+    */
   private def cteHeadedDml(spark: SparkSession,
                            ctes: Seq[graft.sql.RecursiveUnion.RawCte],
                            rest: String): Table = {
@@ -937,7 +790,7 @@ object Table {
     try {
       ctes.foreach { c =>
         val df0 = bindLock.synchronized {
-          val d = sessionSqlOne(spark, rewriteAll(c.body))
+          val d = sessionOne(spark, rewriteAll(c.body))
           d.queryExecution.assertAnalyzed()
           d
         }
@@ -992,13 +845,13 @@ object Table {
     * returns the checkpointed closure. The rec's internal view name is
     * rebound to the frontier each round while the loop runs.
     */
-  private def drainRecursion(spark: SparkSession,
+  private def drainRecursion(lower: String => DataFrame,
                              rec: graft.sql.RecursiveUnion.Rec,
                              internal: String,
                              rewriteAll: String => String,
                              freshCols: DataFrame => DataFrame,
                              maxRounds: Int): DataFrame = {
-    val seedDf = sessionSqlOne(spark, rewriteAll(rec.seed))
+    val seedDf = lower(rewriteAll(rec.seed))
     val cols = rec.cols.getOrElse(seedDf.columns.toSeq)
     require(cols.size == seedDf.columns.length,
       s"recursive CTE ${rec.name}(${cols.mkString(", ")}) declares " +
@@ -1048,7 +901,7 @@ object Table {
       val stepped = bindLock.synchronized {
         maybeBroadcastHint(frontier, frontierBytes)
           .createOrReplaceTempView(internal)
-        align(sessionSqlOne(spark, step))
+        align(lower(step))
       }
       val increment = exceptDistinctVia(stepped, seen, seenBytes)
       // evidence hook: the per-round plan is invisible from the outer
@@ -1104,7 +957,7 @@ object Table {
     * CLOSURE each round — inherent to the probed semantics, O(rounds ×
     * closure) like DuckDB's own evaluation.
     */
-  private def drainMutualGroup(spark: SparkSession,
+  private def drainMutualGroup(lower: String => DataFrame,
                                group: Seq[graft.sql.RecursiveUnion.Rec],
                                internal: graft.sql.RecursiveUnion.Rec => String,
                                rewriteAll: String => String,
@@ -1113,7 +966,7 @@ object Table {
     final class Member(val rec: graft.sql.RecursiveUnion.Rec) {
       // seeds bind with NO sibling in scope (a seed referencing a
       // sibling was refused at parse — DuckDB's circular-ref error)
-      private val seedDf = sessionSqlOne(spark, rewriteAll(rec.seed))
+      private val seedDf = lower(rewriteAll(rec.seed))
       val cols: Seq[String] = rec.cols.getOrElse(seedDf.columns.toSeq)
       require(cols.size == seedDf.columns.length,
         s"recursive CTE ${rec.name}(${cols.mkString(", ")}) declares " +
@@ -1155,7 +1008,7 @@ object Table {
              else maybeBroadcastHint(o.seen, o.seenBytes))
               .createOrReplaceTempView(internal(o.rec))
           }
-          mb.align(sessionSqlOne(spark, mb.step))
+          mb.align(lower(mb.step))
         }
         val nf = freshCols(exceptDistinctVia(stepped, mb.seen, mb.seenBytes)
           .localCheckpoint(true))
@@ -1187,32 +1040,37 @@ object Table {
     members.map(_.seen)
   }
 
-  /** Fold of a [[Dialect.splitUnionByName]] split: operands run through
-    * `runOne` (the caller's full single-statement pipeline, so QUALIFY /
-    * DISTINCT ON / ASOF arms compose), the frames combine with
-    * `unionByName(allowMissingColumns = true)` — DuckDB BY NAME column
-    * semantics exactly — a bare (non-ALL) BY NAME dedups the
-    * accumulated result (left-associative set-op semantics), and the
-    * trailing ORDER BY / LIMIT / OFFSET clause runs over the combined
-    * frame through a temp view.
+  /** `stmt` through `runOne` (the caller's single-statement pipeline),
+    * or — for a top-level UNION [ALL] BY NAME ([[Dialect.splitUnionByName]],
+    * split on the token-local rewrite only) — each operand through it:
+    * the clause-scoped passes (alias-into-WHERE, nulls-last) treat each
+    * OPERAND as its own statement, since run on the whole text they
+    * would leak the first operand's alias map across the operator. The
+    * frames combine with `unionByName(allowMissingColumns = true)` —
+    * DuckDB BY NAME column semantics exactly — a bare (non-ALL) BY NAME
+    * dedups the accumulated result (left-associative set-op semantics),
+    * and the trailing ORDER BY / LIMIT / OFFSET clause runs over the
+    * combined frame through a temp view.
     */
-  private[graft] def runUnionByName(spark: SparkSession, operands: Seq[String],
-                                    allFlags: Seq[Boolean], tail: String)
-                                   (runOne: String => DataFrame): DataFrame = {
-    var acc = runOne(operands.head)
-    operands.tail.zip(allFlags).foreach { case (o, all) =>
-      acc = acc.unionByName(runOne(o), allowMissingColumns = true)
-      if (!all) acc = acc.distinct()
+  private def runUnionByName(spark: SparkSession, stmt: String)
+                            (runOne: String => DataFrame): DataFrame =
+    Dialect.splitUnionByName(stmt) match {
+      case None => runOne(stmt)
+      case Some((operands, allFlags, tail)) =>
+        var acc = runOne(operands.head)
+        operands.tail.zip(allFlags).foreach { case (o, all) =>
+          acc = acc.unionByName(runOne(o), allowMissingColumns = true)
+          if (!all) acc = acc.distinct()
+        }
+        if (tail.isEmpty) acc
+        else bindLock.synchronized {
+          acc.createOrReplaceTempView("__unioned__")
+          // the union-level ORDER BY gets the same nulls-last treatment a
+          // single statement's would (operands were rewritten individually)
+          val out = spark.sql(
+            Dialect.orderByNullsLast(s"SELECT * FROM __unioned__ $tail"))
+          out.queryExecution.assertAnalyzed()
+          out
+        }
     }
-    if (tail.isEmpty) acc
-    else bindLock.synchronized {
-      acc.createOrReplaceTempView("__unioned__")
-      // the union-level ORDER BY gets the same nulls-last treatment a
-      // single statement's would (operands were rewritten individually)
-      val out = spark.sql(
-        Dialect.orderByNullsLast(s"SELECT * FROM __unioned__ $tail"))
-      out.queryExecution.assertAnalyzed()
-      out
-    }
-  }
 }

@@ -26,9 +26,8 @@ import org.apache.spark.sql.functions._
   *
   * Either operand may also be a parenthesized derived table
   * `(SELECT ...) [AS] alias` — the subquery is resolved through
-  * `resolveSub` (session entry points evaluate it with Spark SQL,
-  * recursing into this translator if it is itself an ASOF statement;
-  * the single-table facade binds its receiver first).
+  * `resolveSub`, the caller's full single-statement pipeline (so an
+  * ASOF subquery recurses into this translator).
   *
   * The ON conjuncts are equality keys (`la.a = ra.b`, zero or more) plus
   * EXACTLY ONE inequality on the ordering columns, whose operator picks
@@ -108,19 +107,15 @@ object AsOfSql {
 
   /** Parse and execute; `resolve` maps a table name from the statement to
     * its DataFrame (a single-table facade passes `_ => df`, a session
-    * entry point passes `spark.table`).
+    * entry point passes `spark.table`), `resolveSub` evaluates a
+    * derived-table operand's subquery.
     */
   def run(spark: SparkSession, sql: String,
           resolve: String => DataFrame,
-          resolveSub: Option[String => DataFrame] = None): DataFrame = {
+          resolveSub: String => DataFrame): DataFrame = {
     val spec = parse(sql)
-    // derived-table operands: evaluate the subquery (recursively via
-    // this translator when it is itself an ASOF statement)
-    lazy val subEval: String => DataFrame = resolveSub.getOrElse(
-      (q: String) => if (detect(q)) run(spark, q, resolve, resolveSub)
-      else spark.sql(q))
     def side(ref: Ref): DataFrame = ref.subquery match {
-      case Some(q) => subEval(q)
+      case Some(q) => resolveSub(q)
       case None    => resolve(ref.table)
     }
     val lDf = side(spec.left)
@@ -232,18 +227,7 @@ object AsOfSql {
     if (on < 0 && usingKw >= 0) {
       val open = masked.indexOf('(', usingKw + 5)
       require(open >= 0, "ASOF JOIN USING needs a parenthesized column list")
-      var depth = 0
-      var close = -1
-      var i = open
-      while (i < masked.length && close < 0) {
-        masked.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
-      }
-      require(close > open, "unbalanced ASOF JOIN USING column list")
+      val close = Dialect.matchParenAt(masked, open)
       val cols = sql.substring(open + 1, close).split(",").map(_.trim).toSeq
       require(cols.size >= 2,
         "ASOF JOIN USING needs at least (key, ordering) — a single " +
@@ -320,20 +304,7 @@ object AsOfSql {
       // derived table: (SELECT ...) [AS] alias — find the matching close
       // paren on the masked view so parens in literals cannot confuse it
       val off = text.indexOf('(')
-      val masked = Dialect.stripLiterals(text)
-      var depth = 0
-      var close = -1
-      var i = off
-      while (i < masked.length && close < 0) {
-        masked.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
-      }
-      require(close > off,
-        s"unbalanced parentheses in ASOF table reference: '$t'")
+      val close = Dialect.matchParenAt(Dialect.stripLiterals(text), off)
       val inner = text.substring(off + 1, close).trim
       require(Dialect.findTopLevelKeyword(inner, 0, "select") >= 0,
         s"parenthesized ASOF operand must be a SELECT subquery: '$t'")

@@ -240,14 +240,7 @@ object Dialect {
     while (i < m.length && m.charAt(i).isWhitespace) i += 1
     require(i < m.length && m.charAt(i) == '(',
       "DISTINCT ON requires a parenthesized key list")
-    var depth = 0; var j = i; var close = -1
-    while (j < m.length && close < 0) {
-      val c = m.charAt(j)
-      if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) close = j }
-      j += 1
-    }
-    require(close > 0, "unbalanced parens in the DISTINCT ON key list")
+    val close = matchParenAt(m, i)
     val keys = sql.substring(i + 1, close).trim
     require(keys.nonEmpty, "DISTINCT ON key list is empty")
     val from = findTopLevelKeywordIn(m, close + 1, "from")
@@ -394,47 +387,14 @@ object Dialect {
     * depth 0. Unknown names error loudly; every occurrence is rewritten
     * (same contract as [[expandStarExclude]]).
     */
-  def expandStarReplace(sql: String, columns: Seq[String]): String = {
-    var cur = sql
-    var guard = 0
-    while (guard < 64) {
-      val masked = stripLiterals(cur)
-      val m = StarReplaceRe.findFirstMatchIn(masked)
-      if (m.isEmpty) return cur
-      val open = m.get.end - 1 // position of the '('
-      var i = open
-      var depth = 0
-      var close = -1
-      while (i < masked.length && close < 0) {
-        val c = masked.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) close = i }
-        i += 1
+  def expandStarReplace(sql: String, columns: Seq[String]): String =
+    expandStarList(sql, columns, StarReplaceRe, "REPLACE") { item =>
+      AliasRe.findFirstMatchIn(item) match {
+        case Some(am) => (am.group(2).toLowerCase, am.group(1).trim)
+        case None => throw new IllegalArgumentException(
+          s"* REPLACE items must be `expr AS name`, got: ${item.trim}")
       }
-      require(close > open, "unbalanced parens in * REPLACE (...)")
-      val repl = splitTopLevel(cur.substring(open + 1, close)).map { item =>
-        AliasRe.findFirstMatchIn(item) match {
-          case Some(am) => (am.group(2).toLowerCase, am.group(1).trim)
-          case None => throw new IllegalArgumentException(
-            s"* REPLACE items must be `expr AS name`, got: ${item.trim}")
-        }
-      }.toMap
-      val unknown = repl.keySet -- columns.map(_.toLowerCase).toSet
-      require(unknown.isEmpty,
-        s"REPLACE names not in the table: ${unknown.mkString(", ")}")
-      val expanded = columns.map { c =>
-        repl.get(c.toLowerCase) match {
-          case Some(e) => s"($e) AS `$c`"
-          case None    => s"`$c`"
-        }
-      }.mkString(", ")
-      cur = cur.substring(0, m.get.start) + expanded + cur.substring(close + 1)
-      guard += 1
-    }
-    require(StarReplaceRe.findFirstMatchIn(stripLiterals(cur)).isEmpty,
-      s"more than $guard `* REPLACE` occurrences in one statement")
-    cur
-  }
+    }((c, e) => s"($e) AS `$c`")
 
   private val StarReplaceRe =
     """(?is)\*\s+replace\s*\(""".r
@@ -445,50 +405,60 @@ object Dialect {
     * pure-rename sibling of [[expandStarReplace]]). Unknown names error
     * loudly; every occurrence is rewritten.
     */
-  def expandStarRename(sql: String, columns: Seq[String]): String = {
+  def expandStarRename(sql: String, columns: Seq[String]): String =
+    expandStarList(sql, columns, StarRenameRe, "RENAME") { item =>
+      RenameRe.findFirstMatchIn(item) match {
+        case Some(am) => (am.group(1).toLowerCase, am.group(2))
+        case None => throw new IllegalArgumentException(
+          s"* RENAME items must be `old AS new`, got: ${item.trim}")
+      }
+    }((c, n) => s"`$c` AS `$n`")
+
+  private val StarRenameRe =
+    """(?is)\*\s+rename\s*\(""".r
+
+  /** The scan [[expandStarReplace]] and [[expandStarRename]] share: each
+    * `* KW (item, ...)` occurrence (`re` matches up to the open paren)
+    * expands to every column in order, a column named by an item
+    * rendered as `render(column, value)` and the rest as the bare
+    * column. `item` parses one list item into (lower-cased column,
+    * value).
+    */
+  private def expandStarList(sql: String, columns: Seq[String],
+                             re: scala.util.matching.Regex, kw: String)
+                            (item: String => (String, String))
+                            (render: (String, String) => String): String = {
     var cur = sql
     var guard = 0
     while (guard < 64) {
       val masked = stripLiterals(cur)
-      val m = StarRenameRe.findFirstMatchIn(masked)
+      val m = re.findFirstMatchIn(masked)
       if (m.isEmpty) return cur
-      val open = m.get.end - 1
-      var i = open
-      var depth = 0
-      var close = -1
-      while (i < masked.length && close < 0) {
-        val c = masked.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) close = i }
-        i += 1
-      }
-      require(close > open, "unbalanced parens in * RENAME (...)")
-      val ren = splitTopLevel(cur.substring(open + 1, close)).map { item =>
-        RenameRe.findFirstMatchIn(item) match {
-          case Some(am) => (am.group(1).toLowerCase, am.group(2))
-          case None => throw new IllegalArgumentException(
-            s"* RENAME items must be `old AS new`, got: ${item.trim}")
-        }
-      }.toMap
-      val unknown = ren.keySet -- columns.map(_.toLowerCase).toSet
+      val open = m.get.end - 1 // position of the '('
+      val close = matchParenAt(masked, open)
+      val named = splitTopLevel(cur.substring(open + 1, close)).map(item).toMap
+      val unknown = named.keySet -- columns.map(_.toLowerCase).toSet
       require(unknown.isEmpty,
-        s"RENAME names not in the table: ${unknown.mkString(", ")}")
+        s"$kw names not in the table: ${unknown.mkString(", ")}")
       val expanded = columns.map { c =>
-        ren.get(c.toLowerCase) match {
-          case Some(n) => s"`$c` AS `$n`"
-          case None    => s"`$c`"
-        }
+        named.get(c.toLowerCase).fold(s"`$c`")(render(c, _))
       }.mkString(", ")
       cur = cur.substring(0, m.get.start) + expanded + cur.substring(close + 1)
       guard += 1
     }
-    require(StarRenameRe.findFirstMatchIn(stripLiterals(cur)).isEmpty,
-      s"more than $guard `* RENAME` occurrences in one statement")
+    require(re.findFirstMatchIn(stripLiterals(cur)).isEmpty,
+      s"more than $guard `* $kw` occurrences in one statement")
     cur
   }
 
-  private val StarRenameRe =
-    """(?is)\*\s+rename\s*\(""".r
+  /** Cheap pre-test for the star modifiers (`* EXCLUDE / REPLACE /
+    * RENAME`) — like [[hasDynamicColumns]], lets callers skip schema
+    * resolution on the statements that carry none.
+    */
+  def hasStarModifier(sql: String): Boolean =
+    StarModifierRe.findFirstMatchIn(stripLiterals(sql)).isDefined
+
+  private val StarModifierRe = """(?i)\*\s+(?:exclude|replace|rename)\b""".r
 
   // plain identifier-to-identifier rename (no expressions on the left)
   private val RenameRe =
@@ -715,16 +685,7 @@ object Dialect {
       val m = ColumnsRe.findFirstMatchIn(masked)
       if (m.isEmpty) return cur
       val open = m.get.end - 1
-      var i = open
-      var depth = 0
-      var close = -1
-      while (i < masked.length && close < 0) {
-        val c = masked.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) close = i }
-        i += 1
-      }
-      require(close > open, "unbalanced parens in COLUMNS(...)")
+      val close = matchParenAt(masked, open)
       val arg = cur.substring(open + 1, close).trim
       val argMask = stripLiterals(arg)
       val arrowAt = argMask.indexOf("->")
@@ -2243,24 +2204,11 @@ object Dialect {
           // ---- a FILTER (WHERE …) clause directly before OVER? ----
           var q = o - 1
           while (q >= 0 && m.charAt(q).isWhitespace) q -= 1
-          if (q >= 0 && m.charAt(q) == ')') {
-            var depth = 0
-            var a = q
-            var fOpen = -1
-            while (a >= 0 && fOpen < 0) {
-              val c = m.charAt(a)
-              if (c == ')') depth += 1
-              else if (c == '(') { depth -= 1; if (depth == 0) fOpen = a }
-              a -= 1
-            }
-            if (fOpen > 0) {
-              var fe = fOpen - 1
-              while (fe >= 0 && m.charAt(fe).isWhitespace) fe -= 1
-              var fs = fe
-              while (fs >= 0 && (m.charAt(fs).isLetterOrDigit ||
-                m.charAt(fs) == '_')) fs -= 1
-              fs += 1
-              if (cur.substring(fs, fe + 1).equalsIgnoreCase("filter")) {
+          val filter =
+            if (q >= 0 && m.charAt(q) == ')') callEndingAt(m, q) else None
+          filter match {
+            case Some((fs, fe, fOpen))
+                if cur.substring(fs, fe).equalsIgnoreCase("filter") =>
                 val inner = cur.substring(fOpen + 1, q).trim
                 val innerMask = stripLiterals(inner)
                 val wp = skipWsAt(innerMask, 0)
@@ -2274,25 +2222,10 @@ object Dialect {
                 while (q2 >= 0 && m.charAt(q2).isWhitespace) q2 -= 1
                 require(q2 >= 0 && m.charAt(q2) == ')',
                   "FILTER must directly follow agg(args)")
-                var depth2 = 0
-                var a2 = q2
-                var argOpen2 = -1
-                while (a2 >= 0 && argOpen2 < 0) {
-                  val c = m.charAt(a2)
-                  if (c == ')') depth2 += 1
-                  else if (c == '(') {
-                    depth2 -= 1; if (depth2 == 0) argOpen2 = a2
-                  }
-                  a2 -= 1
-                }
-                require(argOpen2 > 0, "unbalanced parens before FILTER")
-                var fe2 = argOpen2 - 1
-                while (fe2 >= 0 && m.charAt(fe2).isWhitespace) fe2 -= 1
-                var fs2 = fe2
-                while (fs2 >= 0 && (m.charAt(fs2).isLetterOrDigit ||
-                  m.charAt(fs2) == '_')) fs2 -= 1
-                fs2 += 1
-                val fname = cur.substring(fs2, fe2 + 1)
+                val (fs2, fe2, argOpen2) = callEndingAt(m, q2).getOrElse(
+                  throw new IllegalArgumentException(
+                    "unbalanced parens before FILTER"))
+                val fname = cur.substring(fs2, fe2)
                 val fnameLc = fname.toLowerCase
                 require(Set("sum", "count", "avg", "min", "max")
                   .contains(fnameLc),
@@ -2318,8 +2251,7 @@ object Dialect {
                 cur = cur.substring(0, fs2) + fname + folded +
                   cur.substring(q + 1)
                 more = true
-              }
-            }
+            case _ =>
           }
         }
         o += 1
@@ -2366,24 +2298,11 @@ object Dialect {
           // ---- the call directly before OVER: agg '(' args ')' ----
           var q = o - 1
           while (q >= 0 && m.charAt(q).isWhitespace) q -= 1
-          if (q >= 0 && m.charAt(q) == ')') {
-            var depth = 0
-            var a = q
-            var argOpen = -1
-            while (a >= 0 && argOpen < 0) {
-              val c = m.charAt(a)
-              if (c == ')') depth += 1
-              else if (c == '(') { depth -= 1; if (depth == 0) argOpen = a }
-              a -= 1
-            }
-            if (argOpen > 0) {
-              var fe = argOpen - 1
-              while (fe >= 0 && m.charAt(fe).isWhitespace) fe -= 1
-              var fs = fe
-              while (fs >= 0 && (m.charAt(fs).isLetterOrDigit ||
-                m.charAt(fs) == '_')) fs -= 1
-              fs += 1
-              val fname = cur.substring(fs, fe + 1).toLowerCase
+          val call =
+            if (q >= 0 && m.charAt(q) == ')') callEndingAt(m, q) else None
+          call match {
+            case Some((fs, fe, argOpen)) =>
+              val fname = cur.substring(fs, fe).toLowerCase
               val argsMask = m.substring(argOpen + 1, q)
               val dPos = findTopLevelKeywordIn(argsMask, 0, "distinct")
               if (fname.nonEmpty && dPos >= 0 &&
@@ -2452,7 +2371,7 @@ object Dialect {
                   cur.substring(overEnd + 1)
                 more = true
               }
-            }
+            case None =>
           }
         }
         o += 1
@@ -2801,6 +2720,46 @@ object Dialect {
     k
   }
 
+  /** Identifier at offset `at` of the masked view `m`, sliced from the
+    * original `sql`: (name, end offset), or None when no identifier
+    * starts there.
+    */
+  private[sql] def identAt(m: String, sql: String,
+                           at: Int): Option[(String, Int)] = {
+    var e = at
+    while (e < m.length && (m.charAt(e).isLetterOrDigit ||
+      m.charAt(e) == '_')) e += 1
+    val w = sql.substring(at, e)
+    if (w.isEmpty || w.head.isDigit) None else Some((w, e))
+  }
+
+  /** The call `name(args)` whose `)` is at offset `close` of the masked
+    * view `m`: (name start, name end, `(` offset), whitespace allowed
+    * between the name and the paren. The name span is empty when no
+    * identifier precedes the paren; None when the parens do not balance.
+    */
+  private[sql] def callEndingAt(m: String, close: Int): Option[(Int, Int, Int)] = {
+    var depth = 0
+    var a = close
+    while (a >= 0) {
+      val c = m.charAt(a)
+      if (c == ')') depth += 1
+      else if (c == '(') {
+        depth -= 1
+        if (depth == 0) {
+          var fe = a - 1
+          while (fe >= 0 && m.charAt(fe).isWhitespace) fe -= 1
+          var fs = fe
+          while (fs >= 0 && (m.charAt(fs).isLetterOrDigit ||
+            m.charAt(fs) == '_')) fs -= 1
+          return Some((fs + 1, fe + 1, a))
+        }
+      }
+      a -= 1
+    }
+    None
+  }
+
   private[sql] def matchParenAt(m: String, open: Int): Int = {
     var depth = 0
     var k = open
@@ -2852,22 +2811,9 @@ object Dialect {
     require(q >= 0 && m.charAt(q) == ')',
       "EXCLUDE (rewritten as frame algebra) needs agg(args) [FILTER " +
         "(WHERE …)] directly before OVER — bare calls are not supported")
-    var depth = 0
-    var a = q
-    var argOpen = -1
-    while (a >= 0 && argOpen < 0) {
-      val c = m.charAt(a)
-      if (c == ')') depth += 1
-      else if (c == '(') { depth -= 1; if (depth == 0) argOpen = a }
-      a -= 1
-    }
-    require(argOpen > 0, "unbalanced parens before OVER")
-    var fe = argOpen - 1
-    while (fe >= 0 && m.charAt(fe).isWhitespace) fe -= 1
-    var fs = fe
-    while (fs >= 0 && (m.charAt(fs).isLetterOrDigit || m.charAt(fs) == '_')) fs -= 1
-    fs += 1
-    val fname = cur.substring(fs, fe + 1).toLowerCase
+    val (fs, fe, argOpen) = callEndingAt(m, q).getOrElse(
+      throw new IllegalArgumentException("unbalanced parens before OVER"))
+    val fname = cur.substring(fs, fe).toLowerCase
     if (fname == "filter") {
       // w17: `agg(args) FILTER (WHERE cond) OVER (spec EXCLUDE …)` —
       // fold the filter into the argument: agg(CASE WHEN cond THEN arg
@@ -2887,23 +2833,9 @@ object Dialect {
       while (q2 >= 0 && m.charAt(q2).isWhitespace) q2 -= 1
       require(q2 >= 0 && m.charAt(q2) == ')',
         "FILTER must directly follow agg(args)")
-      var depth2 = 0
-      var a2 = q2
-      var argOpen2 = -1
-      while (a2 >= 0 && argOpen2 < 0) {
-        val c = m.charAt(a2)
-        if (c == ')') depth2 += 1
-        else if (c == '(') { depth2 -= 1; if (depth2 == 0) argOpen2 = a2 }
-        a2 -= 1
-      }
-      require(argOpen2 > 0, "unbalanced parens before FILTER")
-      var fe2 = argOpen2 - 1
-      while (fe2 >= 0 && m.charAt(fe2).isWhitespace) fe2 -= 1
-      var fs2 = fe2
-      while (fs2 >= 0 && (m.charAt(fs2).isLetterOrDigit ||
-        m.charAt(fs2) == '_')) fs2 -= 1
-      fs2 += 1
-      val fname2 = cur.substring(fs2, fe2 + 1)
+      val (fs2, fe2, argOpen2) = callEndingAt(m, q2).getOrElse(
+        throw new IllegalArgumentException("unbalanced parens before FILTER"))
+      val fname2 = cur.substring(fs2, fe2)
       require(fname2.nonEmpty, "FILTER needs an aggregate call before it")
       val args2 = cur.substring(argOpen2 + 1, q2).trim
       val args2Mask = stripLiterals(args2)

@@ -4,8 +4,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import Dialect.{matchParenAt, skipWsAt, splitTopLevel, splitTopLevelAll,
-  stripLiterals, wordAt}
+import Dialect.{identAt, matchParenAt, skipWsAt, splitTopLevel,
+  splitTopLevelAll, stripLiterals, wordAt}
 
 /** `CREATE [OR REPLACE] MACRO|FUNCTION name(params) AS [TABLE] body`
   * and `DROP MACRO|FUNCTION [IF EXISTS] name` (u23 — DuckDB's SQL
@@ -55,14 +55,6 @@ object MacroSql {
     reg(spark).keys.toSeq.sorted
 
   // ---------------------------------------------------------- parsing
-
-  private def identAt(m: String, sql: String, at: Int): Option[(String, Int)] = {
-    var e = at
-    while (e < m.length && (m.charAt(e).isLetterOrDigit ||
-      m.charAt(e) == '_')) e += 1
-    val w = sql.substring(at, e)
-    if (w.isEmpty || w.head.isDigit) None else Some((w, e))
-  }
 
   /** `CREATE [OR REPLACE] MACRO|FUNCTION name(p[, …]) AS [TABLE] body`;
     * None when the text is any other statement. Loud on malformed

@@ -126,16 +126,7 @@ object MergeSql {
     require(t.nonEmpty, s"empty MERGE $side reference")
     val off = text.indexOf(t.charAt(0)) // leading-ws offset into mask
     if (t.head == '(') {
-      var depth = 0
-      var k = off
-      var close = -1
-      while (k < mask.length && close < 0) {
-        val c = mask.charAt(k)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) close = k }
-        k += 1
-      }
-      require(close > 0, s"unbalanced parens in MERGE $side")
+      val close = Dialect.matchParenAt(mask, off)
       val ref = text.substring(off + 1, close)
       val alias = stripAs(text.substring(close + 1).trim)
       require(alias.nonEmpty,

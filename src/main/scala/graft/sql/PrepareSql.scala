@@ -4,8 +4,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
 
-import Dialect.{matchParenAt, skipWsAt, splitTopLevelAll, stripLiterals,
-  wordAt}
+import Dialect.{identAt, matchParenAt, skipWsAt, splitTopLevelAll,
+  stripLiterals, wordAt}
 
 /** Prepared statements (u24 — DuckDB/Postgres surface): `PREPARE name
   * AS statement` stores session-scoped TEXT with `$1…$N` (1-based) or
@@ -32,15 +32,6 @@ object PrepareSql {
       }
       m
     }
-
-  private def identAt(m: String, sql: String,
-                      at: Int): Option[(String, Int)] = {
-    var e = at
-    while (e < m.length && (m.charAt(e).isLetterOrDigit ||
-      m.charAt(e) == '_')) e += 1
-    val w = sql.substring(at, e)
-    if (w.isEmpty || w.head.isDigit) None else Some((w, e))
-  }
 
   /** `PREPARE name AS statement` → Some((name, statement)). */
   def parsePrepare(sql: String): Option[(String, String)] = {

@@ -51,7 +51,7 @@ object SampleSql {
   private val Buckets = 65536L
 
   import Dialect.{findTopLevelKeywordIn, stripLiterals, wordAt}
-  import Dialect.{matchParenAt, skipWsAt}
+  import Dialect.{callEndingAt, matchParenAt, skipWsAt}
 
   /** Bucket threshold for a percent spec — shared by the DataFrame gate
     * and the TABLESAMPLE text gate so the two forms cannot drift.
@@ -220,19 +220,9 @@ object SampleSql {
         p + 1
       }
       // matching '(' of a ')' at `close`, scanning backwards
-      def openOf(close: Int): Int = {
-        var depth = 0
-        var p = close
-        var open = -1
-        while (p >= 0 && open < 0) {
-          val ch = m.charAt(p)
-          if (ch == ')') depth += 1
-          else if (ch == '(') { depth -= 1; if (depth == 0) open = p }
-          p -= 1
-        }
-        require(open >= 0, "unbalanced parens before TABLESAMPLE")
-        open
-      }
+      def openOf(close: Int): Int = callEndingAt(m, close).map(_._3)
+        .getOrElse(throw new IllegalArgumentException(
+          "unbalanced parens before TABLESAMPLE"))
       // ---- the sampled reference runs BACKWARDS from TABLESAMPLE ----
       val e = prevNonWs(ts - 1)
       require(e >= 0, "TABLESAMPLE must follow a table reference")

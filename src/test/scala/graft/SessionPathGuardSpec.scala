@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the single session path from eroding one query at a time: one
-  * session builder, no per-query installs in the query catalogue, and one
-  * memory-sink stream runner in the library.
+  * session builder, no per-query installs in the query catalogue, one
+  * memory-sink stream runner in the library, and one SQL statement
+  * pipeline behind every SQL surface.
   */
 class SessionPathGuardSpec extends AnyFunSuite {
 
@@ -23,6 +24,7 @@ class SessionPathGuardSpec extends AnyFunSuite {
   // the needles are split so this file does not match itself
   private val Builder = "SparkSession" + ".builder()"
   private val Install = "Registry" + ".registerAll("
+  private val Chain = "Dialect" + ".rewriteSeriesTvf("
 
   test("sessions are built only in GraftSession.scala") {
     val offenders = sources("src").collect {
@@ -43,5 +45,15 @@ class SessionPathGuardSpec extends AnyFunSuite {
           p.getFileName.toString != "Replay.scala" => p
     }
     assert(offenders.isEmpty, s"use graft.streaming.Replay.runToCompletion: $offenders")
+  }
+
+  test("the dialect pass chain is written once") {
+    val calls = sources("src/main").map { case (_, text) =>
+      text.split(java.util.regex.Pattern.quote(Chain), -1).length - 1
+    }.sum
+    assert(calls == 1, s"$Chain appears $calls times in src/main; lower statements through Table.lowerStatement")
+    val table = Files.readString(Paths.get("src/main/scala/graft/api/Table.scala"))
+    val parallel = Seq("prep", "sqlOne", "qualifiedSql").filter(n => s"def $n\\b".r.findFirstIn(table).isDefined)
+    assert(parallel.isEmpty, s"Table.scala defines a second statement pipeline: $parallel")
   }
 }
