@@ -508,7 +508,7 @@ object Table {
     *     its seed, step and outer statement each re-enter;
     *  3. table-level TABLESAMPLE lowers onto the same gate as a textual
     *     subquery keyed on the reference's first column;
-    *  4. the clause chain, `fromFirst` through `orderByNullsLast`;
+    *  4. the clause chain, [[Dialect.lowerClauses]];
     *  5. `COLUMNS(...)`, then `* EXCLUDE / REPLACE / RENAME`, over the
     *     columns of the first FROM relation;
     *  6. DISTINCT ON, after nulls-last (its sort items move into a window
@@ -542,24 +542,7 @@ object Table {
     // executes for the column list
     val qSampled = graft.sql.SampleSql.rewriteTablesample(qIn,
       ref => resolve(ref).columns.toSeq)
-    // frame-EXCLUDE algebra (w12) runs before the alias passes: it only
-    // rewrites inside OVER(...) spans, and its output introduces no new
-    // aliases for them to chase. GROUPS lowering (w14) runs after
-    // alias-into-WHERE (the WHERE moves inside its wrap) and before
-    // nulls-last (the wrap's outer ORDER BY is still top-level there).
-    // DISTINCT window aggregates (w18) lower after the EXCLUDE algebra:
-    // EXCLUDE-carrying DISTINCT forms split there and re-enter
-    // DISTINCT-free; the bare forms collect-and-dedup here
-    val q0 = Dialect.rewriteDistinctWindow(Dialect.rewriteWindowFilter(
-      Dialect.rewriteWindowExclude(Dialect.inlineChainedWindows(
-        Dialect.rewriteOrderedAggs(Dialect.rewriteSimilarGlob(
-          Dialect.rewriteIgnoreNulls(Dialect.rewriteDotCalls(
-            Dialect.rewriteSubscripts(Dialect.rewriteStructLiterals(
-              Dialect.rewritePowerOp(
-                Dialect.rewriteSeriesTvf(Dialect.stripTrailingCommas(
-                  Dialect.fromFirst(qSampled).getOrElse(qSampled))))))))))))))
-    val q1 = Dialect.orderByNullsLast(
-      Dialect.rewriteGroupsFrames(Dialect.aliasesIntoWhere(q0)))
+    val q1 = Dialect.lowerClauses(qSampled)
     // the first FROM relation's schema is resolved only when a masked
     // pre-test finds a dynamic or modified star. COLUMNS expands FIRST:
     // its star-modifier arm owns `* EXCLUDE` INSIDE a COLUMNS(...)

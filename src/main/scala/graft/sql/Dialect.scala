@@ -53,6 +53,28 @@ object Dialect {
     out.toString
   }
 
+  /** The clause chain of the SQL statement pipeline (step 4 of
+    * `graft.api.Table.lowerStatement`), in order: FROM-first, trailing
+    * commas, series table functions, `**`, struct/map literals,
+    * subscripts, dot calls, IGNORE NULLS, SIMILAR TO / GLOB, ordered
+    * aggregates; then the window family — named windows inline, FILTER
+    * folds, the EXCLUDE algebra lowers (it introduces no aliases for the
+    * alias passes to chase), DISTINCT windows lower (EXCLUDE-carrying
+    * ones arrive DISTINCT-free); then alias-into-WHERE, GROUPS frames
+    * (after alias-into-WHERE: the WHERE moves inside its wrap) and
+    * nulls-last (the wrap's outer ORDER BY is still top-level there).
+    */
+  def lowerClauses(sql: String): String =
+    ClauseChain.foldLeft(sql)((q, pass) => pass(q))
+
+  private val ClauseChain: Seq[String => String] = Seq(
+    q => fromFirst(q).getOrElse(q), stripTrailingCommas, rewriteSeriesTvf,
+    rewritePowerOp, rewriteStructLiterals, rewriteSubscripts,
+    rewriteDotCalls, rewriteIgnoreNulls, rewriteSimilarGlob,
+    rewriteOrderedAggs, inlineChainedWindows, rewriteWindowFilter,
+    rewriteWindowExclude, rewriteDistinctWindow, aliasesIntoWhere,
+    rewriteGroupsFrames, orderByNullsLast)
+
   /** The reference binder substitutes select-list aliases into WHERE,
     * GROUP BY, HAVING and ORDER BY (vinum/planner/binder.py:93-132).
     * Spark ≥3.4 resolves select aliases in GROUP BY / HAVING / ORDER BY
@@ -185,8 +207,15 @@ object Dialect {
       val idx = findTopLevelKeyword(s, obStart, kw)
       if (idx >= 0 && idx < end) end = idx
     }
-    val items = splitTopLevel(s.substring(obStart, end))
-    val rewritten = items.map { it =>
+    s.substring(0, obStart) + nullsLastItems(s.substring(obStart, end)) +
+      s.substring(end)
+  }
+
+  /** `NULLS LAST` appended to each comma-separated sort item of `items`
+    * that has no NULLS clause of its own.
+    */
+  private def nullsLastItems(items: String): String =
+    splitTopLevel(items).map { it =>
       // the NULLS check likewise looks at code, not literal/comment text
       // (items never start mid-literal: splits happen on the masked view)
       val mIt = stripLiterals(it)
@@ -199,9 +228,7 @@ object Dialect {
         else it.substring(0, lastCode + 1) + " NULLS LAST" +
           it.substring(lastCode + 1)
       }
-    }
-    s.substring(0, obStart) + rewritten.mkString(",") + s.substring(end)
-  }
+    }.mkString(",")
 
   /** DuckDB/Postgres-style `SELECT DISTINCT ON (keys) items FROM …
     * ORDER BY sorts`: keep the FIRST row per key combination in the
@@ -927,57 +954,25 @@ object Dialect {
     * SUM/COUNT/AVG over exact types (integer/decimal — the fixture
     * discipline; float subtraction would drift from a direct sum), with
     * the empty-after-exclusion frame yielding NULL via a count guard,
-    * matching the standard.
+    * matching the standard. MIN/MAX and DISTINCT aggregates split the
+    * frame around the slice instead.
     *
-    * Loud refusals, never silent mis-execution: non-decomposable
-    * aggregates (min/max/…), COUNT(DISTINCT), a FILTER clause between
-    * the call and OVER, frames that may not CONTAIN the excluded slice
-    * (start FOLLOWING / end PRECEDING; ROWS frames under GROUP/TIES
-    * unless unbounded-both-ends — a ROWS frame can cut a peer group and
-    * subtraction would over-subtract), GROUPS mode (Spark has none),
-    * GROUP/TIES without ORDER BY, and EXCLUDE inside a named WINDOW
-    * clause (inline the OVER).
+    * Runs after [[inlineChainedWindows]] (named windows carrying EXCLUDE
+    * arrive inlined) and [[rewriteWindowFilter]] (FILTER arrives folded
+    * into the call). Loud refusals, never silent mis-execution:
+    * non-decomposable aggregates (median/…), frames that may not CONTAIN
+    * the excluded slice (start FOLLOWING / end PRECEDING; ROWS frames
+    * under GROUP/TIES unless unbounded-both-ends — a ROWS frame can cut
+    * a peer group and subtraction would over-subtract), GROUP/TIES
+    * without ORDER BY, and an EXCLUDE no OVER specification reaches.
     */
   def rewriteWindowExclude(sql: String): String = {
-    // named-WINDOW definitions carrying EXCLUDE inline first (w13):
-    // `WINDOW w AS (spec EXCLUDE …)` becomes `OVER (spec EXCLUDE …)` at
-    // every `OVER w` reference and the definition drops from the clause
-    // (Spark's native WINDOW support keeps the exclusion-free names);
-    // the main loop below then rewrites the inlined forms like any
-    // other, and the final check only fires on shapes nothing handled
-    var cur = inlineExcludeNamedWindows(sql)
-    var guard = 0
-    var more = true
-    while (more && guard < 64) {
-      more = false
-      val m = stripLiterals(cur)
-      // first OVER ( … EXCLUDE … ) at any depth
-      var o = 0
-      var done = false
-      while (!done && o < m.length) {
-        if (wordAt(m, o, "over")) {
-          val k = skipWsAt(m, o + 4)
-          if (k < m.length && m.charAt(k) == '(') {
-            val close = matchParenAt(m, k)
-            val specMask = m.substring(k + 1, close)
-            val e = findTopLevelKeywordIn(specMask, 0, "exclude")
-            if (e >= 0) {
-              cur = rewriteOneExclude(cur, m, o, k, close, e)
-              more = true
-              done = true
-            }
-          }
-        }
-        o += 1
-      }
-      guard += 1
-    }
-    // `more` still true means the loop DIED on the guard mid-rewrite;
-    // guard == limit after a clean final scan is fine (review-caught
-    // off-by-one: exactly 63 EXCLUDEs rewrite correctly)
-    require(!more, "more than 63 EXCLUDE clauses in one statement")
-    // EXCLUDE not reachable via an inline OVER — e.g. inside a named
-    // WINDOW clause — must refuse, not silently keep rows
+    if (findAnyDepthKeyword(stripLiterals(sql), "exclude") < 0) return sql
+    val cur = rewriteEach(sql, "EXCLUDE clauses")(
+      _.spec.exists(_.exclude >= 0))(rewriteOneExclude)
+    // an EXCLUDE no OVER specification reaches — e.g. in a WINDOW
+    // definition the named-window inliner has not run over — must
+    // refuse, not silently keep rows
     val m = stripLiterals(cur)
     var i = 0
     var depth = 0
@@ -992,8 +987,8 @@ object Dialect {
           throw new IllegalArgumentException(
             "window EXCLUDE is supported only in an OVER specification " +
               "directly after an aggregate call (named WINDOW " +
-              "definitions inline automatically) — move the FILTER " +
-              "clause or restructure the expression")
+              "definitions inline automatically) — restructure the " +
+              "expression")
       }
       i += 1
     }
@@ -2020,51 +2015,224 @@ object Dialect {
     Some(stmts)
   }
 
-  /** w21: chained named-window definitions. Postgres/DuckDB let a
-    * window specification START with another window's name — both in a
-    * definition (`WINDOW w1 AS (PARTITION BY p), w2 AS (w1 ORDER BY o)`)
-    * and in an inline reference (`OVER (w1 ORDER BY o)`) — copying the
-    * base spec and appending clauses. Spark resolves only bare `OVER w`
-    * references, so this pass inlines the base spec text at every
-    * chained use. Standard rules enforced loudly: the base must carry
-    * no frame clause, the referencing spec may not add PARTITION BY,
-    * and may add ORDER BY only when the base has none. Chains of chains
-    * resolve in textual order (a name must be defined before use, the
-    * Postgres rule). A statement with MULTIPLE window clauses (e.g. a
-    * subquery's own WINDOW) refuses when a chain needs rewriting — a
-    * blind inline could capture the wrong definition.
+  // ---- window calls: one finder and one WINDOW-clause parser under
+  // every window pass (named windows, FILTER, EXCLUDE, DISTINCT, GROUPS)
+
+  /** A window specification — the text between the parens of
+    * `OVER (…)` or of a WINDOW definition — split at its clauses.
+    * Offsets index `text`, -1 marks an absent clause: a leading window
+    * name (a chained reference) spans `head` to `headEnd`; `order` is the
+    * ORDER keyword, `frame` the frame's `mode` keyword (rows, range or
+    * groups) and `exclude` the EXCLUDE keyword. A mode word opens the
+    * frame only when BETWEEN, UNBOUNDED, CURRENT, INTERVAL, a number or
+    * `(` follows it, so a column named `groups` or `range` never does.
     */
-  def inlineChainedWindows(sql: String): String = {
-    val m = stripLiterals(sql)
-    // ---- locate the WINDOW clause (keyword + ident + AS) ----
-    var w = -1
-    var clauseCount = 0
-    var probe = findAnyDepthKeyword(m, "window")
-    while (probe >= 0) {
-      val k = skipWsAt(m, probe + 6)
-      if (k < m.length && isIdentStart(m.charAt(k))) {
-        var e = k
-        while (e < m.length && isIdentBoundaryChar(m.charAt(e))) e += 1
-        if (wordAt(m, skipWsAt(m, e), "as")) {
-          clauseCount += 1
-          if (w < 0) w = probe
-        }
-      }
-      probe = {
-        val next = findAnyDepthKeyword(m.substring(probe + 6), "window")
-        if (next < 0) -1 else probe + 6 + next
-      }
+  private final case class WindowSpec(text: String, head: Int,
+      headEnd: Int, order: Int, frame: Int, mode: String, exclude: Int) {
+    def headName: Option[String] =
+      if (headEnd < 0) None else Some(text.substring(head, headEnd))
+    /** The PARTITION BY / ORDER BY part, before the frame, trimmed. */
+    def partitionOrder: String = text.substring(0,
+      if (frame >= 0) frame else if (exclude >= 0) exclude
+      else text.length).trim
+    /** The frame clause up to EXCLUDE, trimmed ("" without a frame). */
+    def frameText: String = if (frame < 0) "" else
+      text.substring(frame, if (exclude >= 0) exclude else text.length).trim
+    /** The specification without its EXCLUDE clause, trimmed. */
+    def withoutExclude: String =
+      (if (exclude < 0) text else text.substring(0, exclude)).trim
+    /** The EXCLUDE kind — current, group, ties or none (NO OTHERS) —
+      * which must end the specification (the standard grammar).
+      */
+    def exclusion: String = {
+      val m = stripLiterals(text)
+      var p = skipWsAt(m, exclude + 7)
+      val kind =
+        if (wordAt(m, p, "current")) {
+          p = skipWsAt(m, p + 7)
+          require(wordAt(m, p, "row"), "EXCLUDE CURRENT needs ROW")
+          p += 3; "current"
+        } else if (wordAt(m, p, "group")) { p += 5; "group" }
+        else if (wordAt(m, p, "ties")) { p += 4; "ties" }
+        else if (wordAt(m, p, "no")) {
+          p = skipWsAt(m, p + 2)
+          require(wordAt(m, p, "others"), "EXCLUDE NO needs OTHERS")
+          p += 6; "none"
+        } else throw new IllegalArgumentException(
+          s"malformed EXCLUDE clause: ${text.substring(exclude).trim.take(40)}")
+      require(skipWsAt(m, p) >= m.length,
+        "EXCLUDE must be the last clause of the window specification, " +
+          s"found trailing: ${text.substring(p).trim.take(40)}")
+      kind
     }
-    if (w < 0) return sql
-    // ---- parse `name AS (spec) | name AS ref` comma-list ----
+  }
+
+  private val SpecKeywords =
+    Seq("partition", "order", "rows", "range", "groups", "exclude")
+
+  private def windowSpec(text: String): WindowSpec =
+    windowSpecIn(text, stripLiterals(text))
+
+  /** [[windowSpec]] over the precomputed mask `m` of `text`. */
+  private def windowSpecIn(text: String, m: String): WindowSpec = {
+    val head = skipWsAt(m, 0)
+    val headEnd =
+      if (head < m.length && isIdentStart(m.charAt(head)) &&
+        !SpecKeywords.exists(wordAt(m, head, _))) wordEnd(m, head)
+      else -1
+    val exclude = findTopLevelKeywordIn(m, 0, "exclude")
+    val limit = if (exclude < 0) m.length else exclude
+    def opensFrame(at: Int): Boolean = {
+      val nx = skipWsAt(m, at)
+      Seq("between", "unbounded", "current", "interval")
+        .exists(wordAt(m, nx, _)) ||
+        (nx < m.length && (m.charAt(nx).isDigit || m.charAt(nx) == '('))
+    }
+    var frame = -1
+    var mode = ""
+    var depth = 0
+    var i = 0
+    while (frame < 0 && i < limit) {
+      val c = m.charAt(i)
+      if (c == '(') depth += 1
+      else if (c == ')') depth -= 1
+      else if (depth == 0)
+        Seq("rows", "range", "groups")
+          .find(kw => wordAt(m, i, kw) && opensFrame(i + kw.length))
+          .foreach { kw => frame = i; mode = kw }
+      i += 1
+    }
+    val o = findTopLevelKeywordIn(m, 0, "order")
+    val order = if (o >= 0 && o < (if (frame >= 0) frame else limit)) o else -1
+    WindowSpec(text, head, headEnd, order, frame, mode, exclude)
+  }
+
+  /** One window call of a statement, `fn(args) [FILTER (…)] OVER target`,
+    * as offsets into the statement. The call begins at `start` (its
+    * name; the FILTER or OVER keyword when no call precedes) and
+    * `callEnd` is just past its `)` or its FILTER's. `fn` is the call's
+    * name as written ("" when no named call precedes), `distinct` marks
+    * a leading DISTINCT, `args` holds the arguments after it and
+    * `filter` the FILTER's parenthesized text, both trimmed. The target
+    * runs from `targetAt` to `end`: a parenthesized `spec`, or a window
+    * name when `spec` is None (`end == targetAt` when OVER has neither).
+    */
+  private final case class WindowCall(start: Int, fn: String,
+      distinct: Boolean, args: String, filter: Option[String], callEnd: Int,
+      over: Int, targetAt: Int, end: Int, spec: Option[WindowSpec])
+
+  /** Every window call of `sql`, left to right: the one scan from each
+    * OVER back over FILTER to the call and forward to its target that
+    * every window pass reads. Lazy, so a pass that wants the first match
+    * parses no further.
+    */
+  private def windowCalls(sql: String): Iterator[WindowCall] = {
+    val m = stripLiterals(sql)
+    Iterator.range(0, m.length).filter(wordAt(m, _, "over"))
+      .map(windowCallAt(sql, m, _))
+  }
+
+  private def windowCallAt(sql: String, m: String, over: Int): WindowCall = {
+    val t = skipWsAt(m, over + 4)
+    val (end, spec) =
+      if (t < m.length && m.charAt(t) == '(') {
+        val close = matchParenAt(m, t)
+        (close + 1, Some(windowSpecIn(sql.substring(t + 1, close),
+          m.substring(t + 1, close))))
+      } else if (t < m.length && isIdentStart(m.charAt(t))) {
+        var z = t
+        while (z < m.length && isIdentChar(m.charAt(z))) z += 1
+        (z, None)
+      } else (t, None)
+    // (name start, name end, `(`, `)`) of the call whose `)` ends the
+    // code before offset `at`
+    def callBefore(at: Int): Option[(Int, Int, Int, Int)] = {
+      var q = at - 1
+      while (q >= 0 && m.charAt(q).isWhitespace) q -= 1
+      if (q < 0 || m.charAt(q) != ')') None
+      else callEndingAt(m, q).map { case (s, e, open) => (s, e, open, q) }
+    }
+    val direct = callBefore(over)
+    val filter = direct.collect {
+      case (s, e, open, q) if sql.substring(s, e).equalsIgnoreCase("filter") =>
+        sql.substring(open + 1, q).trim
+    }
+    val call = if (filter.isDefined) callBefore(direct.get._1) else direct
+    val callEnd = direct.fold(over)(_._4 + 1)
+    call match {
+      case Some((s, e, open, q)) =>
+        val am = m.substring(open + 1, q)
+        val d = skipWsAt(am, 0)
+        val distinct = wordAt(am, d, "distinct")
+        val args = sql.substring(open + 1 + (if (distinct) d + 8 else 0), q)
+        WindowCall(s, sql.substring(s, e), distinct, args.trim, filter,
+          callEnd, over, t, end, spec)
+      case None =>
+        WindowCall(direct.fold(over)(_._1), "", distinct = false, "", filter,
+          callEnd, over, t, end, spec)
+    }
+  }
+
+  /** Rewrite the first window call `pick` selects, then again on the
+    * rewritten text, until none is left — at most 63 times, then refuse
+    * (`what` names the rewritten form in the message).
+    */
+  private def rewriteEach(sql: String, what: String)(pick: WindowCall => Boolean)
+                         (rewrite: (String, WindowCall) => String): String = {
+    var cur = sql
+    var n = 0
+    var hit = windowCalls(cur).find(pick)
+    while (hit.isDefined) {
+      require(n < 63, s"more than 63 $what in one statement")
+      cur = rewrite(cur, hit.get)
+      n += 1
+      hit = windowCalls(cur).find(pick)
+    }
+    cur
+  }
+
+  /** One definition of a WINDOW clause: `name AS (spec)`, or the bare
+    * reference `name AS ref` (`spec` None). `at` to `end` spans the
+    * spec's text between its parens, or the reference.
+    */
+  private final case class WindowDef(name: String, spec: Option[WindowSpec],
+                                     ref: String, at: Int, end: Int)
+
+  /** A WINDOW clause, from its keyword (`at`) to just past its last
+    * definition and the whitespace after it (`end`).
+    */
+  private final case class WindowClause(at: Int, end: Int,
+                                        defs: Seq[WindowDef])
+
+  /** Every WINDOW clause of the statement with mask `m`, at any depth:
+    * the keyword must be followed by `name AS`, so the `window(ts, …)`
+    * function and a column named window never match.
+    */
+  private def windowClauses(sql: String, m: String): Seq[WindowClause] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[WindowClause]
+    var w = 0
+    while (w < m.length) {
+      if (wordAt(m, w, "window")) {
+        val k = skipWsAt(m, w + 6)
+        if (k < m.length && isIdentStart(m.charAt(k)) &&
+          wordAt(m, skipWsAt(m, wordEnd(m, k)), "as"))
+          out += windowClauseAt(sql, m, w)
+      }
+      w += 1
+    }
+    out.toSeq
+  }
+
+  /** The `name AS (spec) | name AS ref` list of the WINDOW clause whose
+    * keyword is at `w`.
+    */
+  private def windowClauseAt(sql: String, m: String, w: Int): WindowClause = {
+    val defs = scala.collection.mutable.ArrayBuffer.empty[WindowDef]
     var i = skipWsAt(m, w + 6)
-    // (lcName, specText, specStart, specEnd) — bare refs keep start < 0
-    val defs = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Int, Int)]
-    var done = false
-    while (!done) {
+    var more = true
+    while (more) {
       val ns = i
-      while (i < m.length && isIdentBoundaryChar(m.charAt(i))) i += 1
+      i = wordEnd(m, i)
       val name = sql.substring(ns, i)
       require(name.nonEmpty, "malformed WINDOW clause: missing name")
       i = skipWsAt(m, i)
@@ -2072,194 +2240,193 @@ object Dialect {
       i = skipWsAt(m, i + 2)
       if (i < m.length && m.charAt(i) == '(') {
         val close = matchParenAt(m, i)
-        defs += ((name.toLowerCase, sql.substring(i + 1, close),
-          i + 1, close))
+        defs += WindowDef(name, Some(windowSpecIn(sql.substring(i + 1, close),
+          m.substring(i + 1, close))), "", i + 1, close)
         i = skipWsAt(m, close + 1)
       } else {
         val rs = i
-        while (i < m.length && isIdentBoundaryChar(m.charAt(i))) i += 1
-        defs += ((name.toLowerCase, sql.substring(rs, i).toLowerCase,
-          -1, -1))
+        i = wordEnd(m, i)
+        require(i > rs,
+          s"WINDOW $name AS needs a specification or a window name")
+        defs += WindowDef(name, None, sql.substring(rs, i), rs, i)
         i = skipWsAt(m, i)
       }
       if (i < m.length && m.charAt(i) == ',') i = skipWsAt(m, i + 1)
-      else done = true
+      else more = false
     }
-    val specKw = Seq("partition", "order", "rows", "range", "groups",
-      "exclude")
-    def headName(spec: String): Option[(Int, Int)] = {
-      val sm = stripLiterals(spec)
-      val f = skipWsAt(sm, 0)
-      if (f >= sm.length || !isIdentStart(sm.charAt(f))) return None
-      if (specKw.exists(kw => wordAt(sm, f, kw))) return None
-      var e = f
-      while (e < sm.length && isIdentBoundaryChar(sm.charAt(e))) e += 1
-      Some((f, e))
+    WindowClause(w, i, defs.toSeq)
+  }
+
+  /** Named windows (w13, w21): inline what Spark cannot resolve by name.
+    * Spark runs `OVER w` against a WINDOW clause, but has no chained
+    * specifications and no EXCLUDE, so:
+    *  - a specification that STARTS with another window's name — in a
+    *    definition (`WINDOW w1 AS (PARTITION BY p), w2 AS (w1 ORDER BY
+    *    o)`) or inline (`OVER (w1 ORDER BY o)`) — gets the base
+    *    specification's text in place of the name. The standard's rules
+    *    hold loudly: the base carries no frame clause, the chain adds no
+    *    PARTITION BY, and adds ORDER BY only when the base has none.
+    *    Names resolve in textual order (defined before use, the Postgres
+    *    rule).
+    *  - a definition whose specification carries EXCLUDE leaves the
+    *    clause (the clause goes when empty) and each `OVER name` becomes
+    *    `OVER (spec)`, which [[rewriteWindowExclude]] lowers. Definitions
+    *    without EXCLUDE stay for Spark; one that refers to a dropped
+    *    definition refuses.
+    *
+    * The clause is found at any depth, so a derived table's own WINDOW
+    * clause inlines like a top-level one. When anything needs inlining,
+    * a statement with more than one WINDOW clause refuses: a blind
+    * inline could capture another clause's same-named window.
+    */
+  def inlineChainedWindows(sql: String): String = {
+    val m = stripLiterals(sql)
+    val clauses = windowClauses(sql, m)
+    if (clauses.isEmpty) return sql
+    val calls = windowCalls(sql).toSeq
+    def chainHead(s: WindowSpec, names: Set[String]): Option[String] =
+      s.headName.map(_.toLowerCase).filter(names)
+    if (clauses.size > 1) {
+      val names = clauses.flatMap(_.defs.map(_.name.toLowerCase)).toSet
+      val inlines = clauses.exists { c =>
+        c.defs.indices.exists { i =>
+          c.defs(i).spec.exists(s => s.exclude >= 0 ||
+            chainHead(s, c.defs.take(i).map(_.name.toLowerCase).toSet).isDefined)
+        }
+      } || calls.exists(_.spec.exists(chainHead(_, names).isDefined))
+      require(!inlines,
+        "chained or EXCLUDE-carrying named windows cannot inline when the " +
+          "statement has more than one WINDOW clause (a subquery's " +
+          "same-named window would be captured) — inline the OVER " +
+          "specification by hand")
+      return sql
     }
-    def hasFrame(spec: String): Boolean =
-      Seq("rows", "range", "groups").exists(kw =>
-        findTopLevelKeywordIn(stripLiterals(spec), 0, kw) >= 0)
-    def hasOrder(spec: String): Boolean =
-      findTopLevelKeywordIn(stripLiterals(spec), 0, "order") >= 0
-    // ---- resolve chains + append-clause validation ----
-    def compose(baseName: String, base: String, suffix: String,
-                at: String): String = {
-      val sTrim = suffix.trim
-      if (sTrim.isEmpty) return base
-      val sm = stripLiterals(sTrim)
-      require(!wordAt(sm, 0, "partition"),
-        s"$at chains window '$baseName' and adds PARTITION BY — a " +
-          "chained window cannot override the base partitioning")
-      require(specKw.exists(kw => wordAt(sm, 0, kw)),
-        s"$at chains window '$baseName' but continues with " +
-          s"'${sTrim.take(20)}' — only ORDER BY and a frame clause can " +
-          "follow a chained window name")
-      require(hasFrame(base) == false,
-        s"$at chains window '$baseName', whose specification carries a " +
-          "frame clause — the standard forbids copying a framed window")
-      require(!(hasOrder(base) && wordAt(sm, 0, "order")),
-        s"$at chains window '$baseName' and adds ORDER BY, but the " +
-          "base already orders — the standard forbids overriding it")
-      s"$base $sTrim"
-    }
+    val clause = clauses.head
+    // lower-case name → specification text, chains resolved
     val resolved = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // (specStart, specEnd, replacementText)
+    // (start, end, replacement), applied right to left
     val edits = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
-    var chained = false
-    defs.foreach { case (lcName, spec, s0, e0) =>
-      if (s0 < 0) { // bare `w2 AS w1`: valid Spark — record, keep text
-        resolved(lcName) = resolved.getOrElse(spec, spec)
-      } else headName(spec) match {
-        case Some((f, e)) if resolved.contains(
-            spec.substring(f, e).toLowerCase) =>
-          val ref = spec.substring(f, e).toLowerCase
-          val full = compose(ref, resolved(ref), spec.substring(e),
-            s"WINDOW definition '$lcName'")
-          resolved(lcName) = full
-          edits += ((s0, e0, full))
-          chained = true
-        case _ => resolved(lcName) = spec
-      }
-    }
-    // ---- inline `OVER (name …)` references ----
-    var o = 0
-    while (o < m.length) {
-      if (wordAt(m, o, "over")) {
-        val k = skipWsAt(m, o + 4)
-        if (k < m.length && m.charAt(k) == '(' &&
-          // skip the WINDOW clause span itself (already edited above)
-          (k <= w || k >= i)) {
-          val close = matchParenAt(m, k)
-          val spec = sql.substring(k + 1, close)
-          headName(spec) match {
-            case Some((f, e)) if resolved.contains(
-                spec.substring(f, e).toLowerCase) =>
-              val ref = spec.substring(f, e).toLowerCase
-              val full = compose(ref, resolved(ref), spec.substring(e),
-                "an OVER specification")
-              edits += ((k + 1, close, full))
-              chained = true
-            case _ =>
-          }
+    def chained(s: WindowSpec, at: String): Option[String] =
+      chainHead(s, resolved.keySet.toSet).map(h =>
+        composeChain(h, resolved(h), s.text.substring(s.headEnd), at))
+    clause.defs.foreach { d =>
+      val lc = d.name.toLowerCase
+      d.spec match {
+        case None => // `w2 AS w1` is valid Spark: record, keep the text
+          resolved(lc) = resolved.getOrElse(d.ref.toLowerCase, d.ref.toLowerCase)
+        case Some(s) => chained(s, s"WINDOW definition '$lc'") match {
+          case Some(full) => resolved(lc) = full; edits += ((d.at, d.end, full))
+          case None => resolved(lc) = s.text
         }
       }
-      o += 1
     }
-    if (!chained) return sql
-    require(clauseCount == 1,
-      "chained window definitions with MULTIPLE window clauses in one " +
-        "statement are not supported — inline the chained specification")
-    // apply right-to-left so earlier offsets stay valid
+    val outside = calls.filter(c => c.over < clause.at || c.over >= clause.end)
+    outside.foreach(c => c.spec.foreach(s =>
+      chained(s, "an OVER specification")
+        .foreach(full => edits += ((c.targetAt + 1, c.end - 1, full)))))
+    val dropped = clause.defs.filter(d =>
+      d.spec.isDefined && windowSpec(resolved(d.name.toLowerCase)).exclude >= 0)
+    if (dropped.nonEmpty) {
+      dropped.foreach { d =>
+        require(windowSpec(resolved(d.name.toLowerCase)).headName.isEmpty,
+          s"WINDOW ${d.name} chains another window name with EXCLUDE — " +
+            "write the full specification inline")
+      }
+      val names = dropped.map(_.name.toLowerCase).toSet
+      val kept = clause.defs.filterNot(dropped.contains)
+      kept.foreach { d =>
+        val refersToDropped =
+          if (d.spec.isEmpty) names(d.ref.toLowerCase)
+          else names.exists(n => findAnyDepthKeyword(
+            stripLiterals(resolved(d.name.toLowerCase)), n) >= 0)
+        require(!refersToDropped,
+          s"WINDOW ${d.name} references an EXCLUDE-carrying window that " +
+            "this rewrite inlines away — write the full specification inline")
+      }
+      // the clause is rewritten whole, its definitions' edits with it
+      edits.filterInPlace(e => e._1 < clause.at || e._1 >= clause.end)
+      edits += ((clause.at, clause.end,
+        if (kept.isEmpty) ""
+        else "WINDOW " + kept.map { d =>
+          if (d.spec.isEmpty) s"${d.name} AS ${d.ref}"
+          else s"${d.name} AS (${resolved(d.name.toLowerCase)})"
+        }.mkString(", ") + " "))
+      outside.foreach { c =>
+        val name = sql.substring(c.targetAt, c.end).toLowerCase
+        if (c.spec.isEmpty && names(name))
+          edits += ((c.targetAt, c.end, s"(${resolved(name)})"))
+      }
+    }
     edits.sortBy(-_._1).foldLeft(sql) { case (cur, (s0, e0, text)) =>
       cur.substring(0, s0) + text + cur.substring(e0)
     }
   }
 
-  /** w20: `agg(args) FILTER (WHERE cond) OVER …` WITHOUT an EXCLUDE
-    * clause (the EXCLUDE-carrying forms fold inside
-    * [[rewriteWindowExclude]], w17). Spark refuses FILTER on window
-    * functions entirely; DuckDB runs it. The fold is the w17 algebra:
-    * agg(CASE WHEN cond THEN arg END) — the CASE's NULL is skipped by
-    * every NULL-skipping aggregate, COUNT(*) becomes COUNT(CASE WHEN
-    * cond THEN 1 END), and COUNT(DISTINCT x) folds INSIDE the DISTINCT
-    * (the result then lowers through [[rewriteDistinctWindow]], which
-    * must run after this pass). Restricted to SUM/COUNT/AVG/MIN/MAX —
-    * the aggregates whose NULL-skip contract makes the fold exact;
-    * anything else refuses loudly.
+  /** The specification a chained reference stands for: the base window's
+    * text with the referencing specification's clauses (`suffix`)
+    * appended, under the standard's rules (`at` names the reference in
+    * the refusal).
+    */
+  private def composeChain(baseName: String, base: String, suffix: String,
+                           at: String): String = {
+    val sTrim = suffix.trim
+    if (sTrim.isEmpty) return base
+    val sm = stripLiterals(sTrim)
+    require(!wordAt(sm, 0, "partition"),
+      s"$at chains window '$baseName' and adds PARTITION BY — a " +
+        "chained window cannot override the base partitioning")
+    require(SpecKeywords.exists(wordAt(sm, 0, _)),
+      s"$at chains window '$baseName' but continues with " +
+        s"'${sTrim.take(20)}' — only ORDER BY and a frame clause can " +
+        "follow a chained window name")
+    val b = windowSpec(base)
+    require(b.frame < 0,
+      s"$at chains window '$baseName', whose specification carries a " +
+        "frame clause — the standard forbids copying a framed window")
+    require(!(b.order >= 0 && wordAt(sm, 0, "order")),
+      s"$at chains window '$baseName' and adds ORDER BY, but the " +
+        "base already orders — the standard forbids overriding it")
+    s"$base $sTrim"
+  }
+
+  /** w20/w17: `agg(args) FILTER (WHERE cond) OVER …`. Spark refuses
+    * FILTER on window functions entirely; DuckDB runs it. The one fold
+    * for every window FILTER, EXCLUDE or not: agg(CASE WHEN cond THEN arg
+    * END) — the CASE's NULL is skipped by every NULL-skipping aggregate,
+    * COUNT(*) becomes COUNT(CASE WHEN cond THEN 1 END), and
+    * COUNT/SUM/AVG(DISTINCT x) fold INSIDE the DISTINCT. The folded call
+    * then lowers like any other through [[rewriteWindowExclude]] and
+    * [[rewriteDistinctWindow]], which run after this pass. Restricted to
+    * SUM/COUNT/AVG/MIN/MAX — the aggregates whose NULL-skip contract
+    * makes the fold exact; anything else refuses loudly.
     */
   def rewriteWindowFilter(sql: String): String = {
     // cheap pre-test: no FILTER or no OVER anywhere → nothing to do
     val pre = stripLiterals(sql)
     if (findAnyDepthKeyword(pre, "filter") < 0 ||
       findAnyDepthKeyword(pre, "over") < 0) return sql
-    var cur = sql
-    var guard = 0
-    var more = true
-    while (more && guard < 64) {
-      more = false
-      val m = stripLiterals(cur)
-      var o = 0
-      while (!more && o < m.length) {
-        if (wordAt(m, o, "over")) {
-          // ---- a FILTER (WHERE …) clause directly before OVER? ----
-          var q = o - 1
-          while (q >= 0 && m.charAt(q).isWhitespace) q -= 1
-          val filter =
-            if (q >= 0 && m.charAt(q) == ')') callEndingAt(m, q) else None
-          filter match {
-            case Some((fs, fe, fOpen))
-                if cur.substring(fs, fe).equalsIgnoreCase("filter") =>
-                val inner = cur.substring(fOpen + 1, q).trim
-                val innerMask = stripLiterals(inner)
-                val wp = skipWsAt(innerMask, 0)
-                require(wordAt(innerMask, wp, "where"),
-                  s"malformed FILTER clause before OVER: " +
-                    s"(${inner.take(40)})")
-                val cond = inner.substring(wp + 5).trim
-                require(cond.nonEmpty, "empty FILTER condition")
-                // ---- the aggregate call before FILTER ----
-                var q2 = fs - 1
-                while (q2 >= 0 && m.charAt(q2).isWhitespace) q2 -= 1
-                require(q2 >= 0 && m.charAt(q2) == ')',
-                  "FILTER must directly follow agg(args)")
-                val (fs2, fe2, argOpen2) = callEndingAt(m, q2).getOrElse(
-                  throw new IllegalArgumentException(
-                    "unbalanced parens before FILTER"))
-                val fname = cur.substring(fs2, fe2)
-                val fnameLc = fname.toLowerCase
-                require(Set("sum", "count", "avg", "min", "max")
-                  .contains(fnameLc),
-                  s"FILTER over a window supports SUM/COUNT/AVG/MIN/MAX " +
-                    s"(the NULL-skip fold), got $fname")
-                val args2 = cur.substring(argOpen2 + 1, q2).trim
-                val args2Mask = stripLiterals(args2)
-                val d2 = findTopLevelKeywordIn(args2Mask, 0, "distinct")
-                require(d2 < 0 ||
-                  Set("count", "sum", "avg").contains(fnameLc),
-                  "FILTER over a DISTINCT window aggregate is " +
-                    "supported for COUNT/SUM/AVG")
-                val folded =
-                  if (d2 >= 0) {
-                    require(skipWsAt(args2Mask, 0) == d2,
-                      s"malformed DISTINCT argument list: " +
-                        s"${args2.take(40)}")
-                    val bare = args2.substring(d2 + 8).trim
-                    s"(DISTINCT CASE WHEN ($cond) THEN ($bare) END)"
-                  }
-                  else if (args2 == "*") s"(CASE WHEN ($cond) THEN 1 END)"
-                  else s"(CASE WHEN ($cond) THEN ($args2) END)"
-                cur = cur.substring(0, fs2) + fname + folded +
-                  cur.substring(q + 1)
-                more = true
-            case _ =>
-          }
-        }
-        o += 1
-      }
-      guard += 1
+    rewriteEach(sql, "window FILTER clauses")(_.filter.isDefined) { (cur, c) =>
+      val inner = c.filter.get
+      val innerMask = stripLiterals(inner)
+      val wp = skipWsAt(innerMask, 0)
+      require(wordAt(innerMask, wp, "where"),
+        s"malformed FILTER clause before OVER: (${inner.take(40)})")
+      val cond = inner.substring(wp + 5).trim
+      require(cond.nonEmpty, "empty FILTER condition")
+      require(c.fn.nonEmpty, "FILTER must directly follow agg(args)")
+      val fnameLc = c.fn.toLowerCase
+      require(Set("sum", "count", "avg", "min", "max").contains(fnameLc),
+        s"FILTER over a window supports SUM/COUNT/AVG/MIN/MAX " +
+          s"(the NULL-skip fold), got ${c.fn}")
+      require(!c.distinct || Set("count", "sum", "avg").contains(fnameLc),
+        "FILTER over a DISTINCT window aggregate is supported for " +
+          "COUNT/SUM/AVG")
+      val folded =
+        if (c.distinct) s"(DISTINCT CASE WHEN ($cond) THEN (${c.args}) END)"
+        else if (c.args == "*") s"(CASE WHEN ($cond) THEN 1 END)"
+        else s"(CASE WHEN ($cond) THEN (${c.args}) END)"
+      cur.substring(0, c.start) + c.fn + folded + cur.substring(c.callEnd)
     }
-    require(!more, "more than 63 window FILTER clauses in one statement")
-    cur
   }
 
   /** w18: DISTINCT aggregates over a window. Spark refuses them
@@ -2286,238 +2453,52 @@ object Dialect {
     val pre = stripLiterals(sql)
     if (findAnyDepthKeyword(pre, "distinct") < 0 ||
       findAnyDepthKeyword(pre, "over") < 0) return sql
-    var cur = sql
-    var guard = 0
-    var more = true
-    while (more && guard < 64) {
-      more = false
-      val m = stripLiterals(cur)
-      var o = 0
-      while (!more && o < m.length) {
-        if (wordAt(m, o, "over")) {
-          // ---- the call directly before OVER: agg '(' args ')' ----
-          var q = o - 1
-          while (q >= 0 && m.charAt(q).isWhitespace) q -= 1
-          val call =
-            if (q >= 0 && m.charAt(q) == ')') callEndingAt(m, q) else None
-          call match {
-            case Some((fs, fe, argOpen)) =>
-              val fname = cur.substring(fs, fe).toLowerCase
-              val argsMask = m.substring(argOpen + 1, q)
-              val dPos = findTopLevelKeywordIn(argsMask, 0, "distinct")
-              if (fname.nonEmpty && dPos >= 0 &&
-                skipWsAt(argsMask, 0) == dPos) {
-                require(Set("count", "sum", "avg").contains(fname),
-                  s"DISTINCT window aggregates are supported for " +
-                    s"COUNT/SUM/AVG (got $fname) — and SUM/AVG only " +
-                    "over integral/decimal inputs (the order-free exact " +
-                    "fold); a float DISTINCT re-fold is not reproducibly " +
-                    "ordered")
-                // single argument only (top-level comma = a second one)
-                var dd = 0
-                var multiArg = false
-                argsMask.substring(dPos + 8).foreach {
-                  case '(' => dd += 1
-                  case ')' => dd -= 1
-                  case ',' if dd == 0 => multiArg = true
-                  case _ =>
-                }
-                require(!multiArg,
-                  s"${fname.toUpperCase}(DISTINCT a, b) over a window " +
-                    "is not supported — combine the keys into one " +
-                    "expression (e.g. a struct or concat)")
-                val arg =
-                  cur.substring(argOpen + 1 + dPos + 8, q).trim
-                require(arg.nonEmpty,
-                  s"${fname.toUpperCase}(DISTINCT) needs an argument")
-                // ---- the OVER target: (spec) or a named window ----
-                val k = skipWsAt(m, o + 4)
-                require(k < m.length,
-                  "dangling OVER after COUNT(DISTINCT …)")
-                val overEnd =
-                  if (m.charAt(k) == '(') matchParenAt(m, k)
-                  else {
-                    require(isIdentStart(m.charAt(k)),
-                      "OVER needs a (specification) or a window name")
-                    var z = k
-                    while (z < m.length && isIdentChar(m.charAt(z))) z += 1
-                    z - 1
-                  }
-                val overText = cur.substring(k, overEnd + 1)
-                // collect_SET, not collect_list + array_distinct: the
-                // set dedups INSIDE the aggregation buffer, so Spark's
-                // incremental frame processors stay O(partition) and the
-                // per-row projection is a constant-time size() — the
-                // list variant re-deduplicated an O(frame) array per
-                // row (O(n²) per partition on unbounded frames; 220 s
-                // on the sf0.1 bench before this change). SUM/AVG (w22)
-                // lower onto the AGGREGATE forms
-                // ([[graft.functions.SumDistinctExact]] — set in the
-                // buffer, order-free exact fold ONCE at eval, float
-                // inputs refused at analysis time): the scalar
-                // fold-over-collect_set shape folded an identical
-                // per-partition array once PER ROW on whole-partition
-                // specs — O(rows × distinct), 8.3 s for one column on
-                // the round-18 sf0.1 bench before this change.
-                val rewritten = fname match {
-                  case "count" =>
-                    s"CAST(size(collect_set($arg) OVER $overText) AS BIGINT)"
-                  case "sum" =>
-                    s"sum_distinct_exact($arg) OVER $overText"
-                  case _ =>
-                    s"avg_distinct_exact($arg) OVER $overText"
-                }
-                cur = cur.substring(0, fs) + rewritten +
-                  cur.substring(overEnd + 1)
-                more = true
-              }
-            case None =>
-          }
-        }
-        o += 1
+    // a FILTER-carrying call is the FILTER fold's, which runs first
+    rewriteEach(sql, "DISTINCT window aggregates")(c =>
+      c.distinct && c.fn.nonEmpty && c.filter.isEmpty) { (cur, c) =>
+      val fname = c.fn.toLowerCase
+      require(Set("count", "sum", "avg").contains(fname),
+        s"DISTINCT window aggregates are supported for " +
+          s"COUNT/SUM/AVG (got $fname) — and SUM/AVG only " +
+          "over integral/decimal inputs (the order-free exact " +
+          "fold); a float DISTINCT re-fold is not reproducibly " +
+          "ordered")
+      // single argument only (top-level comma = a second one)
+      require(splitTopLevel(c.args).size == 1,
+        s"${fname.toUpperCase}(DISTINCT a, b) over a window " +
+          "is not supported — combine the keys into one " +
+          "expression (e.g. a struct or concat)")
+      val arg = c.args
+      require(arg.nonEmpty,
+        s"${fname.toUpperCase}(DISTINCT) needs an argument")
+      require(c.end > c.targetAt,
+        "OVER needs a (specification) or a window name")
+      val overText = cur.substring(c.targetAt, c.end)
+      // collect_SET, not collect_list + array_distinct: the
+      // set dedups INSIDE the aggregation buffer, so Spark's
+      // incremental frame processors stay O(partition) and the
+      // per-row projection is a constant-time size() — the
+      // list variant re-deduplicated an O(frame) array per
+      // row (O(n²) per partition on unbounded frames; 220 s
+      // on the sf0.1 bench before this change). SUM/AVG (w22)
+      // lower onto the AGGREGATE forms
+      // ([[graft.functions.SumDistinctExact]] — set in the
+      // buffer, order-free exact fold ONCE at eval, float
+      // inputs refused at analysis time): the scalar
+      // fold-over-collect_set shape folded an identical
+      // per-partition array once PER ROW on whole-partition
+      // specs — O(rows × distinct), 8.3 s for one column on
+      // the round-18 sf0.1 bench before this change.
+      val rewritten = fname match {
+        case "count" =>
+          s"CAST(size(collect_set($arg) OVER $overText) AS BIGINT)"
+        case "sum" =>
+          s"sum_distinct_exact($arg) OVER $overText"
+        case _ =>
+          s"avg_distinct_exact($arg) OVER $overText"
       }
-      guard += 1
+      cur.substring(0, c.start) + rewritten + cur.substring(c.end)
     }
-    require(!more,
-      "more than 63 DISTINCT window aggregates in one statement")
-    cur
-  }
-
-  /** w13: inline named-window definitions whose spec carries an EXCLUDE
-    * clause — `OVER name` references become `OVER (spec)` and the
-    * definition leaves the WINDOW clause (dropped entirely when empty).
-    * Exclusion-free definitions stay put: Spark executes them natively.
-    */
-  private def inlineExcludeNamedWindows(sql: String): String = {
-    val m = stripLiterals(sql)
-    // cheap pre-test: no EXCLUDE word anywhere → nothing to inline, and
-    // the WINDOW-clause parse below never runs (review-caught: it used
-    // to run — and could falsely reject — on EXCLUDE-free statements)
-    if (findAnyDepthKeyword(m, "exclude") < 0) return sql
-    // the WINDOW CLAUSE keyword: top level, followed by an identifier
-    // then AS — `window(ts, …)` the function and `OVER (… window …)`
-    // never match
-    var w = -1
-    var probe = findTopLevelKeywordIn(m, 0, "window")
-    while (probe >= 0 && w < 0) {
-      val k = skipWsAt(m, probe + 6)
-      if (k < m.length && isIdentStart(m.charAt(k))) {
-        var e = k
-        while (e < m.length && isIdentBoundaryChar(m.charAt(e))) e += 1
-        if (wordAt(m, skipWsAt(m, e), "as")) w = probe
-      }
-      if (w < 0) probe = findTopLevelKeywordIn(m, probe + 6, "window")
-    }
-    if (w < 0) return sql
-    // parse the `name AS (spec) | name AS other_name` comma-list until a
-    // trailing clause keyword (the bare-reference form is valid Spark —
-    // review-caught; it cannot carry EXCLUDE and passes through)
-    var i = skipWsAt(m, w + 6)
-    // (name, spec-or-ref, isRef)
-    val defs = scala.collection.mutable.ArrayBuffer.empty[(String, String, Boolean)]
-    var clauseEnd = sql.length
-    var done = false
-    while (!done) {
-      val ns = i
-      while (i < m.length && isIdentBoundaryChar(m.charAt(i))) i += 1
-      val name = sql.substring(ns, i)
-      require(name.nonEmpty, "malformed WINDOW clause: missing name")
-      i = skipWsAt(m, i)
-      require(wordAt(m, i, "as"), s"malformed WINDOW clause at: $name")
-      i = skipWsAt(m, i + 2)
-      if (i < m.length && m.charAt(i) == '(') {
-        val close = matchParenAt(m, i)
-        defs += ((name, sql.substring(i + 1, close), false))
-        i = skipWsAt(m, close + 1)
-      } else {
-        val rs = i
-        while (i < m.length && isIdentBoundaryChar(m.charAt(i))) i += 1
-        val ref = sql.substring(rs, i)
-        require(ref.nonEmpty,
-          s"WINDOW $name AS needs a specification or a window name")
-        defs += ((name, ref, true))
-        i = skipWsAt(m, i)
-      }
-      if (i < m.length && m.charAt(i) == ',') i = skipWsAt(m, i + 1)
-      else { clauseEnd = i.min(sql.length); done = true }
-    }
-    val hasExclude = (d: (String, String, Boolean)) => !d._3 &&
-      findTopLevelKeywordIn(stripLiterals(d._2), 0, "exclude") >= 0
-    if (!defs.exists(hasExclude)) return sql
-    // chained references and EXCLUDE don't mix (review-caught): an
-    // EXCLUDE spec whose text opens with a window NAME would inline an
-    // invalid spec, and a kept definition referencing a dropped EXCLUDE
-    // name would dangle — refuse both loudly
-    defs.filter(hasExclude).foreach { case (name, spec, _) =>
-      val sm = stripLiterals(spec)
-      val f = skipWsAt(sm, 0)
-      val opensWithName = f < sm.length && isIdentStart(sm.charAt(f)) &&
-        !Seq("partition", "order", "rows", "range", "groups")
-          .exists(kw => wordAt(sm, f, kw))
-      require(!opensWithName,
-        s"WINDOW $name chains another window name with EXCLUDE — " +
-          "write the full specification inline")
-    }
-    val excludeNames = defs.filter(hasExclude).map(_._1.toLowerCase).toSet
-    defs.filterNot(hasExclude).foreach { case (name, spec, isRef) =>
-      val refHit =
-        if (isRef) excludeNames.contains(spec.toLowerCase)
-        else excludeNames.exists(en =>
-          findAnyDepthWord(stripLiterals(spec), en) >= 0)
-      require(!refHit,
-        s"WINDOW $name references an EXCLUDE-carrying window that this " +
-          "rewrite inlines away — write the full specification inline")
-    }
-    // a SECOND window clause anywhere (e.g. a subquery's own WINDOW w)
-    // could define the same name: blind any-depth reference rewriting
-    // would capture it silently — refuse loudly instead (review-caught)
-    var clauses = 0
-    var scan = 0
-    while (scan < m.length) {
-      if (wordAt(m, scan, "window")) {
-        val k = skipWsAt(m, scan + 6)
-        if (k < m.length && isIdentStart(m.charAt(k))) {
-          var e = k
-          while (e < m.length && isIdentBoundaryChar(m.charAt(e))) e += 1
-          if (wordAt(m, skipWsAt(m, e), "as")) clauses += 1
-        }
-      }
-      scan += 1
-    }
-    require(clauses == 1,
-      "EXCLUDE in a named WINDOW cannot inline when the statement has " +
-        "more than one WINDOW clause (a subquery's same-named window " +
-        "would be captured) — inline the OVER specification by hand")
-    val keep = defs.filterNot(hasExclude)
-    val clauseText =
-      if (keep.isEmpty) ""
-      else "WINDOW " + keep.map { case (n, s, isRef) =>
-        if (isRef) s"$n AS $s" else s"$n AS ($s)"
-      }.mkString(", ") + " "
-    var out = sql.substring(0, w) + clauseText + sql.substring(clauseEnd)
-    defs.filter(hasExclude).foreach { case (name, spec, _) =>
-      // replace every `OVER name` reference (any depth, masked scan)
-      var guard = 0
-      var changed = true
-      while (changed && guard < 64) {
-        changed = false
-        val om = stripLiterals(out)
-        var o = 0
-        while (o < om.length && !changed) {
-          if (wordAt(om, o, "over")) {
-            val k = skipWsAt(om, o + 4)
-            if (wordAt(om, k, name)) {
-              out = out.substring(0, k) + s"($spec)" +
-                out.substring(k + name.length)
-              changed = true
-            }
-          }
-          o += 1
-        }
-        guard += 1
-      }
-    }
-    out
   }
 
   /** GROUPS window-frame mode (w14). Spark has no GROUPS frames; the
@@ -2552,32 +2533,8 @@ object Dialect {
   def rewriteGroupsFrames(sql: String): String = {
     val m0 = stripLiterals(sql)
     if (findAnyDepthKeyword(m0, "groups") < 0) return sql
-    // (overPos, specOpen, specClose, groupsPosInSpec)
-    def findHit(m: String): Option[(Int, Int, Int, Int)] = {
-      var o = 0
-      while (o < m.length) {
-        if (wordAt(m, o, "over")) {
-          val k = skipWsAt(m, o + 4)
-          if (k < m.length && m.charAt(k) == '(') {
-            val close = matchParenAt(m, k)
-            val specMask = m.substring(k + 1, close)
-            var g = findTopLevelKeywordIn(specMask, 0, "groups")
-            while (g >= 0) {
-              val nx = skipWsAt(specMask, g + 6)
-              if (wordAt(specMask, nx, "between") ||
-                wordAt(specMask, nx, "unbounded") ||
-                wordAt(specMask, nx, "current") ||
-                (nx < specMask.length && specMask.charAt(nx).isDigit))
-                return Some((o, k, close, g))
-              g = findTopLevelKeywordIn(specMask, g + 6, "groups")
-            }
-          }
-        }
-        o += 1
-      }
-      None
-    }
-    if (findHit(m0).isEmpty) return sql // identifier named groups only
+    def isGroups(c: WindowCall): Boolean = c.spec.exists(_.mode == "groups")
+    if (!windowCalls(sql).exists(isGroups)) return sql // identifier named groups only
     // is position p inside a nested SELECT (any open paren group that
     // contains a select keyword)?
     def insideSubquery(m: String, p: Int): Boolean = {
@@ -2601,34 +2558,24 @@ object Dialect {
     // ---- replace every GROUPS OVER, collecting dense_rank defs ----
     val defKeys = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val defPo = scala.collection.mutable.ArrayBuffer.empty[String]
-    var cur = sql
-    var guard = 0
-    var hit = findHit(stripLiterals(cur))
-    while (hit.isDefined && guard < 64) {
-      val (o, k, close, g) = hit.get
-      val mcur = stripLiterals(cur)
-      require(!insideSubquery(mcur, o),
+    val cur = rewriteEach(sql, "GROUPS frames")(isGroups) { (cur, c) =>
+      require(!insideSubquery(stripLiterals(cur), c.over),
         "GROUPS frames are supported in the outermost SELECT only — " +
           "lift the windowed subquery or rewrite its frame in ROWS mode")
-      val spec = cur.substring(k + 1, close)
-      val poMask = mcur.substring(k + 1, k + 1 + g)
-      val po = spec.substring(0, g)
-      val orderPos = findTopLevelKeywordIn(poMask, 0, "order")
-      require(orderPos >= 0,
+      val spec = c.spec.get
+      require(spec.order >= 0,
         "a GROUPS frame requires an ORDER BY in the window specification")
-      val partText = spec.substring(0, orderPos).trim
-      val frameBody = spec.substring(g + 6) // after the GROUPS keyword
-      val key = po.trim.replaceAll("\\s+", " ").toLowerCase
+      val po = spec.partitionOrder
+      val key = po.replaceAll("\\s+", " ").toLowerCase
       val idx = defKeys.getOrElseUpdate(key, {
-        defPo += po.trim; defKeys.size
+        defPo += po; defKeys.size
       })
+      val partText = spec.text.substring(0, spec.order).trim
+      val frameBody = spec.text.substring(spec.frame + 6) // after GROUPS
       val newSpec = (if (partText.isEmpty) "" else partText + " ") +
         s"ORDER BY `__grp_$idx` RANGE$frameBody"
-      cur = cur.substring(0, k + 1) + newSpec + cur.substring(close)
-      guard += 1
-      hit = findHit(stripLiterals(cur))
+      cur.substring(0, c.targetAt + 1) + newSpec + cur.substring(c.end - 1)
     }
-    require(hit.isEmpty, "more than 64 GROUPS frames in one statement")
     // ---- wrap: items over a derived table carrying the group indexes ----
     val m = stripLiterals(cur)
     val itemsStart = skipWsAt(m, 0) + 6
@@ -2685,20 +2632,8 @@ object Dialect {
   private def nullsLastWindowOrder(po: String): String = {
     val m = stripLiterals(po)
     val orderPos = findTopLevelKeywordIn(m, 0, "order")
-    if (orderPos < 0) return po
-    val by = findTopLevelKeywordIn(m, orderPos + 5, "by")
-    if (by < 0) return po
-    val items = splitTopLevel(po.substring(by + 2)).map { it =>
-      val mIt = stripLiterals(it)
-      if ("(?i)\\bnulls\\b".r.findFirstIn(mIt).isDefined) it
-      else {
-        val lastCode = mIt.lastIndexWhere(!_.isWhitespace)
-        if (lastCode < 0) it
-        else it.substring(0, lastCode + 1) + " NULLS LAST" +
-          it.substring(lastCode + 1)
-      }
-    }
-    po.substring(0, by + 2) + items.mkString(",")
+    val by = if (orderPos < 0) -1 else findTopLevelKeywordIn(m, orderPos + 5, "by")
+    if (by < 0) po else po.substring(0, by + 2) + nullsLastItems(po.substring(by + 2))
   }
 
   /** First any-depth occurrence of keyword `kw` in a masked view. */
@@ -2711,8 +2646,12 @@ object Dialect {
     -1
   }
 
-  private def findAnyDepthWord(m: String, w: String): Int =
-    findAnyDepthKeyword(m, w)
+  /** End of the identifier word starting at offset `k` of a masked view. */
+  private def wordEnd(m: String, k: Int): Int = {
+    var e = k
+    while (e < m.length && isIdentBoundaryChar(m.charAt(e))) e += 1
+    e
+  }
 
   private[sql] def skipWsAt(m: String, k0: Int): Int = {
     var k = k0
@@ -2776,152 +2715,59 @@ object Dialect {
       "unbalanced parentheses in the statement")
   }
 
-  /** Rewrite one `fn(args) OVER (spec EXCLUDE kind)` occurrence.
-    * `o` = OVER keyword offset, `k`/`close` = the spec parens,
-    * `e` = EXCLUDE offset within the spec.
+  /** Rewrite one `fn(args) OVER (spec EXCLUDE kind)` call. FILTER has
+    * folded into the call's argument before this pass runs.
     */
-  private def rewriteOneExclude(cur: String, m: String, o: Int, k: Int,
-                                close: Int, e: Int): String = {
-    val spec = cur.substring(k + 1, close)
-    val specMask = m.substring(k + 1, close)
-    // ---- the exclusion kind (must end the spec — standard grammar) ----
-    var p = skipWsAt(specMask, e + 7)
-    val kind: String =
-      if (wordAt(specMask, p, "current")) {
-        p = skipWsAt(specMask, p + 7)
-        require(wordAt(specMask, p, "row"), "EXCLUDE CURRENT needs ROW")
-        p += 3; "current"
-      } else if (wordAt(specMask, p, "group")) { p += 5; "group" }
-      else if (wordAt(specMask, p, "ties")) { p += 4; "ties" }
-      else if (wordAt(specMask, p, "no")) {
-        p = skipWsAt(specMask, p + 2)
-        require(wordAt(specMask, p, "others"), "EXCLUDE NO needs OTHERS")
-        p += 6; "none"
-      } else throw new IllegalArgumentException(
-        s"malformed EXCLUDE clause: ${spec.substring(e).trim.take(40)}")
-    require(skipWsAt(specMask, p) >= specMask.length,
-      "EXCLUDE must be the last clause of the window specification, " +
-        s"found trailing: ${spec.substring(p).trim.take(40)}")
-    val specP = spec.substring(0, e).trim // spec without the exclusion
+  private def rewriteOneExclude(cur: String, c: WindowCall): String = {
+    val spec = c.spec.get
+    val kind = spec.exclusion
+    val specP = spec.withoutExclude
     if (kind == "none") // NO OTHERS ≡ no exclusion
-      return cur.substring(0, k) + s"($specP)" + cur.substring(close + 1)
-    // ---- the aggregate call directly before OVER ----
-    var q = o - 1
-    while (q >= 0 && m.charAt(q).isWhitespace) q -= 1
-    require(q >= 0 && m.charAt(q) == ')',
+      return cur.substring(0, c.targetAt) + s"($specP)" + cur.substring(c.end)
+    require(c.fn.nonEmpty,
       "EXCLUDE (rewritten as frame algebra) needs agg(args) [FILTER " +
         "(WHERE …)] directly before OVER — bare calls are not supported")
-    val (fs, fe, argOpen) = callEndingAt(m, q).getOrElse(
-      throw new IllegalArgumentException("unbalanced parens before OVER"))
-    val fname = cur.substring(fs, fe).toLowerCase
-    if (fname == "filter") {
-      // w17: `agg(args) FILTER (WHERE cond) OVER (spec EXCLUDE …)` —
-      // fold the filter into the argument: agg(CASE WHEN cond THEN arg
-      // END) is EXACTLY the FILTER semantics for SUM/COUNT/AVG/MIN/MAX
-      // (the aggregate skips the NULLs the CASE produces; COUNT(*)
-      // becomes COUNT(CASE WHEN cond THEN 1 END), probed vs DuckDB's
-      // native FILTER+EXCLUDE). The folded text re-enters this rewrite
-      // as a plain call on the loop's next pass.
-      val inner = cur.substring(argOpen + 1, q).trim
-      val innerMask = stripLiterals(inner)
-      val wp = skipWsAt(innerMask, 0)
-      require(wordAt(innerMask, wp, "where"),
-        s"malformed FILTER clause before OVER: (${inner.take(40)})")
-      val cond = inner.substring(wp + 5).trim
-      require(cond.nonEmpty, "empty FILTER condition")
-      var q2 = fs - 1
-      while (q2 >= 0 && m.charAt(q2).isWhitespace) q2 -= 1
-      require(q2 >= 0 && m.charAt(q2) == ')',
-        "FILTER must directly follow agg(args)")
-      val (fs2, fe2, argOpen2) = callEndingAt(m, q2).getOrElse(
-        throw new IllegalArgumentException("unbalanced parens before FILTER"))
-      val fname2 = cur.substring(fs2, fe2)
-      require(fname2.nonEmpty, "FILTER needs an aggregate call before it")
-      val args2 = cur.substring(argOpen2 + 1, q2).trim
-      val args2Mask = stripLiterals(args2)
-      val d2 = findTopLevelKeywordIn(args2Mask, 0, "distinct")
-      // COUNT/SUM/AVG(DISTINCT x) FILTER (w18/w22): the filter folds
-      // INSIDE the DISTINCT — the CASE's filtered-out NULL is skipped
-      // by both the distinct aggregate and the collect_set it later
-      // lowers onto, so agg(DISTINCT CASE WHEN c THEN x END) IS the
-      // FILTER semantics. Other DISTINCT aggregates stay refused:
-      // their fold is not subtraction-decomposable.
-      require(d2 < 0 ||
-        Set("count", "sum", "avg").contains(fname2.toLowerCase),
-        "EXCLUDE over a DISTINCT aggregate is supported for " +
-          "COUNT/SUM/AVG")
-      val folded =
-        if (d2 >= 0) {
-          require(skipWsAt(args2Mask, 0) == d2,
-            s"malformed DISTINCT argument list: ${args2.take(40)}")
-          val bare = args2.substring(d2 + 8).trim
-          s"(DISTINCT CASE WHEN ($cond) THEN ($bare) END)"
-        }
-        else if (args2 == "*") s"(CASE WHEN ($cond) THEN 1 END)"
-        else s"(CASE WHEN ($cond) THEN ($args2) END)"
-      return cur.substring(0, fs2) + fname2 + folded + cur.substring(q + 1)
-    }
+    require(c.filter.isEmpty,
+      "a FILTER clause under EXCLUDE folds before the EXCLUDE algebra — " +
+        "lower the statement through Dialect.lowerClauses")
+    val fname = c.fn.toLowerCase
     require(Set("sum", "count", "avg", "min", "max").contains(fname),
       s"EXCLUDE rewrite supports SUM/COUNT/AVG (subtraction algebra) " +
         s"and MIN/MAX (before/after frame split), got $fname")
-    val argsRaw = cur.substring(argOpen + 1, q)
-    val argsMask = m.substring(argOpen + 1, q)
-    val dPos = findTopLevelKeywordIn(argsMask, 0, "distinct")
-    require(dPos < 0 || Set("count", "sum", "avg").contains(fname),
+    require(!c.distinct || Set("count", "sum", "avg").contains(fname),
       "EXCLUDE over a DISTINCT aggregate is supported for COUNT/SUM/AVG " +
         "(SUM/AVG only over integral/decimal inputs — the order-free " +
         "exact fold; a float DISTINCT re-fold is not reproducibly " +
         "ordered)")
-    val isDistinct = dPos >= 0
-    if (isDistinct) {
-      require(skipWsAt(argsMask, 0) == dPos,
-        s"malformed DISTINCT argument list: ${argsRaw.trim.take(40)}")
-      // only a TOP-LEVEL comma is a second argument (a comma inside
-      // coalesce(a, b) parens is content)
-      var dd = 0
-      var multiArg = false
-      argsMask.substring(dPos + 8).foreach {
-        case '(' => dd += 1
-        case ')' => dd -= 1
-        case ',' if dd == 0 => multiArg = true
-        case _ =>
-      }
-      require(!multiArg,
-        "COUNT(DISTINCT a, b) under EXCLUDE is not supported — combine " +
-          "the keys into one expression (e.g. a struct or concat)")
-    }
-    val args =
-      if (isDistinct) argsRaw.substring(dPos + 8).trim else argsRaw.trim
+    // only a TOP-LEVEL comma is a second argument (a comma inside
+    // coalesce(a, b) parens is content)
+    require(!c.distinct || splitTopLevel(c.args).size == 1,
+      "COUNT(DISTINCT a, b) under EXCLUDE is not supported — combine " +
+        "the keys into one expression (e.g. a struct or concat)")
+    val args = c.args
     val isStar = args == "*"
     require(!isStar || fname == "count", s"$fname(*) is not valid SQL")
     require(args.nonEmpty, s"$fname() needs an argument")
-    // ---- split the spec into partition/order vs frame, validate ----
-    val specPMask = specMask.substring(0, e)
-    val framePos = Seq("rows", "range", "groups")
-      .map(kw => findTopLevelKeywordIn(specPMask, 0, kw)).filter(_ >= 0)
-      .minOption.getOrElse(-1)
-    val po = (if (framePos < 0) specP else spec.substring(0, framePos)).trim
-    val frameText =
-      if (framePos < 0) "" else spec.substring(framePos, e).trim
-    val orderPresent = findTopLevelKeywordIn(
-      stripLiterals(po), 0, "order") >= 0
+    val po = spec.partitionOrder
+    val frameText = spec.frameText
+    val orderPresent = spec.order >= 0
     // min/max take the before/after ROWS-frame split path (w15):
     // frame minus current row = combine(agg(start‥1 PRECEDING),
     // agg(1 FOLLOWING‥end)) — exact for any agg whose merge is its own
     // combine, which subtraction-decomposable algebra can't cover
     if (fname == "min" || fname == "max")
-      return cur.substring(0, fs) +
+      return cur.substring(0, c.start) +
         minMaxExclude(fname, args, po, frameText, kind, orderPresent) +
-        cur.substring(close + 1)
+        cur.substring(c.end)
     // COUNT(DISTINCT x) takes the collect-and-dedup split path (w18):
     // subtraction algebra cannot remove a value that also occurs
     // elsewhere in the frame, so the frame's before/after slices are
     // COLLECTED and the distinct count is the size of the deduplicated
     // concatenation — exact for any element type
-    if (isDistinct)
-      return cur.substring(0, fs) +
+    if (c.distinct)
+      return cur.substring(0, c.start) +
         distinctExclude(fname, args, po, frameText, kind, orderPresent) +
-        cur.substring(close + 1)
+        cur.substring(c.end)
     validateExcludeFrame(frameText, kind, orderPresent)
     require(kind == "current" || orderPresent,
       s"EXCLUDE ${kind.toUpperCase} needs an ORDER BY in the window " +
@@ -2958,7 +2804,7 @@ object Dialect {
             s"ELSE CAST($fullSum - $minusSum AS DOUBLE) / " +
             s"($fullCnt - $minusCnt) END)"
       }
-    cur.substring(0, fs) + exprOut + cur.substring(close + 1)
+    cur.substring(0, c.start) + exprOut + cur.substring(c.end)
   }
 
   /** Split a frame body (`[between] <start> [and <end>]` after the mode

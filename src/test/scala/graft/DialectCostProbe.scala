@@ -9,23 +9,11 @@ object DialectCostProbe {
   def main(args: Array[String]): Unit = {
     val step = """SELECT e7.dst, r.d + 1 FROM __rec_reach7_ab12cd34 r
            JOIN __rec_e7_ab12cd34 e7 ON e7.src = r.id WHERE r.d < 16"""
-    def lower(q: String): String = {
-      val q0 = Dialect.rewriteDistinctWindow(Dialect.rewriteWindowFilter(
-        Dialect.rewriteWindowExclude(Dialect.inlineChainedWindows(
-          Dialect.rewriteOrderedAggs(Dialect.rewriteSimilarGlob(
-            Dialect.rewriteIgnoreNulls(Dialect.rewriteDotCalls(
-              Dialect.rewriteSubscripts(Dialect.rewriteStructLiterals(
-                Dialect.rewritePowerOp(
-                  Dialect.rewriteSeriesTvf(Dialect.stripTrailingCommas(
-                    Dialect.fromFirst(q).getOrElse(q))))))))))))))
-      Dialect.orderByNullsLast(
-        Dialect.rewriteGroupsFrames(Dialect.aliasesIntoWhere(q0)))
-    }
     // warm
     (1 to 20).foreach { _ =>
       graft.sql.SampleSql.splitUsingSample(step)
       graft.sql.RecursiveUnion.parse(step)
-      lower(step)
+      Dialect.lowerClauses(step)
     }
     val n = 200
     var t0 = System.nanoTime()
@@ -35,7 +23,7 @@ object DialectCostProbe {
     (1 to n).foreach(_ => graft.sql.RecursiveUnion.parse(step))
     println(f"[cost] RecursiveUnion.parse: ${(System.nanoTime() - t0) / 1e6 / n}%.2f ms")
     t0 = System.nanoTime()
-    (1 to n).foreach(_ => lower(step))
+    (1 to n).foreach(_ => Dialect.lowerClauses(step))
     println(f"[cost] dialect lower chain: ${(System.nanoTime() - t0) / 1e6 / n}%.2f ms")
     t0 = System.nanoTime()
     (1 to n).foreach(_ => graft.sql.AsOfSql.detect(step))

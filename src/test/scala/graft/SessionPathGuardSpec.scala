@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the single session path from eroding one query at a time: one
   * session builder, no per-query installs in the query catalogue, one
-  * memory-sink stream runner in the library, and one SQL statement
-  * pipeline behind every SQL surface.
+  * memory-sink stream runner in the library, one SQL statement
+  * pipeline (and one clause chain) behind every SQL surface, and one
+  * parse of window calls and WINDOW clauses under the window passes.
   */
 class SessionPathGuardSpec extends AnyFunSuite {
 
@@ -24,7 +25,12 @@ class SessionPathGuardSpec extends AnyFunSuite {
   // the needles are split so this file does not match itself
   private val Builder = "SparkSession" + ".builder()"
   private val Install = "Registry" + ".registerAll("
-  private val Chain = "Dialect" + ".rewriteSeriesTvf("
+  // two adjacent passes of the clause chain, nested or listed, in
+  // either order: the mark of a copy of the chain
+  private val Chain = {
+    val (a, b) = ("stripTrailing" + "Commas", "rewriteSeries" + "Tvf")
+    s"$a\\W+(?:Dialect\\W+)?$b|$b\\W+(?:Dialect\\W+)?$a".r
+  }
 
   test("sessions are built only in GraftSession.scala") {
     val offenders = sources("src").collect {
@@ -48,12 +54,25 @@ class SessionPathGuardSpec extends AnyFunSuite {
   }
 
   test("the dialect pass chain is written once") {
-    val calls = sources("src/main").map { case (_, text) =>
-      text.split(java.util.regex.Pattern.quote(Chain), -1).length - 1
-    }.sum
-    assert(calls == 1, s"$Chain appears $calls times in src/main; lower statements through Table.lowerStatement")
+    val copies = sources("src").map { case (_, text) => Chain.findAllMatchIn(text).size }.sum
+    assert(copies == 1, s"the clause chain appears $copies times in src; lower statements through Dialect.lowerClauses")
     val table = Files.readString(Paths.get("src/main/scala/graft/api/Table.scala"))
     val parallel = Seq("prep", "sqlOne", "qualifiedSql").filter(n => s"def $n\\b".r.findFirstIn(table).isDefined)
     assert(parallel.isEmpty, s"Table.scala defines a second statement pipeline: $parallel")
+  }
+
+  test("window calls and WINDOW clauses are parsed once in Dialect.scala") {
+    val dialect = Files.readString(Paths.get("src/main/scala/graft/sql/Dialect.scala"))
+    val removed = "inlineExclude" + "NamedWindows"
+    assert(!sources("src").exists(_._2.contains(s"def $removed")),
+      s"$removed is folded into the one named-window inliner, inlineChainedWindows")
+    // members at the object's indentation, each with its body
+    val members = "(?m)^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r.findAllMatchIn(dialect).toSeq
+    val bodies = members.zip(members.drop(1).map(_.start) :+ dialect.length)
+      .map { case (m, end) => m.group(1) -> dialect.substring(m.start, end) }
+    // a match of the WINDOW keyword is the start of a WINDOW-clause parse
+    val keyword = "(?:wordAt|findAnyDepthKeyword|findTopLevelKeyword(?:In)?)\\([^()\\n]*\"window\"\\)".r
+    val parsers = bodies.collect { case (name, body) if keyword.findFirstIn(body).isDefined => name }
+    assert(parsers.size <= 1, s"more than one def parses the WINDOW clause: $parsers")
   }
 }

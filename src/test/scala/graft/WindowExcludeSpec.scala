@@ -466,4 +466,30 @@ class WindowExcludeSpec extends GraftSuite {
           WINDOW w AS ($Frame EXCLUDE CURRENT ROW), w2 AS w""").toDF.collect())
     assert(e2.getMessage.contains("inlines away"))
   }
+
+  test("a named EXCLUDE window inside a derived table runs like its " +
+      "inline spec; FILTER over an EXCLUDE named window") {
+    Seq((1, 1, 10L), (1, 2, 20L), (1, 3, 30L), (2, 1, 5L))
+      .toDF("p", "o", "v").createOrReplaceTempView("wn")
+    val whole = "PARTITION BY p ORDER BY o ROWS BETWEEN UNBOUNDED " +
+      "PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW"
+    def sums(sql: String): Seq[Option[Long]] =
+      Table.sessionSql(spark, sql).toDF.collect()
+        .map(r => Option(r.get(2)).map(_.asInstanceOf[Long])).toSeq
+    val inline = sums(
+      s"""SELECT p, o, s FROM (
+            SELECT p, o, sum(v) OVER ($whole) AS s FROM wn
+          ) t ORDER BY p, o""")
+    val named = sums(
+      s"""SELECT p, o, s FROM (
+            SELECT p, o, sum(v) OVER w AS s FROM wn WINDOW w AS ($whole)
+          ) t ORDER BY p, o""")
+    assert(inline == Seq(Some(50L), Some(40L), Some(30L), None))
+    assert(named == inline)
+    // the FILTER folds first, then the inlined EXCLUDE spec lowers
+    assert(sums(
+      s"""SELECT p, o, sum(v) FILTER (WHERE v > 10) OVER w AS s FROM wn
+          WINDOW w AS ($whole) ORDER BY p, o""") ==
+      Seq(Some(50L), Some(30L), Some(20L), None))
+  }
 }
