@@ -27,6 +27,16 @@ object GraftSession {
     */
   private val StreamShufflePartitions = 8
 
+  /** The builder every graft session starts from.
+    *
+    * It turns Spark's session artifact isolation off. Spark keys its
+    * generated-class cache on (context class loader, source), and with
+    * isolation on every new session (each [[streamSession]] child, each
+    * stream run's cloned session) runs under a class loader of its own,
+    * so a query replayed in a fresh session recompiles every class it
+    * compiled before. All sessions of this engine share one classpath and
+    * graft adds no session artifacts, so one loader serves them all.
+    */
   def builder(master: String = "local[*]"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -52,6 +62,7 @@ object GraftSession {
       // the right trade wherever a sorted bucketed layout is the point
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Get or create a session with all graft SQL functions registered. */
   def getOrCreate(master: String = "local[*]"): SparkSession = {
@@ -61,8 +72,8 @@ object GraftSession {
   }
 
   /** Child session for one stream run. `newSession()` shares the parent's
-    * context but not its temp functions or optimizer rules, so they are
-    * installed here; the shuffle-partition setting (and any conf the
+    * context but not its temp functions, optimizer rules or planner
+    * strategy, so they are installed here; the shuffle-partition setting (and any conf the
     * caller adds) stays scoped to the child, nothing to save or restore.
     */
   def streamSession(parent: SparkSession): SparkSession = {

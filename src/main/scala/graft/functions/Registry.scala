@@ -115,6 +115,12 @@ object Registry {
         graft.sql.ReverseSuffixFrames))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.sql.ReverseSuffixFrames
+    // planner strategy (idempotent install): a root ORDER BY or global
+    // aggregate finishes on the driver under collect() — see
+    // [[graft.sql.CollectOnDriver]].
+    if (!spark.experimental.extraStrategies.contains(graft.sql.CollectOnDriver))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ graft.sql.CollectOnDriver
     val reg = spark.sessionState.functionRegistry
     def f(name: String)(builder: Seq[Expression] => Expression): Unit =
       reg.createOrReplaceTempFunction(name, builder, "scala_udf")

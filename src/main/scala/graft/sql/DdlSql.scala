@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** CTAS / view-definition statement forms (u11) — the DuckDB-workflow
   * staples next to the DML family ([[DmlSql]], u10):
@@ -334,8 +334,9 @@ object DdlSql {
   }
 
   /** Execute DROP: returns the dropped table's EMPTY shape (the data is
-    * gone — the post-statement-table convention). Unknown name: IF
-    * EXISTS returns an empty 0-column frame, otherwise refuses loudly.
+    * gone — the post-statement-table convention), built from its schema
+    * without running a job. Unknown name: IF EXISTS returns an empty
+    * 0-column frame, otherwise refuses loudly.
     */
   def runDrop(spark: SparkSession, st: Drop): DataFrame = {
     if (!spark.catalog.tableExists(st.name)) {
@@ -344,7 +345,8 @@ object DdlSql {
           "add IF EXISTS to make this a no-op")
       return spark.emptyDataFrame
     }
-    val shape = spark.table(st.name).limit(0).localCheckpoint(true)
+    val shape = spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), spark.table(st.name).schema)
     spark.catalog.dropTempView(st.name)
     shape
   }

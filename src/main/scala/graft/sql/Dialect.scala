@@ -2275,9 +2275,13 @@ object Dialect {
     *    definition refuses.
     *
     * The clause is found at any depth, so a derived table's own WINDOW
-    * clause inlines like a top-level one. When anything needs inlining,
-    * a statement with more than one WINDOW clause refuses: a blind
-    * inline could capture another clause's same-named window.
+    * clause inlines like a top-level one, but only the calls of its own
+    * SELECT block ([[selectBlock]]) are rewritten: a reference in an
+    * outer query, a subquery or another branch of a set operation is
+    * out of the clause's scope and keeps its name for Spark to resolve
+    * or refuse. When anything needs inlining, a statement with more than
+    * one WINDOW clause refuses: a blind inline could capture another
+    * clause's same-named window.
     */
   def inlineChainedWindows(sql: String): String = {
     val m = stripLiterals(sql)
@@ -2320,7 +2324,9 @@ object Dialect {
         }
       }
     }
-    val outside = calls.filter(c => c.over < clause.at || c.over >= clause.end)
+    val block = selectBlock(m, clause.at)
+    val outside = calls.filter(c =>
+      (c.over < clause.at || c.over >= clause.end) && selectBlock(m, c.over) == block)
     outside.foreach(c => c.spec.foreach(s =>
       chained(s, "an OVER specification")
         .foreach(full => edits += ((c.targetAt + 1, c.end - 1, full)))))
@@ -2360,6 +2366,35 @@ object Dialect {
     edits.sortBy(-_._1).foldLeft(sql) { case (cur, (s0, e0, text)) =>
       cur.substring(0, s0) + text + cur.substring(e0)
     }
+  }
+
+  private val SetOperators = Seq("union", "intersect", "except", "minus")
+
+  /** The SELECT block that offset `p` of the masked statement `m` sits
+    * in: the open paren of the innermost query group around it (-1 for
+    * the statement itself) and the number of set operators before `p`
+    * in that group. A paren group holding no SELECT or WITH (a call, an
+    * expression, an OVER specification) belongs to the block around it.
+    */
+  private def selectBlock(m: String, p: Int): (Int, Int) = {
+    // (open paren, holds a query, set operators seen)
+    val groups = scala.collection.mutable.ArrayBuffer((-1, true, 0))
+    var i = 0
+    while (i < p) {
+      val c = m.charAt(i)
+      if (c == '(') groups += ((i, false, 0))
+      else if (c == ')') { if (groups.size > 1) groups.remove(groups.size - 1) }
+      else if (isIdentStart(c)) {
+        val (at, query, ops) = groups.last
+        if (wordAt(m, i, "select") || wordAt(m, i, "with"))
+          groups(groups.size - 1) = (at, true, ops)
+        else if (SetOperators.exists(wordAt(m, i, _)))
+          groups(groups.size - 1) = (at, query, ops + 1)
+      }
+      i += 1
+    }
+    val (at, _, ops) = groups.findLast(_._2).get
+    (at, ops)
   }
 
   /** The specification a chained reference stands for: the base window's

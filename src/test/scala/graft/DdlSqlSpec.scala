@@ -316,4 +316,18 @@ class DdlSqlSpec extends GraftSuite {
     assert(a == 2L)
     spark.catalog.dropTempView("u22t")
   }
+
+  test("DROP builds the dropped table's empty shape without a job") {
+    Table.sessionSql(spark, "CREATE OR REPLACE TEMP TABLE u18j AS " +
+      "SELECT CAST(k AS INT) AS k, s, map('a', v) AS m, array(v) AS a " +
+      "FROM VALUES (1, 'x', 2.5D), (2, NULL, 3.5D) AS t(k, s, v)")
+    val before = spark.table("u18j").schema
+    var shape: org.apache.spark.sql.DataFrame = null
+    assert(JobCount.during(spark) {
+      shape = Table.sessionSql(spark, "DROP TABLE u18j").toDF
+    } == 0)
+    assert(shape.schema == before)
+    assert(shape.collect().isEmpty)
+    assert(!spark.catalog.tableExists("u18j"))
+  }
 }

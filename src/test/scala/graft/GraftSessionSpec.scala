@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Replay
@@ -71,5 +72,17 @@ class GraftSessionSpec extends GraftSuite {
 
   test("the GraftSession-built session reports sorted bucketed scans") {
     assert(spark.conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering") == "true")
+  }
+
+  test("a stream replayed in a fresh stream session compiles no class again") {
+    def replay(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = Replay.runToCompletion(replaySource()
+        .select((col("k") * 13 + 5).as("graft_replay_k"), (col("v") % 3).as("r")), "append")
+      assert(out.agg(sum(col("graft_replay_k")), max(col("r"))).collect().length == 1)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    replay()
+    assert(replay() == 0L, "the second replay recompiled generated classes")
   }
 }

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the single session path from eroding one query at a time: one
-  * session builder, no per-query installs in the query catalogue, one
+  * session builder, one install path for planner strategies, no
+  * per-query installs in the query catalogue, one
   * memory-sink stream runner in the library, one SQL statement
   * pipeline (and one clause chain) behind every SQL surface, and one
   * parse of window calls and WINDOW clauses under the window passes.
@@ -37,6 +38,14 @@ class SessionPathGuardSpec extends AnyFunSuite {
       case (p, text) if text.contains(Builder) && p.getFileName.toString != "GraftSession.scala" => p
     }
     assert(offenders.isEmpty, s"build sessions through GraftSession.builder: $offenders")
+  }
+
+  test("planner strategies are installed only in Registry.scala") {
+    val assign = ("extra" + "Strategies") + "\\s*=(?!=)"
+    val offenders = sources("src").collect {
+      case (p, text) if assign.r.findFirstIn(text).isDefined && p.getFileName.toString != "Registry.scala" => p
+    }
+    assert(offenders.isEmpty, s"install planner strategies through Registry.registerAll: $offenders")
   }
 
   test("the query catalogue installs nothing per query") {

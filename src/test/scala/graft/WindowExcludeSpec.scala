@@ -492,4 +492,22 @@ class WindowExcludeSpec extends GraftSuite {
           WINDOW w AS ($whole) ORDER BY p, o""") ==
       Seq(Some(50L), Some(30L), Some(20L), None))
   }
+
+  test("a WINDOW clause's names reach only its own SELECT block") {
+    Seq((1, 1, 10L), (1, 2, 20L), (1, 3, 30L), (2, 1, 5L))
+      .toDF("p", "o", "x").createOrReplaceTempView("wc")
+    val spec = "PARTITION BY p ORDER BY o ROWS BETWEEN UNBOUNDED " +
+      "PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW"
+    // the outer `OVER w` is out of the derived table's WINDOW scope:
+    // it is left for Spark, which has no window w there and refuses
+    val outer = s"""SELECT p, sum(s) OVER w AS t FROM (
+        SELECT p, o, sum(x) OVER w AS s FROM wc WINDOW w AS ($spec)) d"""
+    val lowered = Dialect.lowerClauses(outer)
+    assert(lowered.contains("OVER w AS t"), lowered)
+    intercept[Exception](Table.sessionSql(spark, outer).toDF.collect())
+    // a scalar subquery in the clause's own block is out of scope too
+    val sub = s"""SELECT p, o, sum(x) OVER w AS s,
+        (SELECT max(x) OVER w FROM wc LIMIT 1) AS m FROM wc WINDOW w AS ($spec)"""
+    assert(Dialect.lowerClauses(sub).contains("max(x) OVER w FROM wc"))
+  }
 }
