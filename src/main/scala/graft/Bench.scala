@@ -3,6 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.SparkSession
+
 /** Per-round benchmark main (driver contract): times every declared query
   * at SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -30,7 +34,12 @@ import java.nio.file.{Files, Paths}
   *    in the working directory. The line is printed AFTER spark.stop()
   *    so no shutdown logging can trail it;
   *  - SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the query set (iteration);
-  *  - the session is [[GraftSession]]'s, the one the tests and Verify use.
+  *  - the session is [[GraftSession]]'s, the one the tests and Verify use;
+  *  - every execution is a [[Trace]]d query, and bench_full.json's `trace`
+  *    map gives each query the record of the pass that produced its
+  *    reported min (of its last pass when every pass failed), plus the
+  *    catalogue call's `build_ms`. The counters come from listener events
+  *    on the timed pass, read after spark.stop() has drained the bus.
   */
 object Bench {
 
@@ -64,6 +73,31 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
+  /** One execution of a query: its [[Trace]] id, wall seconds (-1 when it
+    * failed) and the catalogue call's share in ms (-1 when that failed).
+    */
+  private[graft] final case class Exec(id: Long, seconds: Double, buildMs: Double)
+
+  /** Times `name` the way every pass does, as one traced query: the
+    * catalogue call, then the full plan into the `noop` sink.
+    */
+  private[graft] def execute(spark: SparkSession, trace: Trace, sfDir: String,
+                             name: String): Exec = {
+    val id = trace.newId()
+    val t0 = System.nanoTime()
+    var buildMs = -1.0
+    try trace.run(id) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      buildMs = (System.nanoTime() - t0) / 1e6
+      df.write.mode("overwrite").format("noop").save()
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        return Exec(id, -1.0, buildMs)
+    }
+    Exec(id, (System.nanoTime() - t0) / 1e9, buildMs)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -84,18 +118,8 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     val spark = GraftSession.getOrCreate(s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def execute(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val trace = Trace.install(spark)
+    def execute(name: String): Exec = Bench.execute(spark, trace, sfDir, name)
 
     // warmup: flagship + one ops query, results discarded
     execute("q07_agg_group")
@@ -112,7 +136,7 @@ object Bench {
     // doesn't always truncate the same tail of the sorted name list, and
     // `passes` counts only passes that ran to completion (an aborted pass
     // would otherwise overstate how many samples queries received).
-    val times = collection.mutable.Map.empty[String, List[Double]]
+    val execs = collection.mutable.Map.empty[String, List[Exec]]
     var passes = 0
     var p = 0
     while (p < reps && (p < minPasses || elapsed < budgetSec)) {
@@ -121,8 +145,7 @@ object Bench {
       val order = names.drop(off) ++ names.take(off)
       order.foreach { n =>
         if (p < minPasses || (!aborted && elapsed < budgetSec)) {
-          val t = execute(n)
-          if (t >= 0) times(n) = t :: times.getOrElse(n, Nil)
+          execs(n) = execute(n) :: execs.getOrElse(n, Nil)
         } else aborted = true
       }
       if (!aborted) passes += 1
@@ -130,10 +153,15 @@ object Bench {
     }
 
     val results = names.map { n =>
-      val ts = times.getOrElse(n, Nil)
+      val ts = execs.getOrElse(n, Nil).map(_.seconds).filter(_ >= 0)
       val best = if (ts.isEmpty) -1.0 else ts.min
       val spread = if (ts.isEmpty || ts.min == 0) 1.0 else ts.max / ts.min
       (n, best, spread)
+    }
+    // the execution each query reports: its min pass, else its last one
+    val reported = names.map { n =>
+      val es = execs(n)
+      n -> es.filter(_.seconds >= 0).minByOption(_.seconds).getOrElse(es.head)
     }
     val total = results.map(_._2).filter(_ >= 0).sum
     val maxSpread = if (results.isEmpty) 1.0 else results.map(_._3).max
@@ -151,12 +179,6 @@ object Bench {
       s""""load":{"avg_start":${fmt(loadStart)},"avg_end":${fmt(loadAvg)},""" +
         s""""cpus":${Runtime.getRuntime.availableProcessors}},"cores_conf":$cpus"""
 
-    val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(results)},""" +
-        s""""n_queries":${results.size},"passes":$passes,"max_pass_spread":${fmt(maxSpread)},""" +
-        s"""$loadJson,"sf":"$sfDir"}"""
-    Files.write(Paths.get("bench_full.json"), fullJson.getBytes(StandardCharsets.UTF_8))
-
     val head = results.filter(r => Headline.contains(r._1))
     val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(head)},""" +
@@ -164,6 +186,16 @@ object Bench {
         s"""$loadJson,"full":"bench_full.json","sf":"$sfDir"}"""
 
     spark.stop()
+    // after stop(): the listener bus has delivered every event
+    val traces = reported.map { case (n, e) =>
+      "\"" + n + "\":" + Trace.toJson(
+        ListMap("build_ms" -> Trace.ms(e.buildMs)) ++ trace.query(e.id).fields)
+    }.mkString("{", ",", "}")
+    val fullJson =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(results)},""" +
+        s""""n_queries":${results.size},"passes":$passes,"max_pass_spread":${fmt(maxSpread)},""" +
+        s"""$loadJson,"sf":"$sfDir","trace":$traces}"""
+    Files.write(Paths.get("bench_full.json"), fullJson.getBytes(StandardCharsets.UTF_8))
     println(line)
     Console.out.flush()
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.functions.Registry
 
 /** Session factory for the graft engine: the one place a session is
-  * configured. Bench, Verify, the tests and the probes all build through
+  * configured. Bench, Verify, the tests and the test mains all build through
   * [[builder]]; a caller that needs one more conf adds `.config(...)` on
   * top.
   *
@@ -48,9 +48,8 @@ object GraftSession {
       // workloads (this suite's 420 queries produce a few thousand
       // codegen units), recompiling every fragment on every revisit.
       // Workload-sized, not host-sized; ~8k small classes of driver
-      // metaspace. Overridable for A/B via SPARK_GRAFT_CODEGEN_CACHE.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
+      // metaspace.
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -15,12 +15,11 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object FrameStats {
 
-  /** Byte ceiling for measured-size broadcast hints (0 disables — the
-    * A/B kill-switch). 32 MB is workload-independent: well under the
-    * 8 GB broadcast cap and any sane executor memory.
+  /** Byte ceiling for measured-size broadcast hints. 32 MiB is
+    * workload-independent: well under the 8 GB broadcast cap and any sane
+    * executor memory.
     */
-  def broadcastGateBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_REC_BROADCAST_BYTES", "33554432").toLong
+  val broadcastGateBytes: Long = 32L << 20
 
   /** Measured bytes of an eagerly localCheckpointed frame, from the
     * block manager's storage info. The frame may sit under projections;
@@ -42,7 +41,7 @@ private[graft] object FrameStats {
     * that cannot serve it ignores it.
     */
   def broadcastIfSmall(df: DataFrame, bytes: Long): DataFrame =
-    if (broadcastGateBytes > 0 && bytes <= broadcastGateBytes)
+    if (bytes <= broadcastGateBytes)
       df.hint("broadcast")
     else df
 

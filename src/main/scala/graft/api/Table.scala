@@ -887,14 +887,6 @@ object Table {
         align(lower(step))
       }
       val increment = exceptDistinctVia(stepped, seen, seenBytes)
-      // evidence hook: the per-round plan is invisible from the outer
-      // statement's explain, so optimization rounds can dump it here
-      if (sys.env.get("SPARK_GRAFT_REC_EXPLAIN")
-            .exists(_.split(",").contains(round.toString)))
-        // scalastyle:off println
-        println(increment.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        // scalastyle:on println
       val next = freshCols(increment.localCheckpoint(true))
       val nBytes = checkpointedBytes(next)
       if (next.isEmpty) drained = true

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, Max, Median, Min, Percentile, StddevPop, Sum, VariancePop}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
@@ -90,31 +92,23 @@ object Registry {
       GraftColumnBridge.toExpression(bloom),
       Cast(GraftColumnBridge.toExpression(value), LongType)))
 
+  /** The graft optimizer rules, in install order: N same-column exact
+    * percentiles share one buffer ([[graft.sql.MergePercentiles]]),
+    * expensive projections move past global sorts
+    * ([[graft.sql.DeferExpensiveProjection]]), and O(n²) suffix window
+    * frames become reversed running frames
+    * ([[graft.sql.ReverseSuffixFrames]]). To A/B one, run a scratch
+    * session whose `spark.experimental.extraOptimizations` leaves it out.
+    */
+  val OptimizerRules: Seq[Rule[LogicalPlan]] = Seq(graft.sql.MergePercentiles,
+    graft.sql.DeferExpensiveProjection, graft.sql.ReverseSuffixFrames)
+
   def registerAll(spark: SparkSession): Unit = {
-    // session optimizer rule (idempotent install): N same-column exact
-    // percentiles share ONE buffer — see [[graft.sql.MergePercentiles]].
-    // SPARK_GRAFT_NO_MERGE_PCT disables for A/B and before-plan capture.
-    if (!sys.env.contains("SPARK_GRAFT_NO_MERGE_PCT") &&
-        !spark.experimental.extraOptimizations.contains(
-        graft.sql.MergePercentiles))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sql.MergePercentiles
-    // defer expensive projections past global sorts (the range-sample
-    // double-execution fix — see [[graft.sql.DeferExpensiveProjection]]).
-    // SPARK_GRAFT_NO_DEFER_PROJ disables for A/B and before-plan capture.
-    if (!sys.env.contains("SPARK_GRAFT_NO_DEFER_PROJ") &&
-        !spark.experimental.extraOptimizations.contains(
-        graft.sql.DeferExpensiveProjection))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sql.DeferExpensiveProjection
-    // O(n²) suffix window frames → reversed-order running frames
-    // (see [[graft.sql.ReverseSuffixFrames]]). SPARK_GRAFT_NO_REV_SUFFIX
-    // disables for A/B and before-plan capture.
-    if (!sys.env.contains("SPARK_GRAFT_NO_REV_SUFFIX") &&
-        !spark.experimental.extraOptimizations.contains(
-        graft.sql.ReverseSuffixFrames))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sql.ReverseSuffixFrames
+    // session optimizer rules (idempotent install), see [[OptimizerRules]]
+    OptimizerRules.foreach { rule =>
+      if (!spark.experimental.extraOptimizations.contains(rule))
+        spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+    }
     // planner strategy (idempotent install): a root ORDER BY or global
     // aggregate finishes on the driver under collect() — see
     // [[graft.sql.CollectOnDriver]].

@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project, ReturnAnswer, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, ReturnAnswer, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.util.truncatedString
-import org.apache.spark.sql.execution.{LogicalRDD, ProjectExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.aggregate.{AggUtils, BaseAggregateExec, SortBasedAggregationIterator}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
@@ -32,8 +32,7 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
   *    row per partition and the driver runs the Final-mode merge.
   *
   * Anything else, a non-deterministic sort key or projection, a DISTINCT
-  * aggregate, an aggregate over in-memory frames only and any streaming
-  * plan falls through to Spark's strategies.
+  * aggregate and any streaming plan falls through to Spark's strategies.
   * Writes never plan under `ReturnAnswer`, so their plans do not change.
   */
 object CollectOnDriver extends SparkStrategy {
@@ -42,20 +41,10 @@ object CollectOnDriver extends SparkStrategy {
     case ReturnAnswer(root) if !root.isStreaming => root match {
       case Sort(order, true, child, _) => mergeSorted(child.output, order, child)
       case Project(list, Sort(order, true, child, _)) => mergeSorted(list, order, child)
-      // an aggregate whose every input is a frame held in memory
-      // (driver-side rows, a caller's RDD, a CREATE TABLE snapshot) keeps
-      // Spark's adaptive plan, which the explain output of such frames
-      // has always shown
-      case agg: Aggregate if agg.groupingExpressions.isEmpty && !inMemory(agg.child) =>
-        finalAggregate(agg)
+      case agg: Aggregate if agg.groupingExpressions.isEmpty => finalAggregate(agg)
       case _ => Nil
     }
     case _ => Nil
-  }
-
-  private def inMemory(plan: LogicalPlan): Boolean = plan.collectLeaves().forall {
-    case _: LocalRelation | _: LogicalRDD => true
-    case _ => false
   }
 
   /** Sorted runs of `list` over `child`, each carrying the sort keys the

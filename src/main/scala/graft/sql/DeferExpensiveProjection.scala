@@ -41,8 +41,6 @@ import org.apache.spark.sql.types._
   *     the shuffle. Fixed-width sources cap the widening at
   *     sizeof(inputs) vs sizeof(outputs), which the width check below
   *     also bounds.
-  *
-  * Env kill-switch for A/B: SPARK_GRAFT_NO_DEFER_PROJ.
   */
 object DeferExpensiveProjection extends Rule[LogicalPlan] {
 
@@ -70,8 +68,7 @@ object DeferExpensiveProjection extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (sys.env.contains("SPARK_GRAFT_NO_DEFER_PROJ")) plan
-    else plan.transform {
+    plan.transform {
       case s @ Sort(order, true, p @ Project(projList, child), _)
           if deferable(order, projList, child) =>
         val (identity, computed) = split(projList)

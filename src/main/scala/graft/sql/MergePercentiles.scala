@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * point from ONE shared buffer and one sort; per-point results are
   * bitwise identical because the array path runs the same
   * `getPercentile` over the same sorted counts (probed at sf0.1:
-  * 2.45 s → 1.26 s for the 3-point shape, bitwise-equal outputs —
-  * PctProbe).
+  * 2.45 s → 1.26 s for the 3-point shape, bitwise-equal outputs).
   *
   * The rule rewrites each merged scalar call site to element i of the
   * shared array result. One [[AggregateExpression]] instance (one

@@ -62,8 +62,6 @@ import org.apache.spark.sql.types._
   *     headroom and stays eligible.
   *   - A FOLLOWING bound whose literal is the type's MinValue cannot be
   *     negated (-MinValue == MinValue); mirror() refuses it.
-  *
-  * Env kill-switch for A/B: SPARK_GRAFT_NO_REV_SUFFIX.
   */
 object ReverseSuffixFrames extends Rule[LogicalPlan] {
 
@@ -186,8 +184,7 @@ object ReverseSuffixFrames extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (sys.env.contains("SPARK_GRAFT_NO_REV_SUFFIX")) plan
-    else plan.transform {
+    plan.transform {
       case w @ SuffixWindow(legged) =>
         val Window(_, part, order, child, hint) = w
         val rowSuffix = legged.filter(_._2 == RowSuffix).map(_._1)

@@ -31,6 +31,14 @@ object GraftColumnBridge {
     */
   def renderedTable(df: Dataset[_], numRows: Int, truncate: Int): String =
     df.asInstanceOf[classic.Dataset[_]].showString(numRows, truncate, vertical = false)
+
+  /** The finished execution an end event reports (`qe` is `private[sql]`;
+    * null for an event that did not come from a live execution). Backs
+    * `graft.Trace`, which reads every session's planner tracker from the
+    * one listener bus.
+    */
+  def queryExecution(e: execution.ui.SparkListenerSQLExecutionEnd): execution.QueryExecution =
+    e.qe
 }
 
 /** Binary expression wanting the SAME numeric input coercions Spark's own

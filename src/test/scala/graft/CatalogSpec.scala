@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
@@ -9,7 +8,6 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 
@@ -21,34 +19,7 @@ import graft.api.Catalog
   */
 class CatalogSpec extends GraftSuite {
 
-  private val Tag = "graft.catalogspec"
-
-  /** Tags of every job started since the listener was added. */
-  private lazy val jobTags = {
-    val q = new ConcurrentLinkedQueue[String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(Tag))).foreach(q.add)
-    })
-    q
-  }
-
-  /** Spark jobs launched while `body` runs. A tagged marker job fences the
-    * asynchronous listener bus: once its start is seen, every earlier job
-    * start has been delivered.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val tags = jobTags
-    val sc = spark.sparkContext
-    val id = java.util.UUID.randomUUID().toString
-    sc.setLocalProperty(Tag, id)
-    try body finally sc.setLocalProperty(Tag, s"$id-fence")
-    try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Tag, null)
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (!tags.contains(s"$id-fence") && System.nanoTime() < deadline) Thread.sleep(10)
-    assert(tags.contains(s"$id-fence"), "listener bus did not deliver the fence job")
-    tags.asScala.count(_ == id)
-  }
+  private def jobsDuring(body: => Unit): Int = SparkTestBase.trace.jobsDuring(body)
 
   private def tempDir(): Path = Files.createTempDirectory("graft-catalog")
 

@@ -15,7 +15,7 @@ import graft.sql.{DriverFinalAggregate, DriverMergeSortedRuns}
 class CollectOnDriverSpec extends GraftSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private def jobsDuring(body: => Unit): Int = JobCount.during(spark)(body)
+  private def jobsDuring(body: => Unit): Int = SparkTestBase.trace.jobsDuring(body)
 
   private def query(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
 
@@ -102,11 +102,17 @@ class CollectOnDriverSpec extends GraftSuite {
     } finally java.nio.file.Files.delete(empty)
   }
 
-  test("DISTINCT and in-memory aggregates and non-deterministic sort keys keep Spark's plans") {
+  test("a global aggregate over in-memory rows merges on the driver to Spark's row") {
+    val bare = spark.newSession()
+    def held(s: org.apache.spark.sql.SparkSession) =
+      s.createDataFrame(s.sparkContext.parallelize(Seq(Row(1L), Row(2L)), 2),
+        org.apache.spark.sql.types.StructType.fromDDL("x LONG")).agg(sum(col("x")))
+    assert(uses(held(spark)) == Set("agg"))
+    assert(held(spark).collect().toSeq == held(bare).collect().toSeq)
+  }
+
+  test("DISTINCT aggregates and non-deterministic sort keys keep Spark's plans") {
     val li = lineitem
-    val held = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1L), Row(2L)), 2),
-      org.apache.spark.sql.types.StructType.fromDDL("x LONG")).agg(sum(col("x")))
-    assert(uses(held).isEmpty)
     val distinct = li.agg(countDistinct(col("l_suppkey")))
     assert(uses(distinct).isEmpty)
     assert(distinct.collect().head.getLong(0) > 0)

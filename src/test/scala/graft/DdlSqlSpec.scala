@@ -323,7 +323,7 @@ class DdlSqlSpec extends GraftSuite {
       "FROM VALUES (1, 'x', 2.5D), (2, NULL, 3.5D) AS t(k, s, v)")
     val before = spark.table("u18j").schema
     var shape: org.apache.spark.sql.DataFrame = null
-    assert(JobCount.during(spark) {
+    assert(SparkTestBase.trace.jobsDuring {
       shape = Table.sessionSql(spark, "DROP TABLE u18j").toDF
     } == 0)
     assert(shape.schema == before)

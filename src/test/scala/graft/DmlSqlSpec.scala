@@ -288,9 +288,9 @@ class DmlSqlSpec extends GraftSuite {
   test("CTE-headed DML (u16): WITH binds statement-scoped views the " +
     "DML reads (DuckDB-probed); target-name CTE refuses") {
     bind()
-    // other suites share this session's catalog (CodegenProbe binds a
-    // view literally named "d"), so leak detection compares against the
-    // PRE-state instead of asserting absence
+    // other suites share this session's catalog and may bind views with
+    // these names, so leak detection compares against the PRE-state
+    // instead of asserting absence
     val pre = Seq("x", "m", "d").map(n => n -> spark.catalog.tableExists(n))
     // probed DuckDB: WITH x AS (SELECT 3, 30) INSERT INTO t SELECT ...
     val ins = run(

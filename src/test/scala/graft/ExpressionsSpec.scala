@@ -111,6 +111,36 @@ class ExpressionsSpec extends GraftSuite {
     assert(got == Seq((9.0, 2L), (9.0, 3L), (7.0, 5L)))
   }
 
+  test("topk_by with k above the candidate count returns every candidate") {
+    val df = Seq((1L, 5.0), (2L, 9.0)).toDF("id", "s")
+    val top = df.agg(call_function("topk_by", col("s"), col("id"), lit(10)).as("t"))
+      .select(posexplode(col("t"))).collect()
+    assert(top.map { case Row(_, r: Row) => r.getLong(1) }.toSeq == Seq(2L, 1L))
+  }
+
+  test("minhash_sig, simhash64, cosine_sim and sign_bits run compiled with no interpreted fallback") {
+    val compiled = spark.newSession()
+    compiled.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    compiled.conf.set("spark.sql.codegen.fallback", "false")
+    graft.functions.Registry.registerAll(compiled)
+    // a range, not a local relation, so nothing is folded at planning time
+    val q = """SELECT id,
+        minhash_sig(window_hashes(transform(split(t, ' '), s -> xxhash64(s)), 3), 8) AS mh,
+        simhash64(transform(split(t, ' '), s -> xxhash64(s))) AS sh,
+        cosine_sim(v, array(0.5D, -0.25D, 1.0D)) AS cs,
+        sign_bits(v, 8) AS sb
+      FROM (SELECT id,
+              CASE id WHEN 0 THEN 'alpha beta gamma delta epsilon' ELSE '' END AS t,
+              CASE id WHEN 0 THEN array(0.5D, -0.25D, 1.0D) ELSE array(0.0D, 0.0D, 0.0D) END AS v
+            FROM range(0, 2, 1, 2))
+      ORDER BY id"""
+    val got = compiled.sql(q).collect()
+    assert(got.toSeq == spark.sql(q).collect().toSeq)
+    assert(got(0).getSeq[Long](1).size == 8)
+    assert(math.abs(got(0).getDouble(3) - 1.0) < 1e-12)
+    assert(got(1).isNullAt(3)) // zero norm
+  }
+
   test("unicode_normalize: NFC composes, NFKC folds compatibility forms") {
     val r = spark.sql(
       """select unicode_normalize('cafe\u0301') nfc,

@@ -585,6 +585,13 @@ class OpsSpec extends GraftSuite {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L)) // unrelated
   }
 
+  test("nearDupJaccard eager=false persists nothing") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Dedup.nearDupJaccard(docs, "doc_id", "text",
+      numHashes = 128, bands = 64, shingleK = 3, threshold = 0.6, eager = false).count()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("nearDupJaccard eager=false returns the same pairs lazily") {
     val lazyDf = Dedup.nearDupJaccard(docs, "doc_id", "text",
       numHashes = 128, bands = 64, shingleK = 3, threshold = 0.6, eager = false)

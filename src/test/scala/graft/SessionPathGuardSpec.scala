@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * session builder, one install path for planner strategies, no
   * per-query installs in the query catalogue, one
   * memory-sink stream runner in the library, one SQL statement
-  * pipeline (and one clause chain) behind every SQL surface, and one
-  * parse of window calls and WINDOW clauses under the window passes.
+  * pipeline (and one clause chain) behind every SQL surface, one
+  * parse of window calls and WINDOW clauses under the window passes, one
+  * profiler, and no environment switches below the entry-point mains.
   */
 class SessionPathGuardSpec extends AnyFunSuite {
 
@@ -68,6 +69,22 @@ class SessionPathGuardSpec extends AnyFunSuite {
     val table = Files.readString(Paths.get("src/main/scala/graft/api/Table.scala"))
     val parallel = Seq("prep", "sqlOne", "qualifiedSql").filter(n => s"def $n\\b".r.findFirstIn(table).isDefined)
     assert(parallel.isEmpty, s"Table.scala defines a second statement pipeline: $parallel")
+  }
+
+  test("listeners are registered only in Trace.scala") {
+    val needles = Seq("addSpark" + "Listener", "listenerManager" + ".register")
+    val offenders = sources("src").collect {
+      case (p, text) if needles.exists(text.contains) && p.getFileName.toString != "Trace.scala" => p
+    }
+    assert(offenders.isEmpty, s"count jobs, stages, tasks and batches through graft.Trace: $offenders")
+  }
+
+  test("only the entry-point mains read the environment in src/main") {
+    val offenders = sources("src/main").collect {
+      case (p, text) if Seq("sys" + ".env", "System" + ".getenv").exists(text.contains) &&
+          !Set("Bench.scala", "Verify.scala").contains(p.getFileName.toString) => p
+    }
+    assert(offenders.isEmpty, s"sessions, rules and libraries take no environment switches: $offenders")
   }
 
   test("window calls and WINDOW clauses are parsed once in Dialect.scala") {

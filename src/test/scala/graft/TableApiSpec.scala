@@ -173,7 +173,7 @@ class TableApiSpec extends GraftSuite {
   }
 
   test("explainSql returns a physical plan") {
-    assert(trips.explainSql("select count(*) from trip").contains("AdaptiveSparkPlan"))
+    assert(trips.explainSql("select count(*) from trip").contains("== Physical Plan =="))
   }
 
   test("explainTree dumps the parsed query tree (print_query_tree parity)") {
