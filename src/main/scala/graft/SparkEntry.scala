@@ -7517,13 +7517,10 @@ object SparkEntry {
             expr(s"ts - ts % ${graft.streaming.Events.MicrosPerHour}").as("h"),
             col("event_type"), col("value"))
         val base = scratchDir(s"st08_sink_${new java.io.File(dir).getName}")
-        val q = out.writeStream.format("parquet")
+        graft.streaming.Replay.drain(out.writeStream.format("parquet")
           .option("path", s"$base/data")
           .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+          .outputMode("append"))
         Catalog.parquet(s, s"$base/data")
           .groupBy(col("h"), col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -7930,8 +7927,8 @@ object SparkEntry {
 
     // UNION-DISTINCT recursion at the SQL surface (gr09) — the form
     // Spark's native UnionLoop rejects and this dialect lowers onto
-    // frontier-minus-seen rounds (RecursiveUnion + Table.
-    // runRecursiveUnion). Same text on both engines; the fixture graph
+    // frontier-minus-seen rounds (RecursiveUnion.run). Same text on
+    // both engines; the fixture graph
     // is the gr01/gr07 functional graph ((7k+1)%N, (13k+3)%N), which is
     // CYCLIC by construction (every functional graph on a finite set
     // ends in cycles) and carries NO hop bound here — UNION ALL
@@ -8034,7 +8031,7 @@ object SparkEntry {
          JOIN (SELECT DISTINCT id FROM walk13) r13 ON r7.id = r13.id"""),
 
     // TRUE mutual recursion (gr12, [[graft.sql.RecursiveUnion]] SCC
-    // grouping + [[graft.api.Table]] drainMutualGroup): pp steps
+    // grouping and its one drain loop): pp steps
     // through the 7-edge relation FROM qq and qq steps through the
     // 13-edge relation FROM pp — a cyclic reference pair, so the two
     // drain as ONE simultaneous loop (each round: every member's step
@@ -10554,16 +10551,13 @@ object SparkEntry {
         val schema = "user_id LONG, ts LONG, event_type STRING, value DOUBLE"
         var target = s.read.schema(schema).parquet(feed).where(lit(false))
           .localCheckpoint(true)
-        val q = s.readStream.schema(schema)
+        graft.streaming.Replay.drain(s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(feed)
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             target = graft.ops.Cdc.upsert(target, batch,
               Seq("user_id"), "ts").localCheckpoint(true)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+          })
         target.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_users"),
             round(sum(col("value")), 6).as("sv"))
@@ -10605,7 +10599,7 @@ object SparkEntry {
         var view = snap.groupBy(col("g"))
           .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
           .localCheckpoint(true)
-        val q = s.readStream.schema(schema)
+        graft.streaming.Replay.drain(s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(feed)
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -10615,10 +10609,7 @@ object SparkEntry {
               Seq("k"), "ver", "g", "v", view).localCheckpoint(true)
             snap = graft.ops.Cdc.upsert(snap, batch, Seq("k"), "ver")
               .localCheckpoint(true)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+          })
         view.orderBy(col("g"))
       },
       """WITH latest AS (

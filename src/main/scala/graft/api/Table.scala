@@ -535,7 +535,7 @@ object Table {
     // UNION ALL recursion stays on Spark's native UnionLoop path (parse
     // returns None for it)
     graft.sql.RecursiveUnion.parse(qIn) match {
-      case Some(st) => return runRecursiveUnion(spark, st, again)
+      case Some(st) => return graft.sql.RecursiveUnion.run(spark, st, again)
       case None =>
     }
     // resolving the gate's first column is analysis only — nothing
@@ -604,113 +604,6 @@ object Table {
       out
     }
 
-  /** UNION-distinct recursive CTE execution
-    * ([[graft.sql.RecursiveUnion]], gr09): frontier-minus-seen rounds
-    * with per-round lineage cuts (the Iterate discipline — the plan and
-    * recovery cost stay O(one round) however deep the recursion). The
-    * step's output is aligned to the seed's schema (names positional,
-    * types cast — the anchor-defines-schema rule Spark's native
-    * recursion also applies). Each round: one distinct-EXCEPT against
-    * the accumulated set (the cycle guard) and one emptiness probe —
-    * data-dependent termination costs one small job per round. A
-    * non-draining recursion refuses loudly at `maxRounds` instead of
-    * looping forever. SEVERAL recursions (gr11/gr12) drain by SCC
-    * group, dependencies first: singleton groups sequentially, each
-    * closure binding before later groups — a dependent seed/step
-    * consumes an earlier closure like any bound view — and a cyclic
-    * group (TRUE mutual recursion) via [[drainMutualGroup]]'s
-    * simultaneous loop.
-    */
-  private def runRecursiveUnion(spark: SparkSession,
-                                st: graft.sql.RecursiveUnion.Stmt,
-                                lower: String => DataFrame,
-                                maxRounds: Int = 512): DataFrame = {
-    // every statement-scoped name (the recursive CTEs and the gr10
-    // helper CTEs) binds under a per-invocation UNIQUE internal view
-    // name; all statement texts are rewritten consistently
-    val suffix = java.util.UUID.randomUUID.toString.take(8)
-    val names = st.helpers.map(_.name) ++ st.recs.map(_.name)
-    val rename = names.map(n => n -> s"__rec_${n}_$suffix").toMap
-    def rewriteAll(text: String): String =
-      names.foldLeft(text)((t, n) => Dialect.replaceIdent(t, n, rename(n)))
-    (st.helpers.map(h => s"helper ${h.name}" -> h.body) ++
-      st.recs.flatMap(r => Seq(s"seed of ${r.name}" -> r.seed,
-        s"step of ${r.name}" -> r.step)) ++
-      Seq("outer statement" -> st.outer)).foreach { case (what, text) =>
-      names.foreach { n =>
-        require(!Dialect.containsBacktickedIdent(text, n),
-          s"backquoted reference to the CTE '$n' in the $what is not " +
-            "supported — drop the backticks")
-      }
-    }
-    // every checkpoint is wrapped in a fresh aliasing projection: a
-    // localCheckpoint's LogicalRDD can carry origin constraints that
-    // reference attributes outside its own output, and the LAZY
-    // accumulation union below computes Union constraints over its
-    // children (Spark's rewrite then dies with `key not found: k#N`
-    // — surfaced by a recursion over an ON CONFLICT result). A
-    // Project keeps only output-expressible constraints.
-    def freshCols(df: DataFrame): DataFrame =
-      df.select(df.columns.map(c =>
-        org.apache.spark.sql.functions.col(s"`$c`").as(c)): _*)
-    // helpers bind ONCE, in textual order (gr10): each may reference
-    // earlier helpers; references to recursive CTEs were refused at
-    // parse. A helper ANY step references is MATERIALIZED (eager
-    // localCheckpoint): steps re-execute once per recursion round, and
-    // re-scanning the helper's source plan every round costs
-    // O(rounds × helper) where one checkpoint pass suffices (measured:
-    // gr10's edge helper halved the closure runtime). A helper only the
-    // outer statement (or later helpers) reads stays a lazy view — no
-    // wasted materialization.
-    val stepMasks = st.recs.map(r => Dialect.stripLiterals(r.step))
-    try {
-      st.helpers.foreach { h =>
-        val df0 = bindLock.synchronized {
-          val d = lower(rewriteAll(h.body))
-          d.queryExecution.assertAnalyzed()
-          d
-        }
-        val df = h.cols.map { cs =>
-          require(cs.size == df0.columns.length,
-            s"helper CTE ${h.name}(${cs.mkString(", ")}) declares " +
-              s"${cs.size} columns, its body produces ${df0.columns.length}")
-          df0.toDF(cs: _*)
-        }.getOrElse(df0)
-        val bound =
-          if (stepMasks.exists(
-            graft.sql.RecursiveUnion.containsWord(_, h.name)))
-            // same constraint-pruning projection as the recursion loop's
-            // checkpoints (a step may union/except over this view)
-            freshCols(df.localCheckpoint(true))
-          else df
-        bindLock.synchronized {
-          bound.createOrReplaceTempView(rename(h.name))
-        }
-      }
-      // drain the SCC groups dependencies-first (gr11/gr12), binding
-      // each closure as a plain view before later groups (or the outer
-      // statement) run. A singleton group is the sequential case; a
-      // multi-member group is TRUE mutual recursion — one simultaneous
-      // loop over all members.
-      st.drainGroups.foreach { group =>
-        val closures =
-          if (group.size == 1)
-            Seq(drainRecursion(lower, group.head, rename(group.head.name),
-              rewriteAll, freshCols, maxRounds))
-          else drainMutualGroup(lower, group, r => rename(r.name),
-            rewriteAll, freshCols, maxRounds)
-        bindLock.synchronized {
-          group.zip(closures).foreach { case (rec, closure) =>
-            closure.createOrReplaceTempView(rename(rec.name))
-          }
-        }
-      }
-      bindLock.synchronized {
-        lower(rewriteAll(st.outer))
-      }
-    } finally rename.values.foreach(spark.catalog.dropTempView)
-  }
-
   /** The session name a statement MUTATES (DML / MERGE / COPY FROM
     * with a bare target) plus whether a RETURNING clause makes the
     * returned frame differ from the post-image. None for non-mutating
@@ -736,12 +629,12 @@ object Table {
       .filter(t => Dialect.isBareIdentifier(t._1))
   }
 
-  /** CTE-headed DML execution (u16): bind each CTE as a
-    * statement-scoped view (unique internal name — the recursion
-    * lowering's scoping rule — in textual order, each body may read
-    * earlier CTEs), then re-enter [[sessionSql]] with the rewritten DML
-    * text so it hits the normal statement dispatch. Binding is LAZY (a
-    * CTE is typically read once; the analyzed plan inlines the view, so
+  /** CTE-headed DML execution (u16): each CTE binds as a
+    * statement-scoped view ([[graft.sql.RecursiveUnion.withScope]], the
+    * recursion's scoping rule) in textual order, each body may read
+    * earlier CTEs, then the rewritten DML re-enters [[sessionSql]] so it
+    * hits the normal statement dispatch. Binding is LAZY (a CTE is
+    * typically read once; the analyzed plan inlines the view, so
     * dropping the names afterwards is safe). The DML target must be a
     * real table: Postgres scopes the target OUTSIDE the WITH, so a CTE
     * sharing its name refuses loudly rather than silently receiving
@@ -750,269 +643,18 @@ object Table {
   private def cteHeadedDml(spark: SparkSession,
                            ctes: Seq[graft.sql.RecursiveUnion.RawCte],
                            rest: String): Table = {
-    val suffix = java.util.UUID.randomUUID.toString.take(8)
     val names = ctes.map(_.name)
-    val rename = names.map(n => n -> s"__cte_${n}_$suffix").toMap
-    def rewriteAll(text: String): String =
-      names.foldLeft(text)((t, n) => Dialect.replaceIdent(t, n, rename(n)))
-    (ctes.map(c => s"CTE ${c.name}" -> c.body) :+
-      ("statement" -> rest)).foreach { case (what, text) =>
-      names.foreach { n =>
-        require(!Dialect.containsBacktickedIdent(text, n),
-          s"backquoted reference to the CTE '$n' in the $what is not " +
-            "supported — drop the backticks")
-      }
-    }
-    val targetRef: Option[String] = mutationTarget(rest).map(_._1)
-    targetRef.foreach { t =>
+    mutationTarget(rest).foreach { case (t, _) =>
       require(!names.exists(_.equalsIgnoreCase(t)),
         s"the CTE '$t' shares the DML target's name — the target is a " +
           "real table outside the WITH scope (Postgres rule); rename " +
           "the CTE")
     }
-    try {
-      ctes.foreach { c =>
-        val df0 = bindLock.synchronized {
-          val d = sessionOne(spark, rewriteAll(c.body))
-          d.queryExecution.assertAnalyzed()
-          d
-        }
-        val df = c.cols.map { cs =>
-          require(cs.size == df0.columns.length,
-            s"CTE ${c.name}(${cs.mkString(", ")}) declares ${cs.size} " +
-              s"columns, its body produces ${df0.columns.length}")
-          df0.toDF(cs: _*)
-        }.getOrElse(df0)
-        bindLock.synchronized { df.createOrReplaceTempView(rename(c.name)) }
-      }
-      sessionSql(spark, rewriteAll(rest))
-    } finally rename.values.foreach(spark.catalog.dropTempView)
-  }
-
-  /** The recursion loops broadcast-hint their frontier / seen frames
-    * under [[FrameStats]]' measured-size gate: a localCheckpoint's
-    * LogicalRDD reports plan-derived statistics, so without the hint
-    * every per-round step join and EXCEPT plans as a full
-    * exchange-both-sides join of frames that are typically a few
-    * thousand rows — O(rounds) shuffles of the corpus-sized edge
-    * tables where O(0) suffices (guide §2.4/§3.1). Oversized state
-    * keeps the shuffle plan, so scale safety is unconditional.
-    */
-  private def checkpointedBytes(df: DataFrame): Long =
-    FrameStats.checkpointedBytes(df)
-
-  private def maybeBroadcastHint(df: DataFrame, bytes: Long): DataFrame =
-    FrameStats.broadcastIfSmall(df, bytes)
-
-  /** `left EXCEPT DISTINCT right` spelled as the identical
-    * Distinct-over-null-safe-anti-join Spark's own
-    * ReplaceExceptWithAntiJoin produces — written out so the SEEN side
-    * can carry a broadcast hint (a hint on a Dataset.except operand is
-    * eliminated before the optimizer rewrites Except into the join, so
-    * it can never attach there). Columns pair positionally with `<=>`,
-    * matching Except's null-safe set semantics bit for bit.
-    */
-  private def exceptDistinctVia(left: DataFrame, right: DataFrame,
-                                rightBytes: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val names = left.columns.toSeq
-    val tmp = names.indices.map(i => s"__ed$i")
-    val l = left.toDF(tmp: _*).as("__edl")
-    val r = maybeBroadcastHint(right.toDF(tmp: _*), rightBytes).as("__edr")
-    val cond = tmp.map(c => col(s"__edl.$c") <=> col(s"__edr.$c"))
-      .reduce(_ && _)
-    l.join(r, cond, "left_anti").toDF(names: _*).distinct()
-  }
-
-  /** One frontier-minus-seen drain loop (see [[runRecursiveUnion]]);
-    * returns the checkpointed closure. The rec's internal view name is
-    * rebound to the frontier each round while the loop runs.
-    */
-  private def drainRecursion(lower: String => DataFrame,
-                             rec: graft.sql.RecursiveUnion.Rec,
-                             internal: String,
-                             rewriteAll: String => String,
-                             freshCols: DataFrame => DataFrame,
-                             maxRounds: Int): DataFrame = {
-    val seedDf = lower(rewriteAll(rec.seed))
-    val cols = rec.cols.getOrElse(seedDf.columns.toSeq)
-    require(cols.size == seedDf.columns.length,
-      s"recursive CTE ${rec.name}(${cols.mkString(", ")}) declares " +
-        s"${cols.size} columns, the seed produces ${seedDf.columns.length}")
-    val seed = seedDf.toDF(cols: _*)
-    val schema = seed.schema
-    def align(df: DataFrame): DataFrame = {
-      require(df.columns.length == cols.size,
-        s"recursive step of ${rec.name} produces ${df.columns.length} " +
-          s"columns, expected ${cols.size}")
-      df.toDF(cols: _*).select(schema.fields.toSeq.map(f =>
-        org.apache.spark.sql.functions.col(f.name)
-          .cast(f.dataType).as(f.name)): _*)
+    graft.sql.RecursiveUnion.withScope(spark, names,
+      ctes.map(c => s"CTE ${c.name}" -> c.body) :+ ("statement" -> rest)) { scope =>
+      ctes.foreach(c => scope.bindCte(c.name, c.cols, c.body, sessionOne(spark, _))())
+      sessionSql(spark, scope.rewrite(rest))
     }
-    // the CTE names are STATEMENT-scoped: binding rec.name directly
-    // would permanently clobber a same-named session view, and a
-    // deterministic internal name would race concurrent same-named
-    // recursions (review-caught, twice). replaceIdent rewrites table
-    // references only — qualified columns `e.name`, `AS name` aliases
-    // and column-land clause references stay; a backquoted reference is
-    // invisible to the masked rewrite and would silently read the
-    // session catalog — refused loudly by the caller.
-    val step = rewriteAll(rec.step)
-    var seen = freshCols(seed.distinct().localCheckpoint(true))
-    // measured state sizes drive the broadcast gates: the frontier hint
-    // rides the bound view into the step (its join keeps the edge side
-    // map-local), the seen bytes gate the EXCEPT's anti-join build side
-    var seenBytes = checkpointedBytes(seen)
-    var frontier = seen
-    var frontierBytes = seenBytes
-    var drained = frontier.isEmpty
-    var round = 0
-    // `seen` accumulates as a UNION of already-checkpointed per-round
-    // increments — re-materializing the whole accumulation every round
-    // would write O(rounds × |closure|) where O(|closure|) suffices
-    // (review-caught, r15). The union tree still deepens the plan one
-    // leaf per round, so collapse it with a checkpoint every
-    // `collapseEvery` rounds: write volume O(|closure| · rounds / 16),
-    // plan depth ≤ 16 leaves — deep recursions pay neither full
-    // re-writes per round nor an unbounded analysis tree.
-    val collapseEvery = 16
-    var sinceCollapse = 0
-    while (!drained && round < maxRounds) {
-      // bind + analyze under the lock (the sql() concurrency
-      // contract); the analyzed plan holds the resolved frontier, so
-      // a concurrent rebind can't leak into this round's EXCEPT
-      val stepped = bindLock.synchronized {
-        maybeBroadcastHint(frontier, frontierBytes)
-          .createOrReplaceTempView(internal)
-        align(lower(step))
-      }
-      val increment = exceptDistinctVia(stepped, seen, seenBytes)
-      val next = freshCols(increment.localCheckpoint(true))
-      val nBytes = checkpointedBytes(next)
-      if (next.isEmpty) drained = true
-      else {
-        seen = seen.union(next)
-        seenBytes += nBytes // increments are disjoint by construction
-        sinceCollapse += 1
-        if (sinceCollapse >= collapseEvery) {
-          seen = freshCols(seen.localCheckpoint(true))
-          sinceCollapse = 0
-        }
-        frontier = next
-        frontierBytes = nBytes
-      }
-      round += 1
-    }
-    require(drained,
-      s"UNION-distinct recursion '${rec.name}' did not drain within " +
-        s"$maxRounds rounds — the step keeps producing new rows; " +
-        "check the recursion or split the query")
-    seen
-  }
-
-  /** TRUE mutual recursion (gr12): one simultaneous drain loop over a
-    * strongly-connected group of recursive CTEs. DuckDB-probed
-    * semantics (see [[graft.sql.RecursiveUnion]]): each round every
-    * member's step evaluates against the round-start state — the
-    * member's OWN view bound to its frontier (last round's new rows,
-    * the standard working table), every SIBLING's view bound to that
-    * sibling's closure-so-far — and new rows land simultaneously after
-    * all members step, so in-round evaluation order cannot leak (the
-    * analyzed plan pins the bindings). The loop stops when a full
-    * round adds no row to any member; a member whose frontier drains
-    * keeps stepping — a sibling's growing closure can still feed it
-    * (probed: an empty-seed member fed purely by its sibling).
-    *
-    * Scale shape: per round each member pays one step + one
-    * distinct-EXCEPT against its own closure plus one emptiness probe
-    * (all frontier/closure-sized, never path-count-sized — the
-    * UNION-distinct cycle guard); closures accumulate as unions of
-    * checkpointed per-round increments collapsed every 16 rounds, the
-    * [[drainRecursion]] discipline. Cross-references scan the sibling
-    * CLOSURE each round — inherent to the probed semantics, O(rounds ×
-    * closure) like DuckDB's own evaluation.
-    */
-  private def drainMutualGroup(lower: String => DataFrame,
-                               group: Seq[graft.sql.RecursiveUnion.Rec],
-                               internal: graft.sql.RecursiveUnion.Rec => String,
-                               rewriteAll: String => String,
-                               freshCols: DataFrame => DataFrame,
-                               maxRounds: Int): Seq[DataFrame] = {
-    final class Member(val rec: graft.sql.RecursiveUnion.Rec) {
-      // seeds bind with NO sibling in scope (a seed referencing a
-      // sibling was refused at parse — DuckDB's circular-ref error)
-      private val seedDf = lower(rewriteAll(rec.seed))
-      val cols: Seq[String] = rec.cols.getOrElse(seedDf.columns.toSeq)
-      require(cols.size == seedDf.columns.length,
-        s"recursive CTE ${rec.name}(${cols.mkString(", ")}) declares " +
-          s"${cols.size} columns, the seed produces " +
-          s"${seedDf.columns.length}")
-      private val schema = seedDf.toDF(cols: _*).schema
-      val step: String = rewriteAll(rec.step)
-      var seen: DataFrame =
-        freshCols(seedDf.toDF(cols: _*).distinct().localCheckpoint(true))
-      var frontier: DataFrame = seen
-      // measured sizes drive the broadcast gates (see [[drainRecursion]]):
-      // both the member's own frontier binding and the sibling-closure
-      // bindings hint when small, and seenBytes gates the EXCEPT build
-      var seenBytes: Long = checkpointedBytes(seen)
-      var frontierBytes: Long = seenBytes
-      var sinceCollapse: Int = 0
-      def align(df: DataFrame): DataFrame = {
-        require(df.columns.length == cols.size,
-          s"recursive step of ${rec.name} produces ${df.columns.length} " +
-            s"columns, expected ${cols.size}")
-        df.toDF(cols: _*).select(schema.fields.toSeq.map(f =>
-          org.apache.spark.sql.functions.col(f.name)
-            .cast(f.dataType).as(f.name)): _*)
-      }
-    }
-    val members = group.map(new Member(_))
-    var drained = false
-    var round = 0
-    while (!drained && round < maxRounds) {
-      // one member at a time under the lock: siblings bound to their
-      // round-start closures, the member itself to its frontier; the
-      // eager analysis freezes the resolved frontier/closure into the
-      // plan, so later rebinds (the next member, the next round) can't
-      // leak into this step's EXCEPT
-      val next = members.map { mb =>
-        val stepped = bindLock.synchronized {
-          members.foreach { o =>
-            (if (o eq mb) maybeBroadcastHint(o.frontier, o.frontierBytes)
-             else maybeBroadcastHint(o.seen, o.seenBytes))
-              .createOrReplaceTempView(internal(o.rec))
-          }
-          mb.align(lower(mb.step))
-        }
-        val nf = freshCols(exceptDistinctVia(stepped, mb.seen, mb.seenBytes)
-          .localCheckpoint(true))
-        (nf, nf.isEmpty, checkpointedBytes(nf))
-      }
-      drained = next.forall(_._2)
-      if (!drained) members.zip(next).foreach {
-        case (mb, (nf, empty, nBytes)) =>
-          // an empty increment leaves the closure untouched but still
-          // empties the frontier (the member keeps stepping off siblings)
-          if (!empty) {
-            mb.seen = mb.seen.union(nf)
-            mb.seenBytes += nBytes
-            mb.sinceCollapse += 1
-            if (mb.sinceCollapse >= 16) {
-              mb.seen = freshCols(mb.seen.localCheckpoint(true))
-              mb.sinceCollapse = 0
-            }
-          }
-          mb.frontier = nf
-          mb.frontierBytes = nBytes
-      }
-      round += 1
-    }
-    require(drained,
-      s"mutual recursion over ${group.map(_.name).mkString(", ")} did " +
-        s"not drain within $maxRounds rounds — the steps keep producing " +
-        "new rows; check the recursion or split the query")
-    members.map(_.seen)
   }
 
   /** `stmt` through `runOne` (the caller's single-statement pipeline),

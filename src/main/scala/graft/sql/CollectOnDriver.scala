@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.util.truncatedString
 import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
 import org.apache.spark.sql.execution.aggregate.{AggUtils, BaseAggregateExec, SortBasedAggregationIterator}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
@@ -33,12 +34,20 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
   *
   * Anything else, a non-deterministic sort key or projection, a DISTINCT
   * aggregate and any streaming plan falls through to Spark's strategies.
-  * Writes never plan under `ReturnAnswer`, so their plans do not change.
+  *
+  * A write plans its query without `ReturnAnswer`, but adaptive execution
+  * re-plans what is left of ANY query under a `ReturnAnswer` root after
+  * each finished stage, with the finished stages as [[LogicalQueryStage]]
+  * leaves. So the strategy declines a root that holds a
+  * `LogicalQueryStage`: a write keeps Spark's plan, and a collect keeps
+  * the driver plan it started with, because Spark's re-planned
+  * alternative has one more shuffle.
   */
 object CollectOnDriver extends SparkStrategy {
 
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ReturnAnswer(root) if !root.isStreaming => root match {
+    case ReturnAnswer(root)
+        if !root.isStreaming && !root.exists(_.isInstanceOf[LogicalQueryStage]) => root match {
       case Sort(order, true, child, _) => mergeSorted(child.output, order, child)
       case Project(list, Sort(order, true, child, _)) => mergeSorted(list, order, child)
       case agg: Aggregate if agg.groupingExpressions.isEmpty => finalAggregate(agg)

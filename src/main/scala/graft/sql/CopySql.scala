@@ -100,20 +100,13 @@ object CopySql {
       "COPY FROM imports into a named table — a subquery cannot receive " +
         "rows")
     // the path literal is INVISIBLE on the mask (quotes included), so
-    // walk the original text: skip real whitespace, then scan to the
-    // closing quote with the mask's own escape rule
+    // walk the original text: skip real whitespace, then scan the
+    // literal with its doubled-quote and backslash escapes
     while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-    require(k < sql.length && sql.charAt(k) == '\'',
-      "COPY requires a single-quoted path literal")
-    var pathEnd = k + 1
-    while (pathEnd < sql.length && sql.charAt(pathEnd) != '\'') {
-      pathEnd += (if (sql.charAt(pathEnd) == '\\') 2 else 1)
-    }
-    require(pathEnd < sql.length, "unterminated COPY path literal")
-    val path = sql.substring(k + 1, pathEnd)
+    val (path, afterPath) = Dialect.scanQuoted(sql, k, "COPY path")
     require(path.nonEmpty && !path.contains("'") && !path.contains("\\"),
       "COPY path must be a plain non-empty literal")
-    k = skipWs(m, pathEnd + 1)
+    k = skipWs(m, afterPath)
     var format = ""
     var header: Option[Boolean] = None
     var delim: Option[String] = None

@@ -578,14 +578,8 @@ object DmlSql {
   /** Correlated UPDATE (u13): ONE left join of target against source on
     * the WHERE predicate; matched rows take the SET expressions (which
     * may reference both aliases), unmatched rows pass through. The
-    * "one source row per target row" contract is refused loudly: for a
-    * pure equi-conjunction predicate it follows from source-side key
-    * uniqueness — ONE aggregate over the source alone, join stays lazy
-    * ([[MergeSql.equiSourceKeys]], nulls excluded, strictly stronger:
-    * duplicate source keys refuse even when unmatched); theta/mixed
-    * predicates materialize the join ONCE (eager localCheckpoint —
-    * alias qualifiers survive it, probed) and count matches over the
-    * checkpointed blocks, so guard + output pay a single execution.
+    * "one source row per target row" contract is refused loudly by
+    * MERGE's guard, [[MergeSql.oneSourceRowPerTarget]].
     */
   private def runUpdateFrom(spark: SparkSession, t: DataFrame, alias: String,
                             sets: Seq[(String, String)],
@@ -601,34 +595,16 @@ object DmlSql {
     val sw = s.withColumn(USFlag, lit(true)).as(src.alias)
     val pred = where.map(expr).getOrElse(lit(true))
     val joined0 = tw.join(sw, pred, "left")
-    def refuse(n: Long): Nothing = throw new IllegalArgumentException(
-      s"UPDATE … FROM: a target row matches $n source rows — one target " +
-        "row may take its values from exactly one source row; " +
-        "deduplicate the source on the join keys first (e.g. a " +
-        "latest-wins window)")
-    val joined = where.flatMap(
-      MergeSql.equiSourceKeys(_, alias, src.alias)) match {
-      case Some(keys) =>
-        val kcols = keys.zipWithIndex.map { case (k, i) =>
-          expr(k).as(s"__uk$i")
-        }
-        val keyed = sw.select(kcols: _*)
-        val nonNull = keys.indices.map(i => col(s"__uk$i").isNotNull)
-          .reduce(_ && _)
-        val mm = keyed.filter(nonNull)
-          .groupBy(keys.indices.map(i => col(s"__uk$i")): _*)
-          .agg(count(lit(1)).as("__n")).agg(max(col("__n")))
-          .collect().head
-        if (!mm.isNullAt(0) && mm.getLong(0) > 1) refuse(mm.getLong(0))
-        joined0
-      case None =>
-        val cp = joined0.localCheckpoint(true)
-        val mm = cp.filter(col(USFlag).isNotNull).groupBy(col(UTId))
-          .agg(count(lit(1)).as("__n")).agg(max(col("__n"))).collect().head
-        if (!mm.isNullAt(0) && mm.getLong(0) > 1) refuse(mm.getLong(0))
-        cp
-    }
     val matched = col(USFlag).isNotNull
+    val joined = MergeSql.oneSourceRowPerTarget(sw,
+      where.flatMap(MergeSql.equiSourceKeys(_, alias, src.alias)),
+      joined0, matched, UTId) { (n, _) =>
+      throw new IllegalArgumentException(
+        s"UPDATE … FROM: a target row matches $n source rows — one target " +
+          "row may take its values from exactly one source row; " +
+          "deduplicate the source on the join keys first (e.g. a " +
+          "latest-wins window)")
+    }
     // onlyMatched = the RETURNING arm: just the post-image of rows a
     // source row matched (the projection below is unchanged — matched
     // is TRUE on every surviving row, so each CASE takes its SET arm)

@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** `MERGE INTO` at the SQL surface (u09) — the statement form of the
@@ -344,6 +344,44 @@ object MergeSql {
     if (keys.isEmpty) None else Some(keys)
   }
 
+  /** The "one source row per target row" guard of MERGE's MATCHED arms
+    * and UPDATE … FROM. For a pure equi-conjunction (`keys`, the source
+    * side from [[equiSourceKeys]]) the contract follows from source-side
+    * key uniqueness, established by ONE aggregate over the aliased
+    * `source` alone — the join stays lazy (strictly stronger: duplicate
+    * source keys refuse even when unmatched; a NULL key never equi-matches,
+    * so null keys are excluded before counting). Any other predicate
+    * needs the join-based guard: `joined` is materialized ONCE with an
+    * eager localCheckpoint (alias qualifiers survive it, probed), and the
+    * per-`targetId` count of `matched` rows and the statement's output
+    * both read the checkpointed blocks. Returns the frame the statement
+    * reads next; `refuse(n, byKey)` is called with the largest count
+    * when it exceeds one.
+    */
+  private[sql] def oneSourceRowPerTarget(source: DataFrame,
+                                         keys: Option[Seq[String]],
+                                         joined: DataFrame, matched: Column,
+                                         targetId: String)
+                                        (refuse: (Long, Boolean) => Nothing): DataFrame = {
+    def largest(g: RelationalGroupedDataset): Option[Long] = {
+      val mm = g.agg(count(lit(1)).as("__n")).agg(max(col("__n"))).collect().head
+      if (!mm.isNullAt(0) && mm.getLong(0) > 1) Some(mm.getLong(0)) else None
+    }
+    keys match {
+      case Some(ks) =>
+        val names = ks.indices.map(i => s"__sk$i")
+        val k = names.map(col)
+        largest(source.select(ks.zip(names).map { case (e, n) => expr(e).as(n) }: _*)
+          .filter(k.map(_.isNotNull).reduce(_ && _)).groupBy(k: _*))
+          .foreach(refuse(_, true))
+        joined
+      case None =>
+        val cp = joined.localCheckpoint(true)
+        largest(cp.filter(matched).groupBy(col(targetId))).foreach(refuse(_, false))
+        cp
+    }
+  }
+
   private val TFlag = "__merge_t_present"
   private val SFlag = "__merge_s_present"
   private val TId = "__merge_tid"
@@ -386,56 +424,26 @@ object MergeSql {
     val matched = col(TFlag).isNotNull && col(SFlag).isNotNull
     val tOnly = col(TFlag).isNotNull && col(SFlag).isNull
     val sOnly = col(TFlag).isNull && col(SFlag).isNotNull
-    // SQL-standard multi-match refusal. For a pure equi-ON the contract
-    // "one source row per target row" follows from source-side key
-    // uniqueness, established by ONE aggregate over the source alone —
-    // the join stays lazy (r15 advice; strictly stronger: duplicate
-    // source keys refuse even when unmatched, documented below). A
-    // theta/mixed ON needs the join-based guard — there the join is
-    // materialized ONCE with an eager localCheckpoint (alias qualifiers
-    // survive it, probed) so the guard count and the merge output both
-    // read the checkpointed blocks instead of executing the join twice
-    // (r16 advice).
-    val hasMatchedArm = st.arms.exists(_.kind == 0)
-    val equiKeys =
-      if (hasMatchedArm)
-        equiSourceKeys(st.on, st.targetAlias, st.sourceAlias)
-      else None
+    // SQL-standard multi-match refusal, only when a MATCHED arm can
+    // update or delete a target row
     val joined =
-      if (hasMatchedArm && equiKeys.isEmpty) joined0.localCheckpoint(true)
-      else joined0
-    if (hasMatchedArm) equiKeys match {
-      case Some(keys) =>
-        val kcols = keys.zipWithIndex.map { case (k, i) =>
-          expr(k).as(s"__mk$i")
-        }
-        val keyed = sw.select(kcols: _*)
-        // a NULL key never equi-matches a target row — exclude before
-        // counting, else two null-keyed source rows refuse falsely
-        val nonNull = (0 until keys.size)
-          .map(i => col(s"__mk$i").isNotNull).reduce(_ && _)
-        val mm = keyed.filter(nonNull)
-          .groupBy((0 until keys.size).map(i => col(s"__mk$i")): _*)
-          .agg(count(lit(1)).as("__n")).agg(max(col("__n")))
-          .collect().head
-        if (!mm.isNullAt(0) && mm.getLong(0) > 1)
-          throw new IllegalArgumentException(
-            s"MERGE: an ON key recurs in ${mm.getLong(0)} source rows, " +
-              "so a target row could match " + mm.getLong(0) +
-              " source rows — the SQL standard forbids " +
+      if (!st.arms.exists(_.kind == 0)) joined0
+      else oneSourceRowPerTarget(sw,
+        equiSourceKeys(st.on, st.targetAlias, st.sourceAlias),
+        joined0, matched, TId) { (n, byKey) =>
+        throw new IllegalArgumentException(
+          if (byKey)
+            s"MERGE: an ON key recurs in $n source rows, so a target row " +
+              s"could match $n source rows — the SQL standard forbids " +
               "updating/deleting one target row from multiple source " +
               "rows; deduplicate the source on the ON keys first " +
-              "(e.g. a latest-wins window)")
-      case None =>
-        val mm = joined.filter(matched).groupBy(col(TId))
-          .agg(count(lit(1)).as("__n")).agg(max(col("__n"))).collect().head
-        if (!mm.isNullAt(0) && mm.getLong(0) > 1)
-          throw new IllegalArgumentException(
-            s"MERGE: a target row matches ${mm.getLong(0)} source rows — " +
-              "the SQL standard forbids updating/deleting one target row " +
-              "from multiple source rows; deduplicate the source on the " +
-              "ON keys first (e.g. a latest-wins window)")
-    }
+              "(e.g. a latest-wins window)"
+          else
+            s"MERGE: a target row matches $n source rows — the SQL " +
+              "standard forbids updating/deleting one target row from " +
+              "multiple source rows; deduplicate the source on the ON " +
+              "keys first (e.g. a latest-wins window)")
+      }
     // first arm wins, textual order; -1 keeps the target row, -2 drops
     // an unmatched source row (no INSERT arm fired)
     var chain: Column = null

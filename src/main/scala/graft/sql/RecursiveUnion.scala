@@ -1,23 +1,32 @@
 package graft.sql
 
-/** UNION-distinct recursive CTEs (gr09/gr10). Spark 4 executes
-  * `WITH RECURSIVE … UNION ALL …` natively (SPARK-24497 / UnionLoop)
-  * but REJECTS the UNION-distinct form (`UNION_NOT_SUPPORTED_IN_
-  * RECURSIVE_CTE`) — yet that form is exactly what makes recursion over
-  * a CYCLIC graph terminate in DuckDB/Postgres: each round keeps only
-  * rows never seen before, so the frontier drains at the closure.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+import graft.api.{FrameStats, Table}
+
+/** UNION-distinct recursive CTEs (gr09/gr10): the parser and the
+  * executor. Spark 4 executes `WITH RECURSIVE … UNION ALL …` natively
+  * (SPARK-24497 / UnionLoop) but REJECTS the UNION-distinct form
+  * (`UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE`) — yet that form is exactly
+  * what makes recursion over a CYCLIC graph terminate in
+  * DuckDB/Postgres: each round keeps only rows never seen before, so the
+  * frontier drains at the closure.
   *
-  * This parser detects the form; [[graft.api.Table]] lowers it onto the
-  * engine's iterate machinery as frontier-minus-seen:
+  * [[parse]] detects the form; [[run]] executes it as
+  * frontier-minus-seen:
   *
   *   seen ← distinct(seed);  frontier ← seen
   *   repeat: next ← distinct(step(frontier)) EXCEPT seen
   *           stop when next is empty; seen ← seen ∪ next; frontier ← next
   *
   * which is the SQL-standard semantics of the UNION-distinct recursive
-  * term (the working table each round is the set of NEW rows). The
-  * UNION ALL form keeps Spark's native path — this file returns None
-  * for it.
+  * term (the working table each round is the set of NEW rows). The step
+  * runs at least once, also when the seed is empty: a step that does not
+  * read its frontier's rows (`SELECT 7 FROM (SELECT count(*) FROM r) t`,
+  * a `LEFT JOIN r`) still adds rows to an empty-seeded closure, as in
+  * DuckDB. The UNION ALL form keeps Spark's native path — [[parse]]
+  * returns None for it.
   *
   * Non-recursive HELPER CTEs may ride alongside the recursive CTEs
   * (gr10 — the common real-world shape: a seed-data or parameter CTE
@@ -32,15 +41,15 @@ package graft.sql
   * an ACYCLIC reference (backward or forward in text) drains the
   * referenced recursion fully before the referencing one starts —
   * legal because UNION-distinct steps are monotone, so staged and
-  * simultaneous evaluation reach the same least fixpoint. A CYCLIC
-  * group (TRUE mutual recursion, gr12) drains as ONE simultaneous
-  * loop: each round every member's step runs against the round-start
-  * state — its OWN frontier for the self-reference, the SIBLINGS'
-  * closures-so-far for cross-references — and the loop stops when a
-  * full round adds no row to any member. Both rules were probed
-  * against DuckDB 1.x (even/odd mutual chain; a three-CTE statement
-  * mixing a cycle with a dependent; a member whose frontier drains
-  * while a sibling keeps consuming its closure).
+  * simultaneous evaluation reach the same least fixpoint. Every group,
+  * a single recursion included, drains in ONE simultaneous loop: each
+  * round every member's step runs against the round-start state — its
+  * OWN frontier for the self-reference, the SIBLINGS' closures-so-far
+  * for cross-references — and the loop stops when a full round adds no
+  * row to any member. Both rules were probed against DuckDB 1.x (even/odd
+  * mutual chain; a three-CTE statement mixing a cycle with a dependent;
+  * a member whose frontier drains while a sibling keeps consuming its
+  * closure).
   *
   * Scale shape: each round is one distinct + one EXCEPT (both keyed
   * shuffles on the full row), lineage cut every round (the Iterate
@@ -48,6 +57,9 @@ package graft.sql
   * growing. The anti-join against `seen` is the cycle guard — cost
   * tracks closure size, never path count (UNION ALL on a cycle never
   * terminates; on a DAG with many paths it enumerates every path).
+  *
+  * Statement-scoped CTE names ([[withScope]]) are written here once and
+  * shared with the CTE-headed DML form (u16).
   */
 object RecursiveUnion {
 
@@ -291,4 +303,241 @@ object RecursiveUnion {
     out.toSeq
   }
 
+  /** Statement-scoped CTE names: each binds under a per-invocation
+    * unique internal view name, `__cte_<name>_<suffix>` (binding the
+    * name itself would clobber a same-named session view, and a
+    * deterministic internal name would race a concurrent statement with
+    * the same CTE names). [[Dialect.replaceIdent]] rewrites table
+    * references only — qualified columns `e.name`, `AS name` aliases and
+    * column-land clause references stay.
+    */
+  private[graft] final class Scope(names: Seq[String]) {
+    private val suffix = java.util.UUID.randomUUID.toString.take(8)
+    private val internal = names.map(n => n -> s"__cte_${n}_$suffix").toMap
+
+    /** `text` with every CTE reference renamed to its internal view. */
+    def rewrite(text: String): String =
+      names.foldLeft(text)((t, n) => Dialect.replaceIdent(t, n, internal(n)))
+
+    /** Binds the CTE `name` to `df`, under the bind lock. */
+    def bind(name: String, df: DataFrame): Unit =
+      Table.bindLock.synchronized(df.createOrReplaceTempView(internal(name)))
+
+    /** Lowers a non-recursive CTE body (analyzed under the bind lock),
+      * renames its columns to the declared list and binds `finish` of it.
+      */
+    def bindCte(name: String, cols: Option[Seq[String]], body: String,
+                lower: String => DataFrame)
+               (finish: DataFrame => DataFrame = identity): Unit = {
+      val df = Table.bindLock.synchronized {
+        val d = lower(rewrite(body))
+        d.queryExecution.assertAnalyzed()
+        d
+      }
+      bind(name, finish(declared(s"CTE $name", "body", cols, df)))
+    }
+
+    private[RecursiveUnion] def drop(spark: SparkSession): Unit =
+      internal.values.foreach(spark.catalog.dropTempView)
+  }
+
+  /** Runs `body` in a [[Scope]] over `names` and drops every bound view
+    * after it. A backquoted reference to a CTE in any of `texts` (each
+    * labelled for the error) is invisible to the masked rewrite and would
+    * silently read the session catalog, so it refuses. `body`'s result
+    * must be analyzed before it returns: analysis resolves a view to a
+    * snapshot of its plan, so the dropped names are not read again.
+    */
+  private[graft] def withScope[T](spark: SparkSession, names: Seq[String],
+                                  texts: Seq[(String, String)])
+                                 (body: Scope => T): T = {
+    for ((what, text) <- texts; n <- names)
+      require(!Dialect.containsBacktickedIdent(text, n),
+        s"backquoted reference to the CTE '$n' in the $what is not " +
+          "supported — drop the backticks")
+    val scope = new Scope(names)
+    try body(scope) finally scope.drop(spark)
+  }
+
+  /** `df` with `what`'s declared column list, when it declares one. */
+  private def declared(what: String, part: String, cols: Option[Seq[String]],
+                       df: DataFrame): DataFrame = cols.fold(df) { cs =>
+    require(cs.size == df.columns.length,
+      s"$what(${cs.mkString(", ")}) declares ${cs.size} columns, its " +
+        s"$part produces ${df.columns.length}")
+    df.toDF(cs: _*)
+  }
+
+  /** A recursion that has not drained after this many rounds refuses
+    * instead of looping forever.
+    */
+  private val MaxRounds = 512
+
+  /** Executes a parsed statement. `lower` runs one statement text through
+    * the caller's pipeline (seeds, steps, helpers and the outer statement
+    * each re-enter it). Helpers bind once, in textual order; the SCC
+    * groups then drain dependencies-first, each closure binding before
+    * later groups and the outer statement run.
+    */
+  def run(spark: SparkSession, st: Stmt, lower: String => DataFrame): DataFrame = {
+    val texts = st.helpers.map(h => s"helper ${h.name}" -> h.body) ++
+      st.recs.flatMap(r => Seq(s"seed of ${r.name}" -> r.seed,
+        s"step of ${r.name}" -> r.step)) :+ ("outer statement" -> st.outer)
+    withScope(spark, st.helpers.map(_.name) ++ st.recs.map(_.name), texts) { scope =>
+      // a helper ANY step reads is MATERIALIZED (eager localCheckpoint):
+      // steps re-execute once per round, and re-scanning the helper's
+      // source plan every round costs O(rounds × helper) where one
+      // checkpoint pass suffices (measured: gr10's edge helper halved the
+      // closure runtime). A helper only the outer statement (or later
+      // helpers) reads stays a lazy view.
+      val stepMasks = st.recs.map(r => Dialect.stripLiterals(r.step))
+      st.helpers.foreach { h =>
+        val readByStep = stepMasks.exists(containsWord(_, h.name))
+        scope.bindCte(h.name, h.cols, h.body, lower) { df =>
+          if (readByStep) freshCols(df.localCheckpoint(true)) else df
+        }
+      }
+      st.drainGroups.foreach { group =>
+        group.zip(drain(lower, group, scope)).foreach { case (rec, closure) =>
+          scope.bind(rec.name, closure)
+        }
+      }
+      Table.bindLock.synchronized(lower(scope.rewrite(st.outer)))
+    }
+  }
+
+  /** Every checkpoint is wrapped in a fresh aliasing projection: a
+    * localCheckpoint's LogicalRDD can carry origin constraints that
+    * reference attributes outside its own output, and the lazy
+    * accumulation union of [[drain]] computes Union constraints over its
+    * children (Spark's rewrite then dies with `key not found: k#N` —
+    * surfaced by a recursion over an ON CONFLICT result). A Project keeps
+    * only output-expressible constraints.
+    */
+  private def freshCols(df: DataFrame): DataFrame =
+    df.select(df.columns.map(c => col(s"`$c`").as(c)): _*)
+
+  /** `left EXCEPT DISTINCT right` spelled as the identical
+    * Distinct-over-null-safe-anti-join Spark's own
+    * ReplaceExceptWithAntiJoin produces — written out so the SEEN side
+    * can carry a broadcast hint (a hint on a Dataset.except operand is
+    * eliminated before the optimizer rewrites Except into the join, so
+    * it can never attach there). Columns pair positionally with `<=>`,
+    * matching Except's null-safe set semantics bit for bit.
+    */
+  private def exceptDistinctVia(left: DataFrame, right: DataFrame,
+                                rightBytes: Long): DataFrame = {
+    val names = left.columns.toSeq
+    val tmp = names.indices.map(i => s"__ed$i")
+    val l = left.toDF(tmp: _*).as("__edl")
+    val r = FrameStats.broadcastIfSmall(right.toDF(tmp: _*), rightBytes).as("__edr")
+    val cond = tmp.map(c => col(s"__edl.$c") <=> col(s"__edr.$c"))
+      .reduce(_ && _)
+    l.join(r, cond, "left_anti").toDF(names: _*).distinct()
+  }
+
+  /** One simultaneous frontier-minus-seen loop over an SCC group — a
+    * single recursion is a one-member group. Each round every member's
+    * step evaluates against the round-start state: the member's OWN view
+    * bound to its frontier (last round's new rows, the standard working
+    * table), every SIBLING's view bound to that sibling's closure-so-far.
+    * New rows land simultaneously after all members step, so in-round
+    * evaluation order cannot leak (the analyzed plan pins the bindings).
+    * The loop stops when a full round adds no row to any member, and it
+    * runs at least one round, so an empty seed still steps once. A
+    * member whose frontier drains keeps stepping — a sibling's growing
+    * closure can still feed it (probed: an empty-seed member fed purely
+    * by its sibling). Returns each member's checkpointed closure.
+    *
+    * Scale shape: per round each member pays one step, one
+    * distinct-EXCEPT against its own closure and one emptiness probe.
+    * The measured sizes of the checkpointed frontier and closure drive
+    * [[FrameStats]]' broadcast gate: a localCheckpoint's LogicalRDD
+    * reports plan-derived statistics, so without the hint every step
+    * join and EXCEPT would plan as an exchange-both-sides join of frames
+    * that are typically a few thousand rows. Oversized state keeps the
+    * shuffle plan. Cross-references scan the sibling CLOSURE each round
+    * — inherent to the probed semantics, O(rounds × closure) like
+    * DuckDB's own evaluation.
+    */
+  private def drain(lower: String => DataFrame, group: Seq[Rec],
+                    scope: Scope): Seq[DataFrame] = {
+    final class Member(val rec: Rec) {
+      // seeds bind with NO sibling in scope (a seed referencing a
+      // sibling was refused at parse — DuckDB's circular-ref error)
+      private val seed = declared(s"recursive CTE ${rec.name}", "seed",
+        rec.cols, lower(scope.rewrite(rec.seed)))
+      private val schema = seed.schema
+      val step: String = scope.rewrite(rec.step)
+      var seen: DataFrame = freshCols(seed.distinct().localCheckpoint(true))
+      var seenBytes: Long = FrameStats.checkpointedBytes(seen)
+      var frontier: DataFrame = seen
+      var frontierBytes: Long = seenBytes
+      var sinceCollapse: Int = 0
+
+      /** The step's output under the seed's names and types (the
+        * anchor-defines-schema rule Spark's native recursion also
+        * applies).
+        */
+      def align(df: DataFrame): DataFrame = {
+        require(df.columns.length == schema.size,
+          s"recursive step of ${rec.name} produces ${df.columns.length} " +
+            s"columns, expected ${schema.size}")
+        df.toDF(schema.fieldNames.toSeq: _*).select(schema.fields.toSeq.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*)
+      }
+    }
+    val members = group.map(new Member(_))
+    // `seen` accumulates as a UNION of already-checkpointed per-round
+    // increments — re-materializing the whole accumulation every round
+    // would write O(rounds × |closure|). The union tree still deepens
+    // the plan one leaf per round, so it collapses with a checkpoint
+    // every `collapseEvery` rounds: plan depth ≤ 16 leaves.
+    val collapseEvery = 16
+    var drained = false
+    var round = 0
+    while (!drained && round < MaxRounds) {
+      // one member at a time under the lock: siblings bound to their
+      // round-start closures, the member itself to its frontier; the
+      // eager analysis freezes the resolved frontier/closure into the
+      // plan, so later rebinds (the next member, the next round) can't
+      // leak into this step's EXCEPT
+      val next = members.map { mb =>
+        val stepped = Table.bindLock.synchronized {
+          members.foreach { o =>
+            scope.bind(o.rec.name,
+              if (o eq mb) FrameStats.broadcastIfSmall(o.frontier, o.frontierBytes)
+              else FrameStats.broadcastIfSmall(o.seen, o.seenBytes))
+          }
+          mb.align(lower(mb.step))
+        }
+        val nf = freshCols(exceptDistinctVia(stepped, mb.seen, mb.seenBytes)
+          .localCheckpoint(true))
+        (nf, nf.isEmpty, FrameStats.checkpointedBytes(nf))
+      }
+      drained = next.forall(_._2)
+      if (!drained) members.zip(next).foreach {
+        case (mb, (nf, empty, nBytes)) =>
+          // an empty increment leaves the closure untouched but still
+          // empties the frontier (the member keeps stepping off siblings)
+          if (!empty) {
+            mb.seen = mb.seen.union(nf)
+            mb.seenBytes += nBytes // increments are disjoint by construction
+            mb.sinceCollapse += 1
+            if (mb.sinceCollapse >= collapseEvery) {
+              mb.seen = freshCols(mb.seen.localCheckpoint(true))
+              mb.sinceCollapse = 0
+            }
+          }
+          mb.frontier = nf
+          mb.frontierBytes = nBytes
+      }
+      round += 1
+    }
+    require(drained,
+      s"UNION-distinct recursion over ${group.map(_.name).mkString(", ")} " +
+        s"did not drain within $MaxRounds rounds — the steps keep " +
+        "producing new rows; check the recursion or split the query")
+    members.map(_.seen)
+  }
 }

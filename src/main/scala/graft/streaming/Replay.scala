@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Finite replays of streaming queries.
   *
@@ -11,22 +11,27 @@ import org.apache.spark.sql.streaming.Trigger
   * through a per-file symlink directory under java.io.tmpdir. Idempotent;
   * concurrent creators tolerate the already-exists race.
   *
-  * [[runToCompletion]] drains a stream into a memory sink and hands back
-  * what it wrote.
+  * [[drain]] runs a stream writer to completion; [[runToCompletion]]
+  * drains a stream into a memory sink and hands back what it wrote.
   */
 object Replay {
 
-  /** Runs `out` with an `AvailableNow` trigger into a uniquely named memory
-    * sink until every available input is processed, stops the query (also
-    * on failure) and returns the sink's table in `out`'s session.
+  /** Starts `writer` with an `AvailableNow` trigger, waits until every
+    * available input is processed, stops the query (also on failure) and
+    * returns it, so callers can read its progress.
+    */
+  def drain(writer: DataStreamWriter[_]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    q
+  }
+
+  /** [[drain]]s `out` into a uniquely named memory sink and returns the
+    * sink's table in `out`'s session.
     */
   def runToCompletion(out: Dataset[_], outputMode: String): DataFrame = {
     val sink = "graft_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = out.writeStream.format("memory").queryName(sink)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    drain(out.writeStream.format("memory").queryName(sink).outputMode(outputMode))
     out.sparkSession.table(sink)
   }
 

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec}
 import org.apache.spark.sql.functions._
 
 import graft.sql.{DriverFinalAggregate, DriverMergeSortedRuns}
@@ -19,9 +20,14 @@ class CollectOnDriverSpec extends GraftSuite {
 
   private def query(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
 
-  /** The final plan of `df`, under AQE's wrapper when there is one. */
+  /** The final plan of `df`, under AQE's wrapper and, once `df` has run,
+    * its result stage, when there are.
+    */
   private def finalPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+    case a: AdaptiveSparkPlanExec => a.executedPlan match {
+      case r: ResultQueryStageExec => r.plan
+      case p => p
+    }
     case p => p
   }
 
@@ -77,6 +83,35 @@ class CollectOnDriverSpec extends GraftSuite {
     }
     assert(uses(query("m01_multimodal_meta")) == Set("sort"))
     assert(uses(query("q20_sum_big")) == Set("agg"))
+  }
+
+  /** The final physical plans of the SQL executions `body` starts, as
+    * the status store records them once each has ended.
+    */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val store = spark.sharedState.statusStore
+    val before = store.executionsList().map(_.executionId).toSet
+    body
+    def ended = store.executionsList().filterNot(e => before(e.executionId))
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while ((ended.isEmpty || ended.exists(_.completionTime.isEmpty)) &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    ended.map(_.physicalPlanDescription)
+  }
+
+  test("a root ORDER BY write keeps Spark's plan; collect() keeps the driver merge") {
+    def write(): Unit = query("q01_scan_project").write.format("noop").mode("overwrite").save()
+    write() // warm
+    var jobs = 0
+    val plans = executedPlans { jobs = jobsDuring(write()) }
+    assert(jobs == 3, plans)
+    assert(plans.nonEmpty && plans.forall(!_.contains("DriverMergeSortedRuns")), plans)
+    // adaptive re-plans after each stage leave a collect on the driver plan
+    Seq("pr21_k_anonymity" -> "agg", "g09_percentiles" -> "sort").foreach { case (name, op) =>
+      val df = query(name)
+      df.collect()
+      assert(uses(df) == Set(op), s"$name: ${finalPlan(df)}")
+    }
   }
 
   private def lineitem = graft.api.Catalog.parquet(spark, s"$dir/lineitem.parquet")

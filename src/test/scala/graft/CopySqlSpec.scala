@@ -65,6 +65,16 @@ class CopySqlSpec extends GraftSuite {
     assert(graft.sql.CopySql.parse("SELECT 'copy t to' AS s").isEmpty)
   }
 
+  test("a quote inside the COPY path refuses instead of cutting the " +
+    "path short") {
+    Seq((1L, "x")).toDF("k", "tag").createOrReplaceTempView("copy_quote")
+    val p = tmp("quote")
+    val e = intercept[IllegalArgumentException](Table.sessionSql(spark,
+      s"COPY copy_quote TO '$p/it''s.parquet'"))
+    assert(e.getMessage.contains("plain non-empty literal"))
+    assert(!new java.io.File(s"$p/it").exists())
+  }
+
   test("JSON COPY writes NDJSON and reads back (documented lossy " +
     "typing divergence)") {
     Seq((1L, "a"), (2L, "b")).toDF("k", "s")

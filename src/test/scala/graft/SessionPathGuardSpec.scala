@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the single session path from eroding one query at a time: one
   * session builder, one install path for planner strategies, no
-  * per-query installs in the query catalogue, one
-  * memory-sink stream runner in the library, one SQL statement
-  * pipeline (and one clause chain) behind every SQL surface, one
-  * parse of window calls and WINDOW clauses under the window passes, one
-  * profiler, and no environment switches below the entry-point mains.
+  * per-query installs in the query catalogue, one stream drain helper in
+  * the library, one recursion drain loop, one SQL statement pipeline
+  * (and one clause chain) behind every SQL surface, one parse of window
+  * calls and WINDOW clauses under the window passes, one profiler, and
+  * no environment switches below the entry-point mains.
   */
 class SessionPathGuardSpec extends AnyFunSuite {
 
@@ -61,6 +61,27 @@ class SessionPathGuardSpec extends AnyFunSuite {
           p.getFileName.toString != "Replay.scala" => p
     }
     assert(offenders.isEmpty, s"use graft.streaming.Replay.runToCompletion: $offenders")
+  }
+
+  test("streams run to completion only through Replay.drain") {
+    val offenders = sources("src/main").collect {
+      case (p, text) if text.contains("AvailableNow" + "()") && p.getFileName.toString != "Replay.scala" => p
+    }
+    assert(offenders.isEmpty, s"start AvailableNow writers with graft.streaming.Replay.drain: $offenders")
+  }
+
+  test("recursive CTEs drain in one loop, in RecursiveUnion.scala") {
+    // the EXCEPT of a step's rows against the closure marks a drain loop
+    val except = ("(?<!def )exceptDistinct" + "Via\\(").r
+    val calls = sources("src/main").flatMap { case (p, text) =>
+      except.findAllMatchIn(text).map(_ => p.getFileName.toString)
+    }
+    assert(calls == Seq("RecursiveUnion.scala"), s"one drain loop, in RecursiveUnion.scala: $calls")
+    val inApi = sources("src/main/scala/graft/api").collect {
+      case (p, text) if ("def " + "drain").r.findFirstIn(text).isDefined ||
+          text.contains("RecursiveUnion" + ".Rec") => p
+    }
+    assert(inApi.isEmpty, s"recursion runs in graft.sql.RecursiveUnion.run: $inApi")
   }
 
   test("the dialect pass chain is written once") {

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+
+import graft.streaming.Replay
 
 /** Measures the streaming state-store footprint of the two stateful
   * dedup families (st02 transformWithState owner map, st13
@@ -121,9 +122,8 @@ object StreamingStateScale {
       .option("maxFilesPerTrigger", 1).parquet(feed)
     val outDs = graft.streaming.Events.streamingDedupOwners(stream, "doc_id", "text")
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = outDs.writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+    val query = Replay.drain(outDs.writeStream.format("memory").queryName(sink)
+      .outputMode("append"))
     val distinctKeys = src.select(md5(col("text"))).distinct().count()
     harvest(q, sf, query.recentProgress.toSeq, distinctKeys)
   }
@@ -151,7 +151,7 @@ object StreamingStateScale {
       .write.mode("overwrite").parquet(feed)
     val schema = "event_id LONG, ts LONG, event_type STRING, value DOUBLE"
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = s.readStream.schema(schema)
+    val query = Replay.drain(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(feed)
       .withColumn("tst", expr("timestamp_micros(ts)"))
       .withWatermark("tst", "31 days")
@@ -159,8 +159,7 @@ object StreamingStateScale {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
       .writeStream.format("memory").queryName(sink)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+      .outputMode("complete"))
     val distinctKeys = ev.select(col("event_id")).distinct().count()
     harvest(q, sf, query.recentProgress.toSeq, distinctKeys,
       opNameContains = Some("dedupe"))
@@ -200,11 +199,9 @@ object StreamingStateScale {
       vS, bS, "user_id", "p_user_id", "view_ts", "p_ts",
       windowSeconds = 1800L, watermark = "62 days")
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = out.select(col("view_id"), col("purchase_id"))
+    val query = Replay.drain(out.select(col("view_id"), col("purchase_id"))
       .writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+      .outputMode("append"))
     val buffered = s.read.parquet(s"$feed/v").count() +
       s.read.parquet(s"$feed/b").count()
     harvest(q, sf, query.recentProgress.toSeq, buffered,
@@ -338,11 +335,9 @@ object StreamingStateScale {
       vS, bS, "user_id", "p_user_id", "view_ts", "p_ts",
       windowSeconds = 1800L, watermark = "1 hour")
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = out.select(col("view_id"), col("purchase_id"))
+    val query = Replay.drain(out.select(col("view_id"), col("purchase_id"))
       .writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+      .outputMode("append"))
     // batch-exactness under eviction: emitted pairs == the batch join
     val batch = s.read.parquet(s"$feed/v")
       .join(s.read.parquet(s"$feed/b"),
@@ -386,11 +381,9 @@ object StreamingStateScale {
       horizonSeconds = 1800L, windowDuration = "1 hour",
       watermark = "2 hours")
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = out.select(col("purchase_id"), col("view_id"))
+    val query = Replay.drain(out.select(col("purchase_id"), col("view_id"))
       .writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+      .outputMode("append"))
     require(s.table(sink).count() > 0, s"$q@$sf: no enriched rows emitted")
     val bound = retentionBound(s, feed, files,
       delayMicros = 2L * 3600L * 1000000L, windowMicros = 1800L * 1000000L,
@@ -432,10 +425,8 @@ object StreamingStateScale {
       ref, lo = 0.0, width = 25.0, windowDuration = "3 days",
       watermark = "1 day")
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = out.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+    val query = Replay.drain(out.writeStream.format("memory").queryName(sink)
+      .outputMode("append"))
     require(s.table(sink).count() > 0, s"$q@$sf: no PSI windows emitted")
     harvest(q, sf, query.recentProgress.toSeq,
       openWindowBound(s, feed, 3L * 86400000000L, 86400000000L, files))
@@ -463,10 +454,8 @@ object StreamingStateScale {
     val out = graft.streaming.Events.streamingQuasiIdSizes(src, "ts",
       Seq("event_type", "ub"), "7 days", "1 day")
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = out.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+    val query = Replay.drain(out.writeStream.format("memory").queryName(sink)
+      .outputMode("append"))
     require(s.table(sink).count() > 0, s"$q@$sf: no closed windows emitted")
     val combos = s.read.parquet(feed)
       .select(col("event_type"), col("ub")).distinct().count()
@@ -495,10 +484,8 @@ object StreamingStateScale {
       "props", graft.streaming.Events.demoQualityWeights, 0L,
       "7 days", "1 day")
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = out.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+    val query = Replay.drain(out.writeStream.format("memory").queryName(sink)
+      .outputMode("append"))
     require(s.table(sink).count() > 0, s"$q@$sf: no closed windows emitted")
     harvest(q, sf, query.recentProgress.toSeq,
       openWindowBound(s, feed, 7L * 86400000000L, 86400000000L, files))
@@ -526,10 +513,8 @@ object StreamingStateScale {
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n"))
     val sink = "state_scale_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = out.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    try query.awaitTermination() finally query.stop()
+    val query = Replay.drain(out.writeStream.format("memory").queryName(sink)
+      .outputMode("append"))
     require(s.table(sink).count() > 0, s"$q@$sf: no closed sessions emitted")
     // exact open-session bound from the batch gap-islands view: sessions
     // whose end (last + gap) the final watermark (max - delay) has NOT
