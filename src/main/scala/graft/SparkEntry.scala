@@ -6938,8 +6938,8 @@ object SparkEntry {
 
     // CTE-headed DML (u16, [[graft.api.Table.cteHeadedDml]]): `WITH c
     // AS (…) UPDATE/INSERT …` — Postgres/DuckDB's form (probed). CTEs
-    // bind as statement-scoped views (unique internal names, the
-    // recursion lowering's scoping rule), the rewritten DML re-enters
+    // bind as the statement's own names (the recursion lowering's helper
+    // rule, never the session catalog), the DML re-enters
     // the normal statement dispatch, so the correlated-UPDATE guard,
     // RETURNING, and every other DML feature compose. The oracle
     // re-derives the chain relationally (the hot CTE keys on the

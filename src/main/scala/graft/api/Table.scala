@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 
 import graft.functions.Registry
 import graft.sql.Dialect
@@ -20,58 +20,59 @@ final class Table private (val df: DataFrame) {
 
   def spark: SparkSession = df.sparkSession
 
-  /** Run a SQL query against this table. The first FROM identifier is bound
-    * to this table's data; the statement runs through the same dialect
+  /** Run a SQL query against this table. The first FROM identifier
+    * names this table's data; the statement runs through the same dialect
     * pipeline as [[Table.sessionSql]] (np.*, `#` xor, select-alias
     * substitution into WHERE, ...) and output columns are renamed to the
     * reference's naming policy (function name / col_N / _1-dedup —
     * [[graft.sql.OutputNames]]).
     *
-    * The receiver is bound via a session temp view named after the FROM
-    * identifier (reference semantics: the FROM name is notional,
-    * vinum/api/table.py:219-220); where the pipeline resolves a name
-    * itself (ASOF and POSITIONAL JOIN operands, star modifiers,
-    * TABLESAMPLE) every name is the receiver too. Concurrent `sql` calls
-    * are safe: the view bind and the lowering run under a lock and each
-    * plan is analyzed eagerly inside it, so a concurrent call re-binding
-    * the same FROM name can never leak its data into this query.
+    * The receiver binds in the statement's own plan, not in the session
+    * catalog (reference semantics: the FROM name is notional,
+    * vinum/api/table.py:219-220): Spark's analyzer scopes it like a CTE
+    * of the statement, so an inner `WITH` of the same name shadows it, a
+    * session view of the same name is untouched, and nothing is left
+    * behind for the next call. Where the pipeline resolves a name itself
+    * (ASOF and POSITIONAL JOIN operands, star modifiers, TABLESAMPLE)
+    * every name the statement does not bind is the receiver too.
+    * Concurrent calls share no state.
     */
-  def sql(query: String): Table = new Table(build(query) { q =>
-    val o = spark.sql(q)
-    o.queryExecution.assertAnalyzed() // snapshot the view NOW, inside the lock
-    // the result's logical plan is the parse of `q`
-    graft.sql.OutputNames.vinumNames(o.queryExecution.logical) match {
-      case Some(names) if names.length == o.columns.length => o.toDF(names: _*)
+  def sql(query: String): Table = new Table(build(query) { (q, names) =>
+    val o = GraftColumnBridge.sqlWith(spark, q, names)
+    graft.sql.OutputNames.vinumNames(GraftColumnBridge.statementPlan(o)) match {
+      case Some(cols) if cols.length == o.columns.length => o.toDF(cols: _*)
       case _ => o
     }
   })
 
   /** The frame [[sql]] builds, with `run` executing each lowered Spark
-    * statement. [[sql]] names the outputs in `run`: a UNION BY NAME
-    * operand is named before the operands combine by name, and a QUALIFY
-    * takes its names from its inner statement.
+    * statement under the names it binds. [[sql]] names the outputs in
+    * `run`: a UNION BY NAME operand is named before the operands combine
+    * by name, and a QUALIFY takes its names from its inner statement.
     */
-  private def build(query: String)(run: String => DataFrame): DataFrame = {
+  private def build(query: String)
+                   (run: (String, Table.Names) => DataFrame): DataFrame = {
     Registry.registerAll(spark)
     // a bare SUMMARIZE/DESCRIBE target is the receiver, like any FROM name
     Table.profileForm(query)(t =>
       if (Dialect.isBareIdentifier(t)) df else sql(t).df).getOrElse {
       // a derived-table reference reaches `resolve` only from TABLESAMPLE,
       // whose gate needs the subquery's own first column
-      def resolve(ref: String): DataFrame = {
+      def resolve(ref: String, names: Table.Names): DataFrame = {
         require(Dialect.isBareIdentifier(ref),
           "TABLESAMPLE on a derived table is supported at the session " +
             "surface (sessionSql) — or sample at the query level with " +
             "USING SAMPLE")
         df
       }
-      // a derived table (ASOF / POSITIONAL JOIN operand) binds the
-      // receiver to ITS first FROM name, like a statement of its own
-      def one(q: String): DataFrame = Table.bindLock.synchronized {
-        df.createOrReplaceTempView(Dialect.firstFromTable(q).getOrElse("t"))
-        Table.lowerStatement(spark, q, resolve, one, run)
-      }
-      Table.runUnionByName(spark, Dialect.rewrite(query))(one)
+      // every statement, a derived table (ASOF / POSITIONAL JOIN operand)
+      // included, reads the receiver under ITS first FROM name; the names
+      // the statement binds itself shadow it
+      def one(q: String, names: Table.Names): DataFrame =
+        Table.lowerStatement(spark, q,
+          Table.bindNames(Seq(Dialect.firstFromTable(q).getOrElse("t") -> df), names),
+          resolve, one, run)
+      Table.runUnionByName(spark, Dialect.rewrite(query))(one(_, Nil))
     }
   }
 
@@ -82,7 +83,7 @@ final class Table private (val df: DataFrame) {
     * embed it. Driver-side by nature; `numRows` bounds the render.
     */
   def sqlPd(query: String, numRows: Int = 20, truncate: Int = 20): String =
-    org.apache.spark.sql.GraftColumnBridge.renderedTable(
+    GraftColumnBridge.renderedTable(
       sql(query).df, numRows, truncate)
 
   /** Query plan for a SQL statement against this table
@@ -105,7 +106,8 @@ final class Table private (val df: DataFrame) {
     * optimizer's view.
     */
   def explainTree(query: String): String =
-    build(query)(spark.sql).queryExecution.logical.treeString
+    GraftColumnBridge.statementPlan(
+      build(query)(GraftColumnBridge.sqlWith(spark, _, _))).treeString
 
   /** The fully materialized result as an Arrow IPC stream — the analog
     * of the reference's `to_arrow`/`to_pandas`
@@ -172,35 +174,33 @@ object Table {
     prev
   }
 
-  /** Serializes temp-view bind + analysis: [[Table.sql]] holds it while
-    * it binds the receiver and lowers the statement, the lowering's own
-    * temp views take it around each bind. Analysis resolves a view name
-    * to a snapshot of its plan, so once a query is analyzed the view may
-    * be re-bound freely. Reentrant, so nested lowering takes it again.
+  /** The names a statement binds for itself — the receiver, CTEs,
+    * files it reads, the frames a lowering builds — each bound in the
+    * statement's own plan ([[GraftColumnBridge.sqlWith]]), never in the
+    * session catalog.
     */
-  private[graft] val bindLock = new Object
+  private[graft] type Names = Seq[(String, DataFrame)]
 
-  /** QUALIFY lowering shared by [[lowerStatement]] and the ASOF /
-    * POSITIONAL JOIN translators' remainder statements: split a
+  /** `names` with `more` bound over them: a name in `more` shadows an
+    * outer one of the same spelling, case folded as the analyzer folds it.
+    */
+  private[graft] def bindNames(names: Names, more: Names): Names =
+    names.filterNot(n => more.exists(_._1.equalsIgnoreCase(n._1))) ++ more
+
+  /** QUALIFY lowering shared by every statement [[lowerStatement]]
+    * runs, the ASOF / POSITIONAL JOIN remainders included: split a
     * top-level QUALIFY, run the inner query through `runInner`, filter
     * on the appended predicate column, then apply the trailing ORDER BY /
     * LIMIT over the filtered rows — so `QUALIFY rn <= k LIMIT n` limits
     * the qualified rows, not the raw ones. Statements without QUALIFY
     * pass through to `runInner` unchanged.
     */
-  private[graft] def qualifyAware(spark: SparkSession, stmt: String)
-                                 (runInner: String => DataFrame): DataFrame =
+  private def qualifyAware(spark: SparkSession, stmt: String)
+                          (runInner: String => DataFrame): DataFrame =
     Dialect.splitQualify(stmt) match {
       case Some((inner, tail)) =>
         val out = runInner(inner)
-        val filtered = out.filter(out.col("__qualify__")).drop("__qualify__")
-        if (tail.isEmpty) filtered
-        else bindLock.synchronized {
-          filtered.createOrReplaceTempView("__qualified__")
-          val o = spark.sql(s"SELECT * FROM __qualified__ $tail")
-          o.queryExecution.assertAnalyzed()
-          o
-        }
+        runTail(spark, out.filter(out.col("__qualify__")).drop("__qualify__"), tail)
       case None => runInner(stmt)
     }
 
@@ -256,9 +256,16 @@ object Table {
     * ([[lowerStatement]]), with each table reference resolved by
     * `spark.table`; scripts, transactions, macros, prepared statements,
     * DML, DDL, MERGE, COPY, EXPORT/IMPORT and PIVOT are statement forms
-    * of this surface only.
+    * of this surface only. The session catalog holds the user's names
+    * only: DDL, IMPORT, and a script's re-binds and transactions write
+    * it; a statement's own names (CTEs, files it reads) bind in its plan.
     */
-  def sessionSql(spark: SparkSession, query: String): Table = {
+  def sessionSql(spark: SparkSession, query: String): Table =
+    sessionSql(spark, query, Nil)
+
+  /** [[sessionSql]] with the names of an enclosing statement in scope. */
+  private def sessionSql(spark: SparkSession, query: String,
+                         names: Names): Table = {
     Registry.registerAll(spark)
     // multi-statement scripts (u20): top-level semicolons run as a
     // sequential script (DuckDB's execute shape) — each statement
@@ -285,13 +292,11 @@ object Table {
         var snapshot: Option[Map[String, DataFrame]] = None
         def rollback(): Unit = {
           val snap = snapshot.get
-          bindLock.synchronized {
-            val now = spark.catalog.listTables().collect()
-              .filter(_.isTemporary).map(_.name)
-            now.filterNot(snap.contains)
-              .foreach(spark.catalog.dropTempView(_))
-            snap.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-          }
+          val now = spark.catalog.listTables().collect()
+            .filter(_.isTemporary).map(_.name)
+          now.filterNot(snap.contains)
+            .foreach(spark.catalog.dropTempView(_))
+          snap.foreach { case (n, df) => df.createOrReplaceTempView(n) }
           snapshot = None
         }
         stmts.zipWithIndex.foreach { case (st, ix) =>
@@ -300,11 +305,9 @@ object Table {
               require(snapshot.isEmpty,
                 "BEGIN inside an open transaction — transactions do " +
                   "not nest")
-              snapshot = Some(bindLock.synchronized {
-                spark.catalog.listTables().collect()
-                  .filter(_.isTemporary).map(_.name)
-                  .map(n => n -> spark.table(n)).toMap
-              })
+              snapshot = Some(spark.catalog.listTables().collect()
+                .filter(_.isTemporary).map(_.name)
+                .map(n => n -> spark.table(n)).toMap)
               out = Table(spark.sql("SELECT 'begin' AS statement"))
             case Some("commit") =>
               require(snapshot.nonEmpty, "COMMIT without BEGIN")
@@ -315,7 +318,7 @@ object Table {
               rollback()
               out = Table(spark.sql("SELECT 'rollback' AS statement"))
             case _ =>
-              try out = sessionSql(spark, st)
+              try out = sessionSql(spark, st, names)
               catch {
                 case e: Throwable if snapshot.nonEmpty =>
                   rollback(); throw e
@@ -326,9 +329,7 @@ object Table {
                     "RETURNING is supported only on a script's FINAL " +
                       "statement — an earlier statement must leave the " +
                       "post-image for the rest of the script to read")
-                  bindLock.synchronized {
-                    out.df.createOrReplaceTempView(t)
-                  }
+                  out.df.createOrReplaceTempView(t)
                 case _ =>
               }
           }
@@ -347,11 +348,13 @@ object Table {
           "call")
     }
     // shared ref-resolution rule of the profile forms and the table-ref
-    // statement forms (MERGE / PIVOT / UNPIVOT / COPY): bare identifier
-    // → session catalog, subquery → re-enter the full pipeline
+    // statement forms (MERGE / PIVOT / UNPIVOT / COPY / DML): bare
+    // identifier → the statement's names, then the session catalog;
+    // subquery → re-enter the full pipeline
     def resolveRef(ref: String): DataFrame =
-      if (Dialect.isBareIdentifier(ref)) spark.table(ref)
-      else sessionSql(spark, ref).df
+      if (Dialect.isBareIdentifier(ref)) lookup(names, ref).getOrElse(spark.table(ref))
+      else sessionSql(spark, ref, names).df
+    def sqlExpr(e: String) = GraftColumnBridge.exprWith(spark, e, names)
     profileForm(query)(resolveRef) match {
       case Some(p) => return apply(p)
       case None =>
@@ -382,7 +385,8 @@ object Table {
     }
     graft.sql.PrepareSql.parseExecute(query) match {
       case Some((n, args)) =>
-        return sessionSql(spark, graft.sql.PrepareSql.bind(spark, n, args))
+        return sessionSql(spark, graft.sql.PrepareSql.bind(spark, n, args),
+          names)
       case None =>
     }
     graft.sql.PrepareSql.parseDeallocate(query) match {
@@ -394,25 +398,24 @@ object Table {
     }
     val qr = Dialect.rewrite(graft.sql.MacroSql.expand(spark, query))
     // CTE-headed DML (u16): `WITH c AS (…) INSERT/UPDATE/DELETE/MERGE …`
-    // (Postgres/DuckDB, probed) — the CTEs bind as statement-scoped
-    // views (unique internal names, textual order, each may read
-    // earlier ones) and the rewritten DML re-enters this method to hit
-    // the normal statement dispatch below. WITH RECURSIVE heads stay
-    // with the recursion lowering / native path.
+    // (Postgres/DuckDB, probed) — the CTEs bind as the statement's names
+    // (textual order, each may read earlier ones) and the DML re-enters
+    // this method to hit the normal statement dispatch below. WITH
+    // RECURSIVE heads stay with the recursion lowering / native path.
     graft.sql.RecursiveUnion.tokenizeWith(qr) match {
       case Some((false, ctes, restStart)) =>
         val rest = qr.substring(restStart)
         val firstWord = Dialect.stripLiterals(rest).trim
           .takeWhile(c => c.isLetter || c == '_').toLowerCase
         if (Set("insert", "update", "delete", "merge")(firstWord))
-          return cteHeadedDml(spark, ctes, rest)
+          return cteHeadedDml(spark, ctes, rest, names)
       case _ =>
     }
     // MERGE INTO is a whole-statement form (u09): parse AFTER the
     // token-local rewrite so np.*/# sugar works inside arm expressions
     graft.sql.MergeSql.parse(qr) match {
       case Some(st) =>
-        return apply(graft.sql.MergeSql.run(spark, st, resolveRef))
+        return apply(graft.sql.MergeSql.run(spark, st, resolveRef, sqlExpr))
       case None =>
     }
     // INSERT / UPDATE / DELETE (u10) — the simpler DML siblings, same
@@ -421,7 +424,7 @@ object Table {
     graft.sql.DmlSql.parse(qr) match {
       case Some(st) =>
         return apply(graft.sql.DmlSql.run(spark, st, resolveRef,
-          s => sessionSql(spark, s).df))
+          s => sessionSql(spark, s, names).df, sqlExpr))
       case None =>
     }
     // CREATE [OR REPLACE] [TEMP] TABLE/VIEW … AS … (u11) — binds a
@@ -430,7 +433,7 @@ object Table {
     graft.sql.DdlSql.parse(qr) match {
       case Some(st) =>
         return apply(graft.sql.DdlSql.run(spark, st,
-          s => sessionSql(spark, s).df))
+          s => sessionSql(spark, s, names).df))
       case None =>
     }
     // DROP TABLE|VIEW and ALTER TABLE (u18) — session-binding surgery;
@@ -459,40 +462,28 @@ object Table {
     }
     // DuckDB's file-reading FROM forms (io24): read_parquet('p') /
     // read_csv('p', …) / read_json('p') table functions and bare
-    // FROM '<path>' literals bind as statement-scoped views (unique
-    // names, dropped after — the analyzed plan inlines the lazy reader,
-    // so pruning/pushdown reach the file scan). Runs AFTER the COPY
-    // dispatch: COPY's own path literals never reach this pass. DML /
-    // CTE / DDL sources compose for free — their SELECT texts re-enter
-    // this method through their resolver callbacks.
+    // FROM '<path>' literals bind as the statement's names (the analyzed
+    // plan inlines the lazy reader, so pruning/pushdown reach the file
+    // scan). Runs AFTER the COPY dispatch: COPY's own path literals never
+    // reach this pass. DML / CTE / DDL sources compose for free — their
+    // SELECT texts re-enter this method through their resolver callbacks.
     graft.sql.FileReadSql.rewrite(qr) match {
       case Some((rewritten, binds)) =>
-        try {
-          binds.foreach { b =>
-            val df = b.kind match {
-              case "parquet" => Catalog.parquet(spark, b.path)
-              case "csv" => spark.read.option("header", b.header.toString)
-                .option("sep", b.delim).option("inferSchema", "true")
-                .csv(b.path)
-              case _ => spark.read.json(b.path)
-            }
-            bindLock.synchronized { df.createOrReplaceTempView(b.view) }
-          }
-          return sessionSql(spark, rewritten)
-        } finally binds.foreach(b => spark.catalog.dropTempView(b.view))
+        return sessionSql(spark, rewritten,
+          bindNames(names, binds.map(b => b.name -> b.read(spark))))
       case None =>
     }
     graft.sql.PivotSql.parsePivot(qr) match {
       case Some(p) => return apply(graft.sql.PivotSql.runPivot(spark, p,
-        resolveRef, runStmtTail(spark, _, _)))
+        resolveRef, runTail(spark, _, _)))
       case None =>
     }
     graft.sql.PivotSql.parseUnpivot(qr) match {
       case Some(u) => return apply(graft.sql.PivotSql.runUnpivot(spark, u,
-        resolveRef, runStmtTail(spark, _, _)))
+        resolveRef, runTail(spark, _, _)))
       case None =>
     }
-    apply(runUnionByName(spark, qr)(sessionOne(spark, _)))
+    apply(runUnionByName(spark, qr)(sessionOne(spark, _, names)))
   }
 
   /** The single-statement pipeline behind [[Table.sql]], [[sessionSql]]
@@ -505,7 +496,8 @@ object Table {
     *     frame ([[graft.sql.SampleSql]] documents the divergence from
     *     DuckDB's PRNG sampling);
     *  2. UNION-distinct recursion (gr09) lowers onto frontier-minus-seen;
-    *     its seed, step and outer statement each re-enter;
+    *     its seed, step and outer statement each re-enter with the CTEs
+    *     bound so far added to `names`;
     *  3. table-level TABLESAMPLE lowers onto the same gate as a textual
     *     subquery keyed on the reference's first column;
     *  4. the clause chain, [[Dialect.lowerClauses]];
@@ -513,35 +505,41 @@ object Table {
     *     columns of the first FROM relation;
     *  6. DISTINCT ON, after nulls-last (its sort items move into a window
     *     spec, where the top-level scan can't see them);
-    *  7. ASOF JOIN and POSITIONAL JOIN route to their translators; any
+    *  7. ASOF JOIN and POSITIONAL JOIN build their joined frame, and the
+    *     rest of the statement reads it under the name they give; any
     *     other statement runs through `run`, QUALIFY lowered around it.
     *
-    * What differs by surface comes in as callbacks: `resolve` answers a
-    * FROM reference (a name, or a derived table's query text for
-    * TABLESAMPLE), `sub` runs a derived-table operand's query, `run` runs
-    * a lowered Spark statement.
+    * `names` are the statement's own names: a FROM reference the
+    * pipeline resolves itself looks them up first. What differs by
+    * surface comes in as callbacks, each given the names in scope:
+    * `resolve` answers any other FROM reference (a name, or a derived
+    * table's query text for TABLESAMPLE), `sub` runs a derived-table
+    * operand's query, `run` runs a lowered Spark statement.
     */
-  private def lowerStatement(spark: SparkSession, qIn: String,
-                             resolve: String => DataFrame,
-                             sub: String => DataFrame,
-                             run: String => DataFrame): DataFrame = {
-    def again(q: String): DataFrame = lowerStatement(spark, q, resolve, sub, run)
+  private def lowerStatement(spark: SparkSession, qIn: String, names: Names,
+                             resolve: (String, Names) => DataFrame,
+                             sub: (String, Names) => DataFrame,
+                             run: (String, Names) => DataFrame): DataFrame = {
+    def again(q: String, ns: Names): DataFrame =
+      lowerStatement(spark, q, ns, resolve, sub, run)
+    def named(ref: String): DataFrame =
+      lookup(names, ref).getOrElse(resolve(ref, names))
     graft.sql.SampleSql.splitUsingSample(qIn) match {
       case Some((inner, spec, tail)) =>
-        return runStmtTail(spark,
-          graft.sql.SampleSql.applySample(again(inner), spec), tail)
+        return runTail(spark,
+          graft.sql.SampleSql.applySample(again(inner, names), spec), tail)
       case None =>
     }
     // UNION ALL recursion stays on Spark's native UnionLoop path (parse
     // returns None for it)
     graft.sql.RecursiveUnion.parse(qIn) match {
-      case Some(st) => return graft.sql.RecursiveUnion.run(spark, st, again)
+      case Some(st) => return graft.sql.RecursiveUnion.run(st, names, again)
       case None =>
     }
     // resolving the gate's first column is analysis only — nothing
     // executes for the column list
     val qSampled = graft.sql.SampleSql.rewriteTablesample(qIn,
-      ref => resolve(ref).columns.toSeq)
+      ref => named(ref).columns.toSeq)
     val q1 = Dialect.lowerClauses(qSampled)
     // the first FROM relation's schema is resolved only when a masked
     // pre-test finds a dynamic or modified star. COLUMNS expands FIRST:
@@ -550,7 +548,7 @@ object Table {
     val q2 =
       if (!Dialect.hasDynamicColumns(q1) && !Dialect.hasStarModifier(q1)) q1
       else Dialect.firstFromTable(q1)
-        .flatMap(t => scala.util.Try(resolve(t).columns.toSeq).toOption)
+        .flatMap(t => scala.util.Try(named(t).columns.toSeq).toOption)
         .map { cols =>
           Dialect.expandStarRename(Dialect.expandStarReplace(
             Dialect.expandStarExclude(
@@ -558,24 +556,38 @@ object Table {
         }
         .getOrElse(q1)
     val q = Dialect.distinctOn(q2).getOrElse(q2)
-    if (graft.sql.AsOfSql.detect(q))
-      graft.sql.AsOfSql.run(spark, q, resolve, sub)
-    // POSITIONAL JOIN (j12): zip-by-position lowering — derived-table
-    // operands re-enter the pipeline (so an ordered subquery keeps its
-    // order behind the zip's RDD boundary)
-    else if (graft.sql.PositionalSql.detect(q))
-      graft.sql.PositionalSql.run(spark, q, resolve, sub)
-    else qualifyAware(spark, q)(run)
+    // ASOF and POSITIONAL JOIN (j12) operands: derived tables re-enter
+    // the pipeline (so an ordered subquery keeps its order behind the
+    // zip's RDD boundary)
+    val joined =
+      if (graft.sql.AsOfSql.detect(q))
+        Some(graft.sql.AsOfSql.join(q, named, sub(_, names)))
+      else if (graft.sql.PositionalSql.detect(q))
+        Some(graft.sql.PositionalSql.join(q, named, sub(_, names)))
+      else None
+    joined match {
+      case Some((rest, frame)) => qualifyAware(spark, rest)(
+        GraftColumnBridge.sqlWith(spark, _, bindNames(names, Seq(frame))))
+      case None => qualifyAware(spark, q)(run(_, names))
+    }
   }
 
-  /** [[lowerStatement]] at the session surface: names resolve through
-    * the session catalog, derived tables re-enter the pipeline.
+  /** The frame `names` binds to `ref`, case folded as the analyzer folds
+    * it.
     */
-  private def sessionOne(spark: SparkSession, q: String): DataFrame =
-    lowerStatement(spark, q,
-      ref => if (Dialect.isBareIdentifier(ref)) spark.table(ref)
-        else sessionOne(spark, ref),
-      sessionOne(spark, _), spark.sql)
+  private def lookup(names: Names, ref: String): Option[DataFrame] =
+    names.find(_._1.equalsIgnoreCase(ref)).map(_._2)
+
+  /** [[lowerStatement]] at the session surface: names the statement does
+    * not bind resolve through the session catalog, derived tables
+    * re-enter the pipeline.
+    */
+  private def sessionOne(spark: SparkSession, q: String,
+                         names: Names): DataFrame =
+    lowerStatement(spark, q, names,
+      (ref, ns) => if (Dialect.isBareIdentifier(ref)) spark.table(ref)
+        else sessionOne(spark, ref, ns),
+      sessionOne(spark, _, _), GraftColumnBridge.sqlWith(spark, _, _))
 
   /** SUMMARIZE / DESCRIBE, the whole-statement profile forms, routed
     * before every other pass: `target` turns the profiled target (a name
@@ -588,21 +600,17 @@ object Table {
       .orElse(Dialect.describeTarget(query)
         .map(t => graft.ops.Profile.describeDuck(target(t))))
 
-  /** Trailing ORDER BY / LIMIT / OFFSET of a statement form (PIVOT /
-    * UNPIVOT), run over the lowered frame through a temp view — the
-    * runUnionByName tail pattern, nulls-last applied like any single
-    * statement's ORDER BY.
+  /** The trailing ORDER BY / LIMIT / OFFSET of a statement form that
+    * builds its frame outside Spark SQL (QUALIFY, USING SAMPLE, PIVOT /
+    * UNPIVOT, UNION BY NAME), run over that frame with nulls-last applied
+    * like any single statement's ORDER BY.
     */
-  private def runStmtTail(spark: SparkSession, df: DataFrame,
-                          tail: String): DataFrame =
+  private def runTail(spark: SparkSession, df: DataFrame,
+                      tail: String): DataFrame =
     if (tail.isEmpty) df
-    else bindLock.synchronized {
-      df.createOrReplaceTempView("__stmt_out__")
-      val out = spark.sql(
-        Dialect.orderByNullsLast(s"SELECT * FROM __stmt_out__ $tail"))
-      out.queryExecution.assertAnalyzed()
-      out
-    }
+    else GraftColumnBridge.sqlWith(spark,
+      Dialect.orderByNullsLast(s"SELECT * FROM __frame__ $tail"),
+      Seq("__frame__" -> df))
 
   /** The session name a statement MUTATES (DML / MERGE / COPY FROM
     * with a bare target) plus whether a RETURNING clause makes the
@@ -629,32 +637,27 @@ object Table {
       .filter(t => Dialect.isBareIdentifier(t._1))
   }
 
-  /** CTE-headed DML execution (u16): each CTE binds as a
-    * statement-scoped view ([[graft.sql.RecursiveUnion.withScope]], the
-    * recursion's scoping rule) in textual order, each body may read
-    * earlier CTEs, then the rewritten DML re-enters [[sessionSql]] so it
-    * hits the normal statement dispatch. Binding is LAZY (a CTE is
-    * typically read once; the analyzed plan inlines the view, so
-    * dropping the names afterwards is safe). The DML target must be a
-    * real table: Postgres scopes the target OUTSIDE the WITH, so a CTE
-    * sharing its name refuses loudly rather than silently receiving
-    * the rows.
+  /** CTE-headed DML execution (u16): the CTEs bind as the statement's
+    * names in textual order ([[graft.sql.RecursiveUnion.bindCtes]], the
+    * recursion's helper rule), each body may read earlier CTEs, then the
+    * DML re-enters [[sessionSql]] with them in scope so it hits the
+    * normal statement dispatch. Binding is LAZY (a CTE is typically read
+    * once). The DML target must be a real table: Postgres scopes the
+    * target OUTSIDE the WITH, so a CTE sharing its name refuses loudly
+    * rather than silently receiving the rows.
     */
   private def cteHeadedDml(spark: SparkSession,
                            ctes: Seq[graft.sql.RecursiveUnion.RawCte],
-                           rest: String): Table = {
-    val names = ctes.map(_.name)
+                           rest: String, names: Names): Table = {
     mutationTarget(rest).foreach { case (t, _) =>
-      require(!names.exists(_.equalsIgnoreCase(t)),
+      require(!ctes.exists(_.name.equalsIgnoreCase(t)),
         s"the CTE '$t' shares the DML target's name — the target is a " +
           "real table outside the WITH scope (Postgres rule); rename " +
           "the CTE")
     }
-    graft.sql.RecursiveUnion.withScope(spark, names,
-      ctes.map(c => s"CTE ${c.name}" -> c.body) :+ ("statement" -> rest)) { scope =>
-      ctes.foreach(c => scope.bindCte(c.name, c.cols, c.body, sessionOne(spark, _))())
-      sessionSql(spark, scope.rewrite(rest))
-    }
+    sessionSql(spark, rest, graft.sql.RecursiveUnion.bindCtes(
+      ctes.map(c => graft.sql.RecursiveUnion.Helper(c.name, c.cols, c.body)),
+      names, sessionOne(spark, _, _))())
   }
 
   /** `stmt` through `runOne` (the caller's single-statement pipeline),
@@ -667,7 +670,7 @@ object Table {
     * DuckDB BY NAME column semantics exactly — a bare (non-ALL) BY NAME
     * dedups the accumulated result (left-associative set-op semantics),
     * and the trailing ORDER BY / LIMIT / OFFSET clause runs over the
-    * combined frame through a temp view.
+    * combined frame ([[runTail]]).
     */
   private def runUnionByName(spark: SparkSession, stmt: String)
                             (runOne: String => DataFrame): DataFrame =
@@ -679,15 +682,6 @@ object Table {
           acc = acc.unionByName(runOne(o), allowMissingColumns = true)
           if (!all) acc = acc.distinct()
         }
-        if (tail.isEmpty) acc
-        else bindLock.synchronized {
-          acc.createOrReplaceTempView("__unioned__")
-          // the union-level ORDER BY gets the same nulls-last treatment a
-          // single statement's would (operands were rewritten individually)
-          val out = spark.sql(
-            Dialect.orderByNullsLast(s"SELECT * FROM __unioned__ $tail"))
-          out.queryExecution.assertAnalyzed()
-          out
-        }
+        runTail(spark, acc, tail)
     }
 }

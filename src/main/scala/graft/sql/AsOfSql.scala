@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** DuckDB-style `ASOF JOIN` in the SQL dialect.
@@ -105,14 +105,17 @@ object AsOfSql {
     false
   }
 
-  /** Parse and execute; `resolve` maps a table name from the statement to
-    * its DataFrame (a single-table facade passes `_ => df`, a session
-    * entry point passes `spark.table`), `resolveSub` evaluates a
-    * derived-table operand's subquery.
+  /** The name the rest of the statement reads the joined frame under. */
+  private val Joined = "__asof_join__"
+
+  /** Parse and join: the rest of the statement, reading the joined frame
+    * as [[Joined]], and that binding. `resolve` maps a table name from
+    * the statement to its DataFrame (the caller's names, then its
+    * surface: the receiver or the session catalog), `resolveSub`
+    * evaluates a derived-table operand's subquery.
     */
-  def run(spark: SparkSession, sql: String,
-          resolve: String => DataFrame,
-          resolveSub: String => DataFrame): DataFrame = {
+  def join(sql: String, resolve: String => DataFrame,
+           resolveSub: String => DataFrame): (String, (String, DataFrame)) = {
     val spec = parse(sql)
     def side(ref: Ref): DataFrame = ref.subquery match {
       case Some(q) => resolveSub(q)
@@ -176,27 +179,10 @@ object AsOfSql {
     val matchedFlag = col(s"asof_$rightTime")
     val result = if (spec.leftJoin) joined else joined.filter(matchedFlag.isNotNull)
 
-    val view = "__asof_join__"
     val sel = rewriteRefs(spec.selectList, spec, lCols, rCols)
     val tail = rewriteRefs(spec.tail, spec, lCols, rCols)
-    val out = Table_bindAndRun(spark, result, view, s"SELECT $sel FROM $view $tail")
-    out
+    (s"SELECT $sel FROM $Joined $tail", Joined -> result)
   }
-
-  // runs the remainder statement over the joined frame, lowering a
-  // trailing QUALIFY through the shared Table.qualifyAware contract;
-  // the temp-view bind is a single synchronized step (same discipline
-  // as Table.sql's bindLock)
-  private def Table_bindAndRun(spark: SparkSession, df: DataFrame,
-                               view: String, stmt: String): DataFrame =
-    graft.api.Table.qualifyAware(spark, stmt) { inner =>
-      graft.api.Table.bindLock.synchronized {
-        df.createOrReplaceTempView(view)
-        val o = spark.sql(inner)
-        o.queryExecution.assertAnalyzed()
-        o
-      }
-    }
 
   // ---------------------------------------------------------------- parse
 

@@ -539,82 +539,6 @@ object Dialect {
       (k == 0 || !isIdentBoundaryChar(m.charAt(k - 1))) &&
       (k + w.length == m.length || !isIdentBoundaryChar(m.charAt(k + w.length)))
 
-  /** Replace every TABLE-reference occurrence of identifier `from` with
-    * `to`, outside literals/comments (masked scan, any depth) — the
-    * statement-scoped-name isolation a CTE lowering needs: binding the
-    * working table under an internal name and rewriting the references
-    * keeps the user's session views untouched.
-    *
-    * Three occurrence shapes are deliberately NOT rewritten
-    * (review-caught): a QUALIFIED COLUMN `other.from` (preceded by a
-    * dot — `from.col`, where the name leads, still rewrites), an
-    * OUTPUT ALIAS `expr AS from` (preceded by the AS keyword), and a
-    * BARE reference inside a column-land clause — ORDER BY / GROUP BY /
-    * HAVING / QUALIFY / SORT|CLUSTER|DISTRIBUTE BY at the clause's own
-    * paren depth (advice r15: `SELECT n AS rxn FROM rxn ORDER BY rxn`
-    * orders by the output alias; SQL grammar admits no table reference
-    * there except as a dot qualifier, which still rewrites, and a
-    * parenthesized subquery re-enters table-land via its SELECT). All
-    * three are column-land, not table references. A backquoted
-    * occurrence cannot be rewritten at all (the mask hides it) and
-    * would silently bind to the session catalog — refused loudly by
-    * the caller via [[containsBacktickedIdent]].
-    */
-  private[graft] def replaceIdent(sql: String, from: String,
-                                  to: String): String = {
-    val m = stripLiterals(sql)
-    val out = new StringBuilder
-    var i = 0
-    def prevNonWs(k: Int): Int = {
-      var j = k - 1
-      while (j >= 0 && m.charAt(j).isWhitespace) j -= 1
-      j
-    }
-    def nextNonWs(k: Int): Int = {
-      var j = k
-      while (j < m.length && m.charAt(j).isWhitespace) j += 1
-      j
-    }
-    def followedByBy(k: Int, w: String): Boolean =
-      wordAt(m, k, w) && wordAt(m, nextNonWs(k + w.length), "by")
-    // column-land state, saved/restored across parens so `ORDER BY
-    // f(x)` stays column-land while `ORDER BY (SELECT … FROM x)`
-    // re-enters table-land at its SELECT
-    var colLand = false
-    val saved = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    while (i < sql.length) {
-      val mc = m.charAt(i)
-      if (mc == '(') { saved += colLand }
-      else if (mc == ')') {
-        colLand = if (saved.nonEmpty) saved.remove(saved.length - 1)
-          else false
-      }
-      else if (wordAt(m, i, "select") || wordAt(m, i, "from") ||
-        wordAt(m, i, "union") || wordAt(m, i, "intersect") ||
-        wordAt(m, i, "except")) colLand = false
-      else if (wordAt(m, i, "having") || wordAt(m, i, "qualify") ||
-        Seq("group", "order", "sort", "cluster", "distribute")
-          .exists(followedByBy(i, _))) colLand = true
-      if (wordAt(m, i, from)) {
-        val p = prevNonWs(i)
-        val qualified = p >= 0 && m.charAt(p) == '.'
-        // previous word is AS (p sits on its last char, with an
-        // identifier boundary before it)
-        val aliased = p >= 1 &&
-          m.regionMatches(true, p - 1, "as", 0, 2) &&
-          (p - 2 < 0 || !isIdentBoundaryChar(m.charAt(p - 2)))
-        // bare column-land occurrence: not a dot qualifier (`from.col`
-        // in ORDER BY still names the rewritten relation)
-        val nn = nextNonWs(i + from.length)
-        val bareCol = colLand && (nn >= m.length || m.charAt(nn) != '.')
-        if (qualified || aliased || bareCol) { out += sql.charAt(i); i += 1 }
-        else { out ++= to; i += from.length }
-      }
-      else { out += sql.charAt(i); i += 1 }
-    }
-    out.toString
-  }
-
   /** First depth-0 bare `=` (not `<= >= != ==`) on the masked view —
     * the SET-assignment / ON-conjunct splitter shared by MERGE, DML and
     * ON CONFLICT (one copy: a boundary-rule fix lands here once).
@@ -646,14 +570,6 @@ object Dialect {
     */
   private[graft] def defaultAliasOf(name: String): String =
     name.split("\\.").last.replaceAll("`", "")
-
-  /** Whether the text contains a backtick-quoted occurrence of `name` —
-    * the one reference shape [[replaceIdent]] cannot see (the mask
-    * blanks it), so callers refuse instead of silently mis-binding.
-    */
-  private[graft] def containsBacktickedIdent(sql: String,
-                                             name: String): Boolean =
-    sql.toLowerCase.contains("`" + name.toLowerCase + "`")
 
   /** Comma split at paren depth 0, depth/comma decisions taken on the
     * masked view (commas inside literals, quoted identifiers or comments
@@ -3231,12 +3147,49 @@ object Dialect {
 
   /** First table identifier after FROM, outside quotes — the name the
     * receiver table is bound to (the reference binds the receiver
-    * regardless of the FROM name, vinum/api/table.py:219-220).
+    * regardless of the FROM name, vinum/api/table.py:219-220). A FROM
+    * that is expression syntax — inside a trim/extract/substring/overlay/
+    * position call, or `IS [NOT] DISTINCT FROM` — names no table.
     */
   def firstFromTable(sql: String): Option[String] = {
-    val m = FromRe.findFirstMatchIn(stripLiterals(sql))
-    m.map(_.group(1))
+    val m = stripLiterals(sql)
+    FromRe.findAllMatchIn(m)
+      .find(h => !insideFromEmbeddingFn(m, h.start) && !isDistinctFrom(m, h.start))
+      .map(_.group(1))
   }
+
+  /** A call to a standard-SQL function whose argument list legally
+    * contains the FROM keyword (trim(BOTH 'x' FROM y), extract(year FROM
+    * ts), substring(s FROM i [FOR n]), overlay(s PLACING r FROM i),
+    * position), ending at its opening paren.
+    */
+  private val FromEmbeddingCall =
+    """(?i)\b(?:trim|extract|substring|substr|overlay|position)\s*$""".r
+
+  /** True when position `at` of the masked text `m` sits inside a paren
+    * group opened by a [[FromEmbeddingCall]]: a FROM there is expression
+    * syntax, never a table position. Scans from the start maintaining an
+    * open-paren stack — O(statement) per call, fine at SQL-text sizes.
+    */
+  private[sql] def insideFromEmbeddingFn(m: String, at: Int): Boolean = {
+    var open = List.empty[Int]
+    var i = 0
+    while (i < at) {
+      val c = m.charAt(i)
+      if (c == '(') open = i :: open
+      else if (c == ')' && open.nonEmpty) open = open.tail
+      i += 1
+    }
+    open.exists(o => FromEmbeddingCall.findFirstIn(m.substring(0, o)).isDefined)
+  }
+
+  /** True when the FROM at `at` of the masked text `m` closes an
+    * `IS [NOT] DISTINCT FROM` comparison.
+    */
+  private def isDistinctFrom(m: String, at: Int): Boolean =
+    DistinctFromHead.findFirstIn(m.substring(0, at)).isDefined
+
+  private val DistinctFromHead = """(?i)\bis\s+(?:not\s+)?distinct\s+$""".r
 
   private val FromRe =
     """(?i)\bfrom\s+([A-Za-z_][A-Za-z0-9_]*)""".r

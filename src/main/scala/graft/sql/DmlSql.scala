@@ -403,17 +403,20 @@ object DmlSql {
 
   /** Execute a parsed DML statement. `resolve` maps the target name to
     * its frame (session catalog at the session surface); `runStmt` runs
-    * a SELECT source through the caller's full SQL pipeline.
+    * a SELECT source through the caller's full SQL pipeline; `sqlExpr`
+    * parses a WHERE / SET / conflict expression, with the statement's
+    * names visible to its subqueries.
     */
   def run(spark: SparkSession, st: Stmt, resolve: String => DataFrame,
-          runStmt: String => DataFrame): DataFrame = st match {
+          runStmt: String => DataFrame,
+          sqlExpr: String => Column = expr(_)): DataFrame = st match {
     case Insert(ref, cols, values, source, conflict, byName) =>
       val t = resolve(ref)
       val aligned = alignedInsert(spark, t, cols, values, source, runStmt,
         byName)
       conflict match {
         case None => t.union(aligned)
-        case Some(c) => runOnConflict(t, aligned, c)
+        case Some(c) => runOnConflict(t, aligned, c, sqlExpr)
       }
 
     case Truncate(ref) => resolve(ref).limit(0)
@@ -423,17 +426,17 @@ object DmlSql {
       requireSetCols(t, sets, "UPDATE")
       fromOpt match {
         case None =>
-          val pred = where.map(expr).getOrElse(lit(true))
+          val pred = where.map(sqlExpr).getOrElse(lit(true))
           t.select(t.schema.fields.toSeq.map { f =>
             sets.find(_._1.equalsIgnoreCase(f.name)) match {
               case Some((_, e)) =>
-                when(pred, expr(e).cast(f.dataType))
+                when(pred, sqlExpr(e).cast(f.dataType))
                   .otherwise(col(s"$alias.`${f.name}`")).as(f.name)
               case None => col(s"$alias.`${f.name}`").as(f.name)
             }
           }: _*)
         case Some(src) =>
-          runUpdateFrom(spark, t, alias, sets, where, src, resolve)
+          runUpdateFrom(spark, t, alias, sets, where, src, resolve, sqlExpr)
       }
 
     case Delete(ref, alias, where, usingOpt) =>
@@ -441,7 +444,7 @@ object DmlSql {
       usingOpt match {
         case None => where match {
           case None => t.limit(0) // DELETE without WHERE removes all rows
-          case Some(w) => t.filter(!coalesce(expr(w), lit(false)))
+          case Some(w) => t.filter(!coalesce(sqlExpr(w), lit(false)))
         }
         case Some(src) =>
           // DELETE … USING: drop target rows with ≥1 matching source
@@ -450,7 +453,7 @@ object DmlSql {
           // matches every target row (the cross-join rule): a nonempty
           // source deletes everything, an empty one nothing.
           val s = resolve(src.ref).as(src.alias)
-          val pred = where.map(expr).getOrElse(lit(true))
+          val pred = where.map(sqlExpr).getOrElse(lit(true))
           t.join(s, pred, "left_anti")
       }
 
@@ -474,31 +477,31 @@ object DmlSql {
           val t = resolve(ref)
           val aligned = alignedInsert(spark, t, cols, values, source,
             runStmt, byName)
-          runOnConflict(t, aligned, cflt, returningOnly = true)
+          runOnConflict(t, aligned, cflt, sqlExpr, returningOnly = true)
         case Update(ref, alias, sets, where, None) =>
           val t = resolve(ref).as(alias)
           requireSetCols(t, sets, "UPDATE")
-          val gate = where.map(w => coalesce(expr(w), lit(false)))
+          val gate = where.map(w => coalesce(sqlExpr(w), lit(false)))
             .getOrElse(lit(true))
           t.filter(gate).select(t.schema.fields.toSeq.map { f =>
             sets.find(_._1.equalsIgnoreCase(f.name)) match {
-              case Some((_, e)) => expr(e).cast(f.dataType).as(f.name)
+              case Some((_, e)) => sqlExpr(e).cast(f.dataType).as(f.name)
               case None => col(s"$alias.`${f.name}`").as(f.name)
             }
           }: _*)
         case Update(ref, alias, sets, where, Some(src)) =>
           val t = resolve(ref).as(alias)
           requireSetCols(t, sets, "UPDATE")
-          runUpdateFrom(spark, t, alias, sets, where, src, resolve,
+          runUpdateFrom(spark, t, alias, sets, where, src, resolve, sqlExpr,
             onlyMatched = true)
         case Delete(ref, alias, where, None) =>
           val t = resolve(ref).as(alias)
-          where.map(w => t.filter(coalesce(expr(w), lit(false))))
+          where.map(w => t.filter(coalesce(sqlExpr(w), lit(false))))
             .getOrElse(t)
         case Delete(ref, alias, where, Some(src)) =>
           val t = resolve(ref).as(alias)
           val s = resolve(src.ref).as(src.alias)
-          val pred = where.map(expr).getOrElse(lit(true))
+          val pred = where.map(sqlExpr).getOrElse(lit(true))
           t.join(s, pred, "left_semi")
         case Returning(_, _) =>
           throw new IllegalStateException("nested RETURNING")
@@ -585,6 +588,7 @@ object DmlSql {
                             sets: Seq[(String, String)],
                             where: Option[String], src: Source,
                             resolve: String => DataFrame,
+                            sqlExpr: String => Column,
                             onlyMatched: Boolean = false): DataFrame = {
     val s = resolve(src.ref)
     Seq(UTId, USFlag).foreach { r =>
@@ -593,7 +597,7 @@ object DmlSql {
     }
     val tw = t.withColumn(UTId, monotonically_increasing_id()).as(alias)
     val sw = s.withColumn(USFlag, lit(true)).as(src.alias)
-    val pred = where.map(expr).getOrElse(lit(true))
+    val pred = where.map(sqlExpr).getOrElse(lit(true))
     val joined0 = tw.join(sw, pred, "left")
     val matched = col(USFlag).isNotNull
     val joined = MergeSql.oneSourceRowPerTarget(sw,
@@ -612,7 +616,7 @@ object DmlSql {
     base.select(t.schema.fields.toSeq.map { f =>
       sets.find(_._1.equalsIgnoreCase(f.name)) match {
         case Some((_, e)) =>
-          when(matched, expr(e).cast(f.dataType))
+          when(matched, sqlExpr(e).cast(f.dataType))
             .otherwise(col(s"$alias.`${f.name}`")).as(f.name)
         case None => col(s"$alias.`${f.name}`").as(f.name)
       }
@@ -647,7 +651,7 @@ object DmlSql {
     * post-image of gate-fired updates for DO UPDATE.
     */
   private def runOnConflict(t: DataFrame, aligned: DataFrame,
-                            c: Conflict,
+                            c: Conflict, sqlExpr: String => Column,
                             returningOnly: Boolean = false): DataFrame = {
     c.keys.foreach { k =>
       require(t.columns.exists(_.equalsIgnoreCase(k)),
@@ -700,7 +704,7 @@ object DmlSql {
         val updGate = c.updWhere match {
           case None => col("excluded").isNotNull
           case Some(w) =>
-            col("excluded").isNotNull && coalesce(expr(w), lit(false))
+            col("excluded").isNotNull && coalesce(sqlExpr(w), lit(false))
         }
         if (returningOnly) {
           // affected = gate-fired post-images only: the filter makes
@@ -709,7 +713,7 @@ object DmlSql {
           val updatedAffected = joined.filter(updGate)
             .select(t.schema.fields.toSeq.map { f =>
               sets.find(_._1.equalsIgnoreCase(f.name)) match {
-                case Some((_, e)) => expr(e).cast(f.dataType).as(f.name)
+                case Some((_, e)) => sqlExpr(e).cast(f.dataType).as(f.name)
                 case None => t.col(s"`${f.name}`").as(f.name)
               }
             }: _*)
@@ -718,7 +722,7 @@ object DmlSql {
         val updated = joined.select(t.schema.fields.toSeq.map { f =>
           sets.find(_._1.equalsIgnoreCase(f.name)) match {
             case Some((_, e)) =>
-              when(updGate, expr(e).cast(f.dataType))
+              when(updGate, sqlExpr(e).cast(f.dataType))
                 .otherwise(t.col(s"`${f.name}`")).as(f.name)
             case None => t.col(s"`${f.name}`").as(f.name)
           }

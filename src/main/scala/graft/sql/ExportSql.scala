@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * statements, re-expressed over the session's temp-view catalog:
   *
   *  - EXPORT writes every session-bound table (names not starting with
-  *    `__` — internal statement-scoped views are machinery, not data)
+  *    `__`, the prefix of the engine's internal names — machinery, not data)
   *    as `<dir>/<name>.<ext>`, plus a `_graft_tables.txt` manifest
   *    (format on the first line, one table name per line). The target
   *    passes the same recursive-delete safety gate as COPY TO.
@@ -144,10 +144,7 @@ object ExportSql {
               case None => rd.option("inferSchema", "true").csv(target)
             }
         }
-        // same bind discipline as every other session-catalog bind site
-        graft.api.Table.bindLock.synchronized {
-          df.createOrReplaceTempView(n)
-        }
+        df.createOrReplaceTempView(n)
         (n, df.count())
       }
       counted.toDF("table_name", "n_rows")

@@ -2,6 +2,8 @@ package graft.sql
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** DuckDB's file-reading FROM forms (io24):
   *
   *   SELECT … FROM read_parquet('path') [AS t]
@@ -11,24 +13,25 @@ import scala.collection.mutable.ArrayBuffer
   *
   * (reference engine-level readers: vinum/io/arrow.py:64-248 read_csv /
   * read_parquet — this is their SQL-surface spelling). The statement
-  * rewrite replaces each occurrence with a unique statement-scoped view
-  * name and returns the bindings; the session entry point reads each
-  * file (spark.read — a distributed pruned scan, NOT a driver-side
-  * load), binds the views, runs the rewritten text, and drops the names
-  * (the analyzed plan inlines them — the cteHeadedDml scoping
-  * discipline). `read_csv` defaults to header + schema inference
+  * rewrite replaces each occurrence with a name of the statement's own
+  * and returns the bindings; the session entry point reads each file
+  * ([[Bind.read]]: spark.read — a distributed pruned scan, NOT a
+  * driver-side load) and runs the rewritten text with the names bound in
+  * its plan, as it binds a CTE-headed DML statement's CTEs — the session
+  * catalog is never written. `read_csv` defaults to header + schema inference
   * (DuckDB's auto-detect analog); `read_json` reads NDJSON. Aliases
   * (`AS t`) ride unchanged after the replaced span.
   *
-  * Scale shape: identical to a catalog table scan — the view is a lazy
-  * reader plan, so pruning/pushdown reach the file scan exactly as in
+  * Scale shape: identical to a catalog table scan — the bound name is a
+  * lazy reader plan, so pruning/pushdown reach the file scan exactly as in
   * io01-io04; nothing materializes at bind time.
   *
   * The bare-literal form rewrites only directly after a top-level-or-
   * nested FROM or JOIN keyword (a literal anywhere else is data);
   * its format comes from the extension (.parquet/.csv/.json/.ndjson —
   * DuckDB's rule). A FROM inside trim/extract/substring/overlay
-  * argument lists is expression syntax and never rewritten, and a
+  * argument lists is expression syntax and never rewritten
+  * ([[Dialect.insideFromEmbeddingFn]]), and a
   * literal without a data-file extension is left untouched (it is data,
   * e.g. extract(year FROM '2020-01-01')). COPY statements
   * never reach this pass (dispatched earlier), so COPY's own path
@@ -38,8 +41,17 @@ object FileReadSql {
 
   import Dialect.{stripLiterals, wordAt, matchParenAt, skipWsAt}
 
-  final case class Bind(view: String, kind: String, path: String,
-                        header: Boolean = true, delim: String = ",")
+  final case class Bind(name: String, kind: String, path: String,
+                        header: Boolean = true, delim: String = ",") {
+
+    /** The lazy reader of the file. */
+    def read(spark: SparkSession): DataFrame = kind match {
+      case "parquet" => graft.api.Catalog.parquet(spark, path)
+      case "csv" => spark.read.option("header", header.toString)
+        .option("sep", delim).option("inferSchema", "true").csv(path)
+      case _ => spark.read.json(path)
+    }
+  }
 
   private val Fns = Seq("read_parquet", "read_csv", "read_json")
 
@@ -86,54 +98,16 @@ object FileReadSql {
     else None
   }
 
-  /** Standard-SQL functions whose argument lists legally contain the
-    * FROM keyword (trim(BOTH 'x' FROM y), extract(year FROM ts),
-    * substring(s FROM i [FOR n]), overlay(s PLACING r FROM i)). A FROM
-    * inside such a call is expression syntax, never a table position —
-    * pass 2 must not rewrite a literal that follows it.
-    */
-  private val FromEmbeddingFns =
-    Set("trim", "extract", "substring", "substr", "overlay", "position")
-
-  /** True when position `at` sits inside a paren group whose opening
-    * paren is a call to one of [[FromEmbeddingFns]]. Scans the mask from
-    * the start maintaining an open-paren stack — O(statement) per call,
-    * fine at SQL-text sizes.
-    */
-  private def insideFromEmbeddingFn(m: String, at: Int): Boolean = {
-    val stack = scala.collection.mutable.Stack.empty[Int]
-    var i = 0
-    while (i < at) {
-      val c = m.charAt(i)
-      if (c == '(') stack.push(i)
-      else if (c == ')' && stack.nonEmpty) stack.pop()
-      i += 1
-    }
-    stack.exists { open =>
-      var e = open - 1
-      while (e >= 0 && m.charAt(e).isWhitespace) e -= 1
-      if (e < 0) false
-      else {
-        var s = e
-        while (s >= 0 && (m.charAt(s).isLetterOrDigit || m.charAt(s) == '_'))
-          s -= 1
-        val word = m.substring(s + 1, e + 1).toLowerCase
-        FromEmbeddingFns.contains(word)
-      }
-    }
-  }
-
-  /** Rewrite every file-read form to a fresh view name. None when the
-    * statement carries none.
+  /** Rewrite every file-read form to a fresh name, `__file_read_<n>`.
+    * None when the statement carries none.
     */
   def rewrite(sql: String): Option[(String, Seq[Bind])] = {
     if (!detect(sql)) return None
     val m = stripLiterals(sql)
-    val suffix = java.util.UUID.randomUUID.toString.take(8)
     var n = 0
     // (spanStart, spanEndExclusive, bind)
     val hits = ArrayBuffer.empty[(Int, Int, Bind)]
-    def fresh(): String = { n += 1; s"__file_read_${n}_$suffix" }
+    def fresh(): String = { n += 1; s"__file_read_$n" }
     // ---- pass 1: read_* table functions ----
     var i = 0
     while (i < m.length) {
@@ -213,7 +187,7 @@ object FileReadSql {
         if (k < sql.length && sql.charAt(k) == '\'' &&
           k < m.length && m.charAt(k) == ' ' &&
           !hits.exists(h => k >= h._1 && k < h._2) &&
-          !insideFromEmbeddingFn(m, i)) {
+          !Dialect.insideFromEmbeddingFn(m, i)) {
           val (path, after) = pathLit(sql, k, "FROM")
           extKind(path) match {
             case Some(kind) =>
@@ -234,7 +208,7 @@ object FileReadSql {
     sorted.foreach { case (s0, e0, b) =>
       // NB: substring, not append(sql, last, s0) — Scala's
       // StringBuilder lacks the 3-arg overload and would auto-tuple
-      sb.append(sql.substring(last, s0)).append(b.view)
+      sb.append(sql.substring(last, s0)).append(b.name)
       last = e0
     }
     sb.append(sql.substring(last))

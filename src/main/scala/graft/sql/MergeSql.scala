@@ -392,9 +392,11 @@ object MergeSql {
     * the ON condition, then one CASE chain per target column. Returns
     * the post-merge table with the TARGET's schema (arm expressions
     * cast into the target column types, as a mutating MERGE would).
+    * `sqlExpr` parses the ON, arm and SET expressions, with the
+    * statement's names visible to their subqueries.
     */
-  def run(spark: SparkSession, st: Stmt,
-          resolve: String => DataFrame): DataFrame = {
+  def run(spark: SparkSession, st: Stmt, resolve: String => DataFrame,
+          sqlExpr: String => Column = expr(_)): DataFrame = {
     val t = resolve(st.targetRef)
     val s = resolve(st.sourceRef)
     Seq(TFlag, SFlag, TId, ActCol).foreach { r =>
@@ -420,7 +422,7 @@ object MergeSql {
     val tw = t.withColumn(TFlag, lit(true))
       .withColumn(TId, monotonically_increasing_id()).as(st.targetAlias)
     val sw = s.withColumn(SFlag, lit(true)).as(st.sourceAlias)
-    val joined0 = tw.join(sw, expr(st.on), "full_outer")
+    val joined0 = tw.join(sw, sqlExpr(st.on), "full_outer")
     val matched = col(TFlag).isNotNull && col(SFlag).isNotNull
     val tOnly = col(TFlag).isNotNull && col(SFlag).isNull
     val sOnly = col(TFlag).isNull && col(SFlag).isNotNull
@@ -453,7 +455,7 @@ object MergeSql {
         case 1 => sOnly
         case 2 => tOnly
       }
-      val c = arm.cond.map(x => kindC && expr(x)).getOrElse(kindC)
+      val c = arm.cond.map(x => kindC && sqlExpr(x)).getOrElse(kindC)
       chain = if (chain == null) when(c, lit(i)) else chain.when(c, lit(i))
     }
     val fallback = when(sOnly, lit(-2)).otherwise(lit(-1))
@@ -490,14 +492,14 @@ object MergeSql {
       st.arms.zipWithIndex.foreach { case (arm, i) =>
         val repl: Option[Column] = arm.action match {
           case Update(sets) =>
-            sets.find(_._1.equalsIgnoreCase(name)).map(x => expr(x._2))
+            sets.find(_._1.equalsIgnoreCase(name)).map(x => sqlExpr(x._2))
           case Insert(colsOpt, valsOpt) => Some((colsOpt, valsOpt) match {
             case (Some(cs), Some(vs)) =>
               cs.indexWhere(_.equalsIgnoreCase(name)) match {
                 case -1 => lit(null)
-                case k => expr(vs(k))
+                case k => sqlExpr(vs(k))
               }
-            case (None, Some(vs)) => expr(vs(t.columns.indexOf(name)))
+            case (None, Some(vs)) => sqlExpr(vs(t.columns.indexOf(name)))
             case _ => // INSERT * / bare INSERT: source column by name
               s.columns.find(_.equalsIgnoreCase(name))
                 .map(sc => col(s"${st.sourceAlias}.`$sc`"))

@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** DuckDB-style `POSITIONAL JOIN` in the SQL dialect (j12) — pair rows
   * by position, shorter side NULL-padded, lowered onto
@@ -45,11 +45,16 @@ object PositionalSql {
     false
   }
 
-  /** Parse and execute; bare operand names resolve through `resolve`,
-    * derived tables through `resolveSub` (the caller's full pipeline).
+  /** The name the rest of the statement reads the zipped frame under. */
+  private val Joined = "__pos_join__"
+
+  /** Parse and zip: the rest of the statement, reading the zipped frame
+    * as [[Joined]], and that binding. Bare operand names resolve through
+    * `resolve`, derived tables through `resolveSub` (the caller's full
+    * pipeline).
     */
-  def run(spark: SparkSession, sql: String, resolve: String => DataFrame,
-          resolveSub: String => DataFrame): DataFrame = {
+  def join(sql: String, resolve: String => DataFrame,
+           resolveSub: String => DataFrame): (String, (String, DataFrame)) = {
     val m = stripLiterals(sql)
     val sel = findTopLevelKeywordIn(m, 0, "select")
     require(sel >= 0, "POSITIONAL JOIN statement must start with SELECT")
@@ -65,11 +70,11 @@ object PositionalSql {
     val join = findTopLevelKeywordIn(m, pos + 10, "join")
     require(join >= 0 && sql.substring(pos + 10, join).trim.isEmpty,
       "POSITIONAL must be immediately followed by JOIN")
-    // GROUP/ORDER bound the tail only when followed by BY (the
-    // replaceIdent discipline): without the check a right-operand alias
-    // spelled `order` or `group` would silently truncate the operand
-    // and reinterpret the alias as tail text (advice r16; aliases named
-    // after the non-BY keywords are rejected in stripAs instead)
+    // GROUP/ORDER bound the tail only when followed by BY: without the
+    // check a right-operand alias spelled `order` or `group` would
+    // silently truncate the operand and reinterpret the alias as tail
+    // text (advice r16; aliases named after the non-BY keywords are
+    // rejected in stripAs instead)
     var tailStart = sql.length
     for (kw <- Seq("where", "group", "having", "qualify", "order",
       "limit", "offset", "window")) {
@@ -95,15 +100,7 @@ object PositionalSql {
       Seq(leftRef.alias, rightRef.alias).foldLeft(t)(stripQualifier)
     val selList = dropQual(sql.substring(sel + 6, from).trim)
     val tail = dropQual(sql.substring(tailStart).trim)
-    graft.api.Table.qualifyAware(spark,
-      s"SELECT $selList FROM __pos_join__ $tail") { inner =>
-      graft.api.Table.bindLock.synchronized {
-        zipped.createOrReplaceTempView("__pos_join__")
-        val o = spark.sql(inner)
-        o.queryExecution.assertAnalyzed()
-        o
-      }
-    }
+    (s"SELECT $selList FROM $Joined $tail", Joined -> zipped)
   }
 
   /** `name [AS alias]` or `( subquery ) [AS] alias` — the MergeSql

@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.api.{FrameStats, Table}
@@ -58,8 +58,13 @@ import graft.api.{FrameStats, Table}
   * tracks closure size, never path count (UNION ALL on a cycle never
   * terminates; on a DAG with many paths it enumerates every path).
   *
-  * Statement-scoped CTE names ([[withScope]]) are written here once and
-  * shared with the CTE-headed DML form (u16).
+  * The CTEs bind as the statement's own names ([[bindCtes]], shared
+  * with the CTE-headed DML form, u16): each seed, step and the outer
+  * statement lower with the names in scope bound in their plan, so a
+  * reference resolves through Spark's analyzer — backquoted, case
+  * folded, in a subquery — and the session catalog is never written.
+  * Each round's frontier and sibling closures are names of that round's
+  * steps only.
   */
 object RecursiveUnion {
 
@@ -303,61 +308,19 @@ object RecursiveUnion {
     out.toSeq
   }
 
-  /** Statement-scoped CTE names: each binds under a per-invocation
-    * unique internal view name, `__cte_<name>_<suffix>` (binding the
-    * name itself would clobber a same-named session view, and a
-    * deterministic internal name would race a concurrent statement with
-    * the same CTE names). [[Dialect.replaceIdent]] rewrites table
-    * references only — qualified columns `e.name`, `AS name` aliases and
-    * column-land clause references stay.
+  /** `names` with non-recursive CTEs bound over them in textual order:
+    * each body lowers through `lower` with the CTEs before it in scope,
+    * its columns take the declared list, and `finish` of the frame binds.
+    * Shared with the CTE-headed DML form (u16).
     */
-  private[graft] final class Scope(names: Seq[String]) {
-    private val suffix = java.util.UUID.randomUUID.toString.take(8)
-    private val internal = names.map(n => n -> s"__cte_${n}_$suffix").toMap
-
-    /** `text` with every CTE reference renamed to its internal view. */
-    def rewrite(text: String): String =
-      names.foldLeft(text)((t, n) => Dialect.replaceIdent(t, n, internal(n)))
-
-    /** Binds the CTE `name` to `df`, under the bind lock. */
-    def bind(name: String, df: DataFrame): Unit =
-      Table.bindLock.synchronized(df.createOrReplaceTempView(internal(name)))
-
-    /** Lowers a non-recursive CTE body (analyzed under the bind lock),
-      * renames its columns to the declared list and binds `finish` of it.
-      */
-    def bindCte(name: String, cols: Option[Seq[String]], body: String,
-                lower: String => DataFrame)
-               (finish: DataFrame => DataFrame = identity): Unit = {
-      val df = Table.bindLock.synchronized {
-        val d = lower(rewrite(body))
-        d.queryExecution.assertAnalyzed()
-        d
-      }
-      bind(name, finish(declared(s"CTE $name", "body", cols, df)))
+  private[graft] def bindCtes(ctes: Seq[Helper], names: Table.Names,
+                              lower: (String, Table.Names) => DataFrame)
+                             (finish: (Helper, DataFrame) => DataFrame =
+                                (_, df) => df): Table.Names =
+    ctes.foldLeft(names) { (scope, h) =>
+      Table.bindNames(scope, Seq(h.name ->
+        finish(h, declared(s"CTE ${h.name}", "body", h.cols, lower(h.body, scope)))))
     }
-
-    private[RecursiveUnion] def drop(spark: SparkSession): Unit =
-      internal.values.foreach(spark.catalog.dropTempView)
-  }
-
-  /** Runs `body` in a [[Scope]] over `names` and drops every bound view
-    * after it. A backquoted reference to a CTE in any of `texts` (each
-    * labelled for the error) is invisible to the masked rewrite and would
-    * silently read the session catalog, so it refuses. `body`'s result
-    * must be analyzed before it returns: analysis resolves a view to a
-    * snapshot of its plan, so the dropped names are not read again.
-    */
-  private[graft] def withScope[T](spark: SparkSession, names: Seq[String],
-                                  texts: Seq[(String, String)])
-                                 (body: Scope => T): T = {
-    for ((what, text) <- texts; n <- names)
-      require(!Dialect.containsBacktickedIdent(text, n),
-        s"backquoted reference to the CTE '$n' in the $what is not " +
-          "supported — drop the backticks")
-    val scope = new Scope(names)
-    try body(scope) finally scope.drop(spark)
-  }
 
   /** `df` with `what`'s declared column list, when it declares one. */
   private def declared(what: String, part: String, cols: Option[Seq[String]],
@@ -374,36 +337,30 @@ object RecursiveUnion {
   private val MaxRounds = 512
 
   /** Executes a parsed statement. `lower` runs one statement text through
-    * the caller's pipeline (seeds, steps, helpers and the outer statement
-    * each re-enter it). Helpers bind once, in textual order; the SCC
-    * groups then drain dependencies-first, each closure binding before
-    * later groups and the outer statement run.
+    * the caller's pipeline with the given names in scope (seeds, steps,
+    * helpers and the outer statement each re-enter it). `names` are the
+    * enclosing statement's; the CTEs bind over them as the statement's
+    * own names, never in the session catalog. Helpers bind once, in
+    * textual order; the SCC groups then drain dependencies-first, each
+    * closure binding before later groups and the outer statement run.
     */
-  def run(spark: SparkSession, st: Stmt, lower: String => DataFrame): DataFrame = {
-    val texts = st.helpers.map(h => s"helper ${h.name}" -> h.body) ++
-      st.recs.flatMap(r => Seq(s"seed of ${r.name}" -> r.seed,
-        s"step of ${r.name}" -> r.step)) :+ ("outer statement" -> st.outer)
-    withScope(spark, st.helpers.map(_.name) ++ st.recs.map(_.name), texts) { scope =>
-      // a helper ANY step reads is MATERIALIZED (eager localCheckpoint):
-      // steps re-execute once per round, and re-scanning the helper's
-      // source plan every round costs O(rounds × helper) where one
-      // checkpoint pass suffices (measured: gr10's edge helper halved the
-      // closure runtime). A helper only the outer statement (or later
-      // helpers) reads stays a lazy view.
-      val stepMasks = st.recs.map(r => Dialect.stripLiterals(r.step))
-      st.helpers.foreach { h =>
-        val readByStep = stepMasks.exists(containsWord(_, h.name))
-        scope.bindCte(h.name, h.cols, h.body, lower) { df =>
-          if (readByStep) freshCols(df.localCheckpoint(true)) else df
-        }
-      }
-      st.drainGroups.foreach { group =>
-        group.zip(drain(lower, group, scope)).foreach { case (rec, closure) =>
-          scope.bind(rec.name, closure)
-        }
-      }
-      Table.bindLock.synchronized(lower(scope.rewrite(st.outer)))
+  def run(st: Stmt, names: Table.Names,
+          lower: (String, Table.Names) => DataFrame): DataFrame = {
+    // a helper ANY step reads is MATERIALIZED (eager localCheckpoint):
+    // steps re-execute once per round, and re-scanning the helper's
+    // source plan every round costs O(rounds × helper) where one
+    // checkpoint pass suffices (measured: gr10's edge helper halved the
+    // closure runtime). A helper only the outer statement (or later
+    // helpers) reads stays lazy.
+    val stepMasks = st.recs.map(r => Dialect.stripLiterals(r.step))
+    val helpers = bindCtes(st.helpers, names, lower) { (h, df) =>
+      if (stepMasks.exists(containsWord(_, h.name))) freshCols(df.localCheckpoint(true))
+      else df
     }
+    val scope = st.drainGroups.foldLeft(helpers) { (scope, group) =>
+      Table.bindNames(scope, group.map(_.name).zip(drain(lower, group, scope)))
+    }
+    lower(st.outer, scope)
   }
 
   /** Every checkpoint is wrapped in a fresh aliasing projection: a
@@ -438,11 +395,11 @@ object RecursiveUnion {
 
   /** One simultaneous frontier-minus-seen loop over an SCC group — a
     * single recursion is a one-member group. Each round every member's
-    * step evaluates against the round-start state: the member's OWN view
+    * step evaluates against the round-start state: the member's OWN name
     * bound to its frontier (last round's new rows, the standard working
-    * table), every SIBLING's view bound to that sibling's closure-so-far.
+    * table), every SIBLING's name bound to that sibling's closure-so-far.
     * New rows land simultaneously after all members step, so in-round
-    * evaluation order cannot leak (the analyzed plan pins the bindings).
+    * evaluation order cannot leak (each step's plan holds its bindings).
     * The loop stops when a full round adds no row to any member, and it
     * runs at least one round, so an empty seed still steps once. A
     * member whose frontier drains keeps stepping — a sibling's growing
@@ -460,15 +417,14 @@ object RecursiveUnion {
     * — inherent to the probed semantics, O(rounds × closure) like
     * DuckDB's own evaluation.
     */
-  private def drain(lower: String => DataFrame, group: Seq[Rec],
-                    scope: Scope): Seq[DataFrame] = {
+  private def drain(lower: (String, Table.Names) => DataFrame, group: Seq[Rec],
+                    scope: Table.Names): Seq[DataFrame] = {
     final class Member(val rec: Rec) {
       // seeds bind with NO sibling in scope (a seed referencing a
       // sibling was refused at parse — DuckDB's circular-ref error)
       private val seed = declared(s"recursive CTE ${rec.name}", "seed",
-        rec.cols, lower(scope.rewrite(rec.seed)))
+        rec.cols, lower(rec.seed, scope))
       private val schema = seed.schema
-      val step: String = scope.rewrite(rec.step)
       var seen: DataFrame = freshCols(seed.distinct().localCheckpoint(true))
       var seenBytes: Long = FrameStats.checkpointedBytes(seen)
       var frontier: DataFrame = seen
@@ -497,20 +453,16 @@ object RecursiveUnion {
     var drained = false
     var round = 0
     while (!drained && round < MaxRounds) {
-      // one member at a time under the lock: siblings bound to their
-      // round-start closures, the member itself to its frontier; the
-      // eager analysis freezes the resolved frontier/closure into the
-      // plan, so later rebinds (the next member, the next round) can't
-      // leak into this step's EXCEPT
+      // each member steps with its siblings bound to their round-start
+      // closures and itself to its frontier; the names are this step's
+      // own, so the next member and the next round bind theirs afresh
       val next = members.map { mb =>
-        val stepped = Table.bindLock.synchronized {
-          members.foreach { o =>
-            scope.bind(o.rec.name,
-              if (o eq mb) FrameStats.broadcastIfSmall(o.frontier, o.frontierBytes)
+        val stepped = mb.align(lower(mb.rec.step, Table.bindNames(scope,
+          members.map { o =>
+            o.rec.name ->
+              (if (o eq mb) FrameStats.broadcastIfSmall(o.frontier, o.frontierBytes)
               else FrameStats.broadcastIfSmall(o.seen, o.seenBytes))
-          }
-          mb.align(lower(mb.step))
-        }
+          })))
         val nf = freshCols(exceptDistinctVia(stepped, mb.seen, mb.seenBytes)
           .localCheckpoint(true))
         (nf, nf.isEmpty, FrameStats.checkpointedBytes(nf))

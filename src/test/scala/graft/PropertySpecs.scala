@@ -632,8 +632,11 @@ object AsOfModelProps extends Properties("AsOfModel") {
         R(100L + i, k, t.map(Long.box).orNull,
           v.map(Double.box).orNull)
       }
-      val lDf = ls.toDF("id", "k", "t")
-      val rDf = rs.toDF("rid", "k", "rt", "v")
+      // tuples, not the private model classes: an encoder of a nested
+      // private class generates code Janino cannot compile
+      val lDf = ls.map(l => (l.id, l.k, l.t)).toDF("id", "k", "t")
+      val rDf = rs.map(r => (r.id, r.k, Option(r.t).map(_.longValue),
+        Option(r.v).map(_.doubleValue))).toDF("rid", "k", "rt", "v")
       Seq((false, false), (false, true), (true, false), (true, true))
         .forall { case (fwd, strict) =>
           val out = graft.ops.AsOf.join(lDf, rDf,

@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-query installs in the query catalogue, one stream drain helper in
   * the library, one recursion drain loop, one SQL statement pipeline
   * (and one clause chain) behind every SQL surface, one parse of window
-  * calls and WINDOW clauses under the window passes, one profiler, and
-  * no environment switches below the entry-point mains.
+  * calls and WINDOW clauses under the window passes, one profiler, no
+  * environment switches below the entry-point mains, and one binder of a
+  * statement's own names, which leaves the session catalog to the user.
   */
 class SessionPathGuardSpec extends AnyFunSuite {
 
@@ -121,5 +122,25 @@ class SessionPathGuardSpec extends AnyFunSuite {
     val keyword = "(?:wordAt|findAnyDepthKeyword|findTopLevelKeyword(?:In)?)\\([^()\\n]*\"window\"\\)".r
     val parsers = bodies.collect { case (name, body) if keyword.findFirstIn(body).isDefined => name }
     assert(parsers.size <= 1, s"more than one def parses the WINDOW clause: $parsers")
+  }
+
+  test("a statement's own names bind in its plan, not in the session catalog") {
+    val lock = sources("src/main").collect { case (p, text) if text.contains("bindLock") => p }
+    assert(lock.isEmpty, s"no lock guards the catalog; bind names with GraftColumnBridge.sqlWith: $lock")
+    assert(!sources("src/main").exists(_._2.contains("def replaceIdent")),
+      "CTE references resolve in Spark's analyzer, not by renaming the text")
+    // the user-catalog operations: DDL, IMPORT, and a script's re-binds
+    // and transactions in Table.sessionSql
+    val writes = "createOrReplaceTempView|dropTempView".r
+    val offenders = Seq("src/main/scala/graft/api", "src/main/scala/graft/sql").flatMap(sources).collect {
+      case (p, text) if !Set("DdlSql.scala", "ExportSql.scala", "Table.scala")(p.getFileName.toString) &&
+          writes.findFirstIn(text).isDefined => p.toString
+      case (p, text) if p.getFileName.toString == "Table.scala" && {
+          val script = text.indexOf("Dialect.splitStatements(query) match")
+          val end = text.indexOf("return out", script)
+          writes.findAllMatchIn(text).exists(m => script < 0 || m.start < script || m.start > end)
+        } => s"$p outside sessionSql's script and transaction code"
+    }
+    assert(offenders.isEmpty, s"bind a statement's names with GraftColumnBridge.sqlWith: $offenders")
   }
 }

@@ -475,6 +475,17 @@ class TableApiSpec extends GraftSuite {
     assert(r.map(_.getLong(0)).toSeq == Seq(2L, 3L))
   }
 
+  test("a FROM inside extract(…) or IS DISTINCT FROM names no table") {
+    val dated = Table.fromRows(spark,
+      StructType(Seq(StructField("ts", DateType))),
+      Seq(Row(java.sql.Date.valueOf("2024-03-17"))))
+    assert(dated.sql("select extract(day FROM ts) AS d from trips").toDF
+      .collect().head.getInt(0) == 17)
+    val r = trips.sql(
+      "select id IS DISTINCT FROM tip AS x from trips order by id").toDF.collect()
+    assert(r.map(_.getBoolean(0)).toSeq == Seq(false, true, true, true))
+  }
+
   test("concurrent sql calls binding the same FROM name never cross-read") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
