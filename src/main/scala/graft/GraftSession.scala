@@ -36,6 +36,19 @@ object GraftSession {
     * so a query replayed in a fresh session recompiles every class it
     * compiled before. All sessions of this engine share one classpath and
     * graft adds no session artifacts, so one loader serves them all.
+    *
+    * It also keeps local file I/O in process. Without the native Hadoop
+    * library, Hadoop's local file system forks a `chmod` for every file and
+    * directory it creates, and FileContext forks a `readlink` for every
+    * link-status call, milliseconds each; a stream's offset-log commit took
+    * about 30 ms. So `fs.file.impl` is [[graft.io.NioLocalFileSystem]],
+    * which sets permissions through java.nio (a mode java.nio cannot set,
+    * such as the sticky bit, still forks), and streams use Spark's
+    * FileSystem-based checkpoint manager, which asks for no link status:
+    * the default FileContext one reaches Hadoop's forking class through
+    * `local.RawLocalFs`, whatever `fs.file.impl` says. Offset,
+    * commit and source logs, stream metadata and the state store's deltas
+    * and snapshots then go through the same file system as table writes.
     */
   def builder(master: String = "local[*]"): SparkSession.Builder =
     SparkSession
@@ -62,6 +75,10 @@ object GraftSession {
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager")
 
   /** Get or create a session with all graft SQL functions registered. */
   def getOrCreate(master: String = "local[*]"): SparkSession = {

@@ -3145,17 +3145,22 @@ object Dialect {
     }
   }
 
-  /** First table identifier after FROM, outside quotes — the name the
-    * receiver table is bound to (the reference binds the receiver
+  /** First table identifier after FROM, plain or backquoted, outside
+    * literals and comments — the name the receiver table is bound to (the reference binds the receiver
     * regardless of the FROM name, vinum/api/table.py:219-220). A FROM
     * that is expression syntax — inside a trim/extract/substring/overlay/
     * position call, or `IS [NOT] DISTINCT FROM` — names no table.
     */
   def firstFromTable(sql: String): Option[String] = {
     val m = stripLiterals(sql)
+    // the name is read from a mask that keeps backquoted identifiers, so
+    // a comment between FROM and the name is still blank there
+    lazy val named = stripLiterals(sql, keepBackquoted = true)
     FromRe.findAllMatchIn(m)
-      .find(h => !insideFromEmbeddingFn(m, h.start) && !isDistinctFrom(m, h.start))
-      .map(_.group(1))
+      .filter(h => !insideFromEmbeddingFn(m, h.start) && !isDistinctFrom(m, h.start))
+      .flatMap(h => TableNameRe.findPrefixMatchOf(named.substring(skipWsAt(named, h.end))))
+      .nextOption()
+      .map(n => Option(n.group(1)).fold(n.matched)(_.replace("``", "`")))
   }
 
   /** A call to a standard-SQL function whose argument list legally
@@ -3191,8 +3196,9 @@ object Dialect {
 
   private val DistinctFromHead = """(?i)\bis\s+(?:not\s+)?distinct\s+$""".r
 
-  private val FromRe =
-    """(?i)\bfrom\s+([A-Za-z_][A-Za-z0-9_]*)""".r
+  private val FromRe = """(?i)\bfrom\b""".r
+
+  private val TableNameRe = """[A-Za-z_][A-Za-z0-9_]*|`((?:[^`]|``)*)`""".r
 
   /** Length-preserving mask: the CONTENT of '...' literals, "..." / `...`
     * quoted identifiers, and `--` / `/* */` comments becomes spaces
@@ -3207,7 +3213,8 @@ object Dialect {
     * literal (open/close collapse keeps the mask correct), and `/* */`
     * block comments NEST (both Spark ≥3.0 and DuckDB nest them). A
     * lone trailing backslash masks itself and ends with the string
-    * still open — same recovery as any unterminated literal.
+    * still open — same recovery as any unterminated literal. With
+    * `keepBackquoted` a `…` identifier passes through, quotes included.
     */
   /** Scan a single-quoted literal starting at the opening quote at `at`
     * in RAW text, honoring SQL doubled-quote escapes (`''` is one quote
@@ -3239,7 +3246,7 @@ object Dialect {
     (sb.toString, closed)
   }
 
-  private[graft] def stripLiterals(sql: String): String = {
+  private[graft] def stripLiterals(sql: String, keepBackquoted: Boolean = false): String = {
     val out = new StringBuilder(sql.length)
     var i = 0
     val n = sql.length
@@ -3256,7 +3263,9 @@ object Dialect {
             if (c == close) state = 0
             out.append(' '); i += 1
           }
-        case 3 => if (c == '`') state = 0; out.append(' '); i += 1
+        case 3 =>
+          if (c == '`') state = 0
+          out.append(if (keepBackquoted) c else ' '); i += 1
         case 4 =>
           if (c == '\n') { state = 0; out.append('\n') } else out.append(' ')
           i += 1
@@ -3271,7 +3280,7 @@ object Dialect {
         case _ => c match {
           case '\'' => state = 1; out.append(' '); i += 1
           case '"'  => state = 2; out.append(' '); i += 1
-          case '`'  => state = 3; out.append(' '); i += 1
+          case '`'  => state = 3; out.append(if (keepBackquoted) c else ' '); i += 1
           case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
             state = 4; out.append("  "); i += 2
           case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>

@@ -92,4 +92,12 @@ class StatementNamesSpec extends GraftSuite {
       "SELECT count(*) FROM (WITH sn_t AS (SELECT 9 AS v) SELECT v FROM sn_t) x, sn_t") ==
       Seq(3L))
   }
+
+  test("a backquoted first FROM name binds the receiver, also behind a comment") {
+    val t = Table(Seq(3L, 1L, 2L).toDF("v"))
+    def longs(q: String): Seq[Long] = t.sql(q).toDF.collect().map(_.getLong(0)).toSeq
+    assert(longs("SELECT v FROM `sn_t` ORDER BY v") == Seq(1L, 2L, 3L))
+    assert(longs("SELECT v FROM /* `x` */ `sn t` WHERE v > 1 ORDER BY v") == Seq(2L, 3L))
+    assert(longs("SELECT v FROM -- `x`\n  `sn``t` ORDER BY v DESC") == Seq(3L, 2L, 1L))
+  }
 }
