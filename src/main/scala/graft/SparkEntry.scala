@@ -2489,22 +2489,20 @@ object SparkEntry {
                 count(*) AS n_dups
          FROM documents GROUP BY md5(text) ORDER BY keep_id"""),
 
-    // MinHash+LSH near-dup pairs, strictly oracled on the PAIR SET. The
-    // corpus similarity distribution is bimodal — planted near-dups at
-    // 5-gram jaccard >= 0.875, every other pair <= 0.016 — so the
-    // signature-estimate threshold 0.5 sits mid-gap: the banding
-    // (64 hashes / 16 bands of 4) gives a j=0.875 pair candidate
-    // probability 1 - 8e-7, the 64-hash estimate concentrates within
-    // ±0.15 of true jaccard (binomial sd 0.04), and no sub-0.02 pair can
-    // estimate anywhere near 0.5. The emitted pair set therefore equals
-    // the oracle's exhaustive exact-jaccard enumeration — the green hash
-    // IS the recall proof (d04 playbook). Estimate VALUES stay un-gated
-    // (engine-specific); d04 gates exact jaccard values.
+    // d02–d04: every document pair at or above a word-gram Jaccard
+    // threshold, strict against the oracle's exhaustive enumeration over
+    // the same gram sets. The query names are historical: no MinHash,
+    // SimHash or LSH step runs. Candidates come from Dedup.jaccardPairs'
+    // prefix filter: under one global rarest-first gram order,
+    // J(x, y) >= t forces x and y to share a gram among x's first
+    // |x| - ceil(t|x|) + 1 grams and y's first |y| - ceil(t|y|) + 1, and
+    // bounds the sizes to t|x| <= |y| <= |x|/t, so no pair is lost on any
+    // corpus; the verify is the exact merge-scan Jaccard.
     "d02_minhash_pairs" -> api(
       (s, dir) => {
-        graft.ops.Dedup.minhashPairs(
+        graft.ops.Dedup.jaccardPairs(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
-            numHashes = 64, bands = 16, shingleK = 5, threshold = 0.5)
+            shingleK = 5, threshold = 0.5)
           .select(col("id_a"), col("id_b"))
           .orderBy(col("id_a"), col("id_b"))
       },
@@ -2516,38 +2514,11 @@ object SparkEntry {
            FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
          WHERE jaccard >= 0.5 ORDER BY id_a, id_b"""),
 
-    // SimHash candidates (chunks=8 pigeonhole, hamming<=7) verified with
-    // EXACT 5-gram jaccard at 0.9 — strictly oracled against the
-    // exhaustive enumeration, so a green hash proves every true j>=0.9
-    // pair had a simhash chunk collision (recall 1 at the gate
-    // threshold). Thresholds are MEASURED, not assumed: the planted
-    // pairs with j>=0.9 sit at hamming 0-7 (inside the guarantee) and
-    // the one j=0.875 pair at hamming 8 falls below the 0.9 verify on
-    // both engines, so it cannot diverge. The tempting chunks=16 (h<=12)
-    // widening is a scale trap on this template-generated corpus —
-    // 4-bit chunk keys bucket ~n/16 docs and unrelated docs crowd into
-    // hamming 9-12, so candidates explode ~60x at sf0.1 (measured 66 s
-    // vs 2 s). Hamming VALUES stay un-gated (fingerprints are
-    // engine-specific); the pigeonhole contract is require()-enforced
-    // and spec-tested. The 100 TB setting is chunks=4 (16-bit keys,
-    // h<=3).
     "d03_simhash_pairs" -> api(
       (s, dir) => {
-        val docs = Catalog.parquet(s, s"$dir/documents.parquet")
-        // fingerprints materialize once (16 bytes/doc): both sides of the
-        // chunk self-join read the checkpoint instead of re-running
-        // tokenize+simhash over the corpus
-        val fp = graft.ops.Dedup.simhashFingerprints(docs, "doc_id", "text")
-          .localCheckpoint(true)
-        val cand = graft.ops.Dedup.fingerprintPairs(fp, maxHamming = 7, chunks = 8)
-          .select(col("id_a"), col("id_b"))
-        // hashGrams: the verify tier compares WindowHashes longs instead
-        // of 5-gram strings (jaccard identical modulo 64-bit collisions
-        // — zero on this corpus, and the string-gram oracle re-checks
-        // every value bitwise; the d14 hash≡string discipline)
-        graft.ops.Dedup.ngramJaccard(docs, cand, "doc_id", "text",
-            shingleK = 5, hashGrams = true)
-          .filter(col("jaccard") >= 0.9)
+        graft.ops.Dedup.jaccardPairs(
+            Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
+            shingleK = 5, threshold = 0.9)
           .orderBy(col("id_a"), col("id_b"))
       },
       s"""$fiveGramSets
@@ -2558,19 +2529,11 @@ object SparkEntry {
            FROM sh a JOIN sh b ON a.doc_id < b.doc_id) t
          WHERE jaccard >= 0.9 ORDER BY id_a, id_b"""),
 
-    // exact n-gram Jaccard near-dup pairs at scale: LSH-banded candidates
-    // -> exact verify (no within-block cartesian anywhere in the plan).
-    // The oracle enumerates ALL pairs above the threshold exhaustively —
-    // the banding (128 hashes / 32 bands) gives a j>=0.6 pair >=98.8%
-    // candidate probability and the planted corpus near-dups sit at
-    // j>=0.9 (hit probability 1 - 4e-16), so Spark's banded result must
-    // equal the exhaustive set exactly.
     "d04_ngram_jaccard" -> api(
       (s, dir) => {
-        graft.ops.Dedup.nearDupJaccard(
+        graft.ops.Dedup.jaccardPairs(
             Catalog.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
-            numHashes = 128, bands = 32, shingleK = 3, threshold = 0.6,
-            hashGrams = true)
+            shingleK = 3, threshold = 0.6)
           .orderBy(col("id_a"), col("id_b"))
       },
       """WITH s AS (

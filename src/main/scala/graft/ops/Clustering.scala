@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Duplicate-cluster resolution: turn near-duplicate PAIRS (the output of
-  * [[Dedup.nearDupJaccard]], [[Dedup.embeddingPairs]], …) into connected
+  * [[Dedup.jaccardPairs]], [[Dedup.embeddingPairs]], …) into connected
   * components so a pipeline can keep exactly one canonical document per
   * duplicate cluster. Pair detection alone is not a dedup policy — if
   * A~B and B~C, dropping "the second of each pair" can drop B twice or

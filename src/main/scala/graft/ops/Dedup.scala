@@ -11,20 +11,18 @@ import graft.functions.Registry
   * Four families, all shuffle-bounded and skew-aware by construction:
   *
   *  - exact:   one hash shuffle on the content digest.
+  *  - jaccard: every pair of gram sets at or above a Jaccard threshold,
+  *    exactly — prefix-filtered candidates (an equi-join on each
+  *    document's rarest grams) and a merge-scan verify.
   *  - minhash: signature per doc (map-only) → band buckets (equi-join
-  *    shuffle on (band, bucket-hash)) → candidate pairs → signature-overlap
-  *    estimate. The classic MinHash+LSH pipeline; no pairwise cross join
-  *    ever materializes.
-  *  - simhash: 64-bit fingerprint per doc (map-only) → 16-bit chunk
-  *    buckets (pigeonhole: hamming ≤ 3 ⇒ some chunk equal) → popcount
-  *    verify on candidates.
+  *    shuffle on (band, bucket-hash)) → candidate pairs. The streaming
+  *    near-dup flags bucket on the same band key.
   *  - embedding: random-hyperplane bucket per vector (map-only) →
   *    bucket equi-join → exact cosine verify.
   *
   * Scale notes (100 TB): every candidate generator is an equi-join on a
   * small key, so AQE's skew-join splitting handles pathological buckets
-  * (e.g. boilerplate documents sharing a band). Bucket width (bands/bits)
-  * is the knob trading recall against bucket size.
+  * (e.g. boilerplate documents sharing a band).
   */
 object Dedup {
 
@@ -106,15 +104,8 @@ object Dedup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, bands: Int = 16, shingleK: Int = 5,
                         seed: Long = Registry.DefaultSeed): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleK, seed)
-    // one (band, bucket) key per band: hash of the band's signature slice
-    val bandArr = transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, slice(col("sig"), b * lit(rows) + 1, lit(rows))))
-    val banded = sigs
-      .select(col(idCol).as("id"), posexplode(bandArr).as(Seq("band", "bhash")))
+    val banded = minhashSignatures(df, idCol, textCol, numHashes, shingleK, seed)
+      .select(col(idCol).as("id"), bandBuckets(col("sig"), numHashes, bands))
     banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bhash") === col("b.bhash") &&
@@ -123,140 +114,20 @@ object Dedup {
       .distinct()
   }
 
-  /** Candidate near-duplicate pairs via LSH banding + signature-overlap
-    * estimate. Output: (id_a, id_b, est_jaccard), id_a < id_b.
-    *
-    * Two physical strategies, measured at sf0.1 (5k docs, local[32],
-    * median of 3):
-    *  - `carrySignatures = false` (default): signatures recomputed for
-    *    the banding and for each verify-join side — map-only codegen'd
-    *    work; three slim shuffles.
-    *  - `carrySignatures = true`: the signature array rides through the
-    *    band explode, so candidate pairs emerge with both signatures
-    *    attached and no verify joins — one wide shuffle (sig duplicated
-    *    x bands) + a pair dedup.
-    * Both produce identical results; the default wins when text is
-    * already columnar-local (parquet re-scan is cheap), the carry
-    * variant when the input scan itself is the bottleneck (e.g. text
-    * behind an expensive upstream pipeline). Numbers: see SCALE.md.
+  /** The LSH band key of a MinHash signature: a generator of one
+    * (band, bhash) row per band, bhash = xxhash64 of the band number and
+    * the band's slice of the signature. The batch [[minhashCandidates]]
+    * and the streaming `Events.streamingNearDupFlags` both bucket on it,
+    * so the two agree on every candidate by construction.
     */
-  def minhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   numHashes: Int = 64, bands: Int = 16, shingleK: Int = 5,
-                   threshold: Double = 0.5,
-                   seed: Long = Registry.DefaultSeed,
-                   carrySignatures: Boolean = false): DataFrame = {
+  private[graft] def bandBuckets(sig: Column, numHashes: Int, bands: Int): Column = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    if (carrySignatures) {
-      val rows = numHashes / bands
-      val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleK, seed)
-      val bandArr = transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, slice(col("sig"), b * lit(rows) + 1, lit(rows))))
-      val banded = sigs.select(col(idCol).as("id"), col("sig"),
-        posexplode(bandArr).as(Seq("band", "bhash")))
-      banded.as("a")
-        .join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bhash") === col("b.bhash") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-        .dropDuplicates("id_a", "id_b")
-        .select(col("id_a"), col("id_b"),
-          sigOverlap(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
-        .filter(col("est_jaccard") >= threshold)
-    } else {
-      val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleK, seed)
-      val cand = minhashCandidates(df, idCol, textCol, numHashes, bands, shingleK, seed)
-      val sa = sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a"))
-      val sb = sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b"))
-      cand.join(sa, "id_a").join(sb, "id_b")
-        .select(col("id_a"), col("id_b"), sigOverlap(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
-        .filter(col("est_jaccard") >= threshold)
-    }
+    val rows = numHashes / bands
+    posexplode(transform(
+      sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(b, slice(sig, b * lit(rows) + 1, lit(rows)))))
+      .as(Seq("band", "bhash"))
   }
-
-  /** Exact-Jaccard near-duplicate pairs at scale: LSH-banded candidate
-    * generation followed by exact n-gram Jaccard verification. Replaces
-    * attribute blocking (same source + length band), whose within-block
-    * self-join is quadratic in block size — at 100x the corpus the
-    * same-source blocks grow linearly and candidate pairs quadratically,
-    * while banded candidates stay proportional to the number of true
-    * near-duplicates. Size the banding so recall at `threshold` is ~1:
-    * the default 128 hashes / 32 bands of 4 gives a j=0.6 pair a
-    * 1-(1-0.6^4)^32 = 98.8% candidate probability, j=0.9 -> 1-4e-16.
-    * Output: (id_a, id_b, jaccard), jaccard >= threshold.
-    */
-  def nearDupJaccard(df: DataFrame, idCol: String, textCol: String,
-                     numHashes: Int = 128, bands: Int = 32, shingleK: Int = 3,
-                     threshold: Double = 0.6,
-                     seed: Long = Registry.DefaultSeed,
-                     eager: Boolean = true,
-                     hashGrams: Boolean = false): DataFrame = {
-    // hashGrams: verify over WindowHashes longs instead of gram strings
-    // (see [[ngramJaccard]] — values identical modulo 64-bit collisions,
-    // re-checked by every caller's strict string-gram oracle)
-    def gramsOf(c: Column): Column =
-      if (hashGrams) array_distinct(TextOps.shingleHashes(c, shingleK))
-      else array_distinct(TextOps.shingles(c, shingleK))
-    // The candidate list is consumed twice (id projection for the
-    // semi-filter, then the verify join); it is a slim (long, long)
-    // frame, so persisting it avoids re-running the whole signature
-    // pipeline per consumer. (The array-heavy frames are NOT persisted —
-    // columnar-encoding arrays costs more than recomputing them.) The
-    // verified result is materialized EAGERLY (localCheckpoint) so the
-    // candidate cache can be released before returning instead of
-    // leaking for the session's lifetime (Dataset.persist registers the
-    // plan in CacheManager, which holds it until an explicit unpersist);
-    // the returned frame's blocks are RDD-level and
-    // ContextCleaner-managed. Trade-off: the result's lineage is
-    // truncated, so on a cluster an executor loss after this call
-    // re-fails instead of recomputing. Callers who want a lazy,
-    // lineage-preserving frame (plan-only inspection, composition into a
-    // bigger pipeline) pass eager=false: no cache at all — the candidate
-    // subplan simply appears twice in the returned plan and is
-    // recomputed per consumer, the measured-cheaper trade for the
-    // array-light signature pipeline (see minhashPairs'
-    // carrySignatures note), and nothing leaks.
-    if (!eager) {
-      val cand = minhashCandidates(df, idCol, textCol, numHashes, bands, shingleK, seed)
-      return jaccardOn(
-        df.join(cand.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct(),
-            col(idCol) === col("id"), "left_semi")
-          .select(col(idCol).as("id"), gramsOf(col(textCol)).as("sh")),
-        cand).filter(col("jaccard") >= threshold)
-    }
-    val cand = minhashCandidates(df, idCol, textCol, numHashes, bands, shingleK, seed)
-      .persist()
-    try {
-      // compute shingle sets ONLY for documents that appear in some pair:
-      // a semi-join keeps the verify cost proportional to the candidate
-      // volume, not the corpus size. The sets checkpoint once (both
-      // attach joins read the materialized rows instead of re-shingling
-      // per side — the ngramJaccard discipline) and broadcast under the
-      // MEASURED-size gate only: the candidate id set scales with corpus
-      // duplication, so an outgrown set keeps the shuffle join.
-      val ids = cand.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-      val needed = df.join(ids, col(idCol) === col("id"), "left_semi")
-      val sets = needed.select(col(idCol).as("id"),
-        gramsOf(col(textCol)).as("sh"))
-        .localCheckpoint(true)
-      jaccardOn(graft.api.FrameStats.broadcastIfSmall(sets), cand)
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true)
-    } finally cand.unpersist()
-  }
-
-  /** Fraction of equal signature positions — the MinHash Jaccard estimate. */
-  private def sigOverlap(a: Column, b: Column, numHashes: Int): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / numHashes
-
-  /** SimHash fingerprint per document: (id, simhash long). Map-only. */
-  def simhashFingerprints(df: DataFrame, idCol: String, textCol: String,
-                          seed: Long = Registry.DefaultSeed): DataFrame =
-    df.select(col(idCol).as("id"),
-      call_function("simhash64", TextOps.tokenHashes(col(textCol)), lit(seed)).as("sh"))
 
   /** All pairs from a fingerprint frame (id, sh: long) within Hamming
     * distance maxHamming, via chunk-equality candidate generation +
@@ -298,103 +169,86 @@ object Dedup {
       .distinct()
   }
 
-  /** Near-duplicate pairs with Hamming distance ≤ maxHamming on 64-bit
-    * SimHash (see [[fingerprintPairs]] for the recall contract).
-    * Output: (id_a, id_b, hamming).
-    */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, chunks: Int = 4,
-                   seed: Long = Registry.DefaultSeed): DataFrame =
-    fingerprintPairs(simhashFingerprints(df, idCol, textCol, seed), maxHamming, chunks)
-
-  /** Exact n-gram Jaccard over a candidate pair set (e.g. the output of
-    * [[minhashPairs]] at a low threshold, or any (id_a, id_b) frame).
-    * Output: (id_a, id_b, jaccard).
+  /** Every document pair whose word `shingleK`-gram sets have Jaccard
+    * >= `threshold`, with the exact value. Output: (id_a, id_b, jaccard)
+    * with id_a < id_b.
     *
-    * Shingle sets are computed ONLY for documents that actually appear in
-    * a candidate pair (semi-join on the union of pair ids), and that
-    * bounded frame is materialized once so the two sides of the pair join
-    * read it instead of re-shingling the corpus each. At production dup
-    * rates candidate ids ≪ corpus, so the materialization is bounded by
-    * candidate volume, never corpus size — and the full-corpus
-    * tokenize+shingle pass drops from 2× to ≤1×. Measured at sf0.1 in
-    * d03: verify stage 4.5 s → 2.5 s.
+    * Gram sets are those of [[TextOps.shingles]], distinct per document:
+    * a text shorter than k words is one whole-text gram, a text with no
+    * word token is one empty gram of its own, and a null text has no set
+    * and pairs with nothing. Grams travel as their
+    * [[TextOps.shingleHashes]] longs, so values are exact up to a 64-bit
+    * gram-hash collision (the d02–d04 oracles re-derive them from gram
+    * strings).
+    *
+    * Candidates come from prefix filtering (AllPairs/PPJoin). Order all
+    * grams globally by (document frequency, gram), rarest first. If
+    * J(x, y) >= t then |x ∩ y| >= t·|x|, so x and y share a gram among
+    * the first |x| − ⌈t·|x|⌉ + 1 grams of x and the first
+    * |y| − ⌈t·|y|⌉ + 1 of y; and J <= min/max bounds the sizes,
+    * t·|x| <= |y| <= |x|/t. The plan is one document-frequency count, one
+    * per-document sort that yields both the prefix and the sorted set, one
+    * equi-join on the prefix gram under the size bound, a pair dedup, and
+    * the `jaccard_sorted` merge-scan verify. Rare grams go first, so a hot
+    * (boilerplate) gram only enters the join through documents made of
+    * nothing rarer, and at t = 0.9 a prefix is about a tenth of its set.
+    *
+    * Both filters run at t·(1 − 1e-12), not t: the verify compares the
+    * DOUBLE inter/union with t, which rounds a real 9/10 up to the double
+    * 0.9, and a double product n·t may round up across an integer (at
+    * t = 9/11, 77·t is 63.00000000000001, so ⌈77·t⌉ = 64 could miss a
+    * 63-gram set inside a 77-gram one, at J = t exactly). The slack can
+    * only lengthen a prefix or widen the size bound, so it adds candidates
+    * that the exact verify drops, never loses a pair.
     */
-  def ngramJaccard(df: DataFrame, candidates: DataFrame,
-                   idCol: String, textCol: String,
-                   shingleK: Int = 3, hashGrams: Boolean = false): DataFrame = {
-    val ids = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    // hashGrams is the production verify tier (the d14/ap04 mold):
-    // grams live as WindowHashes longs — no per-gram string is ever
-    // materialized (d03 measured the string set build at 3.8 of 7.9 s)
-    // — and the pair merge scan compares primitive longs. Jaccard
-    // values are identical modulo 64-bit collisions, which every
-    // caller's strict string-gram oracle re-checks.
-    def grams(c: Column): Column =
-      if (hashGrams) TextOps.shingleHashes(c, shingleK)
-      else TextOps.shingles(c, shingleK)
-    val sets = df.select(col(idCol).as("id"), col(textCol).as("__t"))
-      .join(ids, Seq("id"), "left_semi")
-      .select(col("id"),
-        array_distinct(grams(col("__t"))).as("sh"))
+  def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
+                   shingleK: Int, threshold: Double): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"jaccardPairs threshold must be in (0, 1], got $threshold")
+    val lo = threshold * (1 - 1e-12)
+    // WindowHashes gives a text with no word token no gram, where the
+    // string grams give it the empty one
+    val grams = df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
+      .select(col("id"), explode(array_distinct(
+        when(size(col("toks")) === 0, array(lit(EmptyTextGram)))
+          .otherwise(TextOps.shingleHashesOfTokens(col("toks"), shingleK)))).as("g"))
+    // the frequency as a window over the gram, not an aggregate joined
+    // back: one scan and one shuffle of the (id, gram) rows instead of
+    // two and two (measured at sf0.1 on local[4]: 1.2 → 0.9 s for d02 and
+    // d03). Then one row per document with its grams in the global (f, g)
+    // order: the prefix is read off the head, and the set, sorted once,
+    // feeds the verify
+    val docs = grams.withColumn("f", count(lit(1)).over(Window.partitionBy(col("g"))))
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(struct(col("f"), col("g")))).as("fg"))
+      .select(col("id"), size(col("fg")).as("n"),
+        slice(col("fg.g"), lit(1),
+          size(col("fg")) - ceil(size(col("fg")) * lo).cast("int") + 1).as("prefix"),
+        sort_array(col("fg.g")).as("sh"))
       .localCheckpoint(true)
-    // measured-size broadcast gate (guide §3.1): without it the second
-    // attach join shuffles every candidate pair WITH the first side's
-    // whole shingle array as payload (d03 at sf0.1: the verify phase
-    // owned 4.9 of 8.6 s); a broadcast set frame keeps the pair stream
-    // map-side through both joins. The gate reads the checkpoint's
-    // REAL bytes, so an eval-scale candidate set keeps the shuffle plan.
-    jaccardOn(graft.api.FrameStats.broadcastIfSmall(sets), candidates)
-  }
-
-  /** Join shingle sets onto a (id_a, id_b) pair frame and compute exact
-    * Jaccard. `sets` must have columns (id, sh) with DISTINCT elements
-    * (every caller applies array_distinct).
-    *
-    * The per-pair verify is the allocation-free `jaccard_sorted` merge
-    * scan over arrays sorted ONCE per document — the old
-    * array_intersect + array_union formulation built a UTF8String hash
-    * set per PAIR, and that constant multiplies candidate volume
-    * (MEASURED on d03 at sf0.1: the verify stage dominates the most
-    * expensive query in the suite). Values are bit-identical: both
-    * compute inter/union on the same integer counts.
-    */
-  private def jaccardOn(sets: DataFrame, candidates: DataFrame): DataFrame = {
-    val sorted = sets.select(col("id"), sort_array(col("sh")).as("sh"))
-    candidates
-      .join(sorted.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sorted.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+    val prefixes = docs.select(col("id"), col("n"), explode(col("prefix")).as("g"))
+    val cand = prefixes.as("a")
+      .join(prefixes.as("b"),
+        col("a.g") === col("b.g") && col("a.id") < col("b.id") &&
+          col("b.n") >= col("a.n") * lo && col("a.n") >= col("b.n") * lo)
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+    // measured-size broadcast gate: a small set frame keeps the pair
+    // stream map-side through both attach joins
+    val sets = graft.api.FrameStats.broadcastIfSmall(docs.select(col("id"), col("sh")))
+    cand
+      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         call_function("jaccard_sorted", col("sh_a"), col("sh_b")).as("jaccard"))
-  }
-
-  /** Exact n-gram Jaccard with cheap blocking: candidate pairs agree on
-    * `blockCol` and differ by at most `lengthBand` in `lenCol`.
-    *
-    * SCALE WARNING: the within-block self-join is quadratic in block
-    * size — same-block volume grows linearly with the corpus, candidate
-    * pairs quadratically. Use [[nearDupJaccard]] (banded candidates +
-    * exact verify) for large corpora; this variant exists for small
-    * batches where an attribute block is genuinely selective.
-    *
-    * Deliberately two-phase: candidates are enumerated on SLIM rows
-    * (id, block, len) and the shingle arrays are only attached to
-    * surviving pairs afterward. A fused self-join of the array-laden
-    * frame profiles ~6x slower — join machinery (hashing, sorting,
-    * row copies) over wide array rows dominates everything else.
-    */
-  def blockedJaccard(df: DataFrame, idCol: String, textCol: String,
-                     blockCol: String, lenCol: String, lengthBand: Int,
-                     shingleK: Int = 3, threshold: Double = 0.0): DataFrame = {
-    val slim = df.select(col(idCol).as("id"), col(blockCol).as("blk"), col(lenCol).as("len"))
-    val cand = slim.as("a").join(slim.as("b"),
-        col("a.blk") === col("b.blk") && col("a.id") < col("b.id") &&
-          abs(col("a.len") - col("b.len")) <= lengthBand)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    ngramJaccard(df, cand, idCol, textCol, shingleK)
       .filter(col("jaccard") >= threshold)
   }
+
+  /** The gram of a text with no word token in [[jaccardPairs]]. Any fixed
+    * long serves; like every gram hash it is exact up to a collision.
+    */
+  private val EmptyTextGram: Long = 0x6a09e667f3bcc908L
 
   /** Global first-occurrence segment deduplication (C4/CCNet-style line
     * dedup, generalized over the delimiter): split every document into
@@ -498,7 +352,7 @@ object Dedup {
     * independent sign-bit keys of `rowBits` hyperplanes each (seeded
     * `seed + band`), one equi-join on (band, key), candidate dedup, then
     * exact cosine verification — the embedding analog of
-    * [[minhashPairs]], replacing the single-bucket [[embeddingPairs]]
+    * [[minhashCandidates]], replacing the single-bucket [[embeddingPairs]]
     * when recall at the target threshold must be ~1.
     *
     * A pair at cosine c matches one band with probability

@@ -776,7 +776,7 @@ object Multimodal {
     * external engine; map-only (payloads never leave their partition).
     * Output: (id, sh) — named to feed [[Dedup.fingerprintPairs]]
     * directly, which turns this into image near-duplicate detection with
-    * the same pigeonhole recall guarantee as simhash text dedup.
+    * its pigeonhole recall guarantee on Hamming distance.
     * Undecodable payloads hash to 0 (they pair only with each other).
     */
   def imagePHash(df: DataFrame, idCol: String, binCol: String): DataFrame = {

@@ -551,10 +551,10 @@ object Events {
     * document, report per LSH band whether its band bucket was already
     * claimed by an earlier document — across micro-batch boundaries.
     * `dup_of == doc_id` marks the claim (this doc now owns the bucket);
-    * otherwise `dup_of` is the owning document. Same banding as the batch
-    * [[graft.ops.Dedup.minhashCandidates]] (xxhash64 over the band's
-    * signature slice), so a finite stream replayed in one batch produces
-    * exactly the batch candidate relation.
+    * otherwise `dup_of` is the owning document. The band key is the batch
+    * [[graft.ops.Dedup.minhashCandidates]]' own `Dedup.bandBuckets`
+    * (xxhash64 over the band's signature slice), so a finite stream
+    * replayed in one batch produces exactly the batch candidate relation.
     *
     * Keyed state is ONE long (owner id) per distinct occupied bucket —
     * bands × corpus-distinct buckets, independent of stream length for a
@@ -571,18 +571,12 @@ object Events {
                             seed: Long = graft.functions.Registry.DefaultSeed)
       : org.apache.spark.sql.Dataset[BandFlag] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = stream.sparkSession
     import spark.implicits._
-    val rows = numHashes / bands
-    val sigs = graft.ops.Dedup.minhashSignatures(
-      stream, idCol, textCol, numHashes, shingleK, seed)
-    val bandArr = transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, slice(col("sig"), b * lit(rows) + lit(1), lit(rows))))
-    val banded = sigs
+    val banded = graft.ops.Dedup.minhashSignatures(
+        stream, idCol, textCol, numHashes, shingleK, seed)
       .select(col(idCol).cast("long").as("id"),
-        posexplode(bandArr).as(Seq("band", "bhash")))
+        graft.ops.Dedup.bandBuckets(col("sig"), numHashes, bands))
       .as[(Long, Int, Long)]
 
     // keyed on the (band, bhash) PAIR — identical to the batch banding

@@ -57,49 +57,20 @@ class OpsSpec extends GraftSuite {
     assert(groups.filter(col("keep_id") === 1).collect()(0).getAs[Long]("n_dups") == 2)
   }
 
-  test("minhashPairs finds the exact and near duplicate, not the unrelated") {
-    val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
-        numHashes = 128, bands = 64, shingleK = 3, threshold = 0.4)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)))
-    assert(pairs.contains((1L, 3L)) || pairs.contains((2L, 3L)))
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
+  private def jaccardAt04: Map[(Long, Long), Double] =
+    Dedup.jaccardPairs(docs, "doc_id", "text", shingleK = 3, threshold = 0.4)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+  test("jaccardPairs finds the exact and near duplicate, not the unrelated") {
+    // docs 1, 2 are identical and 3 is a one-word edit of them; 4 and 5
+    // share no 3-gram with anything
+    assert(jaccardAt04.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
-  test("minhashPairs carry and recompute strategies produce identical pairs") {
-    def pairs(carry: Boolean) =
-      Dedup.minhashPairs(docs, "doc_id", "text", 128, 64, 3, 0.4,
-          carrySignatures = carry)
-        .select("id_a", "id_b", "est_jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(carry = true) == pairs(carry = false))
-  }
-
-  test("ngramJaccard computes the exact value") {
-    val cand = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val j = Dedup.ngramJaccard(docs, cand, "doc_id", "text", shingleK = 3)
-      .collect()(0).getAs[Double]("jaccard")
-    assert(j == 1.0) // identical texts
-  }
-
-  test("ngramJaccard hashGrams tier matches the string tier bitwise") {
-    // the hashed verify tier (WindowHashes longs + the primitive-long
-    // merge scan) must produce the identical jaccard for every pair —
-    // including partial overlaps and the sub-k whole-document gram
-    val cand = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L))
-      .toDF("id_a", "id_b")
-    def vals(hash: Boolean) =
-      Dedup.ngramJaccard(docs, cand, "doc_id", "text",
-          shingleK = 3, hashGrams = hash)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val s = vals(hash = false)
-    val h = vals(hash = true)
-    assert(s.keySet == h.keySet)
-    s.foreach { case (k, v) =>
-      assert(java.lang.Double.doubleToLongBits(v) ==
-        java.lang.Double.doubleToLongBits(h(k)), s"pair $k: $v vs ${h(k)}")
-    }
+  test("jaccardPairs computes the exact value") {
+    // 12 distinct 3-grams each; docs 1 and 3 differ in one word, which
+    // touches 3 grams: 9 shared of 15 in the union
+    assert(jaccardAt04 == Map((1L, 2L) -> 1.0, (1L, 3L) -> 9.0 / 15, (2L, 3L) -> 9.0 / 15))
   }
 
   test("contaminationFlags marks gram overlap with the eval set, counts distinct grams") {
@@ -535,12 +506,6 @@ class OpsSpec extends GraftSuite {
     assert(overlap >= 0.8, s"quantized recall@10 $overlap < 0.8")
   }
 
-  test("simhashPairs links identical docs at hamming 0") {
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 2L)))
-  }
-
   test("fingerprintPairs: planted pairs within the pigeonhole contract are ALL found") {
     val rnd = new scala.util.Random(7)
     // 40 well-separated base fingerprints, each with a partner at a known
@@ -573,36 +538,13 @@ class OpsSpec extends GraftSuite {
     }
   }
 
-  test("nearDupJaccard finds the exact and near duplicate via banded candidates") {
-    // the (1,3) pair sits exactly at jaccard 0.6 — the hardest admissible
-    // input — so band rows=2 here (miss probability ~3e-13 at j=0.6);
-    // production defaults (rows=4) are sized for the j>=0.9 dup regime
-    val pairs = Dedup.nearDupJaccard(docs, "doc_id", "text",
-        numHashes = 128, bands = 64, shingleK = 3, threshold = 0.6)
+  test("jaccardPairs keeps a pair at exactly the threshold") {
+    // (1,3) sits at jaccard 9/15 = 0.6: the double quotient equals the
+    // double 0.6, so the verify keeps it, and the prefix and size filters
+    // must not drop it first
+    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", shingleK = 3, threshold = 0.6)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L))) // exact dup, jaccard 1.0
-    assert(pairs.contains((1L, 3L)) && pairs.contains((2L, 3L))) // near dup
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L)) // unrelated
-  }
-
-  test("nearDupJaccard eager=false persists nothing") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Dedup.nearDupJaccard(docs, "doc_id", "text",
-      numHashes = 128, bands = 64, shingleK = 3, threshold = 0.6, eager = false).count()
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
-  }
-
-  test("nearDupJaccard eager=false returns the same pairs lazily") {
-    val lazyDf = Dedup.nearDupJaccard(docs, "doc_id", "text",
-      numHashes = 128, bands = 64, shingleK = 3, threshold = 0.6, eager = false)
-    // plan-only inspection must not have materialized anything eagerly
-    assert(lazyDf.queryExecution.logical != null)
-    val pairs = lazyDf.select("id_a", "id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val eagerPairs = Dedup.nearDupJaccard(docs, "doc_id", "text",
-        numHashes = 128, bands = 64, shingleK = 3, threshold = 0.6)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == eagerPairs)
+    assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
   test("bucketedRangeJoin equals the naive range join on random data") {

@@ -718,3 +718,57 @@ object WindowExcludeProps extends Properties("WindowExclude") {
       }
     }
 }
+
+/** `Dedup.jaccardPairs` against the plain-Scala exhaustive enumeration
+  * over the oracle's gram sets ([[JaccardOracle]]), for k ∈ {3, 5} and
+  * t ∈ {0.5, 0.6, 0.9}, on corpora of small-vocabulary texts, planted
+  * " dup" copies and dup-of-dup chains, identical texts, texts shorter
+  * than k, zero-token and null texts, and one planted pair at exactly t.
+  */
+object JaccardPairsProps extends Properties("JaccardPairs") {
+
+  private lazy val spark = SparkTestBase.spark
+
+  private val vocabText = Gen.choose(0, 14).flatMap(n =>
+    Gen.listOfN(n, Gen.oneOf("a", "b", "c", "d", "B", "e"))).flatMap(ws =>
+    Gen.oneOf(" ", ", ", ". ").map(ws.mkString))
+  // distinct tokens, so every gram is distinct; overlapping offsets give
+  // partial overlaps between two such texts
+  private val distinctText = Gen.zip(Gen.choose(0, 4), Gen.choose(1, 14)).map {
+    case (off, n) => (off until off + n).map(i => s"w$i").mkString(" ")
+  }
+  private val base: Gen[String] = Gen.frequency(
+    6 -> vocabText, 4 -> distinctText,
+    1 -> Gen.oneOf("", "!!", " . "), 1 -> Gen.const(null))
+
+  /** Bases, then copies, " dup" copies and " dup dup" copies of earlier
+    * documents — derived ones included, which makes chains.
+    */
+  private val corpus: Gen[Vector[String]] = for {
+    bases <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, base))
+    derived <- Gen.choose(0, 8).flatMap(Gen.listOfN(_,
+      Gen.zip(Gen.choose(0, 1000), Gen.oneOf("", " dup", " dup dup"))))
+  } yield derived.foldLeft(bases.toVector) { case (all, (i, suffix)) =>
+    all :+ Option(all(i % all.size)).map(_ + suffix).orNull
+  }
+
+  /** A text of m distinct grams and its copy with d more, m/(m+d) == t. */
+  private def exactlyAt(k: Int, t: Double): Seq[String] = {
+    val (m, d) = (for (d <- 1 to 2; m <- 1 to 12 if m.toDouble / (m + d) == t)
+      yield (m, d)).head
+    val y = (0 until k + m - 1).map(i => s"x$i").mkString(" ")
+    Seq(y, y + " dup" * d)
+  }
+
+  property("matches the exhaustive enumeration over the oracle's gram sets") =
+    forAll(corpus, Gen.oneOf(3, 5), Gen.oneOf(0.5, 0.6, 0.9)) { (texts, k, t) =>
+      import spark.implicits._
+      // ids run against insertion order, so a copy often has the lower id
+      val docs = (texts ++ exactlyAt(k, t)).zipWithIndex
+        .map { case (text, i) => (1000L - i, text) }
+      val got = graft.ops.Dedup.jaccardPairs(docs.toDF("doc_id", "text"),
+          "doc_id", "text", shingleK = k, threshold = t)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      got == JaccardOracle.pairs(docs, k, t)
+    }
+}

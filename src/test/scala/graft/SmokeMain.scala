@@ -105,11 +105,11 @@ object SmokeMain {
       s"equal=${sess.select("event_id", "session_seq").exceptAll(
         batchSess.select("event_id", "session_seq")).isEmpty}")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val mh = graft.ops.Dedup.minhashPairs(docs, "doc_id", "text",
-      numHashes = 64, bands = 16, shingleK = 5, threshold = 0.5).count()
-    val sh = graft.ops.Dedup.simhashPairs(docs, "doc_id", "text",
-      maxHamming = 7, chunks = 8).count()
-    println(s"minhash pairs=$mh simhash candidates(h<=7)=$sh")
+    val j5 = graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text",
+      shingleK = 5, threshold = 0.5).count()
+    val j9 = graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text",
+      shingleK = 5, threshold = 0.9).count()
+    println(s"jaccard pairs (5-grams) t>=0.5: $j5, t>=0.9: $j9")
 
     println("=== [6] round-7 surface: audio features / pivot / lateral ===")
     val af = graft.ops.Multimodal.audioFeatures(
